@@ -17,6 +17,56 @@ from pyspark.sql import functions as F
 from mldb_spark.dialect import MldbContext
 from mldb_spark.ml.registry import FunctionRegistry
 
+# Spark dtype names (DataFrame.dtypes, decimal without its precision)
+# that feed a model as numbers. Matched whole, never by prefix:
+# 'interval day to second'.startswith('int') is a trap.
+_NUMERIC_DTYPES = (
+    "tinyint", "smallint", "int", "bigint", "float", "double", "decimal",
+)
+
+
+def _feature_cols(
+    df: DataFrame, skip=("rowName",), strings: bool = False
+) -> list[str]:
+    """Training-input columns of `df`: the numeric ones (and strings
+    when `strings`), minus `skip` and the engine's `__` columns."""
+    return [
+        c
+        for c, dt in df.dtypes
+        if c not in skip
+        and not c.startswith("__")
+        and (dt.split("(")[0] in _NUMERIC_DTYPES or strings and dt == "string")
+    ]
+
+
+def _flat_features(df: DataFrame) -> list:
+    """The leaves of `df`'s `features` struct as columns: NESTED row
+    features flatten to dotted names (MLDB-1273: `feats({*}) as
+    features` yields a struct holding a `row` struct — the reference
+    trains on features named row.a, row.b, ...)."""
+    from pyspark.sql.types import StructType
+
+    def leaves(col, dtype, name):
+        if isinstance(dtype, StructType):
+            return [
+                c
+                for f in dtype.fields
+                for c in leaves(col.getField(f.name), f.dataType, f"{name}.{f.name}")
+            ]
+        return [col.alias(name)]
+
+    return [
+        c
+        for f in df.schema["features"].dataType.fields
+        for c in leaves(F.col("features").getField(f.name), f.dataType, f.name)
+    ]
+
+
+def _entity_id(spec: "str | dict") -> str:
+    """An entity reference given as a plain id or as an {id, [type]}
+    config row (MLDB-1025-dataset-output-with-default.py)."""
+    return spec["id"] if isinstance(spec, dict) else spec
+
 
 class Mldb:
     def __init__(self, spark: SparkSession):
@@ -397,16 +447,7 @@ class Mldb:
 
         corpus = self.dataset(dataset_id)
         rn_col = "rowName" if "rowName" in corpus.columns else corpus.columns[0]
-        feat_cols = [
-            c
-            for c, dt in corpus.dtypes
-            if c != rn_col
-            and not c.startswith("__")
-            and dt.startswith(
-                ("int", "bigint", "smallint", "tinyint", "float",
-                 "double", "decimal")
-            )
-        ]
+        feat_cols = _feature_cols(corpus, (rn_col,))
 
         def apply(df: DataFrame, params: dict | None = None) -> DataFrame:
             k = int((params or {}).get("numNeighbors", num_neighbors or 0)) or None
@@ -785,8 +826,7 @@ class Mldb:
                     f" is overlapping with [{_lo:f}, {_hi:f}]"
                 )
             _last = (_lo, _hi)
-        out_spec = params["outputDataset"]
-        out_id = out_spec["id"] if isinstance(out_spec, dict) else out_spec
+        out_id = _entity_id(params["outputDataset"])
         import re as _re
 
         # SELECT * over a cells dataset does not surface row names —
@@ -879,18 +919,25 @@ class Mldb:
     def create_entity(self, kind: str, config: dict) -> dict:
         """createEntity procedure (builtin/basic_procedures.cc:194-230):
         create another entity from a {type, id, params} config and
-        return {kind, config, status}. Supported kinds mirror the
-        entity model (§1.6):
+        return {kind, config, status}; an id-less config gets an
+        `auto_…` id. Kinds and types follow the entity model (§1.6):
 
-        - dataset / type 'tabular': params {dataFileUrl} — parquet or
-          CSV path registered under `id`;
-        - dataset / type 'structured.mutable': params {inputData} —
-          query results registered under `id` (sub_dataset.cc:702);
-        - function / type 'sql.expression' | 'sql.query': params
-          {expression | query, output};
-        - procedure / type 'transform': params {inputData,
-          outputDataset}; runs on creation (the reference's
-          runOnCreation default).
+        - dataset: sparse.mutable, beh.mutable, beh.binary.mutable
+          (empty; rows arrive through record_rows, queryable after
+          commit_dataset), merged, transposed, tabular (parquet or
+          CSV dataFileUrl), structured.mutable (inputData results);
+        - function: sql.expression, sql.query, http.useragent,
+          script.apply, embedding.neighbors, stemmer,
+          filter_stopwords;
+        - procedure (runs on creation): transform, bucketize,
+          import.text, createEntity, svm.train,
+          classifier.experiment, classifier.train,
+          randomforest.binary.train, kmeans.train, svd.train,
+          tsne.train, classifier.test, tfidf.train,
+          experimental.external.procedure, null.
+
+        Model-training procedures fit through mldb_spark.ml.procedures,
+        the same trainers the Python API and SQL reach.
         """
         etype = config.get("type")
         eid = config.get("id")
@@ -928,10 +975,7 @@ class Mldb:
                 # check fires BEFORE the id registers, so a failed
                 # creation never squats the id (the caller may create
                 # it later through a procedure's output)
-                member_ids = [
-                    d["id"] if isinstance(d, dict) else d
-                    for d in params.get("datasets", [])
-                ]
+                member_ids = [_entity_id(d) for d in params.get("datasets", [])]
                 missing = [d for d in member_ids if d not in self._datasets]
                 if missing:
                     raise ValueError(
@@ -951,8 +995,7 @@ class Mldb:
                 # .cc; the reddit/stackoverflow benchmark pipelines
                 # PUT /v1/datasets/<id> {type: transposed}): rows and
                 # columns swap; backed by the FROM-clause transpose()
-                member = params.get("dataset")
-                mid = member["id"] if isinstance(member, dict) else member
+                mid = _entity_id(params.get("dataset"))
                 if mid not in self._datasets:
                     raise ValueError(
                         f"transposed dataset: dataset '{mid}' does not exist"
@@ -1020,13 +1063,7 @@ class Mldb:
                     raise ValueError("You need to define inputData")
                 if "outputDataset" not in params:
                     raise ValueError("You need to define outputDataset")
-                # outputDataset accepts a plain id string OR a
-                # {id, [type]} config row with a defaulted type
-                # (MLDB-1025-dataset-output-with-default.py)
-                out_spec = params["outputDataset"]
-                out_id = (
-                    out_spec["id"] if isinstance(out_spec, dict) else out_spec
-                )
+                out_id = _entity_id(params["outputDataset"])
                 self.transform(params["inputData"], out_id)
                 status = {"outputDataset": out_id}
             elif etype == "bucketize":
@@ -1039,10 +1076,7 @@ class Mldb:
                 # reference's config error — imported cells are atoms
                 from mldb_spark.sources.text_io import import_text
 
-                out_spec = params.get("outputDataset") or eid
-                out_id = (
-                    out_spec["id"] if isinstance(out_spec, dict) else out_spec
-                )
+                out_id = _entity_id(params.get("outputDataset") or eid)
                 sel = params.get("select")
                 if sel and sel != "*":
                     from mldb_spark.dialect import ast as _ast
@@ -1115,9 +1149,11 @@ class Mldb:
                 # svm.train entity (plugins/jml/svm.cc:464;
                 # MLDB-991-svm.py): trainingData is a whole-row spec —
                 # the `label` column is the target, every other
-                # numeric column a feature. Binary targets fit one
-                # LinearSVC; multiclass fits MLlib's OneVsRest over
-                # it (libsvm's own C_SVC decomposition). Registers
+                # numeric column a feature. Labels index to 0..n-1 and
+                # every fit is svm_train's: a binary target is one fit
+                # (class 1 iff margin > 0); more classes fit one
+                # binary svm per class and predict the argmax of the
+                # margins (MLlib OneVsRest's rule). Registers
                 # `functionName` adding an `output` column with the
                 # predicted ORIGINAL label value.
                 if "trainingData" not in params:
@@ -1125,112 +1161,50 @@ class Mldb:
                 tdf = self.query(self._require_from(params["trainingData"]))
                 if "label" not in tdf.columns:
                     raise ValueError("svm.train needs a 'label' column")
-                feat_cols = [
-                    c
-                    for c, dt in tdf.dtypes
-                    if c not in ("label", "rowName")
-                    and not c.startswith("__")
-                    and dt.startswith(
-                        ("int", "bigint", "smallint", "tinyint",
-                         "float", "double", "decimal")
-                    )
-                ]
+                feat_cols = _feature_cols(tdf, ("label", "rowName"))
                 if not feat_cols:
                     raise ValueError("svm.train: no numeric feature columns")
-                from pyspark.ml.classification import LinearSVC, OneVsRest
-                from pyspark.ml.feature import VectorAssembler
+                from mldb_spark.ml.procedures import svm_train
+                from mldb_spark.ml.registry import GLOBAL_REGISTRY
 
-                assembler = VectorAssembler(
-                    inputCols=feat_cols, outputCol="features"
-                )
                 classes = sorted(
                     r[0]
                     for r in tdf.select("label").distinct().collect()
                     if r[0] is not None
                 )
-                idx = {v: float(i) for i, v in enumerate(classes)}
                 mapping = F.create_map(
-                    *[x for v, i in idx.items() for x in (F.lit(v), F.lit(i))]
+                    *[x for i, v in enumerate(classes)
+                      for x in (F.lit(v), F.lit(float(i)))]
                 )
-                back = F.array(*[F.lit(v) for v in classes])
+                li = mapping[F.col("label")]
+                targets = (
+                    [li]
+                    if len(classes) <= 2
+                    else [(li == float(i)).cast("double")
+                          for i in range(len(classes))]
+                )
+                fits = FunctionRegistry()
+                for i, target in enumerate(targets):
+                    svm_train(
+                        tdf.withColumn("__y", target), feat_cols, "__y",
+                        f"__m{i}", fits,
+                    )
                 fname = params.get("functionName", eid)
-                labeled = tdf.withColumn(
-                    "__li", mapping[F.col("label")].cast("double")
-                )
-                # binary local fast path (optimization r9): the same
-                # bounded continuation-Newton hinge solve svm_train
-                # uses — the L2-hinge optimum is unique, so the
-                # decision boundary matches the converged MLlib fit;
-                # degenerate/oversized inputs keep MLlib.
-                local = None
-                if len(classes) == 2:
-                    from mldb_spark.ml.procedures import (
-                        _LR_LOCAL_FEATS,
-                        _LR_LOCAL_ROWS,
-                        _local_linear_svc,
-                    )
 
-                    if len(feat_cols) <= _LR_LOCAL_FEATS:
-                        import numpy as np
-
-                        head = (
-                            labeled.select(
-                                *[F.col(f"`{c}`").cast("double") for c in feat_cols],
-                                F.col("__li"),
-                            )
-                            .limit(_LR_LOCAL_ROWS + 1)
-                            .toPandas()
-                        )
-                        if 0 < len(head) <= _LR_LOCAL_ROWS:
-                            M = head.to_numpy(dtype=float)
-                            if np.all(np.isfinite(M)):
-                                local = _local_linear_svc(
-                                    M[:, :-1], M[:, -1], lam=0.01
-                                )
-                if local is not None:
-                    w_loc, b_loc = local
-
-                    def apply_svm(
-                        d: DataFrame, __w=w_loc, __b0=float(b_loc), __b=back
-                    ) -> DataFrame:
-                        from mldb_spark.ml.procedures import (
-                            _margin_or_raise,
-                        )
-
-                        margin = F.lit(__b0)
-                        for c, wj in zip(feat_cols, __w):
-                            margin = margin + F.col(f"`{c}`").cast(
-                                "double"
-                            ) * F.lit(float(wj))
-                        margin = _margin_or_raise(margin, "svm apply")
-                        # prediction 1 iff margin > 0 — MLlib
-                        # LinearSVC's default-threshold rule
-                        return d.withColumn(
-                            "output",
-                            __b[(margin > 0).cast("int")],
-                        )
-
-                else:
-                    fit_df = assembler.transform(labeled)
-                    svc = LinearSVC(maxIter=50, regParam=0.01, labelCol="__li")
-                    est = (
-                        svc
-                        if len(classes) <= 2
-                        else OneVsRest(classifier=svc, labelCol="__li")
-                    )
-                    model = est.fit(fit_df)
-
-                    def apply_svm(d: DataFrame, __m=model, __b=back) -> DataFrame:
-                        out = __m.transform(assembler.transform(d))
-                        return out.withColumn(
-                            "output", __b[F.col("prediction").cast("int")]
-                        ).drop(
-                            *[c for c in ("features", "rawPrediction",
-                                          "prediction")
-                              if c in out.columns]
-                        )
-
-                from mldb_spark.ml.registry import GLOBAL_REGISTRY
+                def apply_svm(
+                    d: DataFrame,
+                    __fits=fits,
+                    __names=[f"__m{i}" for i in range(len(targets))],
+                    __b=F.array(*[F.lit(v) for v in classes]),
+                ) -> DataFrame:
+                    for n in __names:
+                        d = __fits.apply(n, d).withColumnRenamed("margin", n)
+                    if len(__names) == 1:
+                        pick = (F.col(__names[0]) > 0).cast("int")
+                    else:
+                        m = F.array(*__names)
+                        pick = (F.array_position(m, F.array_max(m)) - 1).cast("int")
+                    return d.withColumn("output", __b[pick]).drop(*__names)
 
                 GLOBAL_REGISTRY.register(fname, apply_svm)
                 status = {"functionName": fname, "classes": classes}
@@ -1254,45 +1228,15 @@ class Mldb:
                         "classifier.experiment inputData must produce "
                         "'features' and 'label' outputs"
                     )
-                from pyspark.sql.types import StructType as _St2
-
-                def _flat_exp(col, dtype, prefix, out):
-                    if isinstance(dtype, _St2):
-                        for fld in dtype.fields:
-                            _flat_exp(
-                                col.getField(fld.name), fld.dataType,
-                                f"{prefix}.{fld.name}" if prefix else fld.name,
-                                out,
-                            )
-                    else:
-                        out.append(col.alias(prefix))
-
-                _ecols: list = []
-                for fld in tdf.schema["features"].dataType.fields:
-                    _flat_exp(
-                        F.col("features").getField(fld.name),
-                        fld.dataType, fld.name, _ecols,
-                    )
                 keep_rn = (
                     [F.col(exp_rn).alias("__rowName")] if exp_rn else []
                 )
                 flat = tdf.select(
-                    *_ecols,
+                    *_flat_features(tdf),
                     F.col("label").cast("double").alias("label"),
                     *keep_rn,
                 ).filter(F.col("label").isNotNull())
-                exp_feats = [
-                    c
-                    for c, dt in flat.dtypes
-                    if c not in ("label", "__rowName")
-                    and (
-                        dt.startswith(
-                            ("int", "bigint", "smallint", "tinyint",
-                             "float", "double", "decimal")
-                        )
-                        or dt == "string"
-                    )
-                ]
+                exp_feats = _feature_cols(flat, ("label",), strings=True)
                 from mldb_spark.ml.procedures import classifier_experiment
 
                 ds_folds = None
@@ -1381,16 +1325,7 @@ class Mldb:
                             for n in label_fields
                         ],
                     )
-                    ml_feats = [
-                        c
-                        for c, dt in flat_ml.dtypes
-                        if not c.startswith("__")
-                        and c not in ("rowName",)
-                        and dt.startswith(
-                            ("int", "bigint", "smallint", "tinyint",
-                             "float", "double", "decimal")
-                        )
-                    ]
+                    ml_feats = _feature_cols(flat_ml)
                     fname = params.get("functionName", eid)
                     multilabel_train(
                         flat_ml.select(
@@ -1431,31 +1366,8 @@ class Mldb:
                     if params.get("mode") == "categorical"
                     else F.col("label").cast("double")
                 )
-                # NESTED row features flatten to dotted feature names
-                # (MLDB-1273: `feats({*}) as features` yields a struct
-                # holding a `row` struct — the reference trains on
-                # features named row.a, row.b, ...)
-                from pyspark.sql.types import StructType as _St
-
-                def _flat_feats(col, dtype, prefix, out):
-                    if isinstance(dtype, _St):
-                        for fld in dtype.fields:
-                            _flat_feats(
-                                col.getField(fld.name), fld.dataType,
-                                f"{prefix}.{fld.name}" if prefix else fld.name,
-                                out,
-                            )
-                    else:
-                        out.append(col.alias(prefix))
-
-                _fcols: list = []
-                for fld in tdf.schema["features"].dataType.fields:
-                    _flat_feats(
-                        F.col("features").getField(fld.name),
-                        fld.dataType, fld.name, _fcols,
-                    )
                 flat = tdf.select(
-                    *_fcols,
+                    *_flat_features(tdf),
                     label.alias("label"),
                     *extra,
                 ).filter(F.col("label").isNotNull())
@@ -1476,18 +1388,9 @@ class Mldb:
                 # encodes them against a capped vocabulary (MLDB-961's
                 # petalCat long/short VALUE_EQUALS features; the old
                 # numeric-only filter silently DROPPED string features)
-                feat_cols = [
-                    c
-                    for c, dt in flat.dtypes
-                    if c not in ("label", "weight", "rowName")
-                    and (
-                        dt.startswith(
-                            ("int", "bigint", "smallint", "tinyint",
-                             "float", "double", "decimal")
-                        )
-                        or dt == "string"
-                    )
-                ]
+                feat_cols = _feature_cols(
+                    flat, ("label", "weight", "rowName"), strings=True
+                )
                 if not feat_cols:
                     raise ValueError(
                         "classifier.train: no numeric feature columns"
@@ -1514,16 +1417,7 @@ class Mldb:
                     raise ValueError("You need to define trainingData")
 
                 tdf = self.query(self._require_from(params["trainingData"]))
-                feat_cols = [
-                    c
-                    for c, dt in tdf.dtypes
-                    if c not in ("rowName",)
-                    and not c.startswith("__")
-                    and dt.startswith(
-                        ("int", "bigint", "smallint", "tinyint",
-                         "float", "double", "decimal")
-                    )
-                ]
+                feat_cols = _feature_cols(tdf)
                 if not feat_cols:
                     raise ValueError(
                         "kmeans.train: trainingData matched no columns"
@@ -1542,9 +1436,8 @@ class Mldb:
                 )
                 cds = params.get("centroidsDataset")
                 if cds:
-                    cid = cds["id"] if isinstance(cds, dict) else cds
                     self.create_dataset(
-                        cid,
+                        _entity_id(cds),
                         centroids.select(
                             F.col("cluster").cast("string").alias("rowName"),
                             *[
@@ -1584,16 +1477,7 @@ class Mldb:
                     raise ValueError("You need to define trainingData")
 
                 tdf = self.query(self._require_from(params["trainingData"]))
-                feat_cols = [
-                    c
-                    for c, dt in tdf.dtypes
-                    if c not in ("rowName",)
-                    and not c.startswith("__")
-                    and dt.startswith(
-                        ("int", "bigint", "smallint", "tinyint",
-                         "float", "double", "decimal")
-                    )
-                ]
+                feat_cols = _feature_cols(tdf)
                 has_strings = etype == "svd.train" and any(
                     dt == "string" and c != "rowName" and not c.startswith("__")
                     for c, dt in tdf.dtypes
@@ -1608,14 +1492,10 @@ class Mldb:
                         )
                         for key in ("rowOutputDataset",
                                     "columnOutputDataset"):
-                            spec = params.get(key)
-                            if spec:
-                                oid = (
-                                    spec["id"]
-                                    if isinstance(spec, dict)
-                                    else spec
+                            if params.get(key):
+                                self.create_dataset(
+                                    _entity_id(params[key]), empty
                                 )
-                                self.create_dataset(oid, empty)
                         return {
                             "kind": kind,
                             "config": config,
@@ -1703,10 +1583,8 @@ class Mldb:
                         ("rowOutputDataset", rows_emb),
                         ("columnOutputDataset", cols_emb),
                     ):
-                        spec = params.get(key)
-                        if spec:
-                            oid = spec["id"] if isinstance(spec, dict) else spec
-                            self.create_dataset(oid, out_df)
+                        if params.get(key):
+                            self.create_dataset(_entity_id(params[key]), out_df)
                     # WIDE-rowset embedRow surface (the reference's
                     # svd.embedRow function entity, MLDB-805/498):
                     # x·V as a pure column expression — V is the
@@ -1758,10 +1636,10 @@ class Mldb:
                         n_components=int(params.get("numOutputDimensions", 2)),
                         perplexity=float(params.get("perplexity", 15.0)),
                     )
-                    spec = params.get("rowOutputDataset")
-                    if spec:
-                        oid = spec["id"] if isinstance(spec, dict) else spec
-                        self.create_dataset(oid, coords)
+                    if params.get("rowOutputDataset"):
+                        self.create_dataset(
+                            _entity_id(params["rowOutputDataset"]), coords
+                        )
                     status = {"columns": feat_cols, "rows": coords.count()}
             elif etype == "classifier.test":
                 # accuracy procedure (plugins/jml/accuracy.cc;
@@ -1890,12 +1768,8 @@ class Mldb:
                         named, nrn = self._query_with_row_name(
                             self._require_from(params["testingData"])
                         )
-                        spec = params["outputDataset"]
-                        oid = (
-                            spec["id"] if isinstance(spec, dict) else spec
-                        )
                         self.create_dataset(
-                            oid,
+                            _entity_id(params["outputDataset"]),
                             classifier_test_roc(
                                 named, weight_col=wcol, row_name_col=nrn
                             ),
@@ -1959,10 +1833,7 @@ class Mldb:
                         .groupBy("rowName")
                         .agg(F.count(F.lit(1)).alias("count"))
                     )
-                out_spec = params.get("outputDataset", f"{eid}_output")
-                out_id = (
-                    out_spec["id"] if isinstance(out_spec, dict) else out_spec
-                )
+                out_id = _entity_id(params.get("outputDataset", f"{eid}_output"))
                 self.create_dataset(out_id, counts, row_name_col="rowName")
                 status = {"outputDataset": out_id}
             elif etype == "experimental.external.procedure":

@@ -27,6 +27,16 @@ from pyspark.sql import functions as F
 from mldb_spark.functions.text import tokenize
 from mldb_spark.ml.registry import GLOBAL_REGISTRY, FunctionRegistry
 
+# Local-regime bounds for the linear fast paths (glz/boolean, svm):
+# collect at most _LR_LOCAL_ROWS+1 rows of at most _LR_LOCAL_FEATS
+# features (~50 MB ceiling) — inputs beyond either bound keep the
+# distributed MLlib fit.
+_LR_LOCAL_ROWS = 200_000
+_LR_LOCAL_FEATS = 32
+# kmeans / GMM fit driver-local on at most this many vectors (a few
+# MB); larger inputs keep MLlib's distributed Lloyd / EM.
+_LOCAL_CLUSTER_ROWS = 4096
+
 
 def _to_vector(df: DataFrame, array_col: str, out_col: str = "features") -> DataFrame:
     from pyspark.ml.functions import array_to_vector
@@ -83,7 +93,6 @@ def kmeans_train(
     seed: int = 42,
     name: str = "kmeans",
     registry: FunctionRegistry = GLOBAL_REGISTRY,
-    local_cutoff: int = 4096,
 ):
     """k-means over an ARRAY<numeric> column. Returns (model,
     centroids_df); registers `name` as an assignment function adding
@@ -91,7 +100,7 @@ def kmeans_train(
 
     Two regimes (VERDICT r8 #5 — the MLlib fit costs seconds of pure
     scheduling on tiny inputs):
-    - <= local_cutoff rows (term embeddings, entity trainings, the
+    - <= _LOCAL_CLUSTER_ROWS rows (term embeddings, entity trainings, the
       reference's own vocab-sized kmeans chains): collect once, run
       seeded kmeans++/Lloyd in numpy on the driver. The collect is
       bounded by the cutoff (a few MB).
@@ -102,8 +111,8 @@ def kmeans_train(
     ties to the lowest cluster id, so the oracle's centroid-replay
     contract is identical in both regimes."""
     spark = df.sparkSession
-    head = df.select(array_col).limit(local_cutoff + 1).collect()
-    if len(head) <= local_cutoff and head:
+    head = df.select(array_col).limit(_LOCAL_CLUSTER_ROWS + 1).collect()
+    if len(head) <= _LOCAL_CLUSTER_ROWS and head:
         import numpy as np
 
         X = np.array([r[0] for r in head], dtype=float)
@@ -162,11 +171,6 @@ def kmeans_train(
     return model, centroids
 
 
-# Local-regime bounds for the glz/boolean fast path: collect at most
-# _LR_LOCAL_ROWS+1 rows of at most _LR_LOCAL_FEATS features (~50 MB
-# ceiling) — inputs beyond either bound keep the distributed MLlib fit.
-_LR_LOCAL_ROWS = 200_000
-_LR_LOCAL_FEATS = 32
 # One regularization constant for BOTH the MLlib glz estimators and
 # the local Newton fast path — a change to one must not silently
 # desync the other (ADVICE r9).
@@ -240,19 +244,13 @@ class _LocalLogisticModel:
         self.intercept = intercept
 
 
-def _try_local_logistic(
-    df: DataFrame, feature_cols, label_col, lam: float, max_iter: int = 50
-):
-    """Bounded-collect front end for _local_logistic: returns
-    (coefficients, intercept) or None when the input exceeds the
-    local bounds or looks degenerate (NaN/null features, constant
-    labels) — those keep the exact MLlib path and its error
-    surface. max_iter is honored as an ITERATION BUDGET (the same
-    upper-bound semantics MLlib's maxIter has): Newton runs at most
-    max_iter steps and the result is used only if it CONVERGED within
-    them — so the caller never sees a partially-converged local
-    answer; if the budget is too small to converge, the MLlib path
-    (which can legitimately stop early) takes over."""
+def _local_binary_xy(df: DataFrame, feature_cols, label_col):
+    """The one bounded collect behind the linear local fast paths
+    (logistic, svm): returns numpy (X, y) or None when the input
+    exceeds _LR_LOCAL_ROWS / _LR_LOCAL_FEATS or looks degenerate —
+    empty, NaN/null cells, constant labels or labels outside {0, 1}.
+    None keeps the caller on the exact MLlib path and its error
+    surface."""
     import numpy as np
 
     if len(feature_cols) > _LR_LOCAL_FEATS:
@@ -273,7 +271,22 @@ def _try_local_logistic(
     X, y = M[:, :-1], M[:, -1]
     if y.min() == y.max() or not set(np.unique(y)) <= {0.0, 1.0}:
         return None
-    return _local_logistic(X, y, lam, max_iter=max_iter)
+    return X, y
+
+
+def _try_local_logistic(
+    df: DataFrame, feature_cols, label_col, lam: float, max_iter: int = 50
+):
+    """Bounded-collect front end for _local_logistic: returns
+    (coefficients, intercept) or None when _local_binary_xy declines
+    the input. max_iter is honored as an ITERATION BUDGET (the same
+    upper-bound semantics MLlib's maxIter has): Newton runs at most
+    max_iter steps and the result is used only if it CONVERGED within
+    them — so the caller never sees a partially-converged local
+    answer; if the budget is too small to converge, the MLlib path
+    (which can legitimately stop early) takes over."""
+    xy = _local_binary_xy(df, feature_cols, label_col)
+    return None if xy is None else _local_logistic(*xy, lam, max_iter=max_iter)
 
 
 def classifier_train(
@@ -1361,8 +1374,16 @@ def svm_train(
     name: str = "svm",
     registry: FunctionRegistry = GLOBAL_REGISTRY,
 ):
-    """svm.train (plugins/jml/svm.cc:464) → MLlib LinearSVC; registers
-    a margin-score function."""
+    """svm.train (plugins/jml/svm.cc:464): the package's one linear
+    SVM fit — MLlib LinearSVC's objective (regParam 0.01, libsvm's
+    tol 1e-3). Registers `name` as a scorer adding `margin` = b + w·x.
+
+    Binary contract: `label_col` holds 0/1 (1 is the positive class);
+    the decision is `margin > 0`, LinearSVC's default-threshold rule.
+    Multiclass inputs are the caller's one-vs-rest: one binary fit
+    per class (label = class ? 1 : 0), predicting the argmax of the
+    per-class margins, which is what MLlib's OneVsRest computes (the
+    svm.train entity in api.py does this)."""
     from pyspark.ml.classification import LinearSVC
     from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.functions import vector_to_array
@@ -1373,24 +1394,8 @@ def svm_train(
     # replaces MLlib's ~50 scheduled OWLQN jobs. Degenerate inputs
     # (constant labels — where the unregularized intercept makes the
     # optimum non-unique — NaNs, oversized data) keep the MLlib path.
-    import numpy as np
-
-    local = None
-    if len(feature_cols) <= _LR_LOCAL_FEATS:
-        head = (
-            df.select(
-                *[F.col(f"`{c}`").cast("double") for c in feature_cols],
-                F.col(label_col).cast("double").alias("__y"),
-            )
-            .limit(_LR_LOCAL_ROWS + 1)
-            .toPandas()
-        )
-        if 0 < len(head) <= _LR_LOCAL_ROWS:
-            M = head.to_numpy(dtype=float)
-            if np.all(np.isfinite(M)):
-                X, y = M[:, :-1], M[:, -1]
-                if y.min() != y.max() and set(np.unique(y)) <= {0.0, 1.0}:
-                    local = _local_linear_svc(X, y, lam=0.01)
+    xy = _local_binary_xy(df, feature_cols, label_col)
+    local = None if xy is None else _local_linear_svc(*xy, lam=0.01)
     if local is not None:
         w_loc, b_loc = local
         model = _LocalLogisticModel([float(x) for x in w_loc], float(b_loc))
@@ -1549,7 +1554,6 @@ def gaussian_clustering_train(
     seed: int = 42,
     name: str = "gmm",
     registry: FunctionRegistry = GLOBAL_REGISTRY,
-    local_cutoff: int = 4096,
 ):
     """gaussianclustering.train (plugins/jml/em_interface.cc:383) →
     GaussianMixture (EM); registers a hard-assignment function adding
@@ -1558,7 +1562,7 @@ def gaussian_clustering_train(
     Two regimes, the kmeans_train pattern (optimization r9): the
     MLlib EM schedules ~2 one-task stages PER ITERATION — 210 stages
     and 16s of wall for 1.7s of task time on the 2000-vector gate —
-    so inputs ≤ local_cutoff rows collect once and fit a seeded
+    so inputs ≤ _LOCAL_CLUSTER_ROWS rows collect once and fit a seeded
     numpy EM on the driver; larger inputs keep MLlib's distributed
     EM. The local regime registers argmax of
     ln(w_k) − ½(ln|Σ_k| + (x−μ_k)ᵀΣ_k⁻¹(x−μ_k)) with ties to the
@@ -1569,9 +1573,9 @@ def gaussian_clustering_train(
     import numpy as np
 
     spark = df.sparkSession
-    head = df.select(array_col).limit(local_cutoff + 1).collect()
+    head = df.select(array_col).limit(_LOCAL_CLUSTER_ROWS + 1).collect()
     fitted = None
-    if len(head) <= local_cutoff and head:
+    if len(head) <= _LOCAL_CLUSTER_ROWS and head:
         X = np.array([r[0] for r in head], dtype=float)
         fitted = _local_gmm(X, k, seed)
         # degenerate input (1 row / k>n tiny sets): np.cov yields NaN

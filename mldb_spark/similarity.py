@@ -422,15 +422,9 @@ def ivf_topk_quantized(
     at 100 TB), and the float column is touched only for the
     rerank*k coarse survivors per query, which are exact-rescored.
     Recall vs the exact scan is pinned in tests; raise rerank to
-    trade bandwidth for recall."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
+    trade bandwidth for recall. The coarse quantizer is ivf_index's."""
     corpus = quantize_embeddings(corpus, vec_col, "__q8")
-    vecs = corpus.withColumn("__f", array_to_vector(F.col(vec_col).cast("array<double>")))
-    km = KMeans(k=n_cells, seed=seed, featuresCol="__f", predictionCol="cell").fit(vecs)
-    assigned = km.transform(vecs).drop("__f")
-    centroids = [[float(x) for x in c] for c in km.clusterCenters()]
+    assigned, centroids = ivf_index(corpus, n_cells, seed, id_col, vec_col)
 
     def sq_dist(c: list[float]):
         arr = array_double_lit(c)

@@ -923,3 +923,83 @@ def test_tfidf_none_corpus_size_guard():
 
     with pytest.raises(ValueError, match="corpus size"):
         tfidf_score_table(None, None, None, idf_type="inverseSmooth")
+
+
+def test_cluster_fits_mllib_regime(spark):
+    """_LOCAL_CLUSTER_ROWS = 0 forces the distributed MLlib kmeans and
+    GMM fits; their registered assignments still add `cluster` /
+    `prediction` to every row."""
+    import mldb_spark.ml.procedures as proc
+    from mldb_spark.ml.registry import FunctionRegistry
+
+    rows = [([float(i % 3) * 10 + (i % 5) * 0.1, float(i % 3)],) for i in range(60)]
+    df = spark.createDataFrame(rows, "embedding array<double>")
+    reg = FunctionRegistry()
+    orig = proc._LOCAL_CLUSTER_ROWS
+    proc._LOCAL_CLUSTER_ROWS = 0
+    try:
+        km, _ = proc.kmeans_train(df, "embedding", k=3, name="kmd", registry=reg)
+        gmm = proc.gaussian_clustering_train(
+            df, "embedding", k=3, name="gmmd", registry=reg
+        )
+    finally:
+        proc._LOCAL_CLUSTER_ROWS = orig
+    assert not isinstance(km, proc._LocalKMeansModel)
+    assert not isinstance(gmm, proc._LocalGMMModel)
+    for fn, col in (("kmd", "cluster"), ("gmmd", "prediction")):
+        out = reg.apply(fn, df).select(col).collect()
+        assert len(out) == 60 and all(r[0] is not None for r in out)
+
+
+def test_kmeans_entity_skips_interval_columns(spark):
+    """An interval column is not a numeric feature ('interval…' starts
+    with 'int'): kmeans.train over a dataset carrying one trains on
+    the real numeric columns only."""
+    import datetime as dt
+
+    from mldb_spark.api import Mldb
+
+    mldb = Mldb(spark)
+    rows = [
+        (float(i % 2) * 10 + i * 0.01, float(i % 2), dt.timedelta(seconds=i))
+        for i in range(20)
+    ]
+    mldb.create_dataset(
+        "kmiv",
+        spark.createDataFrame(rows, "x double, y double, d interval day to second"),
+    )
+    status = mldb.create_entity("procedure", {
+        "type": "kmeans.train", "id": "kmiv_train",
+        "params": {"trainingData": "SELECT * FROM kmiv",
+                   "numClusters": 2, "functionName": "kmiv_fn"},
+    })["status"]
+    assert status["columns"] == ["x", "y"]
+
+
+def test_svm_entity_three_classes(spark):
+    """svm.train with three well-separated label values: one binary
+    svm_train fit per class, argmax of the margins — a point inside
+    each cluster gets that cluster's ORIGINAL label back."""
+    from mldb_spark.api import Mldb
+
+    mldb = Mldb(spark)
+    centers = {"a": (0.0, 10.0), "b": (-10.0, -6.0), "c": (10.0, -6.0)}
+    rows = [
+        (lab, cx + 0.3 * ((i * 7) % 5 - 2), cy + 0.3 * ((i * 3) % 5 - 2))
+        for lab, (cx, cy) in centers.items()
+        for i in range(10)
+    ]
+    mldb.create_dataset(
+        "svm3", spark.createDataFrame(rows, "label string, x double, y double")
+    )
+    status = mldb.create_entity("procedure", {
+        "type": "svm.train", "id": "svm3_train",
+        "params": {"trainingData": {"from": {"id": "svm3"}},
+                   "functionName": "svm3"},
+    })["status"]
+    assert status["classes"] == ["a", "b", "c"]
+    for lab, (cx, cy) in centers.items():
+        out = mldb.query(
+            f"SELECT svm3({{*}})[output] AS o FROM (SELECT {cx} AS x, {cy} AS y)"
+        ).collect()
+        assert out[0]["o"] == lab
