@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from mldb_spark.dialect import MldbContext
 from mldb_spark.ml.registry import FunctionRegistry
+from mldb_spark.session import local_frame
 
 # Spark dtype names (DataFrame.dtypes, decimal without its precision)
 # that feed a model as numbers. Matched whole, never by prefix:
@@ -678,7 +679,10 @@ class Mldb:
     def commit_dataset(self, dataset_id: str) -> None:
         """Commit a mutable dataset: the accumulated cells register as
         a CELLS dataset (per-cell timestamps — sparse.mutable
-        semantics; GET_LATEST view + temporal_* family apply)."""
+        semantics; GET_LATEST view + temporal_* family apply). The
+        committed cells frame is a driver-side LocalRelation
+        (session.local_frame), so no Python worker runs behind reads
+        of the dataset."""
         import datetime as _dt
 
         buf = getattr(self, "_mutable", {}).pop(dataset_id, None)
@@ -723,8 +727,8 @@ class Mldb:
              to_ts(t))
             for r, c, v, t in buf
         ]
-        df = self.spark.createDataFrame(
-            rows, f"row string, column string, value {vtype}, ts timestamp"
+        df = local_frame(
+            self.spark, rows, f"row string, column string, value {vtype}, ts timestamp"
         )
         self._datasets[dataset_id] = df
         numeric_cols = None
@@ -858,8 +862,8 @@ class Mldb:
             hi_i = n if hi == 100 else int(hi / 100 * n)
             for i in range(lo_i, hi_i):
                 cells.append((names[i], "bucket", bname, max_ts))
-        df = self.spark.createDataFrame(
-            cells, "row string, column string, value string, ts timestamp"
+        df = local_frame(
+            self.spark, cells, "row string, column string, value string, ts timestamp"
         )
         self._datasets[out_id] = df
         self.ctx.register_cells(out_id, df)
@@ -1487,7 +1491,8 @@ class Mldb:
                         # an empty column match is NOT an error for
                         # svd.train (MLDB-417: the reference trains an
                         # EMPTY svd and succeeds) — emit empty outputs
-                        empty = self.spark.createDataFrame(
+                        empty = local_frame(
+                            self.spark,
                             [], "rowName string, embedding array<double>"
                         )
                         for key in ("rowOutputDataset",

@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 
 from mldb_spark.caching import persist_tracked
 from mldb_spark.functions.text import doc_fingerprint, tokenize, word_shingles
+from mldb_spark.session import local_frame
 
 
 def exact_duplicates(
@@ -659,8 +660,8 @@ def connected_components(
                     T.StructField("component", node_type, False),
                 ]
             )
-            out = pairs.sparkSession.createDataFrame(
-                sorted(label_of.items()), schema
+            out = local_frame(
+                pairs.sparkSession, sorted(label_of.items()), schema
             )
             pairs_cached.unpersist()
             return out

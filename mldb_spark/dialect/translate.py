@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from mldb_spark.dialect import ast
 from mldb_spark.dialect.parser import parse_statement
+from mldb_spark.session import local_frame
 
 AGGREGATE_FNS = {
     "count", "sum", "avg", "min", "max", "count_distinct", "variance",
@@ -2635,7 +2636,9 @@ class MldbContext:
 
         Scale shape: the wide view is one partial-agg shuffle (max_by
         per (row, column), conditional-agg pivot on row); the distinct
-        column list is collected once with the AS-* spread cap.
+        column list is collected once with the AS-* spread cap. A
+        committed sparse.mutable dataset's cells frame is a driver-side
+        LocalRelation (session.local_frame), so both run in the JVM.
         """
         from mldb_spark.operators.temporal import latest_cells
 
@@ -3316,7 +3319,8 @@ class MldbContext:
                         "row_dataset($param) needs a row or array value"
                     )
                 if items and all(isinstance(v, dict) for _, v in items):
-                    return self.spark.createDataFrame(
+                    return local_frame(
+                        self.spark,
                         [
                             (str(n), str(n),
                              {str(k): float(x) for k, x in v.items()})
@@ -3330,7 +3334,8 @@ class MldbContext:
                     for _, v in items
                 )
                 vt = "double" if numeric else "string"
-                return self.spark.createDataFrame(
+                return local_frame(
+                    self.spark,
                     [
                         (str(n), str(n),
                          (None if v is None
@@ -3368,7 +3373,8 @@ class MldbContext:
                     for i, (_, x) in enumerate(fields)
                 ]
             ).collect()[0]
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (str(i), n, vals[f"__v{i}"])
                     for i, (n, _) in enumerate(fields)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from mldb_spark.functions.text import tokenize
 from mldb_spark.ml.registry import GLOBAL_REGISTRY, FunctionRegistry
+from mldb_spark.session import local_frame
 
 # Local-regime bounds for the linear fast paths (glz/boolean, svm):
 # collect at most _LR_LOCAL_ROWS+1 rows of at most _LR_LOCAL_FEATS
@@ -118,7 +119,8 @@ def kmeans_train(
         X = np.array([r[0] for r in head], dtype=float)
         C = _local_kmeans(X, k, seed)
         model = _LocalKMeansModel([c for c in C])
-        centroids = spark.createDataFrame(
+        centroids = local_frame(
+            spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(C)],
             "cluster int, centroid array<double>",
         )
@@ -159,7 +161,8 @@ def kmeans_train(
 
     vecs = _to_vector(df, array_col)
     model = KMeans(k=k, seed=seed, featuresCol="features", predictionCol="cluster").fit(vecs)
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cluster int, centroid array<double>",
     )
@@ -655,7 +658,8 @@ def classifier_test(
         )
         picked = {r["__rk"]: r["rel"] for r in ranked.collect()}
         qs = {q: float(picked[i]) for q, i in idxs.items()}
-        return scored.sparkSession.createDataFrame(
+        return local_frame(
+            scored.sparkSession,
             [(mse, r2, qs[0.25], qs[0.5], qs[0.75], qs[0.9])],
             "mse double, r2 double, quantile_err_25 double, "
             "quantile_err_50 double, quantile_err_75 double, "
@@ -1497,7 +1501,7 @@ class _LocalGMMModel:
             )
             for m, c in zip(self._means, self._covs)
         ]
-        return self._spark.createDataFrame(rows, ["mean", "cov"])
+        return local_frame(self._spark, rows, ["mean", "cov"])
 
 
 def _local_gmm(X, k: int, seed: int, n_iter: int = 100, tol: float = 1e-6):
@@ -1795,7 +1799,7 @@ def tsne_train(
     schema = f"`{id_col}` {id_type}, " + ", ".join(
         f"{n} double" for n in names
     )
-    return df.sparkSession.createDataFrame(coords, schema)
+    return local_frame(df.sparkSession, coords, schema)
 
 
 def tsne_embed_row(
@@ -1959,8 +1963,8 @@ def classifier_experiment(
 
         with ThreadPoolExecutor(max_workers=4) as pool:
             results = list(pool.map(run_spec, enumerate(dataset_folds)))
-        return df.sparkSession.createDataFrame(
-            results,
+        return local_frame(
+            df.sparkSession, results,
             "fold int, n_train long, n_test long, auc double, accuracy double",
         )
 
@@ -1993,7 +1997,8 @@ def classifier_experiment(
 
     with ThreadPoolExecutor(max_workers=min(folds, 4)) as pool:
         results = list(pool.map(run_fold, range(folds)))
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         results, "fold int, n_train long, n_test long, auc double, accuracy double"
     )
 
@@ -2156,7 +2161,8 @@ def svd_train(
             # distributed Gram: per-row self-join (pair count per row
             # is t², bounded by the pruned vocab) — all codegen'd JVM
             cidx_df = F.broadcast(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [(c, i) for c, i in col_idx.items()],
                     f"{column_col} string, __ci int",
                 )
@@ -2223,7 +2229,8 @@ def svd_train(
         sigma = [float(x) for x in svd.s]
         v = svd.V.toArray()  # n_cols x k, local (vocab-sized)
 
-    col_emb = spark.createDataFrame(
+    col_emb = local_frame(
+        spark,
         [(c, [float(x) for x in v[i]]) for c, i in col_idx.items()],
         f"{column_col} string, embedding array<double>",
     )

@@ -13,6 +13,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mldb_spark.session import local_frame
+
 
 def distinct_on(
     df: DataFrame,
@@ -391,8 +393,8 @@ def column_stats(
         )
         for i, c in enumerate(cols)
     ]
-    return df.sparkSession.createDataFrame(
-        data,
+    return local_frame(
+        df.sparkSession, data,
         "columnName string, dtype string, rowCount long, n_nonnull long, n_distinct_approx long",
     )
 
@@ -562,8 +564,8 @@ def summary_statistics(
                 None, None, None, None, None, None, None,
                 freq.get(c, {}),
             ))
-    return df.sparkSession.createDataFrame(
-        out,
+    return local_frame(
+        df.sparkSession, out,
         "column string, data_type string, num_null bigint, "
         "num_unique bigint, min double, max double, avg double, "
         "stddev double, q1 double, median double, q3 double, "

@@ -44,6 +44,7 @@ from mldb_spark.operators.relational import (
     stats_table,
 )
 from mldb_spark.operators.temporal import events_to_cells, latest_cells, when_filter
+from mldb_spark.session import local_frame
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
@@ -1079,12 +1080,14 @@ def q89_pca(spark: SparkSession, sf: str) -> DataFrame:
     pc = model.pc.toArray()  # (dim, k) — columns are components
     export_oracle_fixture_df(
         "q89_components",
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, [float(x) for x in pc[:, i]]) for i in range(pc.shape[1])],
             "component int, vector array<double>",
         ),
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, round(v + 1e-9, 4)) for i, v in enumerate(variances)],
         "component int, explained_variance double",
     )
@@ -1596,20 +1599,20 @@ def q67_gaussian_clusters(spark: SparkSession, sf: str) -> DataFrame:
             )
         export_oracle_fixture_df(
             "q67_comps",
-            spark.createDataFrame(
-                comps, "component long, weight double, logdet double"
+            local_frame(
+                spark, comps, "component long, weight double, logdet double"
             ),
         )
         export_oracle_fixture_df(
             "q67_means",
-            spark.createDataFrame(
-                means, "component long, i long, mu double"
+            local_frame(
+                spark, means, "component long, i long, mu double"
             ),
         )
         export_oracle_fixture_df(
             "q67_prec",
-            spark.createDataFrame(
-                prec, "component long, i long, j long, p double"
+            local_frame(
+                spark, prec, "component long, i long, j long, p double"
             ),
         )
     assigned = reg.apply("gmm_q67", emb)
@@ -1698,7 +1701,7 @@ def q70_parse_useragent(spark: SparkSession, sf: str) -> DataFrame:
     identical CASE/regexp_extract chain."""
     from mldb_spark.functions.web import parse_useragent
 
-    df = spark.createDataFrame([(i, ua) for i, ua in enumerate(Q70_UAS)], "id long, ua string")
+    df = local_frame(spark, [(i, ua) for i, ua in enumerate(Q70_UAS)], "id long, ua string")
     return (
         df.select("id", parse_useragent(F.col("ua")).alias("p"))
         .select(
@@ -1814,8 +1817,8 @@ def q74_classifier_experiment(spark: SparkSession, sf: str) -> DataFrame:
     )
     export_oracle_fixture_df(
         "q74_coefs",
-        spark.createDataFrame(
-            sorted(coefs),
+        local_frame(
+            spark, sorted(coefs),
             "fold int, w_year double, w_month double, w_prio double, "
             "w_cust double, b double",
         ),
@@ -1865,7 +1868,8 @@ def q76_ivf_ann(spark: SparkSession, sf: str) -> DataFrame:
     )
     export_oracle_fixture_df(
         "q76_centroids",
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, c) for i, c in enumerate(centroids)],
             "cell int, centroid array<double>",
         ),
@@ -2257,7 +2261,8 @@ def q48_structured_mutable(spark: SparkSession, sf: str) -> DataFrame:
     from mldb_spark.api import Mldb
 
     m = Mldb(spark)
-    rows = spark.createDataFrame(
+    rows = local_frame(
+        spark,
         [
             ("r1", 1, "AMERICA", 2.5),
             ("r2", 2, "ASIA", 4.0),
@@ -2291,7 +2296,7 @@ def q49_word2vec_import(spark: SparkSession, sf: str) -> DataFrame:
         ("gamma", [6.0, 8.0, 0.0]),
         ("delta", [1.0, 0.0, 0.0]),
     ]
-    vecs = spark.createDataFrame(words, "word string, vector array<float>")
+    vecs = local_frame(spark, words, "word string, vector array<float>")
     path = f"/tmp/mldb_spark_q89_{os.path.basename(sf)}.bin"
     export_word2vec_binary(vecs, path)
     back = import_word2vec(spark, path)
@@ -2308,7 +2313,8 @@ def q90_fetcher_blob(spark: SparkSession, sf: str) -> DataFrame:
     bytes independently."""
     from mldb_spark.sources.fetcher import fetch_dataset
 
-    paths = spark.createDataFrame(
+    paths = local_frame(
+        spark,
         [(f"file://{_FIXTURE_DIR}/products_sample.csv",)], "url string"
     )
     fetched = fetch_dataset(paths, "url")
@@ -2428,7 +2434,8 @@ def q95_xlsx_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     hash (mirrors the q49 word2vec round-trip pattern)."""
     from mldb_spark.sources.git_io import export_xlsx, import_xlsx
 
-    src = spark.createDataFrame(
+    src = local_frame(
+        spark,
         [
             ("alice", 12.5, 3, True),
             ("bob", -4.0, 0, False),

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -30,7 +30,9 @@ def get_spark(
       At 100 TB you'd raise it (e.g. 2000-8000) via external conf; the
       value here suits local[32] at sf<=1.
     - Arrow on: every pandas_udf / toPandas crosses the JVM<->Python
-      boundary in columnar batches.
+      boundary in columnar batches. Driver-side rows cross by Arrow
+      too, whatever this conf says: `local_frame` hands Spark a
+      pyarrow Table, so a local frame is a JVM LocalRelation.
     - session timezone pinned UTC so TIMESTAMP semantics match the
       reference (timezone-less UTC instants, TypeSystem.md:25-27) and
       the duckdb oracle.
@@ -93,3 +95,71 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side rows as a DataFrame the JVM holds as a LocalRelation.
+
+    The one way driver-local results re-enter Spark.
+    `spark.createDataFrame(<python rows>, schema)` parallelizes pickled
+    rows through a PythonRDD, so every job over that frame, or over
+    anything derived from it, runs Python-worker tasks. Built from a
+    pyarrow Table, the rows cross once in Arrow batches and Spark plans
+    the frame as a LocalRelation: no Python worker runs behind it.
+
+    `rows` are positional tuples (lists and Rows work too). `schema` is
+    a DDL string, a StructType, or a list of column names; names take
+    Spark's own inference over the rows, as createDataFrame does, so
+    the inferred types stay the same. UDT columns (ml Vector/Matrix)
+    are stored through the UDT's `serialize`. Naive datetimes are read
+    as UTC instants, as parquet timestamps are under the UTC session
+    timezone `get_spark` pins.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, UserDefinedType, _parse_datatype_string
+
+    rows = list(rows)
+    if isinstance(schema, str):
+        struct = _parse_datatype_string(schema)
+    elif isinstance(schema, StructType):
+        struct = schema
+    else:
+        struct = spark._inferSchemaFromList(rows, names=list(schema))
+    if not isinstance(struct, StructType):
+        raise TypeError(f"local_frame needs a struct schema, got {schema!r}")
+    columns = []
+    has_udt = False
+    for i, field in enumerate(struct.fields):
+        vals = [r[i] for r in rows]
+        if isinstance(field.dataType, UserDefinedType):
+            has_udt = True
+            vals = [None if v is None else field.dataType.serialize(v) for v in vals]
+        columns.append(vals)
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    if has_udt:
+        return _udt_arrow_frame(spark, table, struct)
+    return spark.createDataFrame(table, struct)
+
+
+def _udt_arrow_frame(spark: SparkSession, table, struct) -> DataFrame:
+    """The JVM end of createDataFrame(<pyarrow Table>) for a table that
+    already has struct's exact Arrow schema. PySpark 4.1's
+    timestamp-localize pass over the table cannot descend into a UDT
+    column (it reads `.fields` off the UDT), so UDT frames hand their
+    batches to the same JVM reader directly."""
+    from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+
+    jvm = spark._jvm
+    jiter = spark._sc._serialize_to_jvm(
+        table.to_batches(),
+        ArrowStreamSerializer(),
+        jvm.PythonSQLUtils.readArrowStreamFromFile,
+        jvm.ArrowIteratorServer,
+    )
+    jdf = jvm.PythonSQLUtils.toDataFrame(jiter, struct.json(), spark._jsparkSession)
+    return DataFrame(jdf, spark)

@@ -13,6 +13,8 @@ import subprocess
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mldb_spark.session import local_frame
+
 _FORMAT = "%H%x1f%an%x1f%ae%x1f%cn%x1f%ce%x1f%at%x1f%P%x1f%s"
 
 
@@ -73,7 +75,8 @@ def import_git(
         "parents array<string>, message string, filesChanged long, "
         "insertions long, deletions long"
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(r[k] for k in (
             "commit", "author", "authorEmail", "committer",
             "committerEmail", "author_ts", "parents", "message",
@@ -196,7 +199,7 @@ def import_xlsx(spark: SparkSession, path: str, sheet: str | None = None) -> Dat
     for j in range(width):
         h = grid[0].get(j)
         name = str(h) if h is not None else f"x{j}"
-        # duplicate header cells would collide in createDataFrame;
+        # duplicate header cells would collide in the frame schema;
         # disambiguate with an ordinal suffix like pandas does
         if name in seen:
             seen[name] += 1
@@ -221,7 +224,7 @@ def import_xlsx(spark: SparkSession, path: str, sheet: str | None = None) -> Dat
                 )
                 for row in data
             ]
-    return spark.createDataFrame(data, header)
+    return local_frame(spark, data, header)
 
 
 def export_xlsx(df: DataFrame, path: str, sheet: str = "Sheet1", max_rows: int = 1_048_576) -> None:

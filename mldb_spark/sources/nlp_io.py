@@ -26,6 +26,8 @@ import struct as _struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mldb_spark.session import local_frame
+
 
 def import_sentiwordnet(spark: SparkSession, path: str) -> DataFrame:
     """SentiWordNet file → (word, pos, senti_pos, senti_neg,
@@ -87,7 +89,7 @@ def import_word2vec(
     DataFrame. limit/offset mirror the reference's config
     (plugins/nlp/word2vec.cc:34-56)."""
     rows = list(read_word2vec_binary(path, limit, offset))
-    return spark.createDataFrame(rows, "word string, vector array<double>")
+    return local_frame(spark, rows, "word string, vector array<double>")
 
 
 def export_word2vec_binary(

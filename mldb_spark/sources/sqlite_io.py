@@ -14,7 +14,7 @@ single-file, single-node store by design — the reference's dataset is
 too (its writes serialize behind one write lock,
 sqlite_dataset.cc:86-89) — so the export funnels the cells through the
 driver in bounded toLocalIterator batches and the import reads on the
-driver before distributing via createDataFrame. Use parquet for
+driver before handing Spark a local frame. Use parquet for
 anything that shouldn't fit on one node; this source exists for parity
 with sqlite-backed reference deployments.
 
@@ -32,6 +32,8 @@ import sqlite3
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mldb_spark.session import local_frame
 
 _BATCH = 10_000
 
@@ -141,7 +143,8 @@ def import_sqlite_sparse(spark: SparkSession, path: str) -> DataFrame:
         ).fetchall()
     finally:
         con.close()
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(r, c, v, ts) for r, c, v, ts in rows],
         "row string, column string, value string, ts_us long",
     )
@@ -167,4 +170,4 @@ def import_sqlite(spark: SparkSession, path: str, query: str) -> DataFrame:
         con.close()
     if not data:
         raise ValueError(f"sqlite query returned no rows: {query!r}")
-    return spark.createDataFrame(data, cols)
+    return local_frame(spark, data, cols)

@@ -22,6 +22,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mldb_spark.session import local_frame
+
 
 def list_files(
     spark: SparkSession,
@@ -45,8 +47,8 @@ def list_files(
             full = os.path.join(dirpath, f)
             st = os.stat(full)
             rows.append((full, f, int(st.st_size), float(st.st_mtime)))
-    return spark.createDataFrame(
-        rows, "path string, name string, size_bytes long, mtime double"
+    return local_frame(
+        spark, rows, "path string, name string, size_bytes long, mtime double"
     )
 
 

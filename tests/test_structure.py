@@ -23,3 +23,26 @@ def test_model_fits_live_in_ml_package():
         if PKG / "ml" not in p.parents and _ESTIMATOR_IMPORT.search(p.read_text())
     ]
     assert offenders == []
+
+
+def test_driver_rows_enter_spark_through_local_frame():
+    """Driver-side rows become a DataFrame only in session.local_frame,
+    which builds an Arrow LocalRelation: a `createDataFrame(<python
+    rows>)` elsewhere would parallelize pickled rows through a
+    PythonRDD and put Python-worker tasks behind every job over the
+    frame. The one known Python RDD left is rest.apply_function_json's
+    `sparkContext.parallelize` + `read.json`, off every benchmarked
+    path."""
+    offenders = []
+    for p in sorted(PKG.rglob("*.py")):
+        for n, line in enumerate(p.read_text().splitlines(), 1):
+            if ".createDataFrame(" in line:
+                offenders.append(f"{p.relative_to(PKG.parent)}:{n}")
+    session = (PKG / "session.py").read_text().splitlines()
+    start = next(i for i, l in enumerate(session) if l.startswith("def local_frame("))
+    end = next(
+        (i for i, l in enumerate(session) if i > start and l.startswith("def ")),
+        len(session),
+    )
+    allowed = {f"mldb_spark/session.py:{i + 1}" for i in range(start, end)}
+    assert [o for o in offenders if o not in allowed] == []
