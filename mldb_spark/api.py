@@ -70,11 +70,17 @@ def _entity_id(spec: "str | dict") -> str:
 
 
 class Mldb:
+    """One MLDB server in-process. Its state: `ctx`, the one catalog of
+    datasets and functions (dialect.MldbContext); `_mutable`, the cell
+    buffers of mutable datasets not yet committed; `_procedures`, the
+    stored procedure configs; `_runs`, each procedure's latest run."""
+
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self.ctx = MldbContext(spark)
-        self.functions = FunctionRegistry()
-        self._datasets: dict[str, DataFrame] = {}
+        self._mutable: dict[str, list[tuple]] = {}
+        self._procedures: dict[str, dict] = {}
+        self._runs: dict[str, dict] = {}
 
     # -- datasets -----------------------------------------------------------
 
@@ -85,14 +91,15 @@ class Mldb:
         row_name_col: str | None = None,
         ts_col: str | None = None,
     ) -> None:
-        self._datasets[name] = df
         self.ctx.register(name, df, row_name_col, ts_col)
 
     def dataset(self, name: str) -> DataFrame:
-        return self._datasets[name]
+        """The registered frame; for a cells dataset, its cells table."""
+        cells = self.ctx._cells.get(name)
+        return cells["cells"] if cells else self.ctx._resolve(name)
 
     def datasets(self) -> list[str]:
-        return sorted(self._datasets)
+        return self.ctx.dataset_names()
 
     # -- queries ------------------------------------------------------------
 
@@ -305,11 +312,11 @@ class Mldb:
                     continue
                 if not isinstance(it, _ast.ExprItem):
                     raise ValueError("sql.expression takes plain select items")
-                if (
-                    isinstance(it.expr, _ast.FunctionCall)
-                    and self.ctx._lookup_function(it.expr.name) is not None
-                ):
-                    df = self.ctx._lookup_function(it.expr.name)(df)
+                fn = isinstance(it.expr, _ast.FunctionCall) and (
+                    self.ctx._lookup_function(it.expr.name)
+                )
+                if fn:
+                    df = fn(df)
                     continue
                 if (
                     isinstance(it.expr, _ast.Index)
@@ -321,29 +328,17 @@ class Mldb:
                     # composed accessor form inside a function body:
                     # inner({...})[out] AS name (MLDB-1190's
                     # getMsgStats({text: raw_text}) as msgStats) —
-                    # materialize the argument fields, apply the inner
-                    # entity, extract the output column
-                    inner = it.expr.operand
-                    abinder = Binder(
-                        df.columns, params or {}, dtypes=dict(df.dtypes)
-                    )
+                    # applied as SQL applies it, then the output
+                    # column is extracted
                     arg_tmp: list[str] = []
-                    if inner.args and isinstance(
-                        inner.args[0], _ast.RowLiteral
-                    ):
-                        for fname, fexpr in inner.args[0].fields:
-                            if fname not in df.columns:
-                                df = df.withColumn(
-                                    fname, abinder.bind(fexpr)
-                                )
-                                arg_tmp.append(fname)
-                    df = self.ctx._lookup_function(inner.name)(df)
+                    df, _ = self.ctx._apply_fn_for_value(
+                        df, it.expr.operand, params or {}, arg_tmp
+                    )
                     key = str(it.expr.key.value)
                     out_name = it.alias or _expr_name(it.expr, i)
                     if key in df.columns and out_name != key:
                         df = df.withColumn(out_name, _F.col(f"`{key}`"))
-                    if arg_tmp:
-                        df = df.drop(*[c for c in arg_tmp if c != out_name])
+                    df = df.drop(*[c for c in arg_tmp if c != out_name])
                     continue
                 plain.append((i, it))
             if not plain and not qualified_cols:
@@ -359,10 +354,6 @@ class Mldb:
             # identity function: expression 'input' outputs 'input')
             return df.withColumns(named)
 
-        self.functions.register(name, apply)
-        # visible to the dialect too: SELECT f({input: {…}})[out] …
-        # (the reference's function entities are applyable inside SQL
-        # by name — Functions.md)
         self.ctx.register_function(name, apply)
 
     def create_sql_query_function(
@@ -381,33 +372,32 @@ class Mldb:
         if output not in ("FIRST_ROW", "NAMED_COLUMNS"):
             raise ValueError(f"unknown sql.query output mode {output!r}")
 
-        def run(params: dict[str, object] | None = None) -> DataFrame:
-            df = self.query(sql, params)
+        def apply(arg=None, params: dict[str, object] | None = None) -> DataFrame:
+            # called with $params (or nothing) it runs the query; called
+            # with a rowset (MLDB-1320's SELECT poil()[output] as *) the
+            # one-row result attaches as a struct column named
+            # 'output', broadcast-joined onto the rows
+            rows = isinstance(arg, DataFrame)
+            res = self.query(sql, params if rows else arg)
             if output == "FIRST_ROW":
-                return df.limit(1)
-            cols = set(df.columns)
-            if not {"column", "value"} <= cols:
-                raise ValueError(
-                    "NAMED_COLUMNS needs `column` and `value` output columns"
-                )
-            return df.groupBy().pivot("column").agg(F.first("value"))
-
-        self.functions.register(name, run)
-
-        def apply(df: DataFrame, params: dict[str, object] | None = None) -> DataFrame:
-            # dialect application (MLDB-1320's SELECT poil()[output]
-            # as *): the one-row result attaches as a struct column
-            # named 'output', broadcast-joined onto the rowset
-            res = run(params)
-            out = res.select(
-                F.struct(*[F.col(f"`{c}`") for c in res.columns]).alias("output")
-            )
-            return df.crossJoin(F.broadcast(out))
+                res = res.limit(1)
+            elif {"column", "value"} <= set(res.columns):
+                res = res.groupBy().pivot("column").agg(F.first("value"))
+            else:
+                raise ValueError("NAMED_COLUMNS needs `column` and `value` output columns")
+            if not rows:
+                return res
+            out = F.struct(*[F.col(f"`{c}`") for c in res.columns]).alias("output")
+            return arg.crossJoin(F.broadcast(res.select(out)))
 
         self.ctx.register_function(name, apply)
 
     def apply_function(self, name: str, *args, **kwargs):
-        return self.functions.apply(name, *args, **kwargs)
+        """Apply a function entity by name, resolved as SQL resolves it."""
+        fn = self.ctx._lookup_function(name)
+        if fn is None:
+            raise KeyError(f"unknown function {name!r}")
+        return fn(*args, **kwargs)
 
     def create_useragent_function(self, name: str) -> None:
         """http.useragent function entity
@@ -531,7 +521,6 @@ class Mldb:
                 )
             return df.withColumn("words", porter_stem_udf()(_F.col("words")))
 
-        self.functions.register(name, apply)
         self.ctx.register_function(name, apply)
 
     def create_filter_stopwords_function(
@@ -565,7 +554,6 @@ class Mldb:
                 )
             return df.withColumn("words", out)
 
-        self.functions.register(name, apply)
         self.ctx.register_function(name, apply)
 
     # -- orchestration procedures (§2.13 utilities) -------------------------
@@ -599,7 +587,7 @@ class Mldb:
         sparse.mutable (the reference's recordRow/record_rows path):
         each row is {rowName, columns: [[col, value, ts], ...]}.
         Empty row/column names are config errors (MLDB-460)."""
-        buf = getattr(self, "_mutable", {}).get(dataset_id)
+        buf = self._mutable.get(dataset_id)
         if buf is None:
             raise KeyError(
                 f"dataset {dataset_id!r} is not a mutable dataset "
@@ -685,7 +673,7 @@ class Mldb:
         of the dataset."""
         import datetime as _dt
 
-        buf = getattr(self, "_mutable", {}).pop(dataset_id, None)
+        buf = self._mutable.pop(dataset_id, None)
         if buf is None:
             raise KeyError(f"dataset {dataset_id!r} is not under construction")
 
@@ -730,7 +718,6 @@ class Mldb:
         df = local_frame(
             self.spark, rows, f"row string, column string, value {vtype}, ts timestamp"
         )
-        self._datasets[dataset_id] = df
         numeric_cols = None
         if vtype == "string":
             # MIXED datasets: columns whose cells are ALL numeric keep
@@ -849,8 +836,8 @@ class Mldb:
 
         max_ts = _dt.datetime(1970, 1, 1)
         m = _re.search(r"\bfrom\s+([A-Za-z_][\w]*)", params["inputData"], _re.I)
-        if m and m.group(1) in self._datasets:
-            src = self._datasets[m.group(1)]
+        if m and m.group(1) in self.ctx._datasets:
+            src = self.dataset(m.group(1))
             if "ts" in src.columns and "row" in src.columns:
                 got = src.agg(F.max("ts")).collect()[0][0]
                 if got is not None:
@@ -865,7 +852,6 @@ class Mldb:
         df = local_frame(
             self.spark, cells, "row string, column string, value string, ts timestamp"
         )
-        self._datasets[out_id] = df
         self.ctx.register_cells(out_id, df)
         return {"outputDataset": out_id, "rowCount": len(cells)}
 
@@ -876,7 +862,6 @@ class Mldb:
         procedure runs via POST .../runs)."""
         config = dict(config)
         config["id"] = proc_id
-        self._procedures = getattr(self, "_procedures", {})
         self._procedures[proc_id] = config
         params = config.get("params", {})
         if params.get("runOnCreation", False):
@@ -890,7 +875,6 @@ class Mldb:
         """POST /v1/procedures/<id>/runs: execute a stored procedure
         (MLDB-951's runOnCreation=False flow). A run body's params
         override the stored config's per key (MLDBFB-208)."""
-        self._procedures = getattr(self, "_procedures", {})
         if proc_id not in self._procedures:
             raise KeyError(f"unknown procedure {proc_id!r}")
         config = dict(self._procedures[proc_id])
@@ -905,7 +889,6 @@ class Mldb:
         # only COMPLETED runs register (MLDB-2112: /runs of a
         # procedure whose only run failed is 404 — the failed attempt
         # propagates its error and leaves no run record)
-        self._runs = getattr(self, "_runs", {})
         self._runs[proc_id] = {
             "runStarted": started,
             "runFinished": _dt.datetime.utcnow().isoformat() + "Z",
@@ -915,10 +898,9 @@ class Mldb:
 
     def latest_run(self, proc_id: str) -> dict:
         """GET /v1/procedures/<id>/latestrun (MLDB-1359)."""
-        runs = getattr(self, "_runs", {})
-        if proc_id not in runs:
+        if proc_id not in self._runs:
             raise KeyError(f"no runs for procedure {proc_id!r}")
-        return runs[proc_id]
+        return self._runs[proc_id]
 
     def create_entity(self, kind: str, config: dict) -> dict:
         """createEntity procedure (builtin/basic_procedures.cc:194-230):
@@ -959,14 +941,13 @@ class Mldb:
             # CREATE is not idempotent: a second create at the same id
             # errors (MLDB-312); overwriting goes through PUT
             # (MLDB-748's overwrite semantics)
-            if eid in self._datasets or eid in getattr(self, "_mutable", {}):
+            if eid in self.ctx._datasets or eid in self._mutable:
                 raise ValueError(f"dataset entry '{eid}' already exists")
             if etype in ("sparse.mutable", "beh.mutable", "beh.binary.mutable"):
                 # an empty MUTABLE dataset: rows accumulate through
                 # record_rows() / POST /v1/datasets/<id>/rows and
                 # become queryable at commit (the reference's
                 # create/record/commit lifecycle)
-                self._mutable = getattr(self, "_mutable", {})
                 self._mutable[eid] = []
                 return {
                     "kind": kind,
@@ -980,7 +961,7 @@ class Mldb:
                 # creation never squats the id (the caller may create
                 # it later through a procedure's output)
                 member_ids = [_entity_id(d) for d in params.get("datasets", [])]
-                missing = [d for d in member_ids if d not in self._datasets]
+                missing = [d for d in member_ids if d not in self.ctx._datasets]
                 if missing:
                     raise ValueError(
                         f"merged dataset: member dataset '{missing[0]}' "
@@ -1000,7 +981,7 @@ class Mldb:
                 # PUT /v1/datasets/<id> {type: transposed}): rows and
                 # columns swap; backed by the FROM-clause transpose()
                 mid = _entity_id(params.get("dataset"))
-                if mid not in self._datasets:
+                if mid not in self.ctx._datasets:
                     raise ValueError(
                         f"transposed dataset: dataset '{mid}' does not exist"
                     )
@@ -1042,7 +1023,7 @@ class Mldb:
                 def run_stored(args=None, __src=src):
                     return {"return": self.run_script(source=__src, args=args)}
 
-                self.functions.register(eid, run_stored)
+                self.ctx.register_function(eid, run_stored)
             elif etype == "embedding.neighbors":
                 self.create_neighbors_function(
                     eid,
@@ -1131,9 +1112,7 @@ class Mldb:
                 try:
                     self.transform(sql, out_id)
                 finally:
-                    self._datasets.pop(tmp_id, None)
-                    self.ctx._datasets.pop(tmp_id, None)
-                    self.ctx._meta.pop(tmp_id, None)
+                    self.ctx.drop(tmp_id)
                 status = {
                     "outputDataset": out_id,
                     "rowCount": self.dataset(out_id).count(),
@@ -1169,7 +1148,6 @@ class Mldb:
                 if not feat_cols:
                     raise ValueError("svm.train: no numeric feature columns")
                 from mldb_spark.ml.procedures import svm_train
-                from mldb_spark.ml.registry import GLOBAL_REGISTRY
 
                 classes = sorted(
                     r[0]
@@ -1210,7 +1188,7 @@ class Mldb:
                         pick = (F.array_position(m, F.array_max(m)) - 1).cast("int")
                     return d.withColumn("output", __b[pick]).drop(*__names)
 
-                GLOBAL_REGISTRY.register(fname, apply_svm)
+                self.ctx.register_function(fname, apply_svm)
                 status = {"functionName": fname, "classes": classes}
             elif etype == "classifier.experiment":
                 # classifier.experiment entity

@@ -2576,14 +2576,20 @@ def _item_name(it: ast.ExprItem, idx: int) -> str:
 
 
 class MldbContext:
-    """Catalog + query entry point: the translator's equivalent of
-    the reference's /v1/query endpoint over named datasets."""
+    """The one catalog of datasets and function entities, read by SQL,
+    api.Mldb and the REST façade alike, and the query entry point over
+    it (the reference's dataset/function collections and /v1/query).
+    A function name resolves here first, case-insensitively, then in
+    ml.registry.GLOBAL_REGISTRY, where ml procedures put their models."""
+
+    # name prefix of the merged cells views the context registers itself
+    _MERGED_CELLS = "__merged_cells__"
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._datasets: dict[str, DataFrame] = {}
         self._meta: dict[str, dict[str, str | None]] = {}
-        self._functions: dict[str, object] = {}
+        self._functions: dict[str, tuple[str, object]] = {}
         self._cells: dict[str, dict[str, object]] = {}
 
     def register(
@@ -2598,9 +2604,26 @@ class MldbContext:
         registers a whole catalog eagerly pays one spark.read +
         schema-normalization round-trip per table (~0.1s each) even
         for queries touching one table — a lazy provider defers that
-        to first reference and unreferenced tables cost nothing."""
-        self._datasets[name] = df
+        to first reference and unreferenced tables cost nothing.
+        Replaces any earlier entry of `name` whole."""
+        self._forget_cells(name)
         self._meta[name] = {"rowName": row_name_col, "ts": ts_col}
+        self._datasets[name] = df
+
+    def _forget_cells(self, name: str) -> None:
+        """Drop `name`'s cells table and every merged view over it."""
+        for n, info in list(self._cells.items()):
+            if n == name or name in info.get("members", ()):  # type: ignore[operator]
+                self._cells.pop(n, None)
+
+    def drop(self, name: str) -> None:
+        self._forget_cells(name)
+        self._meta.pop(name, None)
+        self._datasets.pop(name, None)
+
+    def dataset_names(self) -> list[str]:
+        names = list(self._datasets)  # one atomic copy: REST threads register
+        return sorted(n for n in names if not n.startswith(self._MERGED_CELLS))
 
     def _resolve(self, name: str) -> DataFrame:
         """Materialize a lazily-registered dataset provider (at most
@@ -2683,8 +2706,7 @@ class MldbContext:
             # every recorded row was column-less (MLDBFB-440): the
             # dataset still has rows — just no value columns
             wide = latest.select(F.col(row_col).alias("__cellsRow")).distinct()
-        self._datasets[name] = wide
-        self._meta[name] = {"rowName": "__cellsRow", "ts": None}
+        self.register(name, wide, "__cellsRow")
         self._cells[name] = {
             "cells": cells,
             "row": row_col,
@@ -2737,6 +2759,7 @@ class MldbContext:
                 else:
                     stringish.add(c)
         self.register_cells(name, cells, numeric_columns=numeric - stringish)
+        self._cells[name]["members"] = members
 
     def register_function(self, name: str, fn) -> None:
         """Applied-function entity usable from SQL: `fn({…})[output]`
@@ -2756,7 +2779,7 @@ class MldbContext:
             raise ValueError(
                 f"MLDB already has a built-in function named {name!r}"
             )
-        self._functions[low] = fn
+        self._functions[low] = (name, fn)
 
     def _lookup_function(self, name: str):
         """Resolve an applied-function name: context-local first, then
@@ -2766,14 +2789,21 @@ class MldbContext:
         register_function step (the reference's behavior: PUT
         /v1/procedures with a functionName creates the function
         entity automatically)."""
-        fn = self._functions.get(name.lower())
-        if fn is not None:
-            return fn
+        entry = self._functions.get(name.lower())
+        if entry is not None:
+            return entry[1]
         from mldb_spark.ml.registry import GLOBAL_REGISTRY
 
         if name in GLOBAL_REGISTRY.names():
             return lambda d: GLOBAL_REGISTRY.apply(name, d)
         return None
+
+    def function_names(self) -> list[str]:
+        """Every name `_lookup_function` resolves."""
+        from mldb_spark.ml.registry import GLOBAL_REGISTRY
+
+        own = [n for n, _ in list(self._functions.values())]
+        return sorted(own + [n for n in GLOBAL_REGISTRY.names() if n.lower() not in self._functions])
 
     def _apply_fn_for_value(self, df, call: ast.FunctionCall, params, arg_cols):
         """Apply a registered function appearing as a VALUE inside
@@ -4171,7 +4201,7 @@ class MldbContext:
             if _members:
                 import dataclasses as _dc
 
-                _synth = "__merged_cells__" + "__".join(_members)
+                _synth = self._MERGED_CELLS + "__".join(_members)
                 if _synth not in self._cells:
                     self._register_merged_cells(_synth, _members)
                 stm = _dc.replace(

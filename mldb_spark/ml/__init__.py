@@ -5,8 +5,8 @@ model as a named *function* applyable in SQL (classifier
 plugins/jml/classifier.cc:1491/1496, kmeans kmeans_interface.cc:389,
 tfidf plugins/nlp/tfidf.cc:472, svd plugins/embedding/svd.cc:1023,
 probabilizer plugins/jml/probabilizer.cc:292). Here each *_train
-returns (model, output datasets); `FunctionRegistry` plays the role
-of the reference's named-function collection.
+returns (model, output datasets) and registers its model in a
+`FunctionRegistry`; SQL resolves names there after an MldbContext's own.
 """
 
 from mldb_spark.ml.procedures import (  # noqa: F401

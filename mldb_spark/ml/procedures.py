@@ -2029,6 +2029,10 @@ def pca_train(df: DataFrame, array_col: str, k: int = 8):
     return model, [float(x) for x in model.explainedVariance]
 
 
+# svd_train refuses over _SVD_MAX_COLUMNS columns; up to
+# _GRAM_LOCAL_COLUMNS it eigendecomposes XᵀX on the driver.
+_SVD_MAX_COLUMNS = 131072
+_GRAM_LOCAL_COLUMNS = 4096
 # Bounds for svd_train's driver-local Gram accumulation: at most
 # _LOCAL_GRAM_CELLS_CAP collected cell rows AND _LOCAL_GRAM_PAIRS_CAP
 # Σt² index entries (~8 int64 arrays of that length); either over-cap
@@ -2045,8 +2049,6 @@ def svd_train(
     k: int = 8,
     name: str = "svd",
     registry: FunctionRegistry = GLOBAL_REGISTRY,
-    max_columns: int = 131072,
-    gram_local_cap: int = 4096,
 ):
     """svd.train (plugins/embedding/svd.cc:1023,1028): truncated SVD of
     a long-format sparse matrix (row, column, value), emitting the
@@ -2066,7 +2068,7 @@ def svd_train(
     MLlib's own computeSVD makes between local and distributed
     eigensolvers):
 
-    - n_cols <= gram_local_cap: the Gram matrix XᵀX is computed as a
+    - n_cols <= _GRAM_LOCAL_COLUMNS: the Gram matrix XᵀX is computed as a
       codegen'd self-join + hash aggregate (all JVM), collected
       (n_cols² doubles — 128 MB at the 4096 default), and
       eigendecomposed on the driver; row embeddings come back as the
@@ -2076,7 +2078,7 @@ def svd_train(
       IndexedRowMatrix.computeSVD (one of the few places the RDD API
       is the genuine distributed kernel). Row/column index maps are
       dataset-sized DataFrames; only the vocab-sized column map is
-      collected, hard-capped by max_columns.
+      collected, hard-capped by _SVD_MAX_COLUMNS.
 
     Returns (row_embeddings, column_embeddings, singular_values).
     """
@@ -2094,11 +2096,11 @@ def svd_train(
     # column space is a caller bug, not something to soldier through)
     col_rows = (
         cells.select(column_col).distinct().orderBy(column_col)
-        .limit(max_columns + 1).collect()
+        .limit(_SVD_MAX_COLUMNS + 1).collect()
     )
-    if len(col_rows) > max_columns:
+    if len(col_rows) > _SVD_MAX_COLUMNS:
         raise ValueError(
-            f"svd_train: column space exceeds max_columns={max_columns}; "
+            f"svd_train: column space exceeds max_columns={_SVD_MAX_COLUMNS}; "
             f"prune the vocabulary upstream (min_df / top-N cut) — the "
             f"Gram matrix cost is quadratic in the column count"
         )
@@ -2107,7 +2109,7 @@ def svd_train(
     if k > min(n_cols, 2**31):
         raise ValueError(f"k={k} exceeds column count {n_cols}")
 
-    if n_cols <= gram_local_cap:
+    if n_cols <= _GRAM_LOCAL_COLUMNS:
         # Gram fast path: G = XᵀX, then eigh(G) = V·Λ·Vᵀ with Λ = Σ²,
         # so V and σ=sqrt(λ) are exactly the right singular
         # vectors/values of X. Two regimes for building G:
@@ -2120,43 +2122,40 @@ def svd_train(
         # (qa31: 116k cells → a 31×31 Gram). When the PRUNED cell
         # table is small, one Arrow toPandas + a vectorized bincount
         # outer-product accumulate computes the same G in ~0.1s. Hard
-        # caps on cells AND Σt² pairs keep the driver bounded; any
-        # over-cap or failure falls through to the distributed join.
+        # caps on cells AND Σt² pairs keep the driver bounded; either
+        # over-cap falls through to the distributed join.
         # FP note: accumulation order differs from the distributed
         # sum (ULP-level); every gate consumes V through exported
         # fixtures the oracle replays, so both sides stay consistent
         # (verified empirically at sf0.001/0.01/0.1).
         n_cells = cells.count()  # cells is persisted; count from cache
         if n_cells <= _LOCAL_GRAM_CELLS_CAP:
-            try:
-                pdf = cells.select(row_col, column_col, value_col).toPandas()
-                c_codes = (
-                    pdf[column_col].map(col_idx).to_numpy(dtype=np.int64)
-                )
-                vals = pdf[value_col].to_numpy(dtype=np.float64)
-                _, r_codes = np.unique(
-                    pdf[row_col].to_numpy(), return_inverse=True
-                )
-                order_r = np.argsort(r_codes, kind="stable")
-                c_codes, vals = c_codes[order_r], vals[order_r]
-                t = np.bincount(r_codes)  # tokens per row
-                if int((t.astype(np.int64) ** 2).sum()) <= _LOCAL_GRAM_PAIRS_CAP:
-                    t2 = t.astype(np.int64) ** 2
-                    starts = np.concatenate(([0], np.cumsum(t)[:-1]))
-                    pair_off = np.concatenate(([0], np.cumsum(t2)[:-1]))
-                    total = int(t2.sum())
-                    local_p = np.arange(total) - np.repeat(pair_off, t2)
-                    t_rep = np.repeat(t, t2)
-                    s_rep = np.repeat(starts, t2)
-                    gl = s_rep + local_p // t_rep
-                    gr = s_rep + local_p % t_rep
-                    G = np.bincount(
-                        c_codes[gl] * n_cols + c_codes[gr],
-                        weights=vals[gl] * vals[gr],
-                        minlength=n_cols * n_cols,
-                    ).reshape(n_cols, n_cols)
-            except Exception:
-                G = None
+            pdf = cells.select(row_col, column_col, value_col).toPandas()
+            c_codes = (
+                pdf[column_col].map(col_idx).to_numpy(dtype=np.int64)
+            )
+            vals = pdf[value_col].to_numpy(dtype=np.float64)
+            _, r_codes = np.unique(
+                pdf[row_col].to_numpy(), return_inverse=True
+            )
+            order_r = np.argsort(r_codes, kind="stable")
+            c_codes, vals = c_codes[order_r], vals[order_r]
+            t = np.bincount(r_codes)  # tokens per row
+            t2 = t.astype(np.int64) ** 2
+            if int(t2.sum()) <= _LOCAL_GRAM_PAIRS_CAP:
+                starts = np.cumsum(t) - t
+                pair_off = np.cumsum(t2) - t2
+                total = int(t2.sum())
+                local_p = np.arange(total) - np.repeat(pair_off, t2)
+                t_rep = np.repeat(t, t2)
+                s_rep = np.repeat(starts, t2)
+                gl = s_rep + local_p // t_rep
+                gr = s_rep + local_p % t_rep
+                G = np.bincount(
+                    c_codes[gl] * n_cols + c_codes[gr],
+                    weights=vals[gl] * vals[gr],
+                    minlength=n_cols * n_cols,
+                ).reshape(n_cols, n_cols)
         if G is None:
             # distributed Gram: per-row self-join (pair count per row
             # is t², bounded by the pruned vocab) — all codegen'd JVM

@@ -36,6 +36,8 @@ from datetime import date, datetime
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+import pyspark.sql.functions as F
+
 from mldb_spark.api import Mldb
 
 DEFAULT_ROW_CAP = 10_000
@@ -277,7 +279,7 @@ class MldbRestServer:
                         # the stored config survives a FAILED
                         # runOnCreation (MLDB-2112: the broken proc is
                         # still GETtable)
-                        procs = getattr(facade.mldb, "_procedures", {})
+                        procs = facade.mldb._procedures
                         if parts[2] in procs:
                             self._send(200, procs[parts[2]])
                         else:
@@ -293,15 +295,13 @@ class MldbRestServer:
                             200, {"columns": df.columns, "rowCount": df.count()}
                         )
                     elif parts[:2] == ["v1", "functions"] and len(parts) == 2:
-                        self._send(200, facade.mldb.functions.names())
+                        self._send(200, facade.mldb.ctx.function_names())
                     elif (
                         parts[:2] == ["v1", "functions"]
                         and len(parts) == 4
                         and parts[3] == "application"
                     ):
-                        import json as _json
-
-                        inp = _json.loads(q.get("input", "{}"))
+                        inp = json.loads(q.get("input", "{}"))
                         self._send(
                             200, facade.apply_function_json(parts[2], inp)
                         )
@@ -601,25 +601,22 @@ class MldbRestServer:
         """GET/POST /v1/functions/<name>/application (MLDB-1705/2163):
         apply a registered function to ONE JSON input row and return
         {"output": {...}} — the reference's single-application REST
-        surface. Nested input objects become struct columns (json
-        read), outputs are the columns the function added."""
-        import json as _json
-
-        spark = self.mldb.spark
-        df = spark.read.json(
-            spark.sparkContext.parallelize([_json.dumps(input_obj)])
+        surface. The input row is typed as Spark's JSON reader types
+        it (nested objects become struct columns); outputs are the
+        columns the function added."""
+        doc = F.lit(json.dumps(input_obj))
+        df = (
+            self.mldb.spark.range(1)
+            .select(F.from_json(doc, F.schema_of_json(doc)).alias("v"))
+            .select("v.*")
         )
         before = set(df.columns)
-        out = self.mldb.functions.apply(name, df)
+        out = self.mldb.apply_function(name, df)
         new_cols = [c for c in out.columns if c not in before]
         if not new_cols:
             new_cols = [c for c in out.columns if not c.startswith("__")]
         row = out.collect()[0]
-
-        def plain(v):
-            return v.asDict(recursive=True) if hasattr(v, "asDict") else _jsonable(v)
-
-        return {"output": {c: plain(row[c]) for c in new_cols}}
+        return {"output": {c: _jsonable(row[c]) for c in new_cols}}
 
     # -- query execution ----------------------------------------------------
 
@@ -655,15 +652,12 @@ class MldbRestServer:
             stm = parse_statement(sql)
         except Exception:
             return None
-        if (
-            not isinstance(stm.from_, _ast.TableRef)
-            or stm.from_.name not in self.mldb.ctx._cells
-            or stm.group_by
-            or stm.named is not None
-            or stm.when is not None
-        ):
+        # one read of the catalog: a concurrent request may replace it
+        info = isinstance(stm.from_, _ast.TableRef) and self.mldb.ctx._cells.get(
+            stm.from_.name
+        )
+        if not info or stm.group_by or stm.named is not None or stm.when is not None:
             return None
-        info = self.mldb.ctx._cells[stm.from_.name]
         want: "list[str] | None" = []
         for it in stm.select:
             if isinstance(it, _ast.Wildcard) and not it.qualifier:
@@ -701,8 +695,6 @@ class MldbRestServer:
         except Exception:
             return None
         cells = info["cells"]
-        import pyspark.sql.functions as F
-
         got = (
             cells.filter(
                 F.col(info["row"]).isin(names)

@@ -117,28 +117,31 @@ def test_svd_train_full_contract(spark):
         assert np.allclose(E[i], R[i], atol=1e-6)
 
 
-def test_svd_train_column_cap_raises(spark):
+def test_svd_train_column_cap_raises(spark, monkeypatch):
     """svd_train must refuse an over-cap column space BEFORE collecting
     the column map (the Gram matrix is n_cols**2; an unpruned vocab is
     a caller bug that must fail loudly)."""
     import pytest as _pytest
 
+    from mldb_spark.ml import procedures
     from mldb_spark.ml.procedures import svd_train
 
     cells = spark.createDataFrame(
         [(r, f"c{c}", 1.0) for r in range(4) for c in range(10)],
         "row_id int, column string, value double",
     )
+    monkeypatch.setattr(procedures, "_SVD_MAX_COLUMNS", 5)
     with _pytest.raises(ValueError, match="max_columns"):
-        svd_train(cells, row_col="row_id", k=2, name="svd_cap", max_columns=5)
+        svd_train(cells, row_col="row_id", k=2, name="svd_cap")
 
 
-def test_svd_train_distributed_path_matches_gram(spark):
+def test_svd_train_distributed_path_matches_gram(spark, monkeypatch):
     """The two svd_train regimes (driver-eigh Gram vs distributed
     MLlib computeSVD) must agree on singular values and on the row
     embeddings up to per-component sign."""
     import numpy as np
 
+    from mldb_spark.ml import procedures
     from mldb_spark.ml.procedures import svd_train
 
     rng = np.random.default_rng(11)
@@ -148,9 +151,8 @@ def test_svd_train_distributed_path_matches_gram(spark):
         "row_id int, column string, value double",
     )
     r1, c1, s1 = svd_train(cells, row_col="row_id", k=3, name="svd_g")
-    r2, c2, s2 = svd_train(
-        cells, row_col="row_id", k=3, name="svd_d", gram_local_cap=0
-    )
+    monkeypatch.setattr(procedures, "_GRAM_LOCAL_COLUMNS", 0)
+    r2, c2, s2 = svd_train(cells, row_col="row_id", k=3, name="svd_d")
     assert np.allclose(s1, s2, atol=1e-6)
     E1 = {r["row_id"]: np.array(r["embedding"]) for r in r1.collect()}
     E2 = {r["row_id"]: np.array(r["embedding"]) for r in r2.collect()}

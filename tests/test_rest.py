@@ -733,3 +733,126 @@ def test_mldb_1040_invalid_requests(server):
         raise AssertionError("expected 400")
     except urllib.error.HTTPError as e:
         assert e.code == 400
+
+
+def test_one_function_surface(spark):
+    """One catalog per Mldb: every function entity SQL can call is
+    listed by GET /v1/functions, and each one that takes a rowset
+    answers /application and Mldb.apply_function alike."""
+    import urllib.parse
+
+    from mldb_spark.api import Mldb
+    from mldb_spark.rest import MldbRestServer
+
+    m = Mldb(spark)
+    pts = [(0.0, 0.0, 0), (0.2, 0.1, 0), (0.1, 0.3, 0),
+           (10.0, 10.0, 1), (10.2, 9.9, 1), (9.8, 10.1, 1)]
+    m.create_dataset(
+        "surf_pts", spark.createDataFrame(pts, "x double, y double, label int")
+    )
+    for kind, cfg in [
+        ("function", {"type": "sql.expression", "id": "surf_expr",
+                      "params": {"expression": "x + y AS s"}}),
+        ("function", {"type": "sql.query", "id": "surf_query",
+                      "params": {"query": "SELECT count(*) AS n FROM surf_pts"}}),
+        ("function", {"type": "http.useragent", "id": "surf_ua"}),
+        ("procedure", {"type": "kmeans.train", "id": "surf_km",
+                       "params": {"trainingData": "SELECT x, y FROM surf_pts",
+                                  "numClusters": 2, "functionName": "surf_kmf"}}),
+        ("procedure", {"type": "svm.train", "id": "surf_svm_train",
+                       "params": {"trainingData": "SELECT * FROM surf_pts",
+                                  "functionName": "surf_svm"}}),
+    ]:
+        m.create_entity(kind, cfg)
+    inputs = {
+        "surf_expr": {"x": 1.0, "y": 2.0},
+        "surf_query": {"x": 1.0},
+        "surf_ua": {"ua": "Mozilla/5.0 (Windows NT 10.0; Win64; x64) "
+                          "AppleWebKit/537.36 (KHTML, like Gecko) "
+                          "Chrome/120.0 Safari/537.36"},
+        "surf_kmf": {"x": 10.0, "y": 10.0},
+    }
+    srv = MldbRestServer(m).start()
+    try:
+        _, fns = _get(srv, "/v1/functions")
+        assert {*inputs, "surf_svm"} <= set(fns)
+        for name, inp in inputs.items():
+            q = urllib.parse.quote(json.dumps(inp))
+            _, out = _get(srv, f"/v1/functions/{name}/application?input={q}")
+            assert out["output"], name
+            row = spark.createDataFrame([tuple(inp.values())], list(inp))
+            applied = m.apply_function(name, row)
+            assert set(applied.columns) > set(inp), name
+            assert applied.count() == 1, name
+    finally:
+        srv.stop()
+    assert out["output"]["cluster"] == m.apply_function(
+        "surf_kmf", spark.createDataFrame([(10.0, 10.0)], "x double, y double")
+    ).collect()[0]["cluster"]
+    assert m.query(
+        "SELECT surf_svm({*})[output] AS o FROM (SELECT 10.0 AS x, 10.0 AS y)"
+    ).collect()[0]["o"] == 1
+
+
+def test_recreated_mutable_dataset_is_replaced_whole(spark):
+    """A committed sparse.mutable dataset re-registered with
+    create_dataset is the new frame everywhere: dataset(), SQL, a
+    merge() over it and the REST full format (which reads a cells
+    dataset's cells)."""
+    from mldb_spark.api import Mldb
+    from mldb_spark.rest import MldbRestServer
+
+    m = Mldb(spark)
+    for name, col in (("rereg", "x"), ("rereg_b", "z")):
+        m.create_entity("dataset", {"type": "sparse.mutable", "id": name})
+        m.record_rows(name, [{"rowName": name, "columns": [[col, 1, 0]]}])
+        m.commit_dataset(name)
+    merged = "SELECT * FROM merge(rereg, rereg_b) ORDER BY rowName()"
+    assert m.query(merged).columns == ["x", "z"]
+    new = spark.createDataFrame([("b", 7)], "rowName string, y int")
+    m.create_dataset("rereg", new, row_name_col="rowName")
+    assert m.dataset("rereg") is new
+    assert [r.asDict() for r in m.query("SELECT y FROM rereg").collect()] == [
+        {"y": 7}
+    ]
+    assert "y" in m.query(merged).columns
+    srv = MldbRestServer(m).start()
+    try:
+        _, full = _get(srv, "/v1/query?q=SELECT%20y%20FROM%20rereg")
+    finally:
+        srv.stop()
+    assert [c[:2] for c in full[0]["columns"]] == [["y", 7]]
+
+
+def test_concurrent_first_creates_all_land(spark):
+    """Sixteen threads storing procedures and creating mutable
+    datasets on a fresh Mldb at once: every one is kept (the REST
+    server runs a thread per request)."""
+    import sys
+    import threading
+
+    from mldb_spark.api import Mldb
+
+    m = Mldb(spark)
+    barrier = threading.Barrier(16)
+
+    def create(i):
+        barrier.wait(timeout=60)
+        m.put_procedure(f"cp{i}", {"type": "null",
+                                   "params": {"runOnCreation": True}})
+        m.create_entity("dataset", {"type": "sparse.mutable", "id": f"cd{i}"})
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=create, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(m._procedures) == sorted(f"cp{i}" for i in range(16))
+    assert sorted(m._runs) == sorted(f"cp{i}" for i in range(16))
+    assert sorted(m._mutable) == sorted(f"cd{i}" for i in range(16))

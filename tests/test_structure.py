@@ -30,13 +30,11 @@ def test_driver_rows_enter_spark_through_local_frame():
     which builds an Arrow LocalRelation: a `createDataFrame(<python
     rows>)` elsewhere would parallelize pickled rows through a
     PythonRDD and put Python-worker tasks behind every job over the
-    frame. The one known Python RDD left is rest.apply_function_json's
-    `sparkContext.parallelize` + `read.json`, off every benchmarked
-    path."""
+    frame. No `parallelize(` remains either."""
     offenders = []
     for p in sorted(PKG.rglob("*.py")):
         for n, line in enumerate(p.read_text().splitlines(), 1):
-            if ".createDataFrame(" in line:
+            if ".createDataFrame(" in line or "parallelize(" in line:
                 offenders.append(f"{p.relative_to(PKG.parent)}:{n}")
     session = (PKG / "session.py").read_text().splitlines()
     start = next(i for i, l in enumerate(session) if l.startswith("def local_frame("))

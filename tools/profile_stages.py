@@ -1,7 +1,7 @@
-"""Stage-level profiler: run one query with the Spark UI REST API on
-and dump per-stage wall/metrics, so optimization targets the right
-stage (guide §1.1/§7.1 — the UI is disabled in the bench session, so
-this builds its own).
+"""Stage-level profiler: run one gate in the benchmark's own session
+(`mldb_spark.session.get_spark`, with the event-log confs of
+perfbench's traced run) and print per-stage metrics read from Spark's
+event log, so optimization targets the right stage.
 
 Usage: python tools/profile_stages.py q31_embedding_neardup [--sf DIR] [--runs N]
 """
@@ -9,13 +9,44 @@ Usage: python tools/profile_stages.py q31_embedding_neardup [--sf DIR] [--runs N
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
-import urllib.request
+from collections import defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench import common, trace  # noqa: E402
+
+
+def stage_table(events: list[dict], window: tuple[float, float]) -> list[dict]:
+    """Per-stage task totals of the jobs submitted inside `window`."""
+    names: dict[int, str] = {}
+    stage_ids: set[int] = set()
+    for ev in events:
+        kind = ev.get("Event")
+        if kind == "SparkListenerJobStart" and trace._inside(ev["Submission Time"], [window]):
+            stage_ids.update(ev.get("Stage IDs", []))
+        elif kind == "SparkListenerStageCompleted":
+            info = ev["Stage Info"]
+            names[info["Stage ID"]] = info.get("Stage Name", "")
+    rows: dict[int, dict] = defaultdict(lambda: defaultdict(float))
+    for ev in events:
+        if ev.get("Event") != "SparkListenerTaskEnd" or ev.get("Stage ID") not in stage_ids:
+            continue
+        tm = ev.get("Task Metrics") or {}
+        sr = tm.get("Shuffle Read Metrics") or {}
+        r = rows[ev["Stage ID"]]
+        r["tasks"] += 1
+        r["run_ms"] += tm.get("Executor Run Time", 0)
+        r["cpu_ms"] += tm.get("Executor CPU Time", 0) / 1e6
+        r["gc_ms"] += tm.get("JVM GC Time", 0)
+        r["sread"] += sr.get("Remote Bytes Read", 0) + sr.get("Local Bytes Read", 0)
+        r["swrite"] += (tm.get("Shuffle Write Metrics") or {}).get("Shuffle Bytes Written", 0)
+    return sorted(
+        ({"stage": s, "name": names.get(s, ""), **r} for s, r in rows.items()),
+        key=lambda r: -r["run_ms"],
+    )
 
 
 def main() -> int:
@@ -25,28 +56,9 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
 
-    os.environ["MLDB_SPARK_SKIP_FIXTURE_EXPORT"] = "1"
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("mldb_spark_stageprof")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "10g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    log_dir = os.path.join(common.OUT, f"stageprof-{os.getpid()}")
+    common.prepare_env(log_dir)
+    spark = common.start_session("mldb_spark_stageprof")
 
     import __spark_entry__ as entrymod
 
@@ -55,38 +67,30 @@ def main() -> int:
     fn = entrymod.queries()[args.query]
     spark.read.parquet(os.path.join(args.sf, "lineitem.parquet")).count()
 
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-
-    def stages():
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-        ) as r:
-            return json.load(r)
-
-    seen = {s["stageId"] for s in stages()}
-    for i in range(args.runs):
+    windows = []
+    for _ in range(args.runs):
         release_cached()
         spark.catalog.clearCache()
         t0 = time.time()
-        df = fn(spark, args.sf)
-        df.write.mode("overwrite").format("noop").save()
-        el = time.time() - t0
-        print(f"--- run {i}: {el:.3f}s", flush=True)
-        new = [s for s in stages() if s["stageId"] not in seen]
-        seen |= {s["stageId"] for s in new}
-        new.sort(key=lambda s: -(s.get("executorRunTime") or 0))
-        tot_run = sum(s.get("executorRunTime") or 0 for s in new)
-        print(f"  {len(new)} stages, executorRunTime total {tot_run} ms")
-        for s in new[:14]:
-            nm = (s.get("name") or "")[:70]
-            print(
-                f"  run={s.get('executorRunTime', 0):>7}ms cpu={int((s.get('executorCpuTime') or 0)/1e6):>7}ms "
-                f"gc={s.get('jvmGcTime', 0):>6}ms "
-                f"tasks={s.get('numCompleteTasks'):>3} "
-                f"sread={s.get('shuffleReadBytes', 0):>9} swrite={s.get('shuffleWriteBytes', 0):>9} {nm}"
-            )
+        fn(spark, args.sf).write.mode("overwrite").format("noop").save()
+        windows.append((t0, time.time()))
     release_cached()
+    common.stop_session(spark)
+
+    events = trace.take_event_log(log_dir)
+    for i, window in enumerate(windows):
+        tot = trace.spark_metrics(events, [window], {})
+        print(f"--- run {i}: {window[1] - window[0]:.3f}s", flush=True)
+        print(
+            f"  {tot['jobs']} jobs, {tot['stages']} stages, executor run "
+            f"{tot['executor_run_s']:.3f}s cpu {tot['executor_cpu_s']:.3f}s"
+        )
+        for s in stage_table(events, window)[:14]:
+            print(
+                f"  run={s['run_ms']:>7.0f}ms cpu={s['cpu_ms']:>7.0f}ms "
+                f"gc={s['gc_ms']:>6.0f}ms tasks={s['tasks']:>3.0f} "
+                f"sread={s['sread']:>9.0f} swrite={s['swrite']:>9.0f} {s['name'][:70]}"
+            )
     return 0
 
 
