@@ -27,6 +27,20 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from mldb_spark.session import get_spark  # noqa: E402
 
 
+def short_keys(timings: dict[str, float]) -> dict[str, float]:
+    """Per-query seconds under short keys, rounded to 2 decimals: the
+    `qNN`/`qaNN` prefix of each gate name, or the full name when an
+    earlier gate already took that prefix (a collision must not
+    silently drop a query's number). Keys keep `timings`' order."""
+    out: dict[str, float] = {}
+    for name, sec in timings.items():
+        key = name.split("_", 1)[0]
+        if key in out:
+            key = name
+        out[key] = round(sec, 2)
+    return out
+
+
 def main() -> None:
     # Oracle-fixture exports are correctness-harness IO (collect +
     # parquet write inside gate bodies); suppress them so the bench
@@ -138,18 +152,11 @@ def main() -> None:
     # precision: 131 entries serialize to ~1.6k chars, inside the tail
     # window. The first line and BENCH_LOCAL.json keep full names and
     # 3-decimal values.
-    shortq: dict[str, float] = {}
-    for name, sec in timings.items():
-        key = name.split("_", 1)[0]
-        # a prefix collision must not silently drop a query's number
-        if key in shortq:
-            key = name
-        shortq[key] = round(sec, 2)
     short = {
         "metric": "headline_queries_total_wall",
         "value": total,
         "unit": "sec",
-        "queries": shortq,
+        "queries": short_keys(timings),
         "n_queries": len(timings),
         "queries_file": "BENCH_LOCAL.json",
         "sf": sf_val,

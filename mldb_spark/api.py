@@ -11,6 +11,8 @@ query() runs the MLDB SQL dialect through the translator.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -73,7 +75,8 @@ class Mldb:
     """One MLDB server in-process. Its state: `ctx`, the one catalog of
     datasets and functions (dialect.MldbContext); `_mutable`, the cell
     buffers of mutable datasets not yet committed; `_procedures`, the
-    stored procedure configs; `_runs`, each procedure's latest run."""
+    stored procedure configs; `_runs`, each procedure's latest run;
+    `_creating`, the dataset ids being created (under `_ids_lock`)."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -81,6 +84,8 @@ class Mldb:
         self._mutable: dict[str, list[tuple]] = {}
         self._procedures: dict[str, dict] = {}
         self._runs: dict[str, dict] = {}
+        self._creating: set[str] = set()
+        self._ids_lock = threading.Lock()
 
     # -- datasets -----------------------------------------------------------
 
@@ -936,13 +941,24 @@ class Mldb:
 
             eid = "auto_" + _uuid.uuid4().hex[:16]
             config["id"] = eid
+        if kind != "dataset":
+            return self._create_entity(kind, etype, eid, params, config)
+        # CREATE is not idempotent: a second create at the same id errors
+        # (MLDB-312), also while the first is building; PUT overwrites
+        with self._ids_lock:
+            if eid in self.ctx._datasets or eid in self._mutable or eid in self._creating:
+                raise ValueError(f"dataset entry '{eid}' already exists")
+            self._creating.add(eid)
+        try:
+            return self._create_entity(kind, etype, eid, params, config)
+        finally:
+            self._creating.discard(eid)
+
+    def _create_entity(
+        self, kind: str, etype: "str | None", eid: str, params: dict, config: dict
+    ) -> dict:
         status: object = None
         if kind == "dataset":
-            # CREATE is not idempotent: a second create at the same id
-            # errors (MLDB-312); overwriting goes through PUT
-            # (MLDB-748's overwrite semantics)
-            if eid in self.ctx._datasets or eid in self._mutable:
-                raise ValueError(f"dataset entry '{eid}' already exists")
             if etype in ("sparse.mutable", "beh.mutable", "beh.binary.mutable"):
                 # an empty MUTABLE dataset: rows accumulate through
                 # record_rows() / POST /v1/datasets/<id>/rows and

@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 
 from mldb_spark.caching import persist_tracked
 from mldb_spark.functions.text import doc_fingerprint, tokenize, word_shingles
-from mldb_spark.session import local_frame
+from mldb_spark.session import local_frame, local_rows
 
 
 def exact_duplicates(
@@ -621,38 +621,25 @@ def connected_components(
 
     HYBRID small-graph path: after banding + similarity filtering the
     surviving pair set is typically orders of magnitude smaller than
-    the corpus. When the RAW pair count is <= driver_cutoff (LOUD CAP
-    — the count is exact, measured on the materialized cache, and the
-    bound is an explicit parameter; duplicate input pairs only push
-    toward the distributed path, never past the driver bound),
-    components are resolved with exact driver-side union-find in one
-    collect instead of paying O(log d) Spark rounds of pure
-    scheduling latency on a metadata-sized table. 1M edges ~ 32 MB on
-    the driver. Pass driver_cutoff=0 to force the distributed loop
-    (the oracle gate qa13 does, so the scale path stays
-    correctness-gated); at a 100 TB corpus with billions of candidate
-    pairs the count exceeds any sane cutoff and the distributed loop
-    runs as before.
+    the corpus. When session.local_rows reads at most driver_cutoff
+    RAW pairs (duplicates only push toward the distributed path),
+    exact driver-side union-find resolves the components instead of
+    O(log d) Spark rounds of pure scheduling latency on a
+    metadata-sized table; 1M edges ~ 32 MB on the driver.
+    driver_cutoff=0 forces the distributed loop with no probe (the
+    oracle gate qa13 does, so the scale path stays correctness-gated).
     """
     # The driver path needs only the RAW pairs (union-find is
-    # insensitive to duplicates, orientation and self-loops), so the
-    # symmetrize+distinct exchange below is deferred to the
-    # distributed branch that actually needs it (optimization r10:
-    # the hybrid path previously paid one full shuffle per CC call
-    # just to decide and feed a driver-side union-find — qa24/qa21
-    # carried an Exchange + HashAggregate pair that never influenced
-    # the result). `pairs` is typically the WHOLE un-persisted
-    # banding + rescore pipeline, so it is persisted either way: the
-    # count materializes the cache, and whichever branch runs reads
-    # the cache, never re-executes the pipeline.
+    # insensitive to duplicates, orientation and self-loops); only the
+    # distributed branch pays the symmetrize+distinct exchange below.
+    # `pairs` is typically the WHOLE un-persisted banding + rescore
+    # pipeline, so it is persisted: an over-cutoff graph's distributed
+    # branch reads the cache the probe filled.
     if driver_cutoff > 0:
         pairs_cached = persist_tracked(pairs.select(a_col, b_col))
-        n_pairs = pairs_cached.count()
-        if n_pairs <= driver_cutoff:
-            half = pairs_cached.collect()  # from cache
-            label_of = _union_find_min_label(
-                [(r[a_col], r[b_col]) for r in half]
-            )
+        half = local_rows(pairs_cached, driver_cutoff, "connected_components")
+        if half is not None:
+            label_of = _union_find_min_label(zip(*(c.to_pylist() for c in half.columns)))
             node_type = pairs_cached.schema[a_col].dataType
             schema = T.StructType(
                 [

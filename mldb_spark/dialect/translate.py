@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from mldb_spark.dialect import ast
 from mldb_spark.dialect.parser import parse_statement
-from mldb_spark.session import local_frame
+from mldb_spark.session import local_frame, local_rows
 
 AGGREGATE_FNS = {
     "count", "sum", "avg", "min", "max", "count_distinct", "variance",
@@ -2665,21 +2665,16 @@ class MldbContext:
         """
         from mldb_spark.operators.temporal import latest_cells
 
-        cols = [
-            r[0]
-            for r in cells.select(column_col)
-            .distinct()
-            .limit(self._SPREAD_KEY_CAP + 1)
-            .collect()
-            if r[0] is not None  # null = row-existence marker (MLDB-618)
-        ]
-        if len(cols) > self._SPREAD_KEY_CAP:
+        # null = row-existence marker (MLDB-618)
+        named = cells.select(column_col).where(F.col(column_col).isNotNull())
+        cols = local_rows(named.distinct(), self._SPREAD_KEY_CAP, "cells columns")
+        if cols is None:
             raise ValueError(
                 f"cells dataset has more than {self._SPREAD_KEY_CAP} "
                 "distinct columns; query it through all_cells()/"
                 "operators.temporal instead"
             )
-        cols = sorted(cols)
+        cols = sorted(cols.column(0).to_pylist())
         latest = latest_cells(cells, row_col, column_col, value_col, ts_col)
         if cols:
             # numeric_columns: per-COLUMN typing for MIXED datasets
@@ -3640,13 +3635,8 @@ class MldbContext:
         data_cols = [
             c for c in df.columns if c != "rowName" and not c.startswith("__")
         ]
-        names = [
-            r[0]
-            for r in df.select("rowName")
-            .limit(self._TRANSPOSE_MAX_ROWS + 1)
-            .collect()
-        ]
-        if len(names) > self._TRANSPOSE_MAX_ROWS:
+        names = local_rows(df.select("rowName"), self._TRANSPOSE_MAX_ROWS, "transpose rows")
+        if names is None:
             raise ValueError(
                 "transpose() over a wide dataset is capped at "
                 f"{self._TRANSPOSE_MAX_ROWS} rows (each becomes an "
@@ -3678,7 +3668,7 @@ class MldbContext:
         )
         return (
             melted.groupBy("rowName")
-            .pivot("__orig_row", [str(n) for n in names])
+            .pivot("__orig_row", [str(n) for n in names.column(0).to_pylist()])
             .agg(F.first("value"))
         )
 
@@ -4812,20 +4802,15 @@ class MldbContext:
             if dt.startswith("struct"):
                 df = df.select(*others, f"{s}.*")
             elif dt.startswith("map"):
-                keys = [
-                    r[0]
-                    for r in df.select(
-                        F.explode(F.map_keys(F.col(s))).alias("k")
-                    ).distinct().limit(self._SPREAD_KEY_CAP + 1).collect()
-                ]
-                if len(keys) > self._SPREAD_KEY_CAP:
+                distinct = df.select(F.explode(F.map_keys(F.col(s)))).distinct()
+                keys = local_rows(distinct, self._SPREAD_KEY_CAP, "AS * map keys")
+                if keys is None:
                     raise ValueError(
                         f"AS * would spread more than {self._SPREAD_KEY_CAP} "
                         "columns; aggregate the map instead"
                     )
-                df = df.select(
-                    *others, *[F.col(s)[k].alias(k) for k in sorted(keys)]
-                )
+                keys = sorted(keys.column(0).to_pylist())
+                df = df.select(*others, *[F.col(s)[k].alias(k) for k in keys])
             elif dt.startswith("array"):
                 # embedding spread (MLDB-1317 tensors): element i →
                 # column 'i'; a nested embedding spreads to dotted

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from mldb_spark.functions.text import tokenize
 from mldb_spark.ml.registry import GLOBAL_REGISTRY, FunctionRegistry
-from mldb_spark.session import local_frame
+from mldb_spark.session import local_frame, local_rows
 
 # Local-regime bounds for the linear fast paths (glz/boolean, svm):
 # collect at most _LR_LOCAL_ROWS+1 rows of at most _LR_LOCAL_FEATS
@@ -112,11 +112,11 @@ def kmeans_train(
     ties to the lowest cluster id, so the oracle's centroid-replay
     contract is identical in both regimes."""
     spark = df.sparkSession
-    head = df.select(array_col).limit(_LOCAL_CLUSTER_ROWS + 1).collect()
-    if len(head) <= _LOCAL_CLUSTER_ROWS and head:
+    head = local_rows(df.select(array_col), _LOCAL_CLUSTER_ROWS, "kmeans_train")
+    if head:
         import numpy as np
 
-        X = np.array([r[0] for r in head], dtype=float)
+        X = np.array(head.column(0).to_pylist(), dtype=float)
         C = _local_kmeans(X, k, seed)
         model = _LocalKMeansModel([c for c in C])
         centroids = local_frame(
@@ -258,17 +258,14 @@ def _local_binary_xy(df: DataFrame, feature_cols, label_col):
 
     if len(feature_cols) > _LR_LOCAL_FEATS:
         return None
-    head = (
-        df.select(
-            *[F.col(f"`{c}`").cast("double") for c in feature_cols],
-            F.col(label_col).cast("double").alias("__y"),
-        )
-        .limit(_LR_LOCAL_ROWS + 1)
-        .toPandas()
+    xy = df.select(
+        *[F.col(f"`{c}`").cast("double") for c in feature_cols],
+        F.col(label_col).cast("double").alias("__y"),
     )
-    if len(head) > _LR_LOCAL_ROWS or len(head) == 0:
+    head = local_rows(xy, _LR_LOCAL_ROWS, "local_binary_xy")
+    if not head:
         return None
-    M = head.to_numpy(dtype=float)
+    M = head.to_pandas().to_numpy(dtype=float)
     if not np.all(np.isfinite(M)):
         return None
     X, y = M[:, :-1], M[:, -1]
@@ -375,18 +372,14 @@ def classifier_train(
     onehot_exprs: list = []
     for c in feature_cols:
         if dtypes.get(c) == "string":
-            vocab = [
-                r[0]
-                for r in df.select(c).distinct().orderBy(c)
-                .limit(_ONE_HOT_CAP + 1).collect()
-                if r[0] is not None
-            ]
-            if len(vocab) > _ONE_HOT_CAP:
+            notnull = df.select(c).where(F.col(c).isNotNull())
+            vocab = local_rows(notnull.distinct().orderBy(c), _ONE_HOT_CAP, "one-hot")
+            if vocab is None:
                 raise ValueError(
                     f"categorical feature {c!r} exceeds {_ONE_HOT_CAP} "
                     "distinct values; hash it upstream"
                 )
-            for v in vocab:
+            for v in vocab.column(0).to_pylist():
                 out_name = f"{c}__{v}"
                 onehot_exprs.append(
                     (out_name, (F.col(c) == F.lit(v)).cast("double"))
@@ -1577,10 +1570,10 @@ def gaussian_clustering_train(
     import numpy as np
 
     spark = df.sparkSession
-    head = df.select(array_col).limit(_LOCAL_CLUSTER_ROWS + 1).collect()
+    head = local_rows(df.select(array_col), _LOCAL_CLUSTER_ROWS, "gaussian_clustering_train")
     fitted = None
-    if len(head) <= _LOCAL_CLUSTER_ROWS and head:
-        X = np.array([r[0] for r in head], dtype=float)
+    if head:
+        X = np.array(head.column(0).to_pylist(), dtype=float)
         fitted = _local_gmm(X, k, seed)
         # degenerate input (1 row / k>n tiny sets): np.cov yields NaN
         # covariances that would otherwise flow into the assignment
@@ -2089,22 +2082,17 @@ def svd_train(
     from mldb_spark.caching import persist_tracked
 
     cells = persist_tracked(cells)
-    # the column map is the ONLY collect, and it is hard-capped: the
-    # limit bounds driver memory BEFORE anything materializes, and an
-    # over-cap vocabulary fails loudly instead of silently collecting
-    # an unbounded map (the Gram matrix is n_cols² — an unpruned
-    # column space is a caller bug, not something to soldier through)
-    col_rows = (
-        cells.select(column_col).distinct().orderBy(column_col)
-        .limit(_SVD_MAX_COLUMNS + 1).collect()
-    )
-    if len(col_rows) > _SVD_MAX_COLUMNS:
+    # the column map is hard-capped: the Gram matrix is n_cols², so an
+    # unpruned column space is a caller bug, not something to soldier through
+    columns = cells.select(column_col).distinct().orderBy(column_col)
+    cols = local_rows(columns, _SVD_MAX_COLUMNS, "svd_train columns")
+    if cols is None:
         raise ValueError(
             f"svd_train: column space exceeds max_columns={_SVD_MAX_COLUMNS}; "
             f"prune the vocabulary upstream (min_df / top-N cut) — the "
             f"Gram matrix cost is quadratic in the column count"
         )
-    col_idx = {r[column_col]: i for i, r in enumerate(col_rows)}
+    col_idx = {c: i for i, c in enumerate(cols.column(0).to_pylist())}
     n_cols = len(col_idx)
     if k > min(n_cols, 2**31):
         raise ValueError(f"k={k} exceeds column count {n_cols}")
@@ -2120,7 +2108,7 @@ def svd_train(
         # pattern): at gate scale the distributed per-row self-join is
         # ~2s of shuffle-join scheduling for a vocab²-sized result
         # (qa31: 116k cells → a 31×31 Gram). When the PRUNED cell
-        # table is small, one Arrow toPandas + a vectorized bincount
+        # table is small, one Arrow collect + a vectorized bincount
         # outer-product accumulate computes the same G in ~0.1s. Hard
         # caps on cells AND Σt² pairs keep the driver bounded; either
         # over-cap falls through to the distributed join.
@@ -2128,9 +2116,10 @@ def svd_train(
         # sum (ULP-level); every gate consumes V through exported
         # fixtures the oracle replays, so both sides stay consistent
         # (verified empirically at sf0.001/0.01/0.1).
-        n_cells = cells.count()  # cells is persisted; count from cache
-        if n_cells <= _LOCAL_GRAM_CELLS_CAP:
-            pdf = cells.select(row_col, column_col, value_col).toPandas()
+        triples = cells.select(row_col, column_col, value_col)
+        local = local_rows(triples, _LOCAL_GRAM_CELLS_CAP, "svd_train gram")
+        if local is not None:
+            pdf = local.to_pandas()
             c_codes = (
                 pdf[column_col].map(col_idx).to_numpy(dtype=np.int64)
             )

@@ -3,13 +3,19 @@
 The reference engine hand-tunes parallelism (MIN_ROW_PER_TASK=32,
 TASK_PER_THREAD=8, /root/reference core/bound_queries.cc:39-40); on
 Spark the equivalents are shuffle partitioning + AQE, set once here.
+
+Rows cross the driver boundary one way each: `local_frame` brings
+driver rows into Spark, `local_rows` brings at most `cap` rows out.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -163,3 +169,22 @@ def _udt_arrow_frame(spark: SparkSession, table, struct) -> DataFrame:
     )
     jdf = jvm.PythonSQLUtils.toDataFrame(jiter, struct.json(), spark._jsparkSession)
     return DataFrame(jdf, spark)
+
+
+def local_rows(df: DataFrame, cap: int, what: str):
+    """`df` as a pyarrow Table if it has at most `cap` rows, else None.
+
+    The one bounded collect: every driver-local regime (None: run the
+    distributed path) and every size cap (None: raise). One action reads
+    at most cap + 1 rows, and one DEBUG record names `what`, the regime
+    (`local` / `over cap`), the rows read and the cap. `to_pylist()`
+    equals `collect()` for strings, numbers, dates and arrays of them;
+    timestamps come back tz-aware, maps as pairs, structs as dicts.
+    """
+    table = df.limit(cap + 1).toArrow()
+    over = table.num_rows > cap
+    _log.debug(
+        "local_rows %s: %s, %d rows read, cap %d",
+        what, "over cap" if over else "local", table.num_rows, cap,
+    )
+    return None if over else table

@@ -26,7 +26,7 @@ import struct as _struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mldb_spark.session import local_frame
+from mldb_spark.session import local_frame, local_rows
 
 
 def import_sentiwordnet(spark: SparkSession, path: str) -> DataFrame:
@@ -104,11 +104,8 @@ def export_word2vec_binary(
     a plan defect. max_vocab bounds that collect (10M rows x 300 dims
     x 4B ≈ 12 GB — near the practical ceiling); corpora beyond it
     should stay in parquet and be consumed distributed."""
-    # guard and fetch in ONE action: the limit bounds driver memory to
-    # max_vocab+1 rows exactly like the separate count() did, without
-    # a second full pass over the vector table (optimization r9)
-    rows = vectors.select("word", "vector").limit(max_vocab + 1).collect()
-    if len(rows) > max_vocab:
+    rows = local_rows(vectors.select("word", "vector"), max_vocab, "word2vec export")
+    if rows is None:
         raise ValueError(
             f"vocabulary exceeds max_vocab={max_vocab}: the word2vec "
             "binary format is a single driver-written file; keep larger "
@@ -116,6 +113,7 @@ def export_word2vec_binary(
         )
     if not rows:
         raise ValueError("no vectors to export")
+    rows = rows.to_pylist()
     dim = len(rows[0]["vector"])
     with open(path, "wb") as f:
         f.write(f"{len(rows)} {dim}\n".encode())

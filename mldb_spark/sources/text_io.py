@@ -21,6 +21,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mldb_spark.session import local_rows
+
 
 def import_text(
     spark: SparkSession,
@@ -215,13 +217,9 @@ def import_json(
                 if isinstance(elem, StructType):
                     cols.append(F.to_json(F.col(field.name)).alias(field.name))
                     continue
-                vals = [
-                    r["v"]
-                    for r in df.select(
-                        F.explode(field.name).alias("v")
-                    ).distinct().orderBy("v").limit(max_one_hot + 1).collect()
-                ]
-                if len(vals) > max_one_hot:
+                distinct = df.select(F.explode(field.name).alias("v")).distinct().orderBy("v")
+                vals = local_rows(distinct, max_one_hot, "import.json arrays='encode'")
+                if vals is None:
                     raise ValueError(
                         f"arrays='encode': column {field.name!r} has more "
                         f"than {max_one_hot} distinct values; keep it in "
@@ -231,7 +229,7 @@ def import_json(
                     F.array_contains(F.col(field.name), v)
                     .cast("int")
                     .alias(f"{field.name}.{v}")
-                    for v in vals
+                    for v in vals.column(0).to_pylist()
                 )
             else:
                 cols.append(F.col(field.name))

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -823,7 +825,7 @@ def test_local_logistic_degenerate_falls_back(spark):
     assert out.select("score").count() == 20
 
 
-def test_svd_local_gram_matches_distributed(spark):
+def test_svd_local_gram_matches_distributed(spark, caplog):
     """The bounded local (numpy bincount) Gram and the distributed
     self-join Gram produce the same factorization on the same cells
     (optimization r10). Forcing the distributed path via the cells
@@ -839,6 +841,7 @@ def test_svd_local_gram_matches_distributed(spark):
         if (i + j) % 3
     ]
     cells = spark.createDataFrame(rows, "row_id string, column string, value double")
+    caplog.set_level(logging.DEBUG, logger="mldb_spark.session")
     _, cols_l, sv_l = proc.svd_train(
         cells, k=3, name="svdl", registry=FunctionRegistry()
     )
@@ -850,6 +853,9 @@ def test_svd_local_gram_matches_distributed(spark):
         )
     finally:
         proc._LOCAL_GRAM_CELLS_CAP = orig
+    assert [
+        m.split(",")[0] for m in caplog.messages if m.startswith("local_rows svd_train gram")
+    ] == ["local_rows svd_train gram: local", "local_rows svd_train gram: over cap"]
     assert sv_l == [pytest.approx(s, abs=1e-9) for s in sv_d]
     lv = {r["column"]: r["embedding"] for r in cols_l.collect()}
     dv = {r["column"]: r["embedding"] for r in cols_d.collect()}
@@ -925,7 +931,7 @@ def test_tfidf_none_corpus_size_guard():
         tfidf_score_table(None, None, None, idf_type="inverseSmooth")
 
 
-def test_cluster_fits_mllib_regime(spark):
+def test_cluster_fits_mllib_regime(spark, caplog):
     """_LOCAL_CLUSTER_ROWS = 0 forces the distributed MLlib kmeans and
     GMM fits; their registered assignments still add `cluster` /
     `prediction` to every row."""
@@ -935,6 +941,7 @@ def test_cluster_fits_mllib_regime(spark):
     rows = [([float(i % 3) * 10 + (i % 5) * 0.1, float(i % 3)],) for i in range(60)]
     df = spark.createDataFrame(rows, "embedding array<double>")
     reg = FunctionRegistry()
+    caplog.set_level(logging.DEBUG, logger="mldb_spark.session")
     orig = proc._LOCAL_CLUSTER_ROWS
     proc._LOCAL_CLUSTER_ROWS = 0
     try:
@@ -946,6 +953,10 @@ def test_cluster_fits_mllib_regime(spark):
         proc._LOCAL_CLUSTER_ROWS = orig
     assert not isinstance(km, proc._LocalKMeansModel)
     assert not isinstance(gmm, proc._LocalGMMModel)
+    assert [r.getMessage() for r in caplog.records if r.name == "mldb_spark.session"] == [
+        "local_rows kmeans_train: over cap, 1 rows read, cap 0",
+        "local_rows gaussian_clustering_train: over cap, 1 rows read, cap 0",
+    ]
     for fn, col in (("kmd", "cluster"), ("gmmd", "prediction")):
         out = reg.apply(fn, df).select(col).collect()
         assert len(out) == 60 and all(r[0] is not None for r in out)

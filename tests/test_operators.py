@@ -3,6 +3,7 @@ oracle queries don't fully pin down)."""
 
 from __future__ import annotations
 
+import logging
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -707,7 +708,7 @@ def test_connected_components_unconverged_raises(spark):
 
 
 @_pytest.mark.parametrize("cutoff", [0, 1_000_000], ids=["distributed", "driver"])
-def test_connected_components_messy_pairs(spark, cutoff):
+def test_connected_components_messy_pairs(spark, cutoff, caplog):
     """The driver path now consumes RAW pairs (optimization r10 — the
     symmetrize+distinct exchange is deferred to the distributed
     branch), so union-find must tolerate duplicate pairs, both
@@ -725,10 +726,15 @@ def test_connected_components_messy_pairs(spark, cutoff):
         ],
         "a long, b long",
     )
-    out = {
-        r["node"]: r["component"]
-        for r in connected_components(pairs, driver_cutoff=cutoff).collect()
-    }
+    with caplog.at_level(logging.DEBUG, logger="mldb_spark.session"):
+        out = {
+            r["node"]: r["component"]
+            for r in connected_components(pairs, driver_cutoff=cutoff).collect()
+        }
+    # the forced distributed path runs no probe
+    assert [r.getMessage() for r in caplog.records if r.name == "mldb_spark.session"] == (
+        ["local_rows connected_components: local, 6 rows read, cap 1000000"] if cutoff else []
+    )
     assert {n: out[n] for n in (1, 2, 3)} == {1: 1, 2: 1, 3: 1}
     assert out[7] == 7 and out[8] == 7
 

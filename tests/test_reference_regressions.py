@@ -5946,34 +5946,44 @@ def test_mldb_1753_useragent_and_domain(spark):
         mldb.query("SELECT extract_domain('pwet.com') as c4").collect()
 
 
-def test_mldb_2168_and_1649_csv_import_options(spark):
+def test_mldb_2168_and_1649_csv_import_options(spark, tmp_path):
     """MLDB-2168-csv-import-skip-lines.js + MLDB-1649-csv-import-
     trailing-comma.js: skipLineRegex drops matching lines BEFORE
     parsing (header exempt) under a custom quoteChar + latin1; a
-    trailing delimiter on the header line must NOT invent a column."""
+    trailing delimiter on the header line must NOT invent a column.
+    The quotechar file's header matches the skip pattern, and the
+    skipped line carries a latin1-only byte."""
     from mldb_spark.sources.text_io import import_text
 
+    quotechar = tmp_path / "MLDB-1312-quotechar.csv"
+    quotechar.write_bytes(
+        "#a#,#b#\n#a#,b\n#a,b#,#c#\n#\xe9t\xe9#,#b#\n".encode("latin1")
+    )
+    trailing = tmp_path / "MLDB-1649.csv"
+    trailing.write_text("a,b,c,\n1,2,3\n")
     df = import_text(
-        spark, "/root/reference/testing/MLDB-1312-quotechar.csv",
+        spark, str(quotechar),
         quote="#", encoding="latin1", skip_line_regex=".*#b#.*",
     )
     assert df.columns == ["a", "b"]
     assert sorted(tuple(r) for r in df.collect()) == [("a", "b"), ("a,b", "c")]
 
-    df = import_text(spark, "/root/reference/testing/dataset/MLDB-1649.csv")
+    df = import_text(spark, str(trailing))
     assert df.columns == ["a", "b", "c"]
     assert [tuple(r) for r in df.collect()] == [(1, 2, 3)]
 
 
-def test_mldb_2170_excel_formulas(spark):
+def test_mldb_2170_excel_formulas(spark, tmp_path):
     """MLDB-2170-csv-excel-formulas.js: processExcelFormulas unwraps
     the ="x" Excel form; a BARE =x stays a literal string. (Cells are
     per-column typed here, so the mixed column stays string — the
     values match the reference's cell contents.)"""
     from mldb_spark.sources.text_io import import_text
 
+    path = tmp_path / "MLDB-2170-csv-excel-formulas.csv"
+    path.write_bytes(b'a,b\n="1",="2"\n3,4\n="5",6\n=7,=8\n9,="10"\n')
     df = import_text(
-        spark, "/root/reference/testing/fixtures/MLDB-2170-csv-excel-formulas.csv",
+        spark, str(path),
         encoding="latin1", process_excel_formulas=True,
     )
     assert df.columns == ["a", "b"]
@@ -5982,7 +5992,7 @@ def test_mldb_2170_excel_formulas(spark):
     ]
 
 
-def test_mldb_1638_structured_column_names(spark):
+def test_mldb_1638_structured_column_names(spark, tmp_path):
     """MLDB-1638-import-text-structured-names.js:
     structuredColumnNames=false (default) treats each header cell as
     ONE literal path element ('c.a' -> the quoted rendering "c.a";
@@ -5990,12 +6000,14 @@ def test_mldb_1638_structured_column_names(spark):
     already-rendered structured path."""
     from mldb_spark.sources.text_io import import_text
 
-    df = import_text(spark, "/root/reference/testing/dataset/MLDB-1638.csv")
+    path = tmp_path / "MLDB-1638.csv"
+    path.write_text('a,b,c.a,c.b,"""d.a"""\n1,2,3,4,5\n')
+    df = import_text(spark, str(path))
     assert sorted(df.columns) == sorted(
         ['a', 'b', '"c.a"', '"c.b"', '"""d.a"""']
     )
     df = import_text(
-        spark, "/root/reference/testing/dataset/MLDB-1638.csv",
+        spark, str(path),
         structured_column_names=True,
     )
     assert sorted(df.columns) == sorted(['a', 'b', 'c.a', 'c.b', '"d.a"'])
@@ -6343,17 +6355,25 @@ def test_mldb_871_non_ascii_keys(mldb):
     assert out.columns == ["café"] and out.collect()[0][0] == "été"
 
 
-def test_mldb_1718_invalid_utf8_long_string(spark):
+def test_mldb_1718_invalid_utf8_long_string(spark, tmp_path):
     """MLDB-1718-invalid-utf-8-string-long.py: importing a file with
     very long (invalid-UTF-8-bearing) lines under a NUMERIC header
     name works end-to-end — the first cell reads back and a GROUP BY
-    on the long-string column runs."""
+    on the long-string column runs. The file: 'x', then 298 distinct
+    lines of 1 kB (every 50th of 160 kB), each carrying bytes that
+    are not UTF-8, and one of them repeated."""
     from mldb_spark.api import Mldb
     from mldb_spark.sources.text_io import import_text
 
+    lines = [b"x"] + [
+        b"%d " % i + b"\xff\xfe\xc3(" + b"long" * (40_000 if i % 50 == 0 else 250)
+        for i in range(1, 299)
+    ]
+    path = tmp_path / "MLDB-1718-long_string.txt"
+    path.write_bytes(b"\n".join(lines + [lines[7]]) + b"\n")
     mldb = Mldb(spark)
     df = import_text(
-        spark, "/root/reference/testing/dataset/MLDB-1718-long_string.txt",
+        spark, str(path),
         delimiter="\t", headers=["0"],
     )
     mldb.create_dataset("testset1718", df)
@@ -8711,14 +8731,28 @@ def test_mldb_481_high_dimensional_cube_knn(spark):
         assert abs(dist - math.sqrt(2)) < 1e-9
 
 
-def test_mldb_1121_custom_headers_no_duplicates(spark):
+def test_mldb_1121_custom_headers_no_duplicates(spark, tmp_path):
     """MLDB-1121-csv-import-duplicates.py: importing with explicit
     `headers` (no header line in the file) keeps EVERY line exactly
-    once — no line is consumed as a header, none duplicated."""
+    once — no line is consumed as a header, none duplicated. The
+    file's first line looks like a header, and quoted messages carry
+    the delimiter."""
     from mldb_spark.sources.text_io import import_text
 
+    path = tmp_path / "MLDB-1121_test_set.csv"
+    path.write_text(
+        "error_msg,count\n"
+        '"PATATE: connection refused, retrying",12\n'
+        '"timeout after 30s",3\n'
+        '"disk full, cannot write ""/tmp/a""",1\n'
+        "unknown host,7\n"
+        '"PATATE again",2\n'
+        '"permission denied",5\n'
+        '"bad request, code 400",9\n'
+        "count mismatch,4\n"
+    )
     df = import_text(
-        spark, "/root/reference/testing/MLDB-1121_test_set.csv",
+        spark, str(path),
         headers=["error_msg", "count"], line_number_row_names=True,
     )
     rows = df.collect()

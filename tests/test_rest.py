@@ -856,3 +856,46 @@ def test_concurrent_first_creates_all_land(spark):
     assert sorted(m._procedures) == sorted(f"cp{i}" for i in range(16))
     assert sorted(m._runs) == sorted(f"cp{i}" for i in range(16))
     assert sorted(m._mutable) == sorted(f"cd{i}" for i in range(16))
+
+
+def test_concurrent_creates_of_one_id_one_wins(spark):
+    """Eight threads create the structured.mutable dataset `same` at
+    once: the id is reserved before the dataset builds, so exactly one
+    create succeeds and the other seven fail as a repeated create
+    does."""
+    import sys
+    import threading
+
+    from mldb_spark.api import Mldb
+
+    m = Mldb(spark)
+    barrier = threading.Barrier(8)
+    outcomes: list[str] = []
+
+    def create():
+        barrier.wait(timeout=60)
+        try:
+            m.create_entity("dataset", {
+                "type": "structured.mutable", "id": "same",
+                "params": {"inputData": "SELECT 1 AS x"},
+            })
+            outcomes.append("ok")
+        except ValueError as e:
+            outcomes.append(str(e))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=create) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert outcomes.count("ok") == 1
+    assert sorted(o for o in outcomes if o != "ok") == [
+        "dataset entry 'same' already exists"
+    ] * 7
+    assert m.dataset("same").columns == ["x"]

@@ -13,6 +13,20 @@ _ESTIMATOR_IMPORT = re.compile(
 )
 
 
+def _function_lines(path: pathlib.Path, name: str) -> set[str]:
+    """`path:line` ids of the lines of the top-level function `name`
+    (none if there is no such function)."""
+    lines = path.read_text().splitlines()
+    start = next((i for i, l in enumerate(lines) if l.startswith(f"def {name}(")), None)
+    if start is None:
+        return set()
+    end = next(
+        (i for i, l in enumerate(lines) if i > start and l.startswith("def ")),
+        len(lines),
+    )
+    return {f"{path.relative_to(PKG.parent)}:{i + 1}" for i in range(start, end)}
+
+
 def test_model_fits_live_in_ml_package():
     """How a model is fitted is shared by the Python API, createEntity
     and SQL: only mldb_spark/ml/ imports MLlib estimators, so every
@@ -36,11 +50,27 @@ def test_driver_rows_enter_spark_through_local_frame():
         for n, line in enumerate(p.read_text().splitlines(), 1):
             if ".createDataFrame(" in line or "parallelize(" in line:
                 offenders.append(f"{p.relative_to(PKG.parent)}:{n}")
-    session = (PKG / "session.py").read_text().splitlines()
-    start = next(i for i, l in enumerate(session) if l.startswith("def local_frame("))
-    end = next(
-        (i for i, l in enumerate(session) if i > start and l.startswith("def ")),
-        len(session),
+    allowed = _function_lines(PKG / "session.py", "local_frame")
+    assert [o for o in offenders if o not in allowed] == []
+
+
+# `.limit(<expr> + 1)`, across lines, with one level of nested parens
+_BOUNDED_LIMIT = re.compile(r"\.limit\(([^()]|\([^()]*\))*\+\s*1\s*\)")
+
+
+def test_bounded_collects_go_through_local_rows():
+    """Collect at most cap + 1 rows, over cap means the distributed
+    path or an error: that rule is written once, in session.local_rows,
+    which also logs the regime it chose. export_xlsx keeps its own
+    collect: it writes str() of arbitrary column types, and Arrow reads
+    timestamps, maps and structs back as other Python types."""
+    offenders = []
+    for p in sorted(PKG.rglob("*.py")):
+        text = p.read_text()
+        for m in _BOUNDED_LIMIT.finditer(text):
+            n = text.count("\n", 0, m.start()) + 1
+            offenders.append(f"{p.relative_to(PKG.parent)}:{n}")
+    allowed = _function_lines(PKG / "session.py", "local_rows") | _function_lines(
+        PKG / "sources" / "git_io.py", "export_xlsx"
     )
-    allowed = {f"mldb_spark/session.py:{i + 1}" for i in range(start, end)}
     assert [o for o in offenders if o not in allowed] == []
