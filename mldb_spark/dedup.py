@@ -589,35 +589,42 @@ def connected_components(
     whose component != itself).
 
     Algorithm: distributed min-label propagation WITH pointer
-    jumping. Each round (1) propagates the per-node minimum label
-    across the symmetrized edge set (one shuffle join + one
-    partial-agg shuffle), then (2) shortcuts label(u) :=
-    label(label(u)) (one join of the node-sized label table with
-    itself). The jump step compresses label chains so a component of
-    diameter d converges in O(log d) rounds instead of O(d) — the
-    logarithmic-rounds family of Rastogi et al., "Finding Connected
-    Components in Map-Reduce in Logarithmic Rounds" (ICDE'13) /
-    Kiveris et al. SoCC'14. Dedup graphs are dense near-cliques
-    (2-4 rounds); a crawl-chain of diameter 10^4 still finishes in
-    ~15.
+    jumping over one node-keyed adjacency table (node, label, nbrs),
+    built once from the symmetrized pairs. Each round (1) every node
+    offers its label to itself and its neighbours and each node keeps
+    the minimum offer (one explode + partial-agg shuffle), then (2)
+    shortcuts label(u) := label(label(u)) (a self-join of that
+    node-sized result), then (3) re-attaches nbrs and the round-start
+    label by a join on node. The jump step compresses label chains so
+    a component of diameter d converges in O(log d) rounds instead of
+    O(d) — the logarithmic-rounds family of Rastogi et al., "Finding
+    Connected Components in Map-Reduce in Logarithmic Rounds"
+    (ICDE'13) / Kiveris et al. SoCC'14. Dedup graphs are dense
+    near-cliques (2-4 rounds); a crawl-chain of diameter 10^4 still
+    finishes in ~15.
 
     Works for ANY orderable node id type (longs, strings, dates):
-    convergence is an exact changed-count on the label table. The
-    round-start label rides THROUGH the pointer-jump join as __old,
-    so the check is a filter over the round's ALREADY-CHECKPOINTED
-    (in-memory) output — a near-free probe, never a recompute of the
-    round's shuffles. (An Observation/CollectMetrics variant was
+    convergence is an exact changed-count of label against the
+    round-start label. Each round's table is a lazy localCheckpoint
+    (it truncates the lineage, so Catalyst analysis time does not
+    compound across rounds; at cluster scale swap for a reliable
+    checkpoint dir), and the round's ONE action — that
+    changed-count — is also the job that fills the checkpoint the
+    next round reads. (An Observation/CollectMetrics variant was
     tried and REVERTED: Spark's ObservationManager is not
     serializable and lingering observation registrations poison later
-    jobs' closures with 'Task not serializable' — found by the full
-    suite, pinned by the regression below.) Raises RuntimeError if
-    the fixpoint is not reached within max_iter — an unconverged
-    result would silently merge/miss groups.
+    jobs' closures with 'Task not serializable' — pinned by a
+    regression test.) Raises RuntimeError if the fixpoint is not
+    reached within max_iter — an unconverged result would silently
+    merge/miss groups.
 
-    100 TB shape: labels and edges stay partitioned by node across
-    rounds (the join keys never change), intermediates are
-    persist-tracked and released per round, and the loop stops on a
-    changed-count of zero rather than a fixed iteration budget.
+    100 TB shape: the state is one row per node, not one per edge;
+    every shuffle is keyed by node (or by label, itself a node); and
+    the loop stops on a changed-count of zero rather than a fixed
+    iteration budget. The trade-off of the layout: a node's WHOLE
+    neighbour list lives in one row, so a hub's row grows with its
+    degree (a 20,000-leaf star is one 20,000-element array) and its
+    explode runs in one task.
 
     HYBRID small-graph path: after banding + similarity filtering the
     surviving pair set is typically orders of magnitude smaller than
@@ -631,7 +638,7 @@ def connected_components(
     """
     # The driver path needs only the RAW pairs (union-find is
     # insensitive to duplicates, orientation and self-loops); only the
-    # distributed branch pays the symmetrize+distinct exchange below.
+    # distributed branch pays the symmetrize+group exchange below.
     # `pairs` is typically the WHOLE un-persisted banding + rescore
     # pipeline, so it is persisted: an over-cutoff graph's distributed
     # branch reads the cache the probe filled.
@@ -653,10 +660,9 @@ def connected_components(
             pairs_cached.unpersist()
             return out
         pairs = pairs_cached  # distributed branch reads the cache
-    # symmetrize in ONE pass over pairs (optimization r9): the old
-    # two-arm union read the pairs input twice — explode over both
-    # orientations reads it once.
-    edges = persist_tracked(
+    # symmetrize in one pass over pairs, then fold each node's
+    # neighbours into its row; label starts as min(node, nbrs)
+    state = (
         pairs.select(
             F.explode(
                 F.array(
@@ -669,95 +675,46 @@ def connected_components(
                 )
             ).alias("__e")
         )
-        .select("__e.node", "__e.nbr")
-        .distinct()
+        .groupBy(F.col("__e.node").alias("node"))
+        .agg(F.array_distinct(F.collect_list("__e.nbr")).alias("nbrs"))
+        .select(
+            "node", F.least("node", F.array_min("nbrs")).alias("label"), "nbrs"
+        )
     )
-    # one action: materializes the edge cache before the loop; the
-    # raw-pair cache (if any) is fully consumed by it
-    edges.count()
-    if driver_cutoff > 0:
-        pairs.unpersist()
-    # localCheckpoint per round truncates the lineage — without it
-    # each round's logical plan nests the previous round's and
-    # Catalyst analysis time compounds (the classic iterative-algo
-    # trap); at cluster scale swap for a reliable checkpoint dir.
-    labels = (
-        edges.groupBy("node")
-        .agg(F.min("nbr").alias("label"))
-        .select("node", F.least("node", "label").alias("label"))
-        .localCheckpoint()
-    )
-    # Right-size the edge table to the graph, not to the upstream
-    # scan: AQE coalesced the label shuffle to the partition count the
-    # node set actually needs, but the CACHED edge plan keeps its
-    # pre-AQE width (cached plans pin their output partitioning). A
-    # 451-pair graph inherited 32 partitions from the corpus scan and
-    # paid 32-task scheduling in every one of O(log d) rounds; at
-    # 100 TB the label count is large and this repartition is a no-op
-    # relabel. Partitioned by the propagate-join key ("nbr").
-    n_label_parts = max(1, labels.rdd.getNumPartitions())
-    if edges.rdd.getNumPartitions() > 4 * n_label_parts:
-        wide = edges
-        edges = persist_tracked(edges.repartition(n_label_parts, "nbr"))
-        wide.unpersist()
-
-    converged = False
     for _ in range(max_iter):
-        # (1) propagate: label(u) = min(label(u), min_{v in N(u)} label(v)).
-        # Carried through a node-keyed left join (not a union+groupBy)
-        # so the round-start label survives as __old for the in-action
-        # convergence metric below.
-        nbr_min = (
-            edges.join(
-                labels.withColumnRenamed("node", "nbr").withColumnRenamed(
-                    "label", "nbr_label"
-                ),
-                "nbr",
+        # (1) propagate: label(u) = min over {u} + N(u) of label(v)
+        offered = (
+            state.select(
+                F.explode(F.array_union(F.array("node"), "nbrs")).alias("node"),
+                "label",
             )
             .groupBy("node")
-            .agg(F.min("nbr_label").alias("__nmin"))
-        )
-        propagated = labels.join(nbr_min, "node", "left").select(
-            "node",
-            F.col("label").alias("__old"),
-            F.least("label", F.coalesce("__nmin", "label")).alias("label"),
+            .agg(F.min("label").alias("label"))
         )
         # (2) pointer jump: label(u) = label(label(u)). label(u) is
         # itself a node of the same component, so this shortcuts
         # chains — the step that turns O(diameter) into O(log d).
-        parents = propagated.select(
+        parents = offered.select(
             F.col("node").alias("label"), F.col("label").alias("__pl")
         )
-        # Labels are monotone non-increasing (label(x) <= x holds
-        # inductively), so "changed" = any strict decrease vs __old.
-        # __old is kept IN the checkpointed output, making the probe
-        # a limit-1 filter over in-memory data (no shuffle replay).
-        new_labels = (
-            propagated.join(parents, "label", "left")
-            .select(
-                "node",
-                F.coalesce("__pl", "label").alias("label"),
-                "__old",
-            )
-            .localCheckpoint()
+        jumped = offered.join(parents, "label", "left").select(
+            "node", F.coalesce("__pl", "label").alias("label")
         )
-        changed = (
-            new_labels.filter(F.col("label") != F.col("__old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels.select("node", "label")
+        # (3) re-attach nbrs and the round-start label
+        nxt = jumped.join(
+            state.select("node", "nbrs", F.col("label").alias("__old")), "node"
+        ).localCheckpoint(eager=False)
+        # Labels are monotone non-increasing, so "changed" = any strict
+        # decrease vs __old. This count is the round's one action and
+        # fills the checkpoint.
+        changed = nxt.filter(F.col("label") != F.col("__old")).count()
+        if driver_cutoff > 0:
+            pairs.unpersist()  # the filled checkpoint holds the adjacency
+        state = nxt.select("node", "label", "nbrs")
         if changed == 0:
-            converged = True
-            break
-    if not converged:
-        edges.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} "
-            "rounds — raise max_iter (an unconverged result would "
-            "silently mislabel components)"
-        )
-    # edges are fully consumed by the converged labels — release the
-    # intermediate now (labels are checkpointed, not lazy)
-    edges.unpersist()
-    return labels.select("node", F.col("label").alias("component"))
+            return state.select("node", F.col("label").alias("component"))
+    raise RuntimeError(
+        f"connected_components did not converge within {max_iter} "
+        "rounds — raise max_iter (an unconverged result would "
+        "silently mislabel components)"
+    )

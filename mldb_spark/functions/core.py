@@ -166,18 +166,11 @@ def row_hash(key: Column) -> Column:
     Reference: rowHash() pseudo-column (doc ValueExpression.md
     §Dataset-provided functions) used for stable sampling and implicit
     ORDER BY tiebreaks (core/bound_queries.cc:1139-1142). xxhash64 is
-    Spark-native and stable across partitions/executors; for
-    cross-engine (duckdb-oracle) parity use the md5-based variant
-    below instead.
+    Spark-native and stable across partitions/executors, but not
+    portable: a cross-engine (duckdb-oracle) check needs an md5-based
+    hash, which any engine with md5() can replay.
     """
     return F.xxhash64(key)
-
-
-def row_hash_portable(key: Column) -> Column:
-    """Engine-portable deterministic hash: first 15 hex digits of
-    md5(cast(key as string)) as a BIGINT. Identical SQL exists in any
-    engine with md5(), which makes it oracle-checkable."""
-    return F.conv(F.substring(F.md5(key.cast("string")), 1, 15), 16, 10).cast("long")
 
 
 # -- date_part / date_trunc (reference unit semantics) ------------------

@@ -92,17 +92,6 @@ def attach_metadata(df: DataFrame, id_col: str = "media_id", content_col: str = 
     )
 
 
-def partition_by_size(df: DataFrame, target_bytes: int = 256 << 20, avg_member_bytes: int = 1 << 20) -> DataFrame:
-    """Repartition so each decode partition holds ~target_bytes of
-    payload — the knob that keeps decoded Arrow batches inside
-    executor memory at any corpus size."""
-    per_partition = max(1, target_bytes // max(avg_member_bytes, 1))
-    n = max(1, df.rdd.getNumPartitions())
-    # cheap heuristic without a count(): scale partitions by the
-    # current count only when caller provides stats; default: spread
-    return df.repartition(max(n, 8))
-
-
 def _fake_decode(content: bytes, out_w: int, out_h: int) -> np.ndarray:
     """STUB DECODER (no codecs in this container): deterministic
     pseudo-pixels derived from the content md5, shaped (h, w). When

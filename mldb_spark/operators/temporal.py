@@ -44,20 +44,6 @@ def latest_cells(
     )
 
 
-def earliest_cells(
-    cells: DataFrame,
-    row_col: str = "row",
-    column_col: str = "column",
-    value_col: str = "value",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """GET_EARLIEST read (min_by)."""
-    return cells.groupBy(row_col, column_col).agg(
-        F.min_by(value_col, ts_col).alias(value_col),
-        F.min(ts_col).alias(ts_col),
-    )
-
-
 _TEMPORAL_AGGS = {
     "count": lambda v, ts: F.count(v),
     "sum": lambda v, ts: F.sum(v),

@@ -2798,7 +2798,8 @@ def qa09_time_arithmetic(spark: SparkSession, sf: str) -> DataFrame:
 def qa13_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup PAIRS resolved into duplicate GROUPS via distributed
     connected components (dedup.connected_components — min-label
-    propagation, one join + one partial-agg shuffle per round).
+    propagation with pointer jumping over a node-keyed adjacency
+    table, one Spark action per round).
     Edges: exact-fingerprint duplicates UNION id chains (i ↔ i+1
     when i%10 < 9 — ten-node transitive chains the closure must
     merge). The DuckDB oracle replays the closure with a recursive

@@ -21,11 +21,8 @@ pointer structure — the Spark-native equivalents are:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 from mldb_spark.functions.vector import (
     array_double_lit,
@@ -33,24 +30,6 @@ from mldb_spark.functions.vector import (
     dot_product,
     l2_norm,
 )
-
-
-# DoubleType() instance (not the "double" DDL string): the string
-# form needs an active SparkContext at decoration time, which breaks
-# importing this module before the session exists.
-@pandas_udf(DoubleType())
-def cosine_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized cosine over Arrow batches — the fast path when a
-    plan evaluates many pairs (higher-order-function arithmetic is
-    interpreted per element in the JVM; numpy does the same math
-    ~100x faster per batch). float64 throughout so results agree
-    with the CAST(.. AS DOUBLE[]) SQL form."""
-    ma = np.stack(a.to_numpy()).astype(np.float64)
-    mb = np.stack(b.to_numpy()).astype(np.float64)
-    dots = np.einsum("ij,ij->i", ma, mb)
-    na = np.sqrt(np.einsum("ij,ij->i", ma, ma))
-    nb = np.sqrt(np.einsum("ij,ij->i", mb, mb))
-    return pd.Series(dots / (na * nb))
 
 
 def brute_force_topk(

@@ -119,16 +119,6 @@ def postgresql_dataset(spark: SparkSession, **kwargs) -> DataFrame:
     return spark.read.format("jdbc").options(**jdbc_options(**kwargs)).load()
 
 
-def postgresql_query(spark: SparkSession, query: str, **kwargs) -> DataFrame:
-    """postgresql.query: server-side query pushdown (the whole query
-    runs in postgres; Spark reads the result)."""
-    return (
-        spark.read.format("jdbc")
-        .options(**jdbc_options(table_or_query=query, is_query=True, **kwargs))
-        .load()
-    )
-
-
 def mongodb_connector_available(spark: SparkSession) -> bool:
     """True when the mongo-spark connector is on the session's
     classpath (org.mongodb.spark:mongo-spark-connector)."""

@@ -5,9 +5,12 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("MLDB_SPARK_TEST_SF", "/root/testdata/sf0.001")
+SF_DIR = os.environ.get(
+    "MLDB_SPARK_TEST_SF", os.path.join(REPO, "perfbench", "data", "sf0.001")
+)
 
 
 @pytest.fixture(scope="session")

@@ -316,14 +316,14 @@ def test_having(ctx, duck):
     assert problems == []
 
 
-def test_order_by_dropped_source_column(ctx):
+def test_order_by_dropped_source_column(ctx, sf_dir):
     # resolve-then-drop: sort by a source column the SELECT list drops
     rows = ctx.query(
         "SELECT c_name FROM customer ORDER BY c_acctbal DESC LIMIT 3"
     ).collect()
     assert [r.asDict().keys() for r in rows][0] == {"c_name": None}.keys()
     ref = (
-        load(ctx.spark, "/root/testdata/sf0.001", "customer")
+        load(ctx.spark, sf_dir, "customer")
         .orderBy("c_acctbal", ascending=False).limit(3).select("c_name").collect()
     )
     assert [r["c_name"] for r in rows] == [r["c_name"] for r in ref]

@@ -765,6 +765,60 @@ def test_connected_components_hybrid_paths_agree_random(spark):
     assert dist == drv
 
 
+def test_connected_components_high_degree_hub(spark):
+    """The distributed loop keeps one row per node holding its whole
+    neighbour list, so a hub is one large row: a 20,000-leaf star
+    whose minimum id sits at the far end of a 10-node chain hanging
+    off one leaf. The minimum must cross the chain, the hub and every
+    leaf, and the result must equal the driver path's."""
+    from mldb_spark.dedup import connected_components
+
+    hub = 100_000
+    star = spark.range(10, 20_010).select(
+        F.lit(hub).cast("long").alias("a"), F.col("id").alias("b")
+    )
+    chain = spark.createDataFrame([(i, i + 1) for i in range(10)], "a long, b long")
+    pairs = star.union(chain)
+    dist = sorted(
+        (r["node"], r["component"])
+        for r in connected_components(pairs, driver_cutoff=0).collect()
+    )
+    drv = sorted(
+        (r["node"], r["component"]) for r in connected_components(pairs).collect()
+    )
+    assert len(dist) == 20_011
+    assert {c for _, c in dist} == {0}
+    assert dist == drv
+
+
+def test_connected_components_job_budget(spark):
+    """Pins the distributed loop's Spark job count on a qa13-shaped
+    graph (ten-node chains plus duplicate and reversed pairs) without
+    timing: one action per round, a lazily filled checkpoint and no
+    pre-loop count. The earlier edge-table loop (eager checkpoint,
+    separate changed probe, edges.count()) ran 41 jobs here at
+    local[4]; the budget is half of that."""
+    from mldb_spark.dedup import connected_components
+
+    chains = [(i, i + 1) for i in range(500) if i % 10 < 9]
+    dups = [(a, b) for a, b in chains if a % 7 == 0] + [
+        (b, a) for a, b in chains if a % 11 == 0
+    ]
+    pairs = spark.createDataFrame(chains + dups, "a long, b long")
+    sc = spark.sparkContext
+    group = "cc_job_budget"
+    sc.setJobGroup(group, "connected_components job budget")
+    try:
+        out = connected_components(pairs, driver_cutoff=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 41 // 2, jobs
+    comps = {r["node"]: r["component"] for r in out.collect()}
+    assert comps == {n: n - n % 10 for n in range(500)}
+
+
 def test_get_all_where_row_general_predicate(spark):
     """GET_ALL with an ARBITRARY multi-column row predicate
     (core/bound_queries.cc:385,394 evaluates WHERE at GET_LATEST):
