@@ -44,6 +44,5 @@ def _tune_driver_allocator() -> None:
 _tune_driver_allocator()
 
 from mldb_spark.session import get_spark  # noqa: E402,F401
-from mldb_spark.catalog import Catalog  # noqa: E402,F401
 
 __version__ = "0.1.0"

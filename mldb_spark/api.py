@@ -12,8 +12,9 @@ query() runs the MLDB SQL dialect through the translator.
 from __future__ import annotations
 
 import threading
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mldb_spark.dialect import MldbContext
@@ -69,6 +70,24 @@ def _entity_id(spec: "str | dict") -> str:
     """An entity reference given as a plain id or as an {id, [type]}
     config row (MLDB-1025-dataset-output-with-default.py)."""
     return spec["id"] if isinstance(spec, dict) else spec
+
+
+# (kind, type) -> builder(mldb, eid, params) -> status: every entity
+# type createEntity can make. Each builder registers at its definition
+# with @_entity_type, as each reference type registers beside its
+# implementation (tabular_dataset.cc:2681, sparse_matrix_dataset.cc:1924).
+_ENTITY_TYPES: dict[tuple[str, str], Callable[[Mldb, str, dict], object]] = {}
+
+
+def _entity_type(kind: str, *types: str):
+    """Register the decorated builder under (kind, type) for each type."""
+
+    def register(builder):
+        for t in types:
+            _ENTITY_TYPES[(kind, t)] = builder
+        return builder
+
+    return register
 
 
 class Mldb:
@@ -404,77 +423,6 @@ class Mldb:
             raise KeyError(f"unknown function {name!r}")
         return fn(*args, **kwargs)
 
-    def create_useragent_function(self, name: str) -> None:
-        """http.useragent function entity
-        (plugins/html/useragent_function.cc:95-106; MLDB-1753): input
-        pin `ua`, outputs the uap-core field set as dotted columns
-        (browser.family/version, os.family/version, device.brand/
-        model, isSpider as 0/1)."""
-        from mldb_spark.functions.web import parse_useragent
-
-        def apply(df: DataFrame) -> DataFrame:
-            p = parse_useragent(F.col("ua"))
-            return (
-                df.withColumn("browser.family", p["browser_family"])
-                .withColumn("browser.version", p["browser_version"])
-                .withColumn("device.brand", p["device_brand"])
-                .withColumn("device.model", p["device_model"])
-                .withColumn("isSpider", p["is_spider"].cast("int"))
-                .withColumn("os.family", p["os_family"])
-                .withColumn("os.version", p["os_version"])
-            )
-
-        self.ctx.register_function(name, apply)
-
-    def create_neighbors_function(
-        self,
-        name: str,
-        dataset_id: str,
-        num_neighbors: "int | None" = None,
-    ) -> None:
-        """embedding.neighbors function entity
-        (plugins/embedding/embedding.cc:1420; MLDB-283/665): input pin
-        `coords` (a row of coordinates, bound by NAME), output
-        `distances` — a MAP of neighbor rowName -> distance. SQL
-        application rides the BATCHED path (VERDICT r6 #8): the whole
-        query-point set broadcasts over ONE corpus scan, never a
-        driver round-trip per row."""
-        from mldb_spark.similarity import embedding_neighbors_batch
-
-        corpus = self.dataset(dataset_id)
-        rn_col = "rowName" if "rowName" in corpus.columns else corpus.columns[0]
-        feat_cols = _feature_cols(corpus, (rn_col,))
-
-        def apply(df: DataFrame, params: dict | None = None) -> DataFrame:
-            k = int((params or {}).get("numNeighbors", num_neighbors or 0)) or None
-            q = df.withColumn("__qid", F.monotonically_increasing_id())
-            hits = embedding_neighbors_batch(
-                corpus.select(F.col(rn_col).alias("__rn"), *feat_cols),
-                q.select("__qid", *feat_cols),
-                row_name_col="__rn",
-                feature_cols=feat_cols,
-                query_id_col="__qid",
-                num_neighbors=k,
-            )
-            pairs = F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("distance").alias("d"),
-                        F.col("neighbor").alias("n"),
-                    )
-                )
-            )
-            agg = hits.groupBy("__qid").agg(
-                F.map_from_entries(
-                    F.transform(
-                        pairs, lambda s: F.struct(s["n"].alias("k"), s["d"].alias("v"))
-                    )
-                ).alias("distances")
-            )
-            return q.join(agg, "__qid", "left").drop("__qid")
-
-        self.ctx.register_function(name, apply)
-
     def create_stemmer_function(self, name: str, language: str = "english") -> None:
         """stemmer function entity (plugins/nlp/nlp.cc:193-240;
         MLDB-1126): input {words}, output {words} with stemmed keys —
@@ -741,20 +689,17 @@ class Mldb:
         )
 
     @staticmethod
-    def _check_label_not_in_features(sql: str, tdf: DataFrame) -> None:
+    def _check_label_not_in_features(spec: "str | dict", tdf: DataFrame) -> None:
         """A dataset column used as the label must not also be a
         feature (MLDB-2188-label_feature_validation.py:
         `SELECT {Theme} as features, Theme as label` is a config
         error, not silent leakage). Detected statically: the select
         item aliased `label` names a column that also appears among
         the features-struct fields."""
-        try:
-            from mldb_spark.dialect import ast as _ast
-            from mldb_spark.dialect.parser import parse_statement
+        from mldb_spark.dialect import ast as _ast
+        from mldb_spark.dialect.parser import parse_statement
 
-            stm = parse_statement(sql)
-        except Exception:
-            return
+        stm = parse_statement(Mldb._input_spec_to_sql(spec))
         feat_fields = set()
         for f in tdf.schema:
             if f.name == "features" and hasattr(f.dataType, "fieldNames"):
@@ -769,96 +714,6 @@ class Mldb:
                     f"Dataset column '{it.expr.name}' cannot be used in "
                     "both label and feature"
                 )
-
-    def _run_bucketize(self, params: dict) -> dict:
-        """bucketize procedure
-        (plugins/feature_gen/bucketize_procedure.cc:255, MLDB-1267):
-        assign ordered input rows to named percentile buckets. Output
-        rows keep the input row names with ONE column `bucket` whose
-        timestamp is the global max order-by timestamp (the
-        reference's globalMaxOrderByTimestamp — why MLDB-1267's
-        latest_timestamp check passes). Bucket `b: [lo, hi]` covers
-        ordered indexes [lo/100*n, hi/100*n) (hi==100 closes at n);
-        rows in no bucket are dropped. The ordered ROW-NAME list is
-        driver-side — exactly the reference's own in-memory
-        orderedRowNames vector, so the collect is name-sized and
-        bounded by the same contract; the scale path for numeric
-        bucketing without named ranges is
-        operators.relational.bucketize_approx (cut points, no global
-        sort)."""
-        if "inputData" not in params:
-            raise ValueError("You need to define inputData")
-        if "outputDataset" not in params:
-            raise ValueError("You need to define outputDataset")
-        # percentileBuckets validation (bucketize_procedure.cc:79-100):
-        # bounds in [0,100], hi > lo, pairwise non-overlap — the
-        # reference rejects these at config parse, BEFORE running the
-        # query; without it two same-timestamp 'bucket' cells land per
-        # row with a nondeterministic GET_LATEST winner (ADVICE r8)
-        _ranges = sorted(
-            (float(r[0]), float(r[1]))
-            for r in params.get("percentileBuckets", {}).values()
-        )
-        _last = (-1.0, -1.0)
-        for _lo, _hi in _ranges:
-            if _lo < 0:
-                raise ValueError(
-                    f"Invalid percentileBucket [{_lo:f}, {_hi:f}]: lower "
-                    "bound must be greater or equal to 0"
-                )
-            if _hi > 100:
-                raise ValueError(
-                    f"Invalid percentileBucket [{_lo:f}, {_hi:f}]: higher "
-                    "bound must be lower or equal to 1"
-                )
-            if _lo >= _hi:
-                raise ValueError(
-                    f"Invalid percentileBucket [{_lo:f}, {_hi:f}]: higher "
-                    "bound must  be greater than lower bound"
-                )
-            if _lo < _last[1]:
-                raise ValueError(
-                    f"Invalid percentileBucket: [{_last[0]:f}, {_last[1]:f}]"
-                    f" is overlapping with [{_lo:f}, {_hi:f}]"
-                )
-            _last = (_lo, _hi)
-        out_id = _entity_id(params["outputDataset"])
-        import re as _re
-
-        # SELECT * over a cells dataset does not surface row names —
-        # inject rowName() into the select list so the ordered
-        # row-name list is queryable
-        sql = _re.sub(
-            r"^\s*select\s", "SELECT rowName() AS __bk_rn, ",
-            params["inputData"], count=1, flags=_re.I,
-        )
-        ordered = self.query(sql)
-        names = [str(r["__bk_rn"]) for r in ordered.select("__bk_rn").collect()]
-        n = len(names)
-        # global max input-cell timestamp: the source cells table if
-        # the input is a committed mutable dataset
-        import datetime as _dt
-
-        max_ts = _dt.datetime(1970, 1, 1)
-        m = _re.search(r"\bfrom\s+([A-Za-z_][\w]*)", params["inputData"], _re.I)
-        if m and m.group(1) in self.ctx._datasets:
-            src = self.dataset(m.group(1))
-            if "ts" in src.columns and "row" in src.columns:
-                got = src.agg(F.max("ts")).collect()[0][0]
-                if got is not None:
-                    max_ts = got
-        cells = []
-        for bname, rng in sorted(params.get("percentileBuckets", {}).items()):
-            lo, hi = float(rng[0]), float(rng[1])
-            lo_i = 0 if hi == 0 else int(lo / 100 * n)
-            hi_i = n if hi == 100 else int(hi / 100 * n)
-            for i in range(lo_i, hi_i):
-                cells.append((names[i], "bucket", bname, max_ts))
-        df = local_frame(
-            self.spark, cells, "row string, column string, value string, ts timestamp"
-        )
-        self.ctx.register_cells(out_id, df)
-        return {"outputDataset": out_id, "rowCount": len(cells)}
 
     def put_procedure(self, proc_id: str, config: dict) -> dict:
         """PUT /v1/procedures/<id> semantics (MLDB-951): store the
@@ -911,28 +766,24 @@ class Mldb:
         """createEntity procedure (builtin/basic_procedures.cc:194-230):
         create another entity from a {type, id, params} config and
         return {kind, config, status}; an id-less config gets an
-        `auto_…` id. Kinds and types follow the entity model (§1.6):
+        `auto_…` id. Procedures run on creation. The builder of each
+        (kind, type) is registered in _ENTITY_TYPES; these are all of
+        them (tests/test_structure.py checks the list against it):
 
-        - dataset: sparse.mutable, beh.mutable, beh.binary.mutable
-          (empty; rows arrive through record_rows, queryable after
-          commit_dataset), merged, transposed, tabular (parquet or
-          CSV dataFileUrl), structured.mutable (inputData results);
+        - dataset: sparse.mutable, beh.mutable, beh.binary.mutable,
+          merged, transposed, tabular, structured.mutable
         - function: sql.expression, sql.query, http.useragent,
-          script.apply, embedding.neighbors, stemmer,
-          filter_stopwords;
-        - procedure (runs on creation): transform, bucketize,
-          import.text, createEntity, svm.train,
-          classifier.experiment, classifier.train,
+          script.apply, embedding.neighbors, stemmer, filter_stopwords
+        - procedure: transform, bucketize, import.text, createEntity,
+          svm.train, classifier.experiment, classifier.train,
           randomforest.binary.train, kmeans.train, svd.train,
           tsne.train, classifier.test, tfidf.train,
-          experimental.external.procedure, null.
+          experimental.external.procedure, null
 
         Model-training procedures fit through mldb_spark.ml.procedures,
         the same trainers the Python API and SQL reach.
         """
-        etype = config.get("type")
         eid = config.get("id")
-        params = config.get("params", {})
         if not eid:
             # the reference auto-generates ids for id-less configs
             # (MLDB-983: createDataset without id → 'auto_…'), writing
@@ -941,918 +792,959 @@ class Mldb:
 
             eid = "auto_" + _uuid.uuid4().hex[:16]
             config["id"] = eid
+        build = _ENTITY_TYPES.get((kind, config.get("type")))
+        if build is None:
+            known = sorted(t for k, t in _ENTITY_TYPES if k == kind)
+            if not known:
+                kinds = sorted({k for k, _ in _ENTITY_TYPES})
+                raise ValueError(
+                    f"createEntity: unknown kind {kind!r} "
+                    f"(registered kinds: {', '.join(kinds)})"
+                )
+            raise ValueError(
+                f"createEntity: unknown {kind} type {config.get('type')!r} "
+                f"(registered {kind} types: {', '.join(known)})"
+            )
+        params = config.get("params", {})
         if kind != "dataset":
-            return self._create_entity(kind, etype, eid, params, config)
-        # CREATE is not idempotent: a second create at the same id errors
-        # (MLDB-312), also while the first is building; PUT overwrites
-        with self._ids_lock:
-            if eid in self.ctx._datasets or eid in self._mutable or eid in self._creating:
-                raise ValueError(f"dataset entry '{eid}' already exists")
-            self._creating.add(eid)
-        try:
-            return self._create_entity(kind, etype, eid, params, config)
-        finally:
-            self._creating.discard(eid)
-
-    def _create_entity(
-        self, kind: str, etype: "str | None", eid: str, params: dict, config: dict
-    ) -> dict:
-        status: object = None
-        if kind == "dataset":
-            if etype in ("sparse.mutable", "beh.mutable", "beh.binary.mutable"):
-                # an empty MUTABLE dataset: rows accumulate through
-                # record_rows() / POST /v1/datasets/<id>/rows and
-                # become queryable at commit (the reference's
-                # create/record/commit lifecycle)
-                self._mutable[eid] = []
-                return {
-                    "kind": kind,
-                    "config": config,
-                    "status": {"rowCount": 0},
-                }
-            if etype == "merged":
-                # merged dataset entity (builtin/merged_dataset.cc;
-                # MLDB-1364): every member must already exist — the
-                # check fires BEFORE the id registers, so a failed
-                # creation never squats the id (the caller may create
-                # it later through a procedure's output)
-                member_ids = [_entity_id(d) for d in params.get("datasets", [])]
-                missing = [d for d in member_ids if d not in self.ctx._datasets]
-                if missing:
-                    raise ValueError(
-                        f"merged dataset: member dataset '{missing[0]}' "
-                        "does not exist"
-                    )
-                self.transform(
-                    "SELECT * FROM merge(" + ", ".join(member_ids) + ")", eid
-                )
-                return {
-                    "kind": kind,
-                    "config": config,
-                    "status": {"columns": self.dataset(eid).columns},
-                }
-            if etype == "transposed":
-                # transposed dataset entity (builtin/transposed_dataset
-                # .cc; the reddit/stackoverflow benchmark pipelines
-                # PUT /v1/datasets/<id> {type: transposed}): rows and
-                # columns swap; backed by the FROM-clause transpose()
-                mid = _entity_id(params.get("dataset"))
-                if mid not in self.ctx._datasets:
-                    raise ValueError(
-                        f"transposed dataset: dataset '{mid}' does not exist"
-                    )
-                self.transform(f"SELECT * FROM transpose({mid})", eid)
-                return {
-                    "kind": kind,
-                    "config": config,
-                    "status": {"columnCount": len(self.dataset(eid).columns)},
-                }
-            if etype == "tabular":
-                url = params["dataFileUrl"]
-                if url.endswith(".csv"):
-                    df = self.spark.read.csv(url, header=True, inferSchema=True)
-                else:
-                    df = self.spark.read.parquet(url)
-                self.create_dataset(eid, df)
-            elif etype == "structured.mutable":
-                self.transform(params["inputData"], eid)
-            else:
-                raise ValueError(f"createEntity: unknown dataset type {etype!r}")
-            status = {"rowCount": None, "columns": self.dataset(eid).columns}
-        elif kind == "function":
-            if etype == "sql.expression":
-                self.create_sql_expression_function(eid, params["expression"])
-            elif etype == "sql.query":
-                self.create_sql_query_function(
-                    eid, params["query"], params.get("output", "FIRST_ROW")
-                )
-            elif etype == "http.useragent":
-                self.create_useragent_function(eid)
-            elif etype == "script.apply":
-                # script.apply function entity
-                # (builtin/script_function.cc; MLDB-643): a stored
-                # script applied per call with `args` in scope (the
-                # reference's mldb.script.args); the script's
-                # set_return/result is the function output
-                src = params["scriptConfig"]["source"]
-
-                def run_stored(args=None, __src=src):
-                    return {"return": self.run_script(source=__src, args=args)}
-
-                self.ctx.register_function(eid, run_stored)
-            elif etype == "embedding.neighbors":
-                self.create_neighbors_function(
-                    eid,
-                    params["dataset"],
-                    num_neighbors=params.get("defaultNumNeighbors"),
-                )
-            elif etype == "stemmer":
-                self.create_stemmer_function(
-                    eid, params.get("language", "english")
-                )
-            elif etype == "filter_stopwords":
-                self.create_filter_stopwords_function(
-                    eid, params.get("language", "english")
-                )
-            else:
-                raise ValueError(f"createEntity: unknown function type {etype!r}")
-        elif kind == "procedure":
-            if etype == "transform":
-                # missing inputs are configuration errors, not crashes
-                # (MLDB-2119_segfault_transform_no_input.py)
-                if "inputData" not in params:
-                    raise ValueError("You need to define inputData")
-                if "outputDataset" not in params:
-                    raise ValueError("You need to define outputDataset")
-                out_id = _entity_id(params["outputDataset"])
-                self.transform(params["inputData"], out_id)
-                status = {"outputDataset": out_id}
-            elif etype == "bucketize":
-                status = self._run_bucketize(params)
-            elif etype == "import.text":
-                # import.text procedure entity
-                # (plugins/textual/importtext_procedure.cc; MLDB-1891):
-                # per-line select/where/named run through the dialect
-                # over the raw import; a row-valued select item is the
-                # reference's config error — imported cells are atoms
-                from mldb_spark.sources.text_io import import_text
-
-                out_id = _entity_id(params.get("outputDataset") or eid)
-                sel = params.get("select")
-                if sel and sel != "*":
-                    from mldb_spark.dialect import ast as _ast
-                    from mldb_spark.dialect.parser import parse_statement
-                    from mldb_spark.dialect.translate import _walk
-
-                    stm = parse_statement(f"SELECT {sel} FROM __imp")
-                    for it in stm.select:
-                        if isinstance(it, _ast.ExprItem) and any(
-                            isinstance(n, _ast.RowLiteral)
-                            for n in _walk(it.expr)
-                        ):
-                            raise ValueError(
-                                "Import select expression cannot have "
-                                "row-valued columns"
-                            )
-                q = params.get("quoteChar", '"')
-                raw = import_text(
-                    self.spark,
-                    str(params["dataFileUrl"]).removeprefix("file://"),
-                    delimiter=params.get("delimiter", ",") or "\x01",
-                    quote=q if q else "\x00",  # '' disables quoting
-                    headers=params.get("headers"),
-                    limit=params.get("limit"),
-                    offset=params.get("offset", 0),
-                    ignore_bad_lines=params.get("ignoreBadLines", False),
-                    multi_line=params.get("allowMultiLines", False),
-                    structured_column_names=params.get(
-                        "structuredColumnNames", False
-                    ),
-                    line_number_row_names=True,
-                )
-                # unique temp id so concurrent/repeated imports don't
-                # clobber each other's intermediate, dropped from the
-                # registry after the transform (ADVICE r8)
-                import re as _re
-
-                tmp_id = "__import_raw_" + _re.sub(
-                    r"\W", "_", str(eid)
-                )
-                self.create_dataset(tmp_id, raw, row_name_col="rowName")
-                named = (
-                    f" NAMED {params['named']}" if params.get("named") else ""
-                )
-                sql = f"SELECT {sel or '*'}{named} FROM {tmp_id}"
-                if params.get("where"):
-                    sql += f" WHERE {params['where']}"
-                try:
-                    self.transform(sql, out_id)
-                finally:
-                    self.ctx.drop(tmp_id)
-                status = {
-                    "outputDataset": out_id,
-                    "rowCount": self.dataset(out_id).count(),
-                }
-            elif etype == "createEntity":
-                # createEntity procedure (builtin/basic_procedures.cc:
-                # 194-230; MLDB-985): the params ARE another entity's
-                # config {kind, type, params…}; the run's status is
-                # the created entity's full descriptor
-                sub = {
-                    "type": params.get("type"),
-                    "id": params.get("entityId", f"{eid}_entity"),
-                    "params": params.get("params", {}),
-                }
-                status = self.create_entity(params["kind"], sub)
-            elif etype == "svm.train":
-                # svm.train entity (plugins/jml/svm.cc:464;
-                # MLDB-991-svm.py): trainingData is a whole-row spec —
-                # the `label` column is the target, every other
-                # numeric column a feature. Labels index to 0..n-1 and
-                # every fit is svm_train's: a binary target is one fit
-                # (class 1 iff margin > 0); more classes fit one
-                # binary svm per class and predict the argmax of the
-                # margins (MLlib OneVsRest's rule). Registers
-                # `functionName` adding an `output` column with the
-                # predicted ORIGINAL label value.
-                if "trainingData" not in params:
-                    raise ValueError("You need to define trainingData")
-                tdf = self.query(self._require_from(params["trainingData"]))
-                if "label" not in tdf.columns:
-                    raise ValueError("svm.train needs a 'label' column")
-                feat_cols = _feature_cols(tdf, ("label", "rowName"))
-                if not feat_cols:
-                    raise ValueError("svm.train: no numeric feature columns")
-                from mldb_spark.ml.procedures import svm_train
-
-                classes = sorted(
-                    r[0]
-                    for r in tdf.select("label").distinct().collect()
-                    if r[0] is not None
-                )
-                mapping = F.create_map(
-                    *[x for i, v in enumerate(classes)
-                      for x in (F.lit(v), F.lit(float(i)))]
-                )
-                li = mapping[F.col("label")]
-                targets = (
-                    [li]
-                    if len(classes) <= 2
-                    else [(li == float(i)).cast("double")
-                          for i in range(len(classes))]
-                )
-                fits = FunctionRegistry()
-                for i, target in enumerate(targets):
-                    svm_train(
-                        tdf.withColumn("__y", target), feat_cols, "__y",
-                        f"__m{i}", fits,
-                    )
-                fname = params.get("functionName", eid)
-
-                def apply_svm(
-                    d: DataFrame,
-                    __fits=fits,
-                    __names=[f"__m{i}" for i in range(len(targets))],
-                    __b=F.array(*[F.lit(v) for v in classes]),
-                ) -> DataFrame:
-                    for n in __names:
-                        d = __fits.apply(n, d).withColumnRenamed("margin", n)
-                    if len(__names) == 1:
-                        pick = (F.col(__names[0]) > 0).cast("int")
-                    else:
-                        m = F.array(*__names)
-                        pick = (F.array_position(m, F.array_max(m)) - 1).cast("int")
-                    return d.withColumn("output", __b[pick]).drop(*__names)
-
-                self.ctx.register_function(fname, apply_svm)
-                status = {"functionName": fname, "classes": classes}
-            elif etype == "classifier.experiment":
-                # classifier.experiment entity
-                # (plugins/jml/experiment_procedure.cc:618; the
-                # reference's k-fold train/test harness —
-                # MLDB-1304/MLDBFB-724's surface). inputData is the
-                # classifier.train features/label spec; datasetFolds
-                # gives explicit trainingWhere/testingWhere conditions
-                # (MLDB-878's grammar), bound through the dialect so
-                # rowHash()-style fold rules work; otherwise kfold
-                # hash-mod folds.
-                if "inputData" not in params:
-                    raise ValueError("You need to define inputData")
-                tdf, exp_rn = self._query_with_row_name(
-                    self._input_spec_to_sql(params["inputData"])
-                )
-                if "features" not in tdf.columns or "label" not in tdf.columns:
-                    raise ValueError(
-                        "classifier.experiment inputData must produce "
-                        "'features' and 'label' outputs"
-                    )
-                keep_rn = (
-                    [F.col(exp_rn).alias("__rowName")] if exp_rn else []
-                )
-                flat = tdf.select(
-                    *_flat_features(tdf),
-                    F.col("label").cast("double").alias("label"),
-                    *keep_rn,
-                ).filter(F.col("label").isNotNull())
-                exp_feats = _feature_cols(flat, ("label",), strings=True)
-                from mldb_spark.ml.procedures import classifier_experiment
-
-                ds_folds = None
-                if params.get("datasetFolds"):
-                    from mldb_spark.dialect.parser import parse_expression
-                    from mldb_spark.dialect.translate import Binder
-
-                    def _bind_cond(s):
-                        b = Binder(
-                            flat.columns, None,
-                            row_name_col="__rowName" if exp_rn else None,
-                            dtypes=dict(flat.dtypes),
-                        )
-                        return b.bind(parse_expression(s)).cast("boolean")
-
-                    ds_folds = [
-                        (_bind_cond(f["trainingWhere"]),
-                         _bind_cond(f["testingWhere"]))
-                        for f in params["datasetFolds"]
-                    ]
-                res = classifier_experiment(
-                    flat,
-                    exp_feats,
-                    "label",
-                    folds=int(params.get("kfold", 3) or 3),
-                    name=params.get("experimentName", eid),
-                    dataset_folds=ds_folds,
-                )
-                folds_status = [r.asDict() for r in res.collect()]
-                status = {
-                    "experimentName": params.get("experimentName", eid),
-                    "folds": folds_status,
-                    "aggregatedTest": {
-                        "auc": (
-                            sum(f["auc"] for f in folds_status)
-                            / max(1, len(folds_status))
-                        ),
-                    },
-                }
-            elif etype in ("classifier.train", "randomforest.binary.train"):
-                if etype == "randomforest.binary.train":
-                    # randomforest.binary.train
-                    # (plugins/jml/randomforest_procedure.cc:411;
-                    # MLDB-1433): the dedicated RF procedure routes
-                    # through the classifier path with the bagged-tree
-                    # estimator and boolean mode
-                    params = dict(params)
-                    params["algorithm"] = "bagging"
-                    params["mode"] = "boolean"
-                # trainingData is a full input-data spec — WHEN/WHERE/
-                # structured {from, when} forms included (MLDB-945's
-                # train_classifier(when=...)): the spec routes through
-                # the same dialect query path as transform, so the
-                # temporal filter hits the cells before training.
-                if "trainingData" not in params:
-                    raise ValueError("You need to define trainingData")
-
-                tdf = self.query(self._require_from(params["trainingData"]))
-                if "features" not in tdf.columns or "label" not in tdf.columns:
-                    raise ValueError(
-                        "classifier.train trainingData must produce "
-                        "'features' and 'label' outputs "
-                        "(select {* EXCLUDING (x)} as features, x as label)"
-                    )
-                self._check_label_not_in_features(
-                    self._require_from(params["trainingData"]), tdf
-                )
-                if params.get("mode") == "multilabel":
-                    # the label is a ROW — each non-null field a
-                    # present label (multilabel-classifier-test.py)
-                    from mldb_spark.ml.procedures import multilabel_train
-
-                    ldt = dict(tdf.dtypes)["label"]
-                    if not ldt.startswith("struct<"):
-                        raise ValueError(
-                            "multilabel mode needs a row-valued label "
-                            "({label0, label1} as label)"
-                        )
-                    label_fields = [
-                        f.name for f in tdf.schema["label"].dataType
-                    ]
-                    flat_ml = tdf.select(
-                        F.col("features.*"),
-                        *[
-                            F.col("label").getField(n).alias(f"__lab_{n}")
-                            for n in label_fields
-                        ],
-                    )
-                    ml_feats = _feature_cols(flat_ml)
-                    fname = params.get("functionName", eid)
-                    multilabel_train(
-                        flat_ml.select(
-                            *ml_feats,
-                            *[
-                                F.col(f"__lab_{n}").alias(n)
-                                for n in label_fields
-                            ],
-                        ),
-                        ml_feats,
-                        label_fields,
-                        strategy=params.get(
-                            "multilabelStrategy", "one-vs-all"
-                        ),
-                        name=fname,
-                    )
-                    # GLOBAL_REGISTRY models are auto-visible in SQL
-                    # by training name (the reference's functionName
-                    # auto-creation)
-                    return {
-                        "kind": kind,
-                        "config": config,
-                        "status": {
-                            "functionName": fname,
-                            "labels": label_fields,
-                        },
-                    }
-                extra = [F.col("weight")] if "weight" in tdf.columns else []
-                # rows whose label cell fell outside the WHEN window
-                # (or was never present) are not training examples —
-                # the reference skips missing-label rows rather than
-                # erroring the whole run. Categorical mode keeps
-                # STRING labels (classifier_train indexes them and
-                # maps predictions back — MLDB-173's cat/dog labels);
-                # boolean/regression coerce numeric.
-                label = (
-                    F.col("label")
-                    if params.get("mode") == "categorical"
-                    else F.col("label").cast("double")
-                )
-                flat = tdf.select(
-                    *_flat_features(tdf),
-                    label.alias("label"),
-                    *extra,
-                ).filter(F.col("label").isNotNull())
-                if flat.isEmpty():
-                    # zero surviving training rows is a clean config
-                    # error, never an opaque MLlib crash (MLDB-587's
-                    # `WHERE false` training)
-                    raise ValueError(
-                        "classifier.train: all rows were filtered out "
-                        "by the trainingData query; nothing to train on"
-                    )
-                # numeric feature columns only: the engine's rowName
-                # output column and other opaque strings never feed
-                # the estimator (the reference's row name is metadata,
-                # not a column)
-                # numeric features feed the estimator directly; STRING
-                # features are legal too — classifier_train one-hot
-                # encodes them against a capped vocabulary (MLDB-961's
-                # petalCat long/short VALUE_EQUALS features; the old
-                # numeric-only filter silently DROPPED string features)
-                feat_cols = _feature_cols(
-                    flat, ("label", "weight", "rowName"), strings=True
-                )
-                if not feat_cols:
-                    raise ValueError(
-                        "classifier.train: no numeric feature columns"
-                    )
-                from mldb_spark.ml.procedures import classifier_train
-
-                fname = params.get("functionName", eid)
-                classifier_train(
-                    flat,
-                    feat_cols,
-                    "label",
-                    fname,
-                    algorithm=params.get("algorithm", "glz"),
-                    mode=params.get("mode", "boolean"),
-                    weight_col="weight" if "weight" in tdf.columns else None,
-                )
-                status = {"functionName": fname, "features": feat_cols}
-            elif etype == "kmeans.train":
-                # kmeans.train entity (MLDB-945's WHEN half; MLDB-119's
-                # empty-column-match error): trainingData is a full
-                # input-data spec; the numeric output columns become
-                # the embedding
-                if "trainingData" not in params:
-                    raise ValueError("You need to define trainingData")
-
-                tdf = self.query(self._require_from(params["trainingData"]))
-                feat_cols = _feature_cols(tdf)
-                if not feat_cols:
-                    raise ValueError(
-                        "kmeans.train: trainingData matched no columns"
-                    )
-                from mldb_spark.ml.procedures import kmeans_train
-
-                emb = tdf.na.drop(subset=feat_cols).withColumn(
-                    "__emb",
-                    F.array(*[F.col(f"`{c}`").cast("double") for c in feat_cols]),
-                )
-                fname = params.get("functionName", eid)
-                _model, centroids = kmeans_train(
-                    emb, "__emb",
-                    k=int(params.get("numClusters", 8)),
-                    name=fname,
-                )
-                cds = params.get("centroidsDataset")
-                if cds:
-                    self.create_dataset(
-                        _entity_id(cds),
-                        centroids.select(
-                            F.col("cluster").cast("string").alias("rowName"),
-                            *[
-                                F.col("centroid")[i].alias(c)
-                                for i, c in enumerate(feat_cols)
-                            ],
-                        ),
-                        row_name_col="rowName",
-                    )
-                # SQL application surface (MLDB-665's
-                # kmeans({embedding: {...}})[cluster]): the embedding
-                # pin binds by COLUMN NAME, so field order in the call
-                # never matters
-                from mldb_spark.ml.registry import GLOBAL_REGISTRY
-
-                def sql_assign(d, _feats=tuple(feat_cols), _fn=fname):
-                    d2 = d.withColumn(
-                        "__emb",
-                        F.array(
-                            *[F.col(f"`{c}`").cast("double") for c in _feats]
-                        ),
-                    )
-                    return GLOBAL_REGISTRY.apply(_fn, d2).drop("__emb")
-
-                self.ctx.register_function(fname, sql_assign)
-                status = {
-                    "functionName": fname,
-                    "columns": feat_cols,
-                    "numClusters": int(params.get("numClusters", 8)),
-                }
-            elif etype in ("svd.train", "tsne.train"):
-                # svd.train / tsne.train entities (MLDB-945's WHEN
-                # halves): trainingData is a full input-data spec; the
-                # wide numeric result melts to the long cell layout
-                # (svd) or stacks into an embedding (tsne)
-                if "trainingData" not in params:
-                    raise ValueError("You need to define trainingData")
-
-                tdf = self.query(self._require_from(params["trainingData"]))
-                feat_cols = _feature_cols(tdf)
-                has_strings = etype == "svd.train" and any(
-                    dt == "string" and c != "rowName" and not c.startswith("__")
-                    for c, dt in tdf.dtypes
-                )
-                if not feat_cols and not has_strings:
-                    if etype == "svd.train":
-                        # an empty column match is NOT an error for
-                        # svd.train (MLDB-417: the reference trains an
-                        # EMPTY svd and succeeds) — emit empty outputs
-                        empty = local_frame(
-                            self.spark,
-                            [], "rowName string, embedding array<double>"
-                        )
-                        for key in ("rowOutputDataset",
-                                    "columnOutputDataset"):
-                            if params.get(key):
-                                self.create_dataset(
-                                    _entity_id(params[key]), empty
-                                )
-                        return {
-                            "kind": kind,
-                            "config": config,
-                            "status": {"singularValues": [],
-                                       "columns": []},
-                        }
-                    raise ValueError(
-                        f"{etype}: trainingData matched no columns"
-                    )
-                if "rowName" in tdf.columns:
-                    rn = F.col("rowName")
-                else:
-                    # synthesized row ids must be STABLE under the
-                    # cells explode below — monotonically_increasing_id
-                    # is re-evaluated per GENERATED row when Catalyst
-                    # collapses the projections, splitting one source
-                    # row into several (MLDB-1364 exposed 4 row
-                    # embeddings for 3 rows). A window row_number is
-                    # computed once per source row and carried through
-                    # the generate; single-partition, acceptable at
-                    # entity training scale.
-                    from pyspark.sql import Window as _W
-
-                    # materialized as a COLUMN on tdf so the window
-                    # runs over source rows — inlining it next to the
-                    # explode would rank the GENERATED rows instead
-                    tdf = tdf.withColumn(
-                        "__rid",
-                        F.row_number()
-                        .over(_W.orderBy(*[F.col(f"`{c}`") for c in tdf.columns]))
-                        .cast("string"),
-                    )
-                    rn = F.col("__rid")
-                if etype == "svd.train":
-                    from mldb_spark.ml.procedures import svd_train
-
-                    # string columns expand to categorical indicator
-                    # cells named <col>.stringEquals.<value> — the
-                    # reference's sparse string handling (MLDB-1937)
-                    str_cols = [
-                        c
-                        for c, dt in tdf.dtypes
-                        if dt == "string"
-                        and c not in ("rowName",)
-                        and not c.startswith("__")
-                    ]
-                    cell_structs = [
-                        F.struct(
-                            F.lit(c).alias("column"),
-                            F.col(f"`{c}`").cast("double").alias("value"),
-                        )
-                        for c in feat_cols
-                    ] + [
-                        F.struct(
-                            F.concat(
-                                F.lit(f"{c}.stringEquals."),
-                                F.col(f"`{c}`"),
-                            ).alias("column"),
-                            F.when(
-                                F.col(f"`{c}`").isNotNull(), F.lit(1.0)
-                            ).alias("value"),
-                        )
-                        for c in str_cols
-                    ]
-                    cells = tdf.select(
-                        rn.alias("row_id"),
-                        F.explode(F.array(*cell_structs)).alias("cell"),
-                    ).select(
-                        "row_id", "cell.column", "cell.value"
-                    ).filter(F.col("value").isNotNull())
-                    k = int(params.get("numSingularValues", 8))
-                    if str_cols:
-                        # string columns expand to per-value indicator
-                        # cells — clamp against the ACTUAL expanded
-                        # column count (len(feat_cols) alone would
-                        # clamp a string-only training to k=0)
-                        k = min(k, cells.select("column").distinct().count())
-                    else:
-                        k = min(k, len(feat_cols))
-                    fname = params.get("functionName", eid)
-                    rows_emb, cols_emb, svals = svd_train(
-                        cells, k=k, name=fname
-                    )
-                    for key, out_df in (
-                        ("rowOutputDataset", rows_emb),
-                        ("columnOutputDataset", cols_emb),
-                    ):
-                        if params.get(key):
-                            self.create_dataset(_entity_id(params[key]), out_df)
-                    # WIDE-rowset embedRow surface (the reference's
-                    # svd.embedRow function entity, MLDB-805/498):
-                    # x·V as a pure column expression — V is the
-                    # vocab-sized collected loading table, so the
-                    # embedding is codegen'd arithmetic, no join.
-                    # Numeric columns only (string indicator cells
-                    # have no wide column to read).
-                    vmap = {
-                        r["column"]: list(r["embedding"])
-                        for r in cols_emb.collect()
-                        if r["column"] in feat_cols
-                    }
-                    if vmap and k > 0:
-                        def _wide_embed(d, _vmap=vmap, _k=k):
-                            dims = []
-                            for j in range(_k):
-                                expr = None
-                                for c, vec in _vmap.items():
-                                    if c not in d.columns:
-                                        continue
-                                    term = F.coalesce(
-                                        F.col(f"`{c}`").cast("double"),
-                                        F.lit(0.0),
-                                    ) * F.lit(float(vec[j]))
-                                    expr = (
-                                        term if expr is None else expr + term
-                                    )
-                                dims.append(
-                                    expr if expr is not None else F.lit(0.0)
-                                )
-                            return d.withColumn("embedding", F.array(*dims))
-
-                        self.ctx.register_function(fname, _wide_embed)
-                    status = {
-                        "singularValues": [float(s) for s in svals],
-                        "columns": feat_cols,
-                    }
-                else:
-                    from mldb_spark.ml.procedures import tsne_train
-
-                    emb = tdf.na.drop(subset=feat_cols).select(
-                        F.monotonically_increasing_id().alias("__id"),
-                        F.array(
-                            *[F.col(f"`{c}`").cast("double") for c in feat_cols]
-                        ).alias("__emb"),
-                    )
-                    coords = tsne_train(
-                        emb, "__emb", id_col="__id",
-                        n_components=int(params.get("numOutputDimensions", 2)),
-                        perplexity=float(params.get("perplexity", 15.0)),
-                    )
-                    if params.get("rowOutputDataset"):
-                        self.create_dataset(
-                            _entity_id(params["rowOutputDataset"]), coords
-                        )
-                    status = {"columns": feat_cols, "rows": coords.count()}
-            elif etype == "classifier.test":
-                # accuracy procedure (plugins/jml/accuracy.cc;
-                # MLDB-804/256): testingData must produce 'score' and
-                # 'label' outputs; a config without it is a 4xx
-                if "testingData" not in params:
-                    raise ValueError(
-                        "classifier.test expects a scalar named 'score' "
-                        "and a scalar named 'label' in testingData — "
-                        "you need to define testingData"
-                    )
-                tdf = self.query(self._require_from(params["testingData"]))
-                mode = params.get("mode", "boolean")
-                if mode == "multilabel":
-                    # score and label are ROWS (multilabel-classifier-
-                    # test.py's accuracy case): rank every label by
-                    # its score with the reference's tie handling
-                    from mldb_spark.ml.procedures import multilabel_test
-
-                    dts = dict(tdf.dtypes)
-                    if not (
-                        dts.get("score", "").startswith("struct<")
-                        and dts.get("label", "").startswith("struct<")
-                    ):
-                        raise ValueError(
-                            "multilabel mode needs row-valued score "
-                            "and label outputs"
-                        )
-                    status = multilabel_test(
-                        tdf,
-                        [f.name for f in tdf.schema["score"].dataType],
-                        [f.name for f in tdf.schema["label"].dataType],
-                        recall_over_n=params.get("recallOverN", [1]),
-                        weight_col=(
-                            "weight" if "weight" in tdf.columns else None
-                        ),
-                    )
-                    return {"kind": kind, "config": config, "status": status}
-                if mode != "categorical" and (
-                    "score" not in tdf.columns or "label" not in tdf.columns
-                ):
-                    raise ValueError(
-                        "classifier.test expects a scalar named 'score' "
-                        "and a scalar named 'label'"
-                    )
-                if tdf.isEmpty():
-                    # the reference's exact message
-                    # (classifier_test_err_on_empty_sets.py)
-                    raise ValueError(
-                        "Cannot run classifier.test procedure on empty "
-                        "test set"
-                    )
-                from mldb_spark.ml.procedures import (
-                    categorical_statistics,
-                    classifier_test,
-                    weighted_statistics,
-                )
-
-                if mode == "categorical":
-                    # `{...} as score` row pin: per-class scores —
-                    # predicted = argmax (MLDB-256's toy matrix)
-                    from mldb_spark.ml.procedures import argmax_prediction
-
-                    if "score" in tdf.columns and dict(tdf.dtypes)[
-                        "score"
-                    ].startswith("struct<"):
-                        from mldb_spark.dialect.translate import (
-                            _struct_fields_typed,
-                        )
-
-                        fields = [
-                            n
-                            for n, _t in _struct_fields_typed(
-                                dict(tdf.dtypes)["score"]
-                            )
-                        ]
-                        flat = tdf.select(
-                            F.col("label"),
-                            *(
-                                [F.col("weight")]
-                                if "weight" in tdf.columns
-                                else []
-                            ),
-                            *[
-                                F.col("score").getField(n).alias(n)
-                                for n in fields
-                            ],
-                        )
-                        scored = argmax_prediction(flat, fields)
-                    elif "predicted" in tdf.columns:
-                        scored = tdf
-                    else:
-                        raise ValueError(
-                            "classifier.test categorical mode needs a "
-                            "'score' row of per-class scores"
-                        )
-                    stats = categorical_statistics(
-                        scored,
-                        weight_col=(
-                            "weight" if "weight" in scored.columns else None
-                        ),
-                    )
-                    status = {
-                        "labelStatistics": {
-                            r["label"]: {
-                                "f1Score": r["f1Score"],
-                                "recall": r["recall"],
-                                "support": r["support"],
-                                "precision": r["precision"],
-                                "accuracy": r["accuracy"],
-                            }
-                            for r in stats.collect()
-                        },
-                        "weightedStatistics": weighted_statistics(stats),
-                    }
-                else:
-                    wcol = "weight" if "weight" in tdf.columns else None
-                    if mode == "boolean" and params.get("outputDataset"):
-                        # the boolean test's threshold-sweep table
-                        # (test_classifier_test_proc.py truth rows),
-                        # rows named like the test examples
-                        from mldb_spark.ml.procedures import (
-                            classifier_test_roc,
-                        )
-
-                        named, nrn = self._query_with_row_name(
-                            self._require_from(params["testingData"])
-                        )
-                        self.create_dataset(
-                            _entity_id(params["outputDataset"]),
-                            classifier_test_roc(
-                                named, weight_col=wcol, row_name_col=nrn
-                            ),
-                            row_name_col="__rowName" if nrn else None,
-                        )
-                    row = classifier_test(
-                        tdf, mode=mode, weight_col=wcol
-                    ).collect()[0]
-                    if mode == "regression":
-                        d = row.asDict()
-                        status = {
-                            "quantileErrors": {
-                                "0.25": d["quantile_err_25"],
-                                "0.5": d["quantile_err_50"],
-                                "0.75": d["quantile_err_75"],
-                                "0.9": d["quantile_err_90"],
-                            },
-                            "mse": d["mse"],
-                            "r2": d["r2"],
-                        }
-                    else:
-                        status = row.asDict()
-            elif etype == "tfidf.train":
-                # tfidf.train (plugins/nlp/tfidf.cc:145-257): count
-                # per-term document frequency from the trainingData
-                # query (WHEN included) and write an output dataset of
-                # rows named by term with a `count` column.
-                if "trainingData" not in params:
-                    raise ValueError("You need to define trainingData")
-
-                tdf = self.query(self._require_from(params["trainingData"]))
-                if {"row", "column"}.issubset(tdf.columns):
-                    counts = tdf.groupBy("column").agg(
-                        F.countDistinct("row").alias("count")
-                    )
-                    counts = counts.select(
-                        F.col("column").alias("rowName"), "count"
-                    )
-                else:
-                    # wide layout: each non-rowName column is a term;
-                    # df = rows where it has a value
-                    terms = [
-                        c
-                        for c in tdf.columns
-                        if c != "rowName" and not c.startswith("__")
-                    ]
-                    if not terms:
-                        raise ValueError(
-                            "tfidf.train trainingData produced no term columns"
-                        )
-                    stacked = tdf.selectExpr(
-                        "stack({n}, {args}) as (rowName, c)".format(
-                            n=len(terms),
-                            args=", ".join(
-                                f"'{t}', `{t}`" for t in terms
-                            ),
-                        )
-                    )
-                    counts = (
-                        stacked.filter(F.col("c").isNotNull())
-                        .groupBy("rowName")
-                        .agg(F.count(F.lit(1)).alias("count"))
-                    )
-                out_id = _entity_id(params.get("outputDataset", f"{eid}_output"))
-                self.create_dataset(out_id, counts, row_name_col="rowName")
-                status = {"outputDataset": out_id}
-            elif etype == "experimental.external.procedure":
-                # external python process procedure
-                # (builtin/external_python_procedure.cc:152;
-                # MLDB-694): stdInData on stdin, last stdout line
-                # parsed as JSON into status.return
-                from mldb_spark.utilities import external_procedure
-
-                sc = params.get("scriptConfig", {})
-                status = external_procedure(
-                    script_path=sc.get("address"),
-                    source=sc.get("source"),
-                    stdin_data=params.get("stdInData", ""),
-                )
-            elif etype == "null":
-                # the no-op procedure (MLDB-326's run-lifecycle tests)
-                status = None
-            else:
-                raise ValueError(f"createEntity: unknown procedure type {etype!r}")
+            status = build(self, eid, params)
         else:
-            raise ValueError(f"createEntity: unknown kind {kind!r}")
+            # CREATE is not idempotent: a second create at the same id
+            # errors (MLDB-312), also while the first is building; PUT
+            # overwrites
+            with self._ids_lock:
+                if eid in self.ctx._datasets or eid in self._mutable or eid in self._creating:
+                    raise ValueError(f"dataset entry '{eid}' already exists")
+                self._creating.add(eid)
+            try:
+                status = build(self, eid, params)
+            finally:
+                self._creating.discard(eid)
         return {"kind": kind, "config": config, "status": status}
+
+
+# -- dataset types ------------------------------------------------------------
+
+
+@_entity_type("dataset", "sparse.mutable", "beh.mutable", "beh.binary.mutable")
+def _mutable_dataset(mldb: Mldb, eid: str, params: dict) -> dict:
+    """An empty MUTABLE dataset: rows accumulate through record_rows()
+    / POST /v1/datasets/<id>/rows and become queryable at
+    commit_dataset (the reference's create/record/commit lifecycle)."""
+    mldb._mutable[eid] = []
+    return {"rowCount": 0}
+
+
+@_entity_type("dataset", "merged")
+def _merged_dataset(mldb: Mldb, eid: str, params: dict) -> dict:
+    """merged dataset entity (builtin/merged_dataset.cc; MLDB-1364):
+    every member must already exist — the check fires BEFORE the id
+    registers, so a failed creation never squats the id (the caller
+    may create it later through a procedure's output)."""
+    member_ids = [_entity_id(d) for d in params.get("datasets", [])]
+    missing = [d for d in member_ids if d not in mldb.ctx._datasets]
+    if missing:
+        raise ValueError(
+            f"merged dataset: member dataset '{missing[0]}' does not exist"
+        )
+    mldb.transform("SELECT * FROM merge(" + ", ".join(member_ids) + ")", eid)
+    return {"columns": mldb.dataset(eid).columns}
+
+
+@_entity_type("dataset", "transposed")
+def _transposed_dataset(mldb: Mldb, eid: str, params: dict) -> dict:
+    """transposed dataset entity (builtin/transposed_dataset.cc; the
+    reddit/stackoverflow benchmark pipelines PUT /v1/datasets/<id>
+    {type: transposed}): rows and columns swap; backed by the
+    FROM-clause transpose()."""
+    mid = _entity_id(params.get("dataset"))
+    if mid not in mldb.ctx._datasets:
+        raise ValueError(f"transposed dataset: dataset '{mid}' does not exist")
+    mldb.transform(f"SELECT * FROM transpose({mid})", eid)
+    return {"columnCount": len(mldb.dataset(eid).columns)}
+
+
+@_entity_type("dataset", "tabular")
+def _tabular_dataset(mldb: Mldb, eid: str, params: dict) -> dict:
+    """A parquet or CSV file (dataFileUrl) as a dataset."""
+    url = params["dataFileUrl"]
+    if url.endswith(".csv"):
+        df = mldb.spark.read.csv(url, header=True, inferSchema=True)
+    else:
+        df = mldb.spark.read.parquet(url)
+    mldb.create_dataset(eid, df)
+    return {"rowCount": None, "columns": mldb.dataset(eid).columns}
+
+
+@_entity_type("dataset", "structured.mutable")
+def _structured_mutable_dataset(mldb: Mldb, eid: str, params: dict) -> dict:
+    """The result of the inputData query as a dataset."""
+    mldb.transform(params["inputData"], eid)
+    return {"rowCount": None, "columns": mldb.dataset(eid).columns}
+
+
+# -- function types -----------------------------------------------------------
+
+
+@_entity_type("function", "sql.expression")
+def _sql_expression_function(mldb: Mldb, eid: str, params: dict) -> None:
+    mldb.create_sql_expression_function(eid, params["expression"])
+
+
+@_entity_type("function", "sql.query")
+def _sql_query_function(mldb: Mldb, eid: str, params: dict) -> None:
+    mldb.create_sql_query_function(
+        eid, params["query"], params.get("output", "FIRST_ROW")
+    )
+
+
+@_entity_type("function", "http.useragent")
+def _useragent_function(mldb: Mldb, eid: str, params: dict) -> None:
+    """http.useragent function entity
+    (plugins/html/useragent_function.cc:95-106; MLDB-1753): input
+    pin `ua`, outputs the uap-core field set as dotted columns
+    (browser.family/version, os.family/version, device.brand/
+    model, isSpider as 0/1)."""
+    from mldb_spark.functions.web import parse_useragent
+
+    def apply(df: DataFrame) -> DataFrame:
+        p = parse_useragent(F.col("ua"))
+        return (
+            df.withColumn("browser.family", p["browser_family"])
+            .withColumn("browser.version", p["browser_version"])
+            .withColumn("device.brand", p["device_brand"])
+            .withColumn("device.model", p["device_model"])
+            .withColumn("isSpider", p["is_spider"].cast("int"))
+            .withColumn("os.family", p["os_family"])
+            .withColumn("os.version", p["os_version"])
+        )
+
+    mldb.ctx.register_function(eid, apply)
+
+
+@_entity_type("function", "script.apply")
+def _script_apply_function(mldb: Mldb, eid: str, params: dict) -> None:
+    """script.apply function entity (builtin/script_function.cc;
+    MLDB-643): a stored script applied per call with `args` in scope
+    (the reference's mldb.script.args); the script's
+    set_return/result is the function output."""
+    src = params["scriptConfig"]["source"]
+
+    def run_stored(args=None, __src=src):
+        return {"return": mldb.run_script(source=__src, args=args)}
+
+    mldb.ctx.register_function(eid, run_stored)
+
+
+@_entity_type("function", "embedding.neighbors")
+def _neighbors_function(mldb: Mldb, eid: str, params: dict) -> None:
+    """embedding.neighbors function entity
+    (plugins/embedding/embedding.cc:1420; MLDB-283/665): input pin
+    `coords` (a row of coordinates, bound by NAME), output
+    `distances` — a MAP of neighbor rowName -> distance. SQL
+    application rides the BATCHED path (VERDICT r6 #8): the whole
+    query-point set broadcasts over ONE corpus scan, never a
+    driver round-trip per row."""
+    from mldb_spark.similarity import embedding_neighbors_batch
+
+    corpus = mldb.dataset(params["dataset"])
+    num_neighbors = params.get("defaultNumNeighbors")
+    rn_col = "rowName" if "rowName" in corpus.columns else corpus.columns[0]
+    feat_cols = _feature_cols(corpus, (rn_col,))
+
+    def apply(df: DataFrame, params: dict | None = None) -> DataFrame:
+        k = int((params or {}).get("numNeighbors", num_neighbors or 0)) or None
+        q = df.withColumn("__qid", F.monotonically_increasing_id())
+        hits = embedding_neighbors_batch(
+            corpus.select(F.col(rn_col).alias("__rn"), *feat_cols),
+            q.select("__qid", *feat_cols),
+            row_name_col="__rn",
+            feature_cols=feat_cols,
+            query_id_col="__qid",
+            num_neighbors=k,
+        )
+        pairs = F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.col("distance").alias("d"),
+                    F.col("neighbor").alias("n"),
+                )
+            )
+        )
+        agg = hits.groupBy("__qid").agg(
+            F.map_from_entries(
+                F.transform(
+                    pairs, lambda s: F.struct(s["n"].alias("k"), s["d"].alias("v"))
+                )
+            ).alias("distances")
+        )
+        return q.join(agg, "__qid", "left").drop("__qid")
+
+    mldb.ctx.register_function(eid, apply)
+
+
+@_entity_type("function", "stemmer")
+def _stemmer_function(mldb: Mldb, eid: str, params: dict) -> None:
+    mldb.create_stemmer_function(eid, params.get("language", "english"))
+
+
+@_entity_type("function", "filter_stopwords")
+def _filter_stopwords_function(mldb: Mldb, eid: str, params: dict) -> None:
+    mldb.create_filter_stopwords_function(eid, params.get("language", "english"))
+
+
+# -- procedure types (run on creation) ----------------------------------------
+
+
+def _training_frame(mldb: Mldb, params: dict) -> DataFrame:
+    """The result of a training procedure's trainingData: a full
+    input-data spec, WHEN/WHERE/structured {from, when} forms included
+    (MLDB-945's train_classifier(when=...)), run through the same
+    dialect query path as transform, so a temporal filter hits the
+    cells before training."""
+    if "trainingData" not in params:
+        raise ValueError("You need to define trainingData")
+    return mldb.query(Mldb._require_from(params["trainingData"]))
+
+
+@_entity_type("procedure", "transform")
+def _transform_procedure(mldb: Mldb, eid: str, params: dict) -> dict:
+    # missing inputs are configuration errors, not crashes
+    # (MLDB-2119_segfault_transform_no_input.py)
+    if "inputData" not in params:
+        raise ValueError("You need to define inputData")
+    if "outputDataset" not in params:
+        raise ValueError("You need to define outputDataset")
+    out_id = _entity_id(params["outputDataset"])
+    mldb.transform(params["inputData"], out_id)
+    return {"outputDataset": out_id}
+
+
+@_entity_type("procedure", "bucketize")
+def _bucketize_procedure(mldb: Mldb, eid: str, params: dict) -> dict:
+    """bucketize procedure
+    (plugins/feature_gen/bucketize_procedure.cc:255, MLDB-1267):
+    assign ordered input rows to named percentile buckets. Output
+    rows keep the input row names with ONE column `bucket` whose
+    timestamp is the global max order-by timestamp (the
+    reference's globalMaxOrderByTimestamp — why MLDB-1267's
+    latest_timestamp check passes). Bucket `b: [lo, hi]` covers
+    ordered indexes [lo/100*n, hi/100*n) (hi==100 closes at n);
+    rows in no bucket are dropped. The ordered ROW-NAME list is
+    driver-side — exactly the reference's own in-memory
+    orderedRowNames vector, so the collect is name-sized and
+    bounded by the same contract; the scale path for numeric
+    bucketing without named ranges is
+    operators.relational.bucketize_approx (cut points, no global
+    sort)."""
+    if "inputData" not in params:
+        raise ValueError("You need to define inputData")
+    if "outputDataset" not in params:
+        raise ValueError("You need to define outputDataset")
+    # percentileBuckets validation (bucketize_procedure.cc:79-100):
+    # bounds in [0,100], hi > lo, pairwise non-overlap — the
+    # reference rejects these at config parse, BEFORE running the
+    # query; without it two same-timestamp 'bucket' cells land per
+    # row with a nondeterministic GET_LATEST winner (ADVICE r8)
+    _ranges = sorted(
+        (float(r[0]), float(r[1]))
+        for r in params.get("percentileBuckets", {}).values()
+    )
+    _last = (-1.0, -1.0)
+    for _lo, _hi in _ranges:
+        if _lo < 0:
+            raise ValueError(
+                f"Invalid percentileBucket [{_lo:f}, {_hi:f}]: lower "
+                "bound must be greater or equal to 0"
+            )
+        if _hi > 100:
+            raise ValueError(
+                f"Invalid percentileBucket [{_lo:f}, {_hi:f}]: higher "
+                "bound must be lower or equal to 1"
+            )
+        if _lo >= _hi:
+            raise ValueError(
+                f"Invalid percentileBucket [{_lo:f}, {_hi:f}]: higher "
+                "bound must  be greater than lower bound"
+            )
+        if _lo < _last[1]:
+            raise ValueError(
+                f"Invalid percentileBucket: [{_last[0]:f}, {_last[1]:f}]"
+                f" is overlapping with [{_lo:f}, {_hi:f}]"
+            )
+        _last = (_lo, _hi)
+    out_id = _entity_id(params["outputDataset"])
+    import re as _re
+
+    # SELECT * over a cells dataset does not surface row names —
+    # inject rowName() into the select list so the ordered
+    # row-name list is queryable
+    sql = _re.sub(
+        r"^\s*select\s", "SELECT rowName() AS __bk_rn, ",
+        params["inputData"], count=1, flags=_re.I,
+    )
+    ordered = mldb.query(sql)
+    names = [str(r["__bk_rn"]) for r in ordered.select("__bk_rn").collect()]
+    n = len(names)
+    # global max input-cell timestamp: the source cells table if
+    # the input is a committed mutable dataset
+    import datetime as _dt
+
+    max_ts = _dt.datetime(1970, 1, 1)
+    m = _re.search(r"\bfrom\s+([A-Za-z_][\w]*)", params["inputData"], _re.I)
+    if m and m.group(1) in mldb.ctx._datasets:
+        src = mldb.dataset(m.group(1))
+        if "ts" in src.columns and "row" in src.columns:
+            got = src.agg(F.max("ts")).collect()[0][0]
+            if got is not None:
+                max_ts = got
+    cells = []
+    for bname, rng in sorted(params.get("percentileBuckets", {}).items()):
+        lo, hi = float(rng[0]), float(rng[1])
+        lo_i = 0 if hi == 0 else int(lo / 100 * n)
+        hi_i = n if hi == 100 else int(hi / 100 * n)
+        for i in range(lo_i, hi_i):
+            cells.append((names[i], "bucket", bname, max_ts))
+    df = local_frame(
+        mldb.spark, cells, "row string, column string, value string, ts timestamp"
+    )
+    mldb.ctx.register_cells(out_id, df)
+    return {"outputDataset": out_id, "rowCount": len(cells)}
+
+
+@_entity_type("procedure", "import.text")
+def _import_text_procedure(mldb: Mldb, eid: str, params: dict) -> dict:
+    """import.text procedure entity
+    (plugins/textual/importtext_procedure.cc; MLDB-1891): per-line
+    select/where/named run through the dialect over the raw import;
+    a row-valued select item is the reference's config error —
+    imported cells are atoms."""
+    from mldb_spark.sources.text_io import import_text
+
+    out_id = _entity_id(params.get("outputDataset") or eid)
+    sel = params.get("select")
+    if sel and sel != "*":
+        from mldb_spark.dialect import ast as _ast
+        from mldb_spark.dialect.parser import parse_statement
+        from mldb_spark.dialect.translate import _walk
+
+        stm = parse_statement(f"SELECT {sel} FROM __imp")
+        for it in stm.select:
+            if isinstance(it, _ast.ExprItem) and any(
+                isinstance(n, _ast.RowLiteral) for n in _walk(it.expr)
+            ):
+                raise ValueError(
+                    "Import select expression cannot have row-valued columns"
+                )
+    q = params.get("quoteChar", '"')
+    raw = import_text(
+        mldb.spark,
+        str(params["dataFileUrl"]).removeprefix("file://"),
+        delimiter=params.get("delimiter", ",") or "\x01",
+        quote=q if q else "\x00",  # '' disables quoting
+        headers=params.get("headers"),
+        limit=params.get("limit"),
+        offset=params.get("offset", 0),
+        ignore_bad_lines=params.get("ignoreBadLines", False),
+        multi_line=params.get("allowMultiLines", False),
+        structured_column_names=params.get("structuredColumnNames", False),
+        line_number_row_names=True,
+    )
+    # unique temp id so concurrent/repeated imports don't clobber each
+    # other's intermediate, dropped from the registry after the
+    # transform (ADVICE r8)
+    import re as _re
+
+    tmp_id = "__import_raw_" + _re.sub(r"\W", "_", str(eid))
+    mldb.create_dataset(tmp_id, raw, row_name_col="rowName")
+    named = f" NAMED {params['named']}" if params.get("named") else ""
+    sql = f"SELECT {sel or '*'}{named} FROM {tmp_id}"
+    if params.get("where"):
+        sql += f" WHERE {params['where']}"
+    try:
+        mldb.transform(sql, out_id)
+    finally:
+        mldb.ctx.drop(tmp_id)
+    return {"outputDataset": out_id, "rowCount": mldb.dataset(out_id).count()}
+
+
+@_entity_type("procedure", "createEntity")
+def _create_entity_procedure(mldb: Mldb, eid: str, params: dict) -> dict:
+    """createEntity procedure (builtin/basic_procedures.cc:194-230;
+    MLDB-985): the params ARE another entity's config {kind, type,
+    params…}; the run's status is the created entity's full
+    descriptor."""
+    sub = {
+        "type": params.get("type"),
+        "id": params.get("entityId", f"{eid}_entity"),
+        "params": params.get("params", {}),
+    }
+    return mldb.create_entity(params["kind"], sub)
+
+
+@_entity_type("procedure", "svm.train")
+def _svm_train(mldb: Mldb, eid: str, params: dict) -> dict:
+    """svm.train entity (plugins/jml/svm.cc:464; MLDB-991-svm.py):
+    trainingData is a whole-row spec — the `label` column is the
+    target, every other numeric column a feature. Labels index to
+    0..n-1 and every fit is svm_train's: a binary target is one fit
+    (class 1 iff margin > 0); more classes fit one binary svm per
+    class and predict the argmax of the margins (MLlib OneVsRest's
+    rule). Registers `functionName` adding an `output` column with
+    the predicted ORIGINAL label value."""
+    tdf = _training_frame(mldb, params)
+    if "label" not in tdf.columns:
+        raise ValueError("svm.train needs a 'label' column")
+    feat_cols = _feature_cols(tdf, ("label", "rowName"))
+    if not feat_cols:
+        raise ValueError("svm.train: no numeric feature columns")
+    from mldb_spark.ml.procedures import svm_train
+
+    classes = sorted(
+        r[0] for r in tdf.select("label").distinct().collect() if r[0] is not None
+    )
+    mapping = F.create_map(
+        *[x for i, v in enumerate(classes) for x in (F.lit(v), F.lit(float(i)))]
+    )
+    li = mapping[F.col("label")]
+    targets = (
+        [li]
+        if len(classes) <= 2
+        else [(li == float(i)).cast("double") for i in range(len(classes))]
+    )
+    fits = FunctionRegistry()
+    for i, target in enumerate(targets):
+        svm_train(tdf.withColumn("__y", target), feat_cols, "__y", f"__m{i}", fits)
+    fname = params.get("functionName", eid)
+
+    def apply_svm(
+        d: DataFrame,
+        __fits=fits,
+        __names=[f"__m{i}" for i in range(len(targets))],
+        __b=F.array(*[F.lit(v) for v in classes]),
+    ) -> DataFrame:
+        for n in __names:
+            d = __fits.apply(n, d).withColumnRenamed("margin", n)
+        if len(__names) == 1:
+            pick = (F.col(__names[0]) > 0).cast("int")
+        else:
+            m = F.array(*__names)
+            pick = (F.array_position(m, F.array_max(m)) - 1).cast("int")
+        return d.withColumn("output", __b[pick]).drop(*__names)
+
+    mldb.ctx.register_function(fname, apply_svm)
+    return {"functionName": fname, "classes": classes}
+
+
+@_entity_type("procedure", "classifier.experiment")
+def _classifier_experiment(mldb: Mldb, eid: str, params: dict) -> dict:
+    """classifier.experiment entity
+    (plugins/jml/experiment_procedure.cc:618; the reference's k-fold
+    train/test harness — MLDB-1304/MLDBFB-724's surface). inputData
+    is the classifier.train features/label spec; datasetFolds gives
+    explicit trainingWhere/testingWhere conditions (MLDB-878's
+    grammar), bound through the dialect so rowHash()-style fold rules
+    work; otherwise kfold hash-mod folds."""
+    if "inputData" not in params:
+        raise ValueError("You need to define inputData")
+    tdf, exp_rn = mldb._query_with_row_name(
+        Mldb._input_spec_to_sql(params["inputData"])
+    )
+    if "features" not in tdf.columns or "label" not in tdf.columns:
+        raise ValueError(
+            "classifier.experiment inputData must produce "
+            "'features' and 'label' outputs"
+        )
+    keep_rn = [F.col(exp_rn).alias("__rowName")] if exp_rn else []
+    flat = tdf.select(
+        *_flat_features(tdf),
+        F.col("label").cast("double").alias("label"),
+        *keep_rn,
+    ).filter(F.col("label").isNotNull())
+    exp_feats = _feature_cols(flat, ("label",), strings=True)
+    from mldb_spark.ml.procedures import classifier_experiment
+
+    ds_folds = None
+    if params.get("datasetFolds"):
+        from mldb_spark.dialect.parser import parse_expression
+        from mldb_spark.dialect.translate import Binder
+
+        def _bind_cond(s):
+            b = Binder(
+                flat.columns, None,
+                row_name_col="__rowName" if exp_rn else None,
+                dtypes=dict(flat.dtypes),
+            )
+            return b.bind(parse_expression(s)).cast("boolean")
+
+        ds_folds = [
+            (_bind_cond(f["trainingWhere"]), _bind_cond(f["testingWhere"]))
+            for f in params["datasetFolds"]
+        ]
+    res = classifier_experiment(
+        flat,
+        exp_feats,
+        "label",
+        folds=int(params.get("kfold", 3) or 3),
+        name=params.get("experimentName", eid),
+        dataset_folds=ds_folds,
+    )
+    folds_status = [r.asDict() for r in res.collect()]
+    return {
+        "experimentName": params.get("experimentName", eid),
+        "folds": folds_status,
+        "aggregatedTest": {
+            "auc": sum(f["auc"] for f in folds_status) / max(1, len(folds_status)),
+        },
+    }
+
+
+@_entity_type("procedure", "classifier.train")
+def _classifier_train(mldb: Mldb, eid: str, params: dict) -> dict:
+    tdf = _training_frame(mldb, params)
+    if "features" not in tdf.columns or "label" not in tdf.columns:
+        raise ValueError(
+            "classifier.train trainingData must produce "
+            "'features' and 'label' outputs "
+            "(select {* EXCLUDING (x)} as features, x as label)"
+        )
+    mldb._check_label_not_in_features(params["trainingData"], tdf)
+    if params.get("mode") == "multilabel":
+        # the label is a ROW — each non-null field a present label
+        # (multilabel-classifier-test.py)
+        from mldb_spark.ml.procedures import multilabel_train
+
+        ldt = dict(tdf.dtypes)["label"]
+        if not ldt.startswith("struct<"):
+            raise ValueError(
+                "multilabel mode needs a row-valued label "
+                "({label0, label1} as label)"
+            )
+        label_fields = [f.name for f in tdf.schema["label"].dataType]
+        flat_ml = tdf.select(
+            F.col("features.*"),
+            *[F.col("label").getField(n).alias(f"__lab_{n}") for n in label_fields],
+        )
+        ml_feats = _feature_cols(flat_ml)
+        fname = params.get("functionName", eid)
+        multilabel_train(
+            flat_ml.select(
+                *ml_feats, *[F.col(f"__lab_{n}").alias(n) for n in label_fields]
+            ),
+            ml_feats,
+            label_fields,
+            strategy=params.get("multilabelStrategy", "one-vs-all"),
+            name=fname,
+        )
+        # GLOBAL_REGISTRY models are auto-visible in SQL by training
+        # name (the reference's functionName auto-creation)
+        return {"functionName": fname, "labels": label_fields}
+    extra = [F.col("weight")] if "weight" in tdf.columns else []
+    # rows whose label cell fell outside the WHEN window (or was never
+    # present) are not training examples — the reference skips
+    # missing-label rows rather than erroring the whole run.
+    # Categorical mode keeps STRING labels (classifier_train indexes
+    # them and maps predictions back — MLDB-173's cat/dog labels);
+    # boolean/regression coerce numeric.
+    label = (
+        F.col("label")
+        if params.get("mode") == "categorical"
+        else F.col("label").cast("double")
+    )
+    flat = tdf.select(
+        *_flat_features(tdf),
+        label.alias("label"),
+        *extra,
+    ).filter(F.col("label").isNotNull())
+    if flat.isEmpty():
+        # zero surviving training rows is a clean config error, never
+        # an opaque MLlib crash (MLDB-587's `WHERE false` training)
+        raise ValueError(
+            "classifier.train: all rows were filtered out "
+            "by the trainingData query; nothing to train on"
+        )
+    # numeric features feed the estimator directly; STRING features
+    # are legal too — classifier_train one-hot encodes them against a
+    # capped vocabulary (MLDB-961's petalCat long/short VALUE_EQUALS
+    # features). The engine's rowName column is metadata, never a
+    # feature.
+    feat_cols = _feature_cols(flat, ("label", "weight", "rowName"), strings=True)
+    if not feat_cols:
+        raise ValueError("classifier.train: no numeric feature columns")
+    from mldb_spark.ml.procedures import classifier_train
+
+    fname = params.get("functionName", eid)
+    classifier_train(
+        flat,
+        feat_cols,
+        "label",
+        fname,
+        algorithm=params.get("algorithm", "glz"),
+        mode=params.get("mode", "boolean"),
+        weight_col="weight" if "weight" in tdf.columns else None,
+    )
+    return {"functionName": fname, "features": feat_cols}
+
+
+@_entity_type("procedure", "randomforest.binary.train")
+def _randomforest_binary_train(mldb: Mldb, eid: str, params: dict) -> dict:
+    """randomforest.binary.train (plugins/jml/randomforest_procedure.cc:411;
+    MLDB-1433): classifier.train with the bagged-tree estimator in
+    boolean mode."""
+    return _classifier_train(
+        mldb, eid, {**params, "algorithm": "bagging", "mode": "boolean"}
+    )
+
+
+@_entity_type("procedure", "kmeans.train")
+def _kmeans_train(mldb: Mldb, eid: str, params: dict) -> dict:
+    """kmeans.train entity (MLDB-945's WHEN half; MLDB-119's
+    empty-column-match error): the numeric output columns of
+    trainingData become the embedding."""
+    tdf = _training_frame(mldb, params)
+    feat_cols = _feature_cols(tdf)
+    if not feat_cols:
+        raise ValueError("kmeans.train: trainingData matched no columns")
+    from mldb_spark.ml.procedures import kmeans_train
+
+    emb = tdf.na.drop(subset=feat_cols).withColumn(
+        "__emb",
+        F.array(*[F.col(f"`{c}`").cast("double") for c in feat_cols]),
+    )
+    fname = params.get("functionName", eid)
+    _model, centroids = kmeans_train(
+        emb, "__emb", k=int(params.get("numClusters", 8)), name=fname
+    )
+    cds = params.get("centroidsDataset")
+    if cds:
+        mldb.create_dataset(
+            _entity_id(cds),
+            centroids.select(
+                F.col("cluster").cast("string").alias("rowName"),
+                *[F.col("centroid")[i].alias(c) for i, c in enumerate(feat_cols)],
+            ),
+            row_name_col="rowName",
+        )
+    # SQL application surface (MLDB-665's
+    # kmeans({embedding: {...}})[cluster]): the embedding pin binds by
+    # COLUMN NAME, so field order in the call never matters
+    from mldb_spark.ml.registry import GLOBAL_REGISTRY
+
+    def sql_assign(d, _feats=tuple(feat_cols), _fn=fname):
+        d2 = d.withColumn(
+            "__emb", F.array(*[F.col(f"`{c}`").cast("double") for c in _feats])
+        )
+        return GLOBAL_REGISTRY.apply(_fn, d2).drop("__emb")
+
+    mldb.ctx.register_function(fname, sql_assign)
+    return {
+        "functionName": fname,
+        "columns": feat_cols,
+        "numClusters": int(params.get("numClusters", 8)),
+    }
+
+
+def _stable_row_id(tdf: DataFrame) -> tuple[DataFrame, Column]:
+    """`tdf` and a row-id column that stays one value per source row
+    through an explode: rowName when present, else a synthesized
+    `__rid`. monotonically_increasing_id is re-evaluated per GENERATED
+    row when Catalyst collapses the projections, splitting one source
+    row into several (MLDB-1364 exposed 4 row embeddings for 3 rows).
+    A window row_number is computed once per source row and carried
+    through the generate; single-partition, acceptable at entity
+    training scale. It is materialized as a COLUMN on tdf so the
+    window runs over source rows — inlining it next to the explode
+    would rank the GENERATED rows instead."""
+    if "rowName" in tdf.columns:
+        return tdf, F.col("rowName")
+    from pyspark.sql import Window
+
+    tdf = tdf.withColumn(
+        "__rid",
+        F.row_number()
+        .over(Window.orderBy(*[F.col(f"`{c}`") for c in tdf.columns]))
+        .cast("string"),
+    )
+    return tdf, F.col("__rid")
+
+
+@_entity_type("procedure", "svd.train")
+def _svd_train(mldb: Mldb, eid: str, params: dict) -> dict:
+    """svd.train entity (MLDB-945's WHEN half): the wide result of
+    trainingData melts to the long cell layout; string columns expand
+    to categorical indicator cells named <col>.stringEquals.<value> —
+    the reference's sparse string handling (MLDB-1937)."""
+    tdf = _training_frame(mldb, params)
+    feat_cols = _feature_cols(tdf)
+    str_cols = [
+        c
+        for c, dt in tdf.dtypes
+        if dt == "string" and c != "rowName" and not c.startswith("__")
+    ]
+    if not feat_cols and not str_cols:
+        # an empty column match is NOT an error for svd.train
+        # (MLDB-417: the reference trains an EMPTY svd and succeeds)
+        # — emit empty outputs
+        empty = local_frame(mldb.spark, [], "rowName string, embedding array<double>")
+        for key in ("rowOutputDataset", "columnOutputDataset"):
+            if params.get(key):
+                mldb.create_dataset(_entity_id(params[key]), empty)
+        return {"singularValues": [], "columns": []}
+    from mldb_spark.ml.procedures import svd_train
+
+    tdf, rn = _stable_row_id(tdf)
+    cell_structs = [
+        F.struct(
+            F.lit(c).alias("column"),
+            F.col(f"`{c}`").cast("double").alias("value"),
+        )
+        for c in feat_cols
+    ] + [
+        F.struct(
+            F.concat(F.lit(f"{c}.stringEquals."), F.col(f"`{c}`")).alias("column"),
+            F.when(F.col(f"`{c}`").isNotNull(), F.lit(1.0)).alias("value"),
+        )
+        for c in str_cols
+    ]
+    cells = tdf.select(
+        rn.alias("row_id"),
+        F.explode(F.array(*cell_structs)).alias("cell"),
+    ).select("row_id", "cell.column", "cell.value").filter(F.col("value").isNotNull())
+    k = int(params.get("numSingularValues", 8))
+    if str_cols:
+        # string columns expand to per-value indicator cells — clamp
+        # against the ACTUAL expanded column count (len(feat_cols)
+        # alone would clamp a string-only training to k=0)
+        k = min(k, cells.select("column").distinct().count())
+    else:
+        k = min(k, len(feat_cols))
+    fname = params.get("functionName", eid)
+    rows_emb, cols_emb, svals = svd_train(cells, k=k, name=fname)
+    for key, out_df in (
+        ("rowOutputDataset", rows_emb),
+        ("columnOutputDataset", cols_emb),
+    ):
+        if params.get(key):
+            mldb.create_dataset(_entity_id(params[key]), out_df)
+    # WIDE-rowset embedRow surface (the reference's svd.embedRow
+    # function entity, MLDB-805/498): x·V as a pure column expression
+    # — V is the vocab-sized collected loading table, so the embedding
+    # is codegen'd arithmetic, no join. Numeric columns only (string
+    # indicator cells have no wide column to read).
+    vmap = {
+        r["column"]: list(r["embedding"])
+        for r in cols_emb.collect()
+        if r["column"] in feat_cols
+    }
+    if vmap and k > 0:
+        def _wide_embed(d, _vmap=vmap, _k=k):
+            dims = []
+            for j in range(_k):
+                expr = None
+                for c, vec in _vmap.items():
+                    if c not in d.columns:
+                        continue
+                    term = F.coalesce(
+                        F.col(f"`{c}`").cast("double"), F.lit(0.0)
+                    ) * F.lit(float(vec[j]))
+                    expr = term if expr is None else expr + term
+                dims.append(expr if expr is not None else F.lit(0.0))
+            return d.withColumn("embedding", F.array(*dims))
+
+        mldb.ctx.register_function(fname, _wide_embed)
+    return {"singularValues": [float(s) for s in svals], "columns": feat_cols}
+
+
+@_entity_type("procedure", "tsne.train")
+def _tsne_train(mldb: Mldb, eid: str, params: dict) -> dict:
+    """tsne.train entity (MLDB-945's WHEN half): the numeric columns
+    of trainingData stack into one embedding per row."""
+    tdf = _training_frame(mldb, params)
+    feat_cols = _feature_cols(tdf)
+    if not feat_cols:
+        raise ValueError("tsne.train: trainingData matched no columns")
+    from mldb_spark.ml.procedures import tsne_train
+
+    emb = tdf.na.drop(subset=feat_cols).select(
+        F.monotonically_increasing_id().alias("__id"),
+        F.array(*[F.col(f"`{c}`").cast("double") for c in feat_cols]).alias("__emb"),
+    )
+    coords = tsne_train(
+        emb, "__emb", id_col="__id",
+        n_components=int(params.get("numOutputDimensions", 2)),
+        perplexity=float(params.get("perplexity", 15.0)),
+    )
+    if params.get("rowOutputDataset"):
+        mldb.create_dataset(_entity_id(params["rowOutputDataset"]), coords)
+    return {"columns": feat_cols, "rows": coords.count()}
+
+
+@_entity_type("procedure", "classifier.test")
+def _classifier_test(mldb: Mldb, eid: str, params: dict) -> dict:
+    """accuracy procedure (plugins/jml/accuracy.cc; MLDB-804/256):
+    testingData must produce 'score' and 'label' outputs; a config
+    without it is a 4xx."""
+    if "testingData" not in params:
+        raise ValueError(
+            "classifier.test expects a scalar named 'score' "
+            "and a scalar named 'label' in testingData — "
+            "you need to define testingData"
+        )
+    tdf = mldb.query(Mldb._require_from(params["testingData"]))
+    mode = params.get("mode", "boolean")
+    if mode == "multilabel":
+        # score and label are ROWS (multilabel-classifier-test.py's
+        # accuracy case): rank every label by its score with the
+        # reference's tie handling
+        from mldb_spark.ml.procedures import multilabel_test
+
+        dts = dict(tdf.dtypes)
+        if not (
+            dts.get("score", "").startswith("struct<")
+            and dts.get("label", "").startswith("struct<")
+        ):
+            raise ValueError(
+                "multilabel mode needs row-valued score and label outputs"
+            )
+        return multilabel_test(
+            tdf,
+            [f.name for f in tdf.schema["score"].dataType],
+            [f.name for f in tdf.schema["label"].dataType],
+            recall_over_n=params.get("recallOverN", [1]),
+            weight_col="weight" if "weight" in tdf.columns else None,
+        )
+    if mode != "categorical" and (
+        "score" not in tdf.columns or "label" not in tdf.columns
+    ):
+        raise ValueError(
+            "classifier.test expects a scalar named 'score' "
+            "and a scalar named 'label'"
+        )
+    if tdf.isEmpty():
+        # the reference's exact message
+        # (classifier_test_err_on_empty_sets.py)
+        raise ValueError("Cannot run classifier.test procedure on empty test set")
+    from mldb_spark.ml.procedures import (
+        categorical_statistics,
+        classifier_test,
+        weighted_statistics,
+    )
+
+    if mode == "categorical":
+        # `{...} as score` row pin: per-class scores — predicted =
+        # argmax (MLDB-256's toy matrix)
+        from mldb_spark.ml.procedures import argmax_prediction
+
+        if "score" in tdf.columns and dict(tdf.dtypes)["score"].startswith("struct<"):
+            from mldb_spark.dialect.translate import _struct_fields_typed
+
+            fields = [n for n, _t in _struct_fields_typed(dict(tdf.dtypes)["score"])]
+            flat = tdf.select(
+                F.col("label"),
+                *([F.col("weight")] if "weight" in tdf.columns else []),
+                *[F.col("score").getField(n).alias(n) for n in fields],
+            )
+            scored = argmax_prediction(flat, fields)
+        elif "predicted" in tdf.columns:
+            scored = tdf
+        else:
+            raise ValueError(
+                "classifier.test categorical mode needs a "
+                "'score' row of per-class scores"
+            )
+        stats = categorical_statistics(
+            scored, weight_col="weight" if "weight" in scored.columns else None
+        )
+        return {
+            "labelStatistics": {
+                r["label"]: {
+                    "f1Score": r["f1Score"],
+                    "recall": r["recall"],
+                    "support": r["support"],
+                    "precision": r["precision"],
+                    "accuracy": r["accuracy"],
+                }
+                for r in stats.collect()
+            },
+            "weightedStatistics": weighted_statistics(stats),
+        }
+    wcol = "weight" if "weight" in tdf.columns else None
+    if mode == "boolean" and params.get("outputDataset"):
+        # the boolean test's threshold-sweep table
+        # (test_classifier_test_proc.py truth rows), rows named like
+        # the test examples
+        from mldb_spark.ml.procedures import classifier_test_roc
+
+        named, nrn = mldb._query_with_row_name(
+            Mldb._require_from(params["testingData"])
+        )
+        mldb.create_dataset(
+            _entity_id(params["outputDataset"]),
+            classifier_test_roc(named, weight_col=wcol, row_name_col=nrn),
+            row_name_col="__rowName" if nrn else None,
+        )
+    row = classifier_test(tdf, mode=mode, weight_col=wcol).collect()[0]
+    if mode != "regression":
+        return row.asDict()
+    d = row.asDict()
+    return {
+        "quantileErrors": {
+            "0.25": d["quantile_err_25"],
+            "0.5": d["quantile_err_50"],
+            "0.75": d["quantile_err_75"],
+            "0.9": d["quantile_err_90"],
+        },
+        "mse": d["mse"],
+        "r2": d["r2"],
+    }
+
+
+@_entity_type("procedure", "tfidf.train")
+def _tfidf_train(mldb: Mldb, eid: str, params: dict) -> dict:
+    """tfidf.train (plugins/nlp/tfidf.cc:145-257): count per-term
+    document frequency from the trainingData query (WHEN included)
+    and write an output dataset of rows named by term with a `count`
+    column."""
+    tdf = _training_frame(mldb, params)
+    if {"row", "column"}.issubset(tdf.columns):
+        counts = tdf.groupBy("column").agg(F.countDistinct("row").alias("count"))
+        counts = counts.select(F.col("column").alias("rowName"), "count")
+    else:
+        # wide layout: each non-rowName column is a term; df = rows
+        # where it has a value
+        terms = [c for c in tdf.columns if c != "rowName" and not c.startswith("__")]
+        if not terms:
+            raise ValueError("tfidf.train trainingData produced no term columns")
+        stacked = tdf.selectExpr(
+            "stack({n}, {args}) as (rowName, c)".format(
+                n=len(terms), args=", ".join(f"'{t}', `{t}`" for t in terms)
+            )
+        )
+        counts = (
+            stacked.filter(F.col("c").isNotNull())
+            .groupBy("rowName")
+            .agg(F.count(F.lit(1)).alias("count"))
+        )
+    out_id = _entity_id(params.get("outputDataset", f"{eid}_output"))
+    mldb.create_dataset(out_id, counts, row_name_col="rowName")
+    return {"outputDataset": out_id}
+
+
+@_entity_type("procedure", "experimental.external.procedure")
+def _external_procedure(mldb: Mldb, eid: str, params: dict) -> dict:
+    """external python process procedure
+    (builtin/external_python_procedure.cc:152; MLDB-694): stdInData
+    on stdin, last stdout line parsed as JSON into status.return."""
+    from mldb_spark.utilities import external_procedure
+
+    sc = params.get("scriptConfig", {})
+    return external_procedure(
+        script_path=sc.get("address"),
+        source=sc.get("source"),
+        stdin_data=params.get("stdInData", ""),
+    )
+
+
+@_entity_type("procedure", "null")
+def _null_procedure(mldb: Mldb, eid: str, params: dict) -> None:
+    """The no-op procedure (MLDB-326's run-lifecycle tests)."""

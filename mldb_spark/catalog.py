@@ -1,14 +1,10 @@
-"""Catalog: named datasets over parquet directories.
+"""Parquet tables of a scale-factor directory and their layouts.
 
-The reference's entity model names every dataset and routes queries to
-it (/root/reference core/mldb_entity.h, core/dataset.h); here a
-dataset is a parquet-backed DataFrame registered as a temp view so
-both the DataFrame API and spark.sql() see the same names.
-
-At 100 TB the same Catalog points at partitioned parquet/Delta table
-roots; nothing in this class materializes data — `table()` returns a
-lazy scan that Catalyst prunes (column projection + predicate
-pushdown reach the parquet reader).
+`load` reads one named table as a lazy parquet scan that Catalyst
+prunes (column projection + predicate pushdown reach the parquet
+reader); nothing here materializes data. Named datasets of an `Mldb`
+live in its `MldbContext` (the reference's entity model,
+core/mldb_entity.h, core/dataset.h).
 """
 
 from __future__ import annotations
@@ -35,29 +31,6 @@ TESTDATA_TABLES = (
 # relative to fact tables; customer may not — it is deliberately NOT
 # in this set.
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
-
-
-class Catalog:
-    def __init__(self, spark: SparkSession, root: str | None = None):
-        self.spark = spark
-        self.root = root or os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
-        )
-        self._cache: dict[str, DataFrame] = {}
-
-    def table(self, name: str) -> DataFrame:
-        """Lazy parquet scan for a named dataset."""
-        if name not in self._cache:
-            self._cache[name] = load(self.spark, self.root, name)
-        return self._cache[name]
-
-    def register_all(self, tables: tuple[str, ...] = TESTDATA_TABLES) -> None:
-        """Register every known table as a temp view for spark.sql()."""
-        for name in tables:
-            try:
-                self.table(name).createOrReplaceTempView(name)
-            except Exception:  # table absent in this sf dir — open catalog
-                pass
 
 
 def write_bucketed(

@@ -332,12 +332,6 @@ class MldbRestServer:
                         )
                         return
                     cfg["id"] = eid
-                # POSTed configs without an id get a unique
-                # auto_-prefixed one (MLDB-983's create-dataset-ids)
-                if "id" not in cfg:
-                    import uuid
-
-                    cfg["id"] = "auto_" + uuid.uuid4().hex[:12]
                 try:
                     self._send(201, facade.mldb.create_entity(kind, cfg))
                 except Exception as e:

@@ -140,3 +140,88 @@ def test_external_procedure():
     # non-JSON last line: everything stays in stdout, return is None
     out2 = external_procedure(source="print('plain text only')")
     assert out2["return"] is None and out2["stdout"] == "plain text only"
+
+
+def _mutable(mldb, eid, etype, rows):
+    """Create, record and commit a mutable dataset; the create's result."""
+    out = mldb.create_entity("dataset", {"type": etype, "id": eid})
+    mldb.record_rows(
+        eid,
+        [{"rowName": rn, "columns": [[c, v, 0] for c, v in cells]} for rn, cells in rows],
+    )
+    mldb.commit_dataset(eid)
+    return out
+
+
+def _rows(df):
+    return sorted(tuple(sorted(r.asDict().items())) for r in df.collect())
+
+
+def test_create_entity_transposed(spark):
+    from mldb_spark.api import Mldb
+
+    mldb = Mldb(spark)
+    _mutable(mldb, "tr_src", "sparse.mutable",
+             [("r1", [("a", 1), ("b", 2)]), ("r2", [("a", 3)])])
+    out = mldb.create_entity(
+        "dataset", {"type": "transposed", "id": "tr_t", "params": {"dataset": "tr_src"}}
+    )
+    want = mldb.query("SELECT * FROM transpose(tr_src)")
+    got = mldb.query("SELECT * FROM tr_t")
+    assert _rows(got) == _rows(want) and len(_rows(got)) == 2
+    assert out["status"]["columnCount"] == len(mldb.dataset("tr_t").columns)
+    with pytest.raises(ValueError, match="'nope' does not exist"):
+        mldb.create_entity(
+            "dataset", {"type": "transposed", "id": "tr_x", "params": {"dataset": "nope"}}
+        )
+
+
+@pytest.mark.parametrize("etype", ["beh.mutable", "beh.binary.mutable"])
+def test_create_entity_beh_mutable_round_trip(spark, etype):
+    from mldb_spark.api import Mldb
+
+    mldb = Mldb(spark)
+    eid = etype.replace(".", "_")
+    out = _mutable(mldb, eid, etype, [("u1", [("x", 1), ("y", 2)]), ("u2", [("x", 5)])])
+    assert out["status"] == {"rowCount": 0}
+    got = {
+        r["rn"]: (r["x"], r["y"])
+        for r in mldb.query(f"SELECT rowName() AS rn, x, y FROM {eid}").collect()
+    }
+    assert got == {"u1": (1.0, 2.0), "u2": (5.0, None)}
+
+
+@pytest.mark.parametrize(
+    "etype, direct",
+    [("stemmer", "create_stemmer_function"),
+     ("filter_stopwords", "create_filter_stopwords_function")],
+)
+def test_create_entity_text_functions_match_python_api(spark, etype, direct):
+    from mldb_spark.api import Mldb
+    from mldb_spark.session import local_frame
+
+    mldb = Mldb(spark)
+    words = local_frame(
+        spark,
+        [(1, ["the", "running", "dogs", "are", "jumping"]), (2, ["a", "cats"])],
+        "id int, words array<string>",
+    )
+    mldb.create_entity(
+        "function", {"type": etype, "id": "via_entity", "params": {"language": "english"}}
+    )
+    getattr(mldb, direct)("via_api")
+    got = _rows(mldb.apply_function("via_entity", words))
+    assert got == _rows(mldb.apply_function("via_api", words))
+    assert got != _rows(words)
+
+
+def test_create_entity_unknown_type_lists_registered_types(spark):
+    from mldb_spark.api import _ENTITY_TYPES, Mldb
+
+    mldb = Mldb(spark)
+    with pytest.raises(ValueError, match="unknown function type 'nope'") as err:
+        mldb.create_entity("function", {"type": "nope", "id": "f"})
+    function_types = [t for k, t in _ENTITY_TYPES if k == "function"]
+    assert len(function_types) == 7
+    assert all(t in str(err.value) for t in function_types)
+    assert "transform" not in str(err.value)

@@ -74,3 +74,27 @@ def test_bounded_collects_go_through_local_rows():
         PKG / "sources" / "git_io.py", "export_xlsx"
     )
     assert [o for o in offenders if o not in allowed] == []
+
+
+# a branch on the entity type name: `etype == ...`, `etype in (...)`
+_ETYPE_BRANCH = re.compile(r"\betype\s*(==|!=|\bin\b|\bnot\s+in\b)")
+
+
+def test_entity_types_dispatch_through_registry():
+    """Each createEntity (kind, type) is one builder registered in
+    api._ENTITY_TYPES, never a branch on the type name, and
+    create_entity's docstring lists exactly the registered types."""
+    assert _ETYPE_BRANCH.findall((PKG / "api.py").read_text()) == []
+
+    from mldb_spark.api import _ENTITY_TYPES, Mldb
+
+    listed, kind = set(), None
+    for line in Mldb.create_entity.__doc__.splitlines():
+        m = re.match(r"\s*- (\w+): (.*)", line)
+        if m:
+            kind, line = m.groups()
+        elif not line.strip():
+            kind = None
+        if kind:
+            listed |= {(kind, t) for t in re.findall(r"[\w.]+", line)}
+    assert listed == set(_ENTITY_TYPES)

@@ -3,6 +3,7 @@ query and its DuckDB oracle side by side, compare row count, column
 names, and an order-insensitive value hash.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+(sf_dir defaults to the in-repo perfbench/data/sf0.001)
 """
 
 from __future__ import annotations
@@ -11,14 +12,19 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from mldb_spark.session import get_spark  # noqa: E402
 from mldb_spark.testing import compare_spark_duck, duck_connection  # noqa: E402
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    sf_dir = (
+        sys.argv[1]
+        if len(sys.argv) > 1
+        else os.path.join(REPO, "perfbench", "data", "sf0.001")
+    )
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
