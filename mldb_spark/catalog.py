@@ -26,12 +26,6 @@ TESTDATA_TABLES = (
     "embeddings",
 )
 
-# Small dimension tables: always broadcastable in joins. At sf100k
-# (100 TB) region/nation/supplier/part remain << broadcast threshold
-# relative to fact tables; customer may not — it is deliberately NOT
-# in this set.
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
-
 
 def write_bucketed(
     df: DataFrame,

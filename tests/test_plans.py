@@ -431,7 +431,11 @@ def test_unpartitioned_window_whitelist():
     - operators/relational.py ranking: global form is the reference's
       explicit total-order semantics; partitioned form is the default
       for gates (q17); callers at scale pre-aggregate;
-    - sources/text_io.py lineNumber: import-sized inputs, documented;
+    - sources/text_io.py: two windows over one imported file, both
+      import-sized (documented at each): the 1-based rowName that
+      honours the header offset (spelled `_W.orderBy`, hence the
+      count resolves `Window as` imports) and the lineNumber column
+      (MLDB-1266's row-name idiom);
     - ml/procedures.py AUC + classifier_test_roc: windows run over
       the DISTINCT-score aggregate (threshold-set-sized), never
       per-example rows (pinned by
@@ -453,14 +457,17 @@ def test_unpartitioned_window_whitelist():
                 continue
             path = os.path.join(dirpath, fn)
             src = open(path).read()
-            # count Window.orderBy( not part of partitionBy(...).orderBy
-            n = len(re.findall(r"Window\.orderBy\(", src))
+            # count Window.orderBy( not part of partitionBy(...).orderBy,
+            # under the name Window and under every `Window as <alias>`
+            # import of this file
+            names = {"Window", *re.findall(r"\bWindow\s+as\s+(\w+)", src)}
+            n = sum(len(re.findall(rf"\b{name}\.orderBy\(", src)) for name in names)
             if n:
                 rel = os.path.relpath(path, root)
                 found[rel] = n
     expected = {
         "operators/relational.py": 2,  # bucketize + ranking global form
-        "sources/text_io.py": 1,  # lineNumber import naming
+        "sources/text_io.py": 2,  # header-offset rowName + lineNumber
         "ml/procedures.py": 3,  # AUC cum_before + roc w_prev/w_cur
         "api.py": 1,  # svd.train entity row ids
     }

@@ -1,9 +1,14 @@
-"""Stage-level profiler: run one gate in the benchmark's own session
+"""Stage-level profiler: run gates in the benchmark's own session
 (`mldb_spark.session.get_spark`, with the event-log confs of
 perfbench's traced run) and print per-stage metrics read from Spark's
-event log, so optimization targets the right stage.
+event log, so optimization targets the right stage. Each run also
+prints how many classes Spark's code generator compiled during it
+(`CodegenMetrics`), so a gate that recompiles on every warm run shows.
 
-Usage: python tools/profile_stages.py q31_embedding_neardup [--sf DIR] [--runs N]
+A run executes every named gate once, in order, so several gates
+profile a serial pass over their shared working set.
+
+Usage: python tools/profile_stages.py q31_embedding_neardup [GATE ...] [--sf perfbench/data/sf0.01] [--runs N]
 """
 
 from __future__ import annotations
@@ -14,7 +19,8 @@ import sys
 import time
 from collections import defaultdict
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from perfbench import common, trace  # noqa: E402
 
@@ -51,8 +57,8 @@ def stage_table(events: list[dict], window: tuple[float, float]) -> list[dict]:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("query")
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--sf", default=os.path.join(REPO, "perfbench", "data", "sf0.01"))
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
 
@@ -64,16 +70,21 @@ def main() -> int:
 
     from mldb_spark.caching import release_cached
 
-    fn = entrymod.queries()[args.query]
+    fns = [entrymod.queries()[q] for q in args.queries]
     spark.read.parquet(os.path.join(args.sf, "lineitem.parquet")).count()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
     windows = []
+    compiles = []
     for _ in range(args.runs):
         release_cached()
         spark.catalog.clearCache()
+        c0 = codegen.METRIC_COMPILATION_TIME().getCount()
         t0 = time.time()
-        fn(spark, args.sf).write.mode("overwrite").format("noop").save()
+        for fn in fns:
+            fn(spark, args.sf).write.mode("overwrite").format("noop").save()
         windows.append((t0, time.time()))
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - c0)
     release_cached()
     common.stop_session(spark)
 
@@ -82,7 +93,8 @@ def main() -> int:
         tot = trace.spark_metrics(events, [window], {})
         print(f"--- run {i}: {window[1] - window[0]:.3f}s", flush=True)
         print(
-            f"  {tot['jobs']} jobs, {tot['stages']} stages, executor run "
+            f"  {tot['jobs']} jobs, {tot['stages']} stages, "
+            f"{compiles[i]} codegen classes compiled, executor run "
             f"{tot['executor_run_s']:.3f}s cpu {tot['executor_cpu_s']:.3f}s"
         )
         for s in stage_table(events, window)[:14]:

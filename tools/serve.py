@@ -1,6 +1,7 @@
 """Serve the /v1 REST facade over a testdata scale factor.
 
 Usage: python tools/serve.py [sf_dir] [port]
+(sf_dir defaults to the in-repo perfbench/data/sf0.001)
 
 Loads every parquet table under sf_dir as a dataset, starts
 mldb_spark.rest.MldbRestServer, and blocks. Then e.g.:
@@ -15,7 +16,8 @@ import glob
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from mldb_spark.api import Mldb  # noqa: E402
 from mldb_spark.catalog import load  # noqa: E402
@@ -24,7 +26,9 @@ from mldb_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    sf_dir = (
+        sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "perfbench", "data", "sf0.001")
+    )
     port = int(sys.argv[2]) if len(sys.argv) > 2 else 8765
     spark = get_spark("mldb_spark_serve")
     spark.sparkContext.setLogLevel("ERROR")
