@@ -10,8 +10,22 @@ engine keeps Spark booleans — the truth table is identical.
 
 from __future__ import annotations
 
+import os
+from pathlib import Path
+
+import pyspark
 import pytest
 from pyspark.sql import functions as F
+
+# UCI's iris.data (no header: sl,sw,pl,pw,Iris-<class>), recovered from
+# the copy PySpark installs; FIXTURES.md F9 and
+# test_iris_fixture_matches_pyspark_copy say how.
+IRIS = str(Path(__file__).parent / "data" / "iris.data")
+PYSPARK_IRIS = os.path.join(
+    os.path.dirname(pyspark.__file__),
+    "data", "mllib", "sample_multiclass_classification_data.txt",
+)
+TITANIC_CSV = "/root/reference/testing/fixtures/titanic_train.csv"
 
 
 @pytest.fixture(scope="module")
@@ -28,6 +42,53 @@ def _ds(mldb, name, rows, schema, row_name_col="rn"):
 
 def _q(mldb, sql):
     return [tuple(r) for r in mldb.query(sql).collect()]
+
+
+@pytest.mark.skipif(
+    not os.path.exists(PYSPARK_IRIS),
+    reason="needs PySpark's bundled sample_multiclass_classification_data.txt",
+)
+def test_iris_fixture_matches_pyspark_copy():
+    """tests/data/iris.data is PySpark's libsvm iris mapped back to
+    centimetres: each feature was scaled to [-1, 1] over the range in
+    UCI's iris.names, zero features are omitted, labels are
+    1 = setosa, 2 = versicolor, 0 = virginica. Rebuilt rows must equal
+    the committed file (order-free) and reproduce the iris.names
+    summary table."""
+    import statistics
+    from collections import Counter
+
+    ranges = [(4.3, 7.9), (2.0, 4.4), (1.0, 6.9), (0.1, 2.5)]
+    names = {1: "Iris-setosa", 2: "Iris-versicolor", 0: "Iris-virginica"}
+    rebuilt = []
+    with open(PYSPARK_IRIS) as f:
+        for line in f:
+            label, *cells = line.split()
+            scaled = [0.0] * 4
+            for cell in cells:
+                i, v = cell.split(":")
+                scaled[int(i) - 1] = float(v)
+            vals = []
+            for (lo, hi), v in zip(ranges, scaled):
+                cm = lo + (v + 1) / 2 * (hi - lo)
+                assert abs(cm - round(cm, 1)) < 1e-5, cm  # on the 0.1 grid
+                vals.append(round(cm, 1))
+            rebuilt.append(vals + [names[int(float(label))]])
+    with open(IRIS) as f:
+        committed = [line.strip().split(",") for line in f if line.strip()]
+    as_key = lambda r: tuple(f"{float(x):.1f}" for x in r[:4]) + (r[4],)
+    assert Counter(map(as_key, rebuilt)) == Counter(map(as_key, committed))
+    assert Counter(r[4] for r in committed) == {n: 50 for n in names.values()}
+    # iris.names "Summary Statistics": min, max, mean, SD per feature
+    table = [
+        (4.3, 7.9, 5.84, 0.83), (2.0, 4.4, 3.05, 0.43),
+        (1.0, 6.9, 3.76, 1.76), (0.1, 2.5, 1.20, 0.76),
+    ]
+    for j, (lo, hi, mean, sd) in enumerate(table):
+        col = [float(r[j]) for r in committed]
+        assert (min(col), max(col)) == (lo, hi)
+        assert round(statistics.mean(col), 2) == mean
+        assert round(statistics.stdev(col), 2) == sd
 
 
 def test_mldb_1827_operator_null_propagation(mldb):
@@ -5296,7 +5357,7 @@ def test_mldb_1353_em_iris_clusters(mldb):
     from mldb_spark.sources.text_io import import_text
 
     iris = import_text(
-        mldb.spark, "/root/reference/testing/dataset/iris.data",
+        mldb.spark, IRIS,
         headers=["sl", "sw", "pl", "pw", "cls"],
     ).na.drop()
     from pyspark.sql import functions as F
@@ -5783,7 +5844,7 @@ def test_mldb_1766_dt_categorical_generalization(mldb):
     from mldb_spark.sources.text_io import import_text
 
     iris = import_text(
-        mldb.spark, "/root/reference/testing/dataset/iris.data",
+        mldb.spark, IRIS,
         headers=["sl", "sw", "pl", "pw", "cls"],
     ).na.drop().select(
         F.col("sl").cast("double"), F.col("sw").cast("double"),
@@ -5830,7 +5891,7 @@ def test_mldb_647_multiclass_apply_function_pins(mldb):
     from mldb_spark.sources.text_io import import_text
 
     iris = import_text(
-        mldb.spark, "/root/reference/testing/dataset/iris.data",
+        mldb.spark, IRIS,
         headers=["sl", "sw", "pl", "pw", "cls"],
     ).na.drop().select(
         F.col("sl").cast("double"), F.col("sw").cast("double"),
@@ -6397,7 +6458,7 @@ def test_mldb_2143_classifier_utf8_labels(mldb):
     from mldb_spark.sources.text_io import import_text
 
     iris = import_text(
-        mldb.spark, "/root/reference/testing/dataset/iris.data",
+        mldb.spark, IRIS,
         headers=["sl", "sw", "pl", "pw", "cls"],
     ).na.drop().select(
         F.col("sl").cast("double"), F.col("sw").cast("double"),
@@ -6930,7 +6991,7 @@ def test_mldb_665_kmeans_function_from_sql(spark):
 
     mldb = Mldb(spark)
     iris = import_text(
-        mldb.spark, "/root/reference/testing/dataset/iris.data",
+        mldb.spark, IRIS,
         headers=["sl", "sw", "pl", "pw", "cls"],
     ).na.drop().select(
         F.col("sl").cast("double"), F.col("sw").cast("double"),
@@ -8117,7 +8178,7 @@ def test_mldb_2143_utf8_labels(spark):
 
     mldb = Mldb(spark)
     iris = import_text(
-        mldb.spark, "/root/reference/testing/dataset/iris.data",
+        mldb.spark, IRIS,
         headers=["sl", "sw", "pl", "pw", "cls"],
     ).na.drop().select(
         F.col("sl").cast("double"), F.col("sw").cast("double"),
@@ -9687,6 +9748,10 @@ def test_mldbfb_323_rest_rows_and_limit(spark):
     assert rows == {"r1": 1.0, "r2": 2.0}
 
 
+@pytest.mark.skipif(
+    not os.path.exists(TITANIC_CSV),
+    reason="needs the reference's titanic_train.csv",
+)
 def test_mldb_1304_titanic_demo_chain(spark):
     """MLDB-1304-titanic-demo.py: the reference's demo pipeline over
     its own titanic fixture — import.text → classifier.experiment
@@ -9702,7 +9767,7 @@ def test_mldb_1304_titanic_demo_chain(spark):
         "id": "m1304_csv",
         "params": {
             "dataFileUrl":
-                "file:///root/reference/testing/fixtures/titanic_train.csv",
+                "file://" + TITANIC_CSV,
             "outputDataset": "titanic_raw",
             "runOnCreation": True,
         },
