@@ -23,38 +23,16 @@ Semantics carried over:
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mldb_spark.dialect import ast
 from mldb_spark.dialect.parser import parse_statement
+from mldb_spark.functions import core, paths, text, vector, web
 from mldb_spark.session import local_frame, local_rows
-
-AGGREGATE_FNS = {
-    "count", "sum", "avg", "min", "max", "count_distinct", "variance",
-    "stddev", "string_agg", "earliest", "latest",
-    # vertical_* are documented aliases of the standard column-wise
-    # aggregates (doc ValueExpression.md §Vertical, Horizontal and
-    # Temporal Aggregation)
-    "vertical_count", "vertical_sum", "vertical_avg", "vertical_min",
-    "vertical_max", "vertical_stddev", "vertical_variance",
-    "vertical_earliest", "vertical_latest",
-    # temporal_* over a flat observation table: each row is one timed
-    # observation, so the value-history aggregates ARE the group
-    # aggregates (the cells layout goes through operators.temporal)
-    "temporal_count", "temporal_sum", "temporal_avg", "temporal_min",
-    "temporal_max", "temporal_earliest", "temporal_latest",
-    # pivot(col, value) — the reference's pivot aggregate
-    # (builtin_aggregators.cc pivot; MLDB-1323's
-    # `pivot(recipe_id, 1) as * GROUP BY user_id` idiom)
-    "pivot",
-    # beyond the reference's surface: distribution stats every
-    # corpus-quality pipeline needs (exact, sort-based — linear
-    # interpolation between order statistics, matching DuckDB's
-    # quantile_cont for oracle replay)
-    "percentile", "median",
-}
 
 _CAST_TYPES = {
     "string": "string",
@@ -101,522 +79,1115 @@ def _cxx_log(c: Column, fn) -> Column:
     )
 
 
-def _scalar_fn(name: str, args: list[Column], raw_args: list[ast.Expr]) -> Column:
-    """Scalar builtin dispatch (families from SURVEY §2.9; reference
-    registrations in sql/builtin_functions.cc)."""
-    from mldb_spark.functions.core import (
-        binomial_lb_80,
-        binomial_ub_80,
-        clamp,
-        geo_distance,
-        jaccard_index,
-        quantize,
-    )
-    from mldb_spark.functions.text import (
-        language_id,
-        normalize_text,
-        quality_score,
-        redact_pii,
-        token_count,
-        tokenize,
-        tokenize_counts,
-    )
-    from mldb_spark.functions.vector import (
-        cosine_similarity,
-        dot_product,
-    )
-    from mldb_spark.functions.web import canonicalize_url as _canonicalize_url_fn
-    from mldb_spark.functions.paths import (
-        flatten_path as _flatten_path,
-        parse_path as _parse_path,
-        path_element as _path_element,
-        path_length as _path_length,
-        stringify_path as _stringify_path,
-        unflatten_path as _unflatten_path,
+# -- builtin functions --------------------------------------------------
+#
+# Every builtin is one _BUILTINS entry holding its binding and what the
+# binder knows of it statically, as the reference registers each
+# builtin once with its arity (sql/builtin_functions.cc; families from
+# SURVEY §2.9). Binder._call looks the name up and checks the arity;
+# _static_dtype, _is_stringy, _expr_ndim, _is_const_expr,
+# _is_path_valued and aggregate detection read the entry.
+
+
+class _Builtin(NamedTuple):
+    bind: Callable[..., Column]  # (binder, call) -> Column
+    arity: tuple[int, int | None]  # (min, max); max None is variadic
+    # static result type ('' when unknown), or (binder, call) -> type
+    dtype: str | Callable[..., str] = ""
+    pure: bool = True  # constant whenever its arguments are
+    aggregate: bool = False
+    spelling: str | None = None  # registered spelling, if not lowercase
+    path: bool = False  # yields a structured path (an element array)
+
+
+_BUILTINS: dict[str, _Builtin] = {}
+
+
+def _builtin(names: str, arity: int | tuple = 1, **facts):
+    """Register the decorated (binder, call) -> Column binding under
+    each of the space-separated `names`; `arity` is an exact argument
+    count or (min, max)."""
+    if isinstance(arity, int):
+        arity = (arity, arity)
+
+    def register(bind):
+        for name in names.split():
+            assert name not in _BUILTINS, name
+            _BUILTINS[name] = _Builtin(bind, arity, **facts)
+        return bind
+
+    return register
+
+
+def _scalar(names: str, arity: int | tuple = 1, **facts):
+    """Register the decorated (args, call) -> Column binding of a
+    scalar builtin; args are the call's arguments, already bound."""
+
+    def register(fn):
+        _builtin(names, arity, **facts)(lambda b, e: fn([b.bind(a) for a in e.args], e))
+        return fn
+
+    return register
+
+
+def _simple(fns: dict[str, Callable[..., Column]], arity=1, **facts) -> None:
+    """Register scalars that apply a Column function to their bound
+    arguments."""
+    for name, fn in fns.items():
+        _scalar(name, arity, **facts)(lambda args, e, fn=fn: fn(*args))
+
+
+def _spelled(name: str) -> str:
+    return _BUILTINS[name].spelling or name
+
+
+def _is_aggregate(e: ast.FunctionCall) -> bool:
+    entry = _BUILTINS.get(e.name)
+    return entry is not None and entry.aggregate
+
+
+def _sign(c: Column) -> Column:
+    # sign: NaN for non-numeric strings and NaN inputs, NULL for NULL,
+    # else -1/0/1 (sign_function_test.py)
+    num = c.try_cast("double")
+    return (
+        F.when(c.isNull(), F.lit(None).cast("double"))
+        .when(num.isNull(), F.lit(float("nan")))
+        .otherwise(F.signum(num))
     )
 
-    simple = {
-        "abs": F.abs, "sqrt": F.sqrt, "exp": F.exp,
-        # C++ log conventions (MLDB-781-numeric-functions.js):
-        # ln(0) = -Inf, ln(negative) = NaN — Spark's log would give
-        # NULL for both
-        "ln": lambda c: _cxx_log(c, F.log),
-        "floor": F.floor, "ceil": F.ceiling, "ceiling": F.ceiling,
-        "lower": F.lower, "upper": F.upper,
-        # length counts characters and coerces numbers to their string
-        # form (length(22) = 2 — MLDB-1691)
-        "length": lambda c: F.length(c.cast("string")),
-        "trim": F.trim, "isnan": F.isnan,
-        "sin": F.sin, "cos": F.cos, "tan": F.tan, "asin": F.asin,
-        "acos": F.acos, "atan": F.atan, "sinh": F.sinh, "cosh": F.cosh,
-        "tanh": F.tanh, "to_timestamp": F.to_timestamp,
-        "date_trunc_day": lambda c: F.date_trunc("day", c),
+
+_simple({
+    "abs": F.abs, "sqrt": F.sqrt, "exp": F.exp,
+    # C++ log conventions (MLDB-781-numeric-functions.js):
+    # ln(0) = -Inf, ln(negative) = NaN — Spark's log would give
+    # NULL for both
+    "ln": lambda c: _cxx_log(c, F.log),
+    "floor": F.floor, "ceil": F.ceiling, "ceiling": F.ceiling,
+    # length counts characters and coerces numbers to their string
+    # form (length(22) = 2 — MLDB-1691)
+    "length": lambda c: F.length(c.cast("string")),
+    "isnan": F.isnan,
+    "sin": F.sin, "cos": F.cos, "tan": F.tan, "asin": F.asin,
+    "acos": F.acos, "atan": F.atan, "sinh": F.sinh, "cosh": F.cosh,
+    "tanh": F.tanh,
+    "asinh": F.asinh, "acosh": F.acosh, "atanh": F.atanh,
+    "date_trunc_day": lambda c: F.date_trunc("day", c),
+    "token_count": text.token_count, "quality_score": text.quality_score,
+    # path scalar surface (sql/path_functions; MLDB-1648):
+    # stringify renders with quoting, parse splits respecting it
+    "stringify_path": paths.stringify_path,
+    "parse_path": paths.parse_path,
+    "path_length": paths.path_length,
+    # corpus-tier scalar surface (beyond-reference): PII scrub and
+    # URL canonicalization reachable straight from SQL/REST
+    "redact_pii": text.redact_pii,
+    "canonicalize_url": web.canonicalize_url,
+    # isinf/isfinite (builtin_functions.cc math family): finite =
+    # non-null, not NaN, not +-inf
+    "isinf": lambda c: F.abs(c.cast("double")) == F.lit(float("inf")),
+    "isfinite": lambda c: c.isNotNull()
+    & ~F.isnan(c.cast("double"))
+    & (F.abs(c.cast("double")) != F.lit(float("inf"))),
+    # implicit_cast (builtin_functions.cc:970): string -> number
+    # when parseable. Typed-column divergence: the reference keeps
+    # the original string when unparseable (variant cells); a
+    # typed DataFrame column cannot mix, so unparseable -> NULL.
+    "implicit_cast": lambda c: c.try_cast("double"),
+    # hash (builtin_functions.cc:3388): deterministic value hash
+    # hash(NULL) is NULL (builtin_hash_fct_test), not the seed
+    "hash": lambda c: F.when(c.isNull(), F.lit(None).cast("long")).otherwise(
+        F.xxhash64(c)
+    ),
+    # mime_type (builtin_functions.cc:3612): magic-byte sniff
+    "mime_type": _mime_type_fn,
+    "sign": _sign,
+    "base64_encode": lambda c: F.base64(c.cast("binary")),
+    "base64_decode": F.unbase64,
+    "blob_length": lambda c: F.octet_length(c.cast("binary")).cast("long"),
+    # real Porter 1980 via Arrow-batched UDF (the reference's
+    # stemmer applied function with {algorithm: 'porter'})
+    "porter_stem": lambda c: text.porter_stem_udf()(c),
+})
+_simple({
+    "lower": F.lower, "upper": F.upper, "trim": F.trim, "md5": F.md5,
+    "normalize_text": text.normalize_text, "language_id": text.language_id,
+}, dtype="string")
+_simple({"to_timestamp": F.to_timestamp}, dtype="timestamp")
+_simple({"tokenize_counts": text.tokenize_counts}, dtype="map<string,bigint>")
+_simple({"flatten_path": paths.flatten_path}, path=True)
+_simple({"unflatten_path": paths.unflatten_path}, dtype="array<string>", path=True)
+_simple({
+    # mod() is C-truncated (sign of the DIVIDEND —
+    # builtin_functions.cc:787 uses C++ % on ints; MLDB-798), so
+    # Spark's % (same semantics), NOT pmod
+    "pow": F.pow, "power": F.pow,
+    "mod": lambda a, b: a.cast("long") % b.cast("long"),
+    "atan2": F.atan2, "levenshtein_distance": F.levenshtein,
+    "path_element": paths.path_element,
+    "dot_product": vector.dot_product,
+    "cosine_similarity": vector.cosine_similarity,
+    "binomial_lb_80": core.binomial_lb_80, "binomial_ub_80": core.binomial_ub_80,
+    # remove_prefix/suffix (builtin_functions.cc:993-1016): strip
+    # only when present, else unchanged
+    "remove_prefix": lambda c, p: F.when(
+        c.startswith(p), c.substr(F.length(p) + 1, F.length(c))
+    ).otherwise(c),
+    "remove_suffix": lambda c, s: F.when(
+        c.endswith(s), c.substr(F.lit(1), F.length(c) - F.length(s))
+    ).otherwise(c),
+}, 2)
+# element-wise embedding arithmetic (builtin_functions.cc vector_*
+# family; MLDB-923)
+_simple(
+    {n: getattr(vector, n) for n in "vector_sum vector_diff vector_product vector_quotient".split()},
+    2, dtype="array<double>",
+)
+_simple({"clamp": core.clamp}, 3)
+_simple({"geo_distance": core.geo_distance}, 4)
+_simple({"coalesce": F.coalesce}, (1, None))
+_simple({"pi": lambda: F.lit(3.141592653589793), "e": lambda: F.lit(2.718281828459045)}, 0)
+
+
+@_scalar("log", (1, 2))
+def _log(args, e):
+    # reference log family (builtin_functions.cc; MLDB-781):
+    # log(x) is BASE-10 (log(1000) = 3), log(b, x) is base-b,
+    # ln(x) is natural; 0 -> -Inf, negative -> NaN
+    if len(args) == 1:
+        return _cxx_log(args[0], F.log10)
+    # log(b, x) = ln(x)/ln(b) with libm edges on BOTH operands
+    # (ADVICE r5: x == 0 with base < 1 is +Inf, not -Inf, because
+    # ln(base) < 0; base == 1 divides by zero per IEEE)
+    lx = _cxx_log(args[1], F.log)
+    lb = _cxx_log(args[0], F.log)
+    nan = F.lit(float("nan"))
+    pinf = F.lit(float("inf"))
+    ninf = F.lit(float("-inf"))
+    return (
+        F.when(F.isnan(lx) | F.isnan(lb), nan)
+        .when(
+            lb == 0,  # base == 1: IEEE x/0 — signed Inf, 0/0 = NaN
+            F.when(lx > 0, pinf).when(lx < 0, ninf).otherwise(nan),
+        )
+        .when(
+            lx == ninf,  # x == 0: sign follows ln(base)
+            F.when(lb == ninf, nan).when(lb < 0, pinf).otherwise(ninf),
+        )
+        .otherwise(F.try_divide(lx, lb))
+    )
+
+
+@_scalar("tokenize", (1, 2), dtype="map<string,bigint>")
+def _tokenize(args, e):
+    if len(args) == 1:
         # the reference's tokenize preserves case (sql/tokenize.cc;
         # MLDB-1190 keeps 'I')
-        "tokenize": lambda c: tokenize_counts(c, lowercase=False),
-        "token_count": token_count,
-        "language_id": language_id, "quality_score": quality_score,
-        "normalize_text": normalize_text, "tokenize_counts": tokenize_counts,
-        # path scalar surface (sql/path_functions; MLDB-1648):
-        # stringify renders with quoting, parse splits respecting it
-        "stringify_path": _stringify_path,
-        "parse_path": _parse_path,
-        "path_length": _path_length,
-        "flatten_path": _flatten_path,
-        "unflatten_path": _unflatten_path,
-        # corpus-tier scalar surface (beyond-reference): PII scrub and
-        # URL canonicalization reachable straight from SQL/REST
-        "redact_pii": redact_pii,
-        "canonicalize_url": _canonicalize_url_fn,
-        "md5": F.md5,
-        "asinh": F.asinh, "acosh": F.acosh, "atanh": F.atanh,
-        # isinf/isfinite (builtin_functions.cc math family): finite =
-        # non-null, not NaN, not +-inf
-        "isinf": lambda c: F.abs(c.cast("double")) == F.lit(float("inf")),
-        "isfinite": lambda c: c.isNotNull()
-        & ~F.isnan(c.cast("double"))
-        & (F.abs(c.cast("double")) != F.lit(float("inf"))),
-        # implicit_cast (builtin_functions.cc:970): string -> number
-        # when parseable. Typed-column divergence: the reference keeps
-        # the original string when unparseable (variant cells); a
-        # typed DataFrame column cannot mix, so unparseable -> NULL.
-        "implicit_cast": lambda c: c.try_cast("double"),
-        # hash (builtin_functions.cc:3388): deterministic value hash
-        # hash(NULL) is NULL (builtin_hash_fct_test), not the seed
-        "hash": lambda c: F.when(c.isNull(), F.lit(None).cast("long")).otherwise(
-            F.xxhash64(c)
-        ),
-        # mime_type (builtin_functions.cc:3612): magic-byte sniff
-        "mime_type": _mime_type_fn,
-    }
-    binary = {
-        # mod() is C-truncated (sign of the DIVIDEND —
-        # builtin_functions.cc:787 uses C++ % on ints; MLDB-798), so
-        # Spark's % (same semantics), NOT pmod
-        "pow": F.pow, "power": F.pow,
-        "mod": lambda a, b: a.cast("long") % b.cast("long"),
-        "atan2": F.atan2,
-        "quantize": quantize, "levenshtein_distance": F.levenshtein,
-        "path_element": _path_element,
-        # regex_match is a FULL-string match in the reference
-        # (std::regex_match, builtin_functions.cc:1038); regex_search
-        # is the find-anywhere form (:1049). Spark's rlike is search
-        # semantics, so regex_match anchors the pattern.
-        # regex_search dispatches below (literal patterns get POSIX
-        # class translation)
-        "jaccard_index": jaccard_index, "dot_product": dot_product,
-        "cosine_similarity": cosine_similarity,
-        "binomial_lb_80": binomial_lb_80, "binomial_ub_80": binomial_ub_80,
-        "replace_null": lambda c, v: F.coalesce(c, v),
-        "replace_inf": lambda c, v: F.when(
-            F.abs(c.cast("double")) == F.lit(float("inf")), v
-        ).otherwise(c),
-        "replace_not_finite": lambda c, v: F.when(
-            F.isnan(c.cast("double"))
-            | (F.abs(c.cast("double")) == F.lit(float("inf"))),
-            v,
-        ).otherwise(c),
-        # remove_prefix/suffix (builtin_functions.cc:993-1016): strip
-        # only when present, else unchanged
-        "remove_prefix": lambda c, p: F.when(
-            c.startswith(p), c.substr(F.length(p) + 1, F.length(c))
-        ).otherwise(c),
-        "remove_suffix": lambda c, s: F.when(
-            c.endswith(s), c.substr(F.lit(1), F.length(c) - F.length(s))
-        ).otherwise(c),
-    }
-    if name in simple and len(args) == 1:
-        return simple[name](args[0])
-    if name in binary and len(args) == 2:
-        return binary[name](args[0], args[1])
-    if name == "log":
-        # reference log family (builtin_functions.cc; MLDB-781):
-        # log(x) is BASE-10 (log(1000) = 3), log(b, x) is base-b,
-        # ln(x) is natural; 0 -> -Inf, negative -> NaN
-        if len(args) == 1:
-            return _cxx_log(args[0], F.log10)
-        # log(b, x) = ln(x)/ln(b) with libm edges on BOTH operands
-        # (ADVICE r5: x == 0 with base < 1 is +Inf, not -Inf, because
-        # ln(base) < 0; base == 1 divides by zero per IEEE)
-        lx = _cxx_log(args[1], F.log)
-        lb = _cxx_log(args[0], F.log)
-        nan = F.lit(float("nan"))
-        pinf = F.lit(float("inf"))
-        ninf = F.lit(float("-inf"))
-        return (
-            F.when(F.isnan(lx) | F.isnan(lb), nan)
-            .when(
-                lb == 0,  # base == 1: IEEE x/0 — signed Inf, 0/0 = NaN
-                F.when(lx > 0, pinf).when(lx < 0, ninf).otherwise(nan),
-            )
-            .when(
-                lx == ninf,  # x == 0: sign follows ln(base)
-                F.when(lb == ninf, nan).when(lb < 0, pinf).otherwise(ninf),
-            )
-            .otherwise(F.try_divide(lx, lb))
+        return text.tokenize_counts(args[0], lowercase=False)
+    # tokenize(str, {splitChars, quoteChar, ngramRange,
+    # minTokenLength, limit, offset, value}) — the reference's
+    # full option row (sql/tokenize.cc; TokenizeOptions). With
+    # `value`, the output is the bag-of-words MAP with that
+    # constant value per token (the one-hot-ish form); otherwise
+    # the token array.
+    if not isinstance(e.args[1], ast.RowLiteral):
+        raise ValueError("tokenize options must be a row literal")
+    opts = {k.lower(): v for k, v in e.args[1].fields}
+
+    def lit_of(key, default=None):
+        v = opts.get(key)
+        return v.value if isinstance(v, ast.Literal) else default
+
+    ngr = (1, 1)
+    if isinstance(opts.get("ngramrange"), ast.EmbeddingLiteral):
+        items = [_literal_int(x) for x in opts["ngramrange"].items]
+        if len(items) == 2 and all(i is not None for i in items):
+            ngr = (items[0], items[1])
+    toks = text.tokenize_opts(
+        args[0],
+        split_chars=lit_of("splitchars"),
+        min_token_length=int(lit_of("mintokenlength", 1)),
+        ngram_range=ngr,
+        limit=(int(lit_of("limit")) if lit_of("limit") is not None else None),
+        offset=int(lit_of("offset", 0)),
+        quote_char=lit_of("quotechar"),
+        lowercase=False,
+    )
+    distinct = F.array_distinct(toks)
+    if "value" in opts:
+        val = opts["value"]
+        if not isinstance(val, ast.Literal):
+            raise ValueError("tokenize value option must be a literal")
+        return F.map_from_arrays(
+            distinct, F.transform(distinct, lambda _t: F.lit(val.value))
         )
-    if name == "tokenize" and len(args) == 2:
-        # tokenize(str, {splitChars, quoteChar, ngramRange,
-        # minTokenLength, limit, offset, value}) — the reference's
-        # full option row (sql/tokenize.cc; TokenizeOptions). With
-        # `value`, the output is the bag-of-words MAP with that
-        # constant value per token (the one-hot-ish form); otherwise
-        # the token array.
-        from mldb_spark.functions.text import tokenize_opts
+    # the reference's tokenize() output is the bag-of-words row
+    # token -> count (sql/tokenize.cc; MLDB-907-tokenize.py),
+    # mapped here to MAP<token, count>. Pipelines that need the
+    # raw token stream use the Python-level text.tokenize array
+    # (exploded), not this scalar SQL form. Single-pass aggregate
+    # (optimization r10): the old per-distinct filter re-ran the
+    # regex tokenizer once per distinct token — quadratic.
+    return text.token_counts_map(toks)
 
-        if not isinstance(raw_args[1], ast.RowLiteral):
-            raise ValueError("tokenize options must be a row literal")
-        opts = {k.lower(): v for k, v in raw_args[1].fields}
 
-        def lit_of(key, default=None):
-            v = opts.get(key)
-            return v.value if isinstance(v, ast.Literal) else default
+# regex_match is a FULL-string match in the reference
+# (std::regex_match, builtin_functions.cc:1038); regex_search is the
+# find-anywhere form (:1049). Spark's rlike is search semantics, so
+# regex_match anchors the pattern; literal patterns get POSIX class
+# translation.
+@_scalar("regex_search", 2)
+def _regex_search(args, e):
+    if isinstance(e.args[1], ast.Literal):
+        return F.rlike(args[0], F.lit(_posix_re(str(e.args[1].value))))
+    return F.rlike(args[0], args[1])
 
-        ngr = (1, 1)
-        if isinstance(opts.get("ngramrange"), ast.EmbeddingLiteral):
-            items = [_literal_int(x) for x in opts["ngramrange"].items]
-            if len(items) == 2 and all(i is not None for i in items):
-                ngr = (items[0], items[1])
-        toks = tokenize_opts(
-            args[0],
-            split_chars=lit_of("splitchars"),
-            min_token_length=int(lit_of("mintokenlength", 1)),
-            ngram_range=ngr,
-            limit=(int(lit_of("limit")) if lit_of("limit") is not None else None),
-            offset=int(lit_of("offset", 0)),
-            quote_char=lit_of("quotechar"),
-            lowercase=False,
-        )
-        distinct = F.array_distinct(toks)
-        if "value" in opts:
-            val = opts["value"]
-            if not isinstance(val, ast.Literal):
-                raise ValueError("tokenize value option must be a literal")
-            return F.map_from_arrays(
-                distinct, F.transform(distinct, lambda _t: F.lit(val.value))
-            )
-        # the reference's tokenize() output is the bag-of-words row
-        # token -> count (sql/tokenize.cc; MLDB-907-tokenize.py),
-        # mapped here to MAP<token, count>. Pipelines that need the
-        # raw token stream use the Python-level text.tokenize array
-        # (exploded), not this scalar SQL form. Single-pass aggregate
-        # (optimization r10): the old per-distinct filter re-ran the
-        # regex tokenizer once per distinct token — quadratic.
-        from mldb_spark.functions.text import token_counts_map
 
-        return token_counts_map(toks)
-    if name == "regex_search":
-        if isinstance(raw_args[1], ast.Literal):
-            return F.rlike(args[0], F.lit(_posix_re(str(raw_args[1].value))))
-        return F.rlike(args[0], args[1])
-    if name == "regex_match":
-        if isinstance(raw_args[1], ast.Literal):
-            return args[0].rlike(f"^(?:{_posix_re(str(raw_args[1].value))})$")
-        # dynamic pattern (MLDB-1631 builds one from rowName());
-        # rlike accepts a column regexp — anchor it the same way
-        return F.rlike(
-            args[0], F.concat(F.lit("^(?:"), args[1], F.lit(")$"))
-        )
-    if name in ("date_part", "date_trunc"):
-        # date_part/date_trunc(unit, ts [, tzoffset]) — unit and the
-        # optional timezone offset are bind-time literals, with the
-        # reference's 16-unit table (types/date.cc:714-846; MLDB-906
-        # pins 0-based doy/week, the iso family and the int-division
-        # quarter)
-        from mldb_spark.functions.core import (
-            mldb_date_part,
-            mldb_date_trunc,
-            tz_offset_minutes,
-        )
+@_scalar("regex_match", 2)
+def _regex_match(args, e):
+    if isinstance(e.args[1], ast.Literal):
+        return args[0].rlike(f"^(?:{_posix_re(str(e.args[1].value))})$")
+    # dynamic pattern (MLDB-1631 builds one from rowName());
+    # rlike accepts a column regexp — anchor it the same way
+    return F.rlike(args[0], F.concat(F.lit("^(?:"), args[1], F.lit(")$")))
 
-        if not isinstance(raw_args[0], ast.Literal):
-            raise ValueError(f"{name}(unit, ts) needs a literal unit")
+
+@_scalar("regex_replace", 3, dtype="string")
+def _regex_replace(args, e):
+    return F.regexp_replace(
+        args[0], _posix_re(str(e.args[1].value)), e.args[2].value  # type: ignore[union-attr]
+    )
+
+
+def _date_unit(fn):
+    """date_part/date_trunc(unit, ts [, tzoffset]) — unit and the
+    optional timezone offset are bind-time literals, with the
+    reference's 16-unit table (types/date.cc:714-846; MLDB-906 pins
+    0-based doy/week, the iso family and the int-division quarter)."""
+
+    def bind(args, e):
+        if not isinstance(e.args[0], ast.Literal):
+            raise ValueError(f"{e.name}(unit, ts) needs a literal unit")
         tz_min = 0
         if len(args) == 3:
-            if not isinstance(raw_args[2], ast.Literal):
-                raise ValueError(f"{name} timezone must be a literal string")
-            tz_min = tz_offset_minutes(str(raw_args[2].value))
-        fn = mldb_date_part if name == "date_part" else mldb_date_trunc
-        return fn(str(raw_args[0].value), args[1].cast("timestamp"), tz_min)
-    if name in ("vector_sum", "vector_diff", "vector_product", "vector_quotient"):
-        # element-wise embedding arithmetic (builtin_functions.cc
-        # vector_* family; MLDB-923)
-        from mldb_spark.functions import vector as _vec
+            if not isinstance(e.args[2], ast.Literal):
+                raise ValueError(f"{e.name} timezone must be a literal string")
+            tz_min = core.tz_offset_minutes(str(e.args[2].value))
+        return fn(str(e.args[0].value), args[1].cast("timestamp"), tz_min)
 
-        return getattr(_vec, name)(args[0], args[1])
-    if name in ("norm", "normalize"):
-        # norm/normalize(v [, p]) with the reference's p cases
-        # (builtin_functions.cc:1600-1749; MLDB-953): p=0 non-zero
-        # count, p=inf max element, else the p-power root; p is a
-        # bind-time constant because it selects the formula
-        from mldb_spark.functions.vector import normalize_p, p_norm
+    return bind
 
+
+_scalar("date_part", (2, 3))(_date_unit(core.mldb_date_part))
+_scalar("date_trunc", (2, 3), dtype="timestamp")(_date_unit(core.mldb_date_trunc))
+
+
+def _p_norm(normalize: bool):
+    """norm/normalize(v [, p]) with the reference's p cases
+    (builtin_functions.cc:1600-1749; MLDB-953): p=0 non-zero count,
+    p=inf max element, else the p-power root; p is a bind-time
+    constant because it selects the formula."""
+
+    def bind(args, e):
         p = 2.0
         if len(args) == 2:
-            if not isinstance(raw_args[1], ast.Literal):
-                raise ValueError(f"{name}(v, p) needs a literal power")
-            p = float(raw_args[1].value)
-        if isinstance(raw_args[0], ast.EmbeddingLiteral) and any(
-            isinstance(it, ast.EmbeddingLiteral) for it in raw_args[0].items
+            if not isinstance(e.args[1], ast.Literal):
+                raise ValueError(f"{e.name}(v, p) needs a literal power")
+            p = float(e.args[1].value)
+        if isinstance(e.args[0], ast.EmbeddingLiteral) and any(
+            isinstance(it, ast.EmbeddingLiteral) for it in e.args[0].items
         ):
             # 2-D embedding (tensor) literal (MLDB-1317): the norm
             # reduces over ALL elements; normalize keeps the shape
-            flat = F.flatten(args[0])
-            n = p_norm(flat, p)
-            if name == "norm":
+            n = vector.p_norm(F.flatten(args[0]), p)
+            if not normalize:
                 return n
             return F.transform(
                 args[0],
-                lambda row: F.transform(
-                    row, lambda x: x.cast("double") / n
-                ),
+                lambda row: F.transform(row, lambda x: x.cast("double") / n),
             )
-        return p_norm(args[0], p) if name == "norm" else normalize_p(args[0], p)
-    if name == "sign":
-        # sign: NaN for non-numeric strings and NaN inputs, NULL for
-        # NULL, else -1/0/1 (sign_function_test.py)
-        num = args[0].try_cast("double")
-        return (
-            F.when(args[0].isNull(), F.lit(None).cast("double"))
-            .when(num.isNull(), F.lit(float("nan")))
-            .otherwise(F.signum(num))
-        )
-    if name == "split_part":
-        # split_part(str, delim, n) (builtin_functions.cc:1991);
-        # 1-based n, negative counts from the end. The 2-arg form
-        # returns ALL parts (the reference emits a row of parts,
-        # MLDB-2108; here the analog is the array, 0-indexable with
-        # [n])
-        if len(args) == 2:
-            if not isinstance(raw_args[1], ast.Literal):
-                raise ValueError("split_part(str, delim) needs a literal delimiter")
-            import re as _re
+        if normalize:
+            return vector.normalize_p(args[0], p)
+        return vector.p_norm(args[0], p)
 
-            return F.split(args[0], _re.escape(str(raw_args[1].value)))
-        return F.split_part(args[0], args[1], args[2].cast("int"))
-    if name == "token_extract":
-        # token_extract(str, nth [, {options}]) (tokenize.cc /
-        # builtin_functions.cc:1956): nth token through the SAME
-        # TokenizeOptions surface as tokenize (splitChars, quoteChar,
-        # minTokenLength); default ',' split, negative nth from the
-        # end (0-based like embedding paths)
-        from mldb_spark.functions.text import tokenize_opts
+    return bind
 
-        split_chars, quote_char, min_len = ",", None, 1
-        if len(raw_args) == 3 and isinstance(raw_args[2], ast.RowLiteral):
-            opts = {k.lower(): v for k, v in raw_args[2].fields}
-            if isinstance(opts.get("splitchars"), ast.Literal):
-                split_chars = str(opts["splitchars"].value)
-            if isinstance(opts.get("quotechar"), ast.Literal):
-                quote_char = str(opts["quotechar"].value)
-            if isinstance(opts.get("mintokenlength"), ast.Literal):
-                min_len = int(opts["mintokenlength"].value)
-        toks = tokenize_opts(
-            args[0],
-            split_chars=split_chars,
-            min_token_length=min_len,
-            quote_char=quote_char,
-            lowercase=False,
-        )
-        n = _literal_int(raw_args[1])
-        if n is None:
-            raise ValueError("token_extract needs a literal token index")
-        return F.element_at(toks, n + 1 if n >= 0 else n)
-    if name == "extract_column":
-        # extract_column(name, row) (builtin_functions.cc:2400): pull
-        # one named field out of a row value
-        if not isinstance(raw_args[0], ast.Literal):
-            raise ValueError("extract_column(name, row) needs a literal name")
-        return args[1].getItem(str(raw_args[0].value))
-    if name == "round":
-        if len(args) == 1:
-            # 1-arg form: nearest integer (MLDB-1666's
-            # round(geo_distance(...) / 1000))
-            return F.round(args[0])
-        if len(args) != 2 or not isinstance(raw_args[1], ast.Literal):
-            raise ValueError("round(x, d) needs a literal digit count")
-        return F.round(args[0], int(raw_args[1].value))
-    if name == "clamp":
-        return clamp(args[0], args[1], args[2])
-    if name == "replace_nan":
-        return F.when(F.isnan(args[0]), args[1]).otherwise(args[0])
-    if name == "regex_replace":
-        return F.regexp_replace(
-            args[0], _posix_re(str(raw_args[1].value)), raw_args[2].value  # type: ignore[union-attr]
-        )
-    if name == "geo_distance":
-        return geo_distance(*args)
-    if name in ("impulse", "shifted_impulse", "fft", "amplitude", "phase"):
-        # signal family (sql/builtin_signal_functions.cc; MLDB-1972)
-        from mldb_spark.functions import signal as _sig
 
-        if name in ("impulse", "shifted_impulse"):
-            n = _literal_int(raw_args[0])
-            pos = _literal_int(raw_args[1]) if len(raw_args) > 1 else 0
-            if n is None or pos is None:
-                raise ValueError(f"{name}() needs literal integer arguments")
-            return _sig.impulse(n, pos)
-        if name == "fft":
-            direction = "forward"
-            if len(raw_args) > 1:
-                if not (
-                    isinstance(raw_args[1], ast.Literal)
-                    and isinstance(raw_args[1].value, str)
-                ):
-                    raise ValueError("fft() direction must be a literal string")
-                direction = raw_args[1].value
-            if direction == "forward":
-                return _sig.fft(args[0])
-            if direction == "backward":
-                return _sig.ifft_real(args[0]["re"], args[0]["im"])
-            raise ValueError(f"unknown fft direction {direction!r}")
-        return (_sig.amplitude if name == "amplitude" else _sig.phase)(args[0])
-    if name == "coalesce":
-        return F.coalesce(*args)
-    if name == "concat":
-        return F.concat(*args)
-    if name == "substr" or name == "substring":
-        return F.substring(args[0], int(raw_args[1].value), int(raw_args[2].value))  # type: ignore[arg-type]
-    if name == "left":
-        return F.substring(args[0], 1, int(raw_args[1].value))  # type: ignore[arg-type]
-    if name == "horizontal_sum":
-        # NULL cells are absent in the reference's sparse rows — skip
-        # them rather than poisoning the fold
-        return F.aggregate(
-            F.filter(F.array(*args), lambda x: x.isNotNull()),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    if name == "horizontal_count":
-        return F.size(F.filter(F.array(*args), lambda x: x.isNotNull())).cast("long")
-    if name == "horizontal_min":
-        return F.least(*args)
-    if name == "horizontal_max":
-        return F.greatest(*args)
-    if name == "horizontal_avg":
-        # try_divide: an all-NULL row has zero countable cells and
-        # must yield NULL, not a division error
-        arr = F.filter(F.array(*args), lambda x: x.isNotNull())
-        return F.try_divide(
-            F.aggregate(arr, F.lit(0.0), lambda a, x: a + x), F.size(arr)
-        )
-    if name == "horizontal_string_agg":
-        # horizontal_string_agg(<row>[, sep]): values coerced to
-        # string, null cells skipped (concat_ws's native behavior);
-        # the separator, when present, is a trailing literal
-        if raw_args and isinstance(raw_args[-1], ast.Literal):
-            sep, vals = str(raw_args[-1].value), args[:-1]
-        else:
-            sep, vals = ",", args
-        return F.concat_ws(sep, *[a.cast("string") for a in vals])
-    if name == "horizontal_earliest":
-        # wide rows carry ONE timestamp, so every cell ties; the
-        # deterministic tiebreak is column order (first non-null)
-        return F.coalesce(*args)
-    if name == "horizontal_latest":
-        return F.coalesce(*reversed(args))
-    if name == "pi":
-        return F.lit(3.141592653589793)
-    if name == "e":
-        return F.lit(2.718281828459045)
-    if name == "try":
-        # try(expr[, fallback]) — reference row-level error absorber
-        # (builtin_functions.cc:3447). PARTIAL: this engine binds
-        # fallible exprs through NULL-on-error forms (try_cast,
-        # try_divide, try_element_at), so try() reduces to coalesce
-        # over the already-absorbed NULL. Exprs that THROW in Spark
-        # (ANSI overflow, malformed regex) are not absorbed — route
-        # those through an explicit try_* function instead.
-        return F.coalesce(*args) if len(args) > 1 else args[0]
-    if name == "base64_encode":
-        return F.base64(args[0].cast("binary"))
-    if name == "base64_decode":
-        return F.unbase64(args[0])
-    if name == "blob_length":
-        return F.octet_length(args[0].cast("binary")).cast("long")
-    if name == "print_json":
-        # struct/map/array inputs serialize structurally; scalars are
-        # their JSON literal form
-        if raw_args and isinstance(raw_args[0], (ast.RowLiteral, ast.EmbeddingLiteral)):
-            return F.to_json(args[0])
-        return F.to_json(F.struct(args[0].alias("v"))).substr(F.lit(6), F.length(F.to_json(F.struct(args[0].alias("v")))) - 6)
-    if name == "porter_stem":
-        # real Porter 1980 via Arrow-batched UDF (the reference's
-        # stemmer applied function with {algorithm: 'porter'})
-        from mldb_spark.functions.text import porter_stem_udf
+_scalar("norm", (1, 2))(_p_norm(False))
+_scalar("normalize", (1, 2), dtype="array<double>")(_p_norm(True))
 
-        return porter_stem_udf()(args[0])
-    if name == "parse_json":
-        # full flattening to dotted paths in a MAP<string,string>
-        # (TypeSystem.md complex-type flattening): nested objects and
-        # — with arrays='parse' (the default) — array elements under
-        # their 0-based index (friends.0.name, MLDB-1779/1275);
-        # arrays='encode' one-hots scalar arrays and renders object
-        # arrays as JSON text. Malformed input parses to NULL (the
-        # ignoreErrors behavior). Arrow-batched UDF — parse_json is an
-        # import-shaped function, not a hot scan path.
-        from mldb_spark.functions.text import parse_json_flatten_udf
 
-        arrays_mode = "parse"
-        if len(raw_args) == 2:
-            if not isinstance(raw_args[1], ast.RowLiteral):
-                raise ValueError("parse_json options must be a row literal")
-            for k, v in raw_args[1].fields:
-                if k.lower() == "arrays":
-                    if not isinstance(v, ast.Literal):
-                        raise ValueError(
-                            "parse_json arrays option must be a quoted "
-                            "string ('parse' or 'encode')"
-                        )
-                    if str(v.value) not in ("parse", "encode"):
-                        raise ValueError(
-                            f"unknown parse_json arrays mode {v.value!r}"
-                        )
-                    arrays_mode = str(v.value)
-        return parse_json_flatten_udf(arrays_mode)(args[0])
-    if name == "canonicalize_url":
-        from mldb_spark.functions.web import canonicalize_url
+@_scalar(
+    "split_part", (2, 3),
+    dtype=lambda b, e: "array<string>" if len(e.args) == 2 else "",
+)
+def _split_part(args, e):
+    # split_part(str, delim, n) (builtin_functions.cc:1991);
+    # 1-based n, negative counts from the end. The 2-arg form
+    # returns ALL parts (the reference emits a row of parts,
+    # MLDB-2108; here the analog is the array, 0-indexable with [n])
+    if len(args) == 2:
+        if not isinstance(e.args[1], ast.Literal):
+            raise ValueError("split_part(str, delim) needs a literal delimiter")
+        return F.split(args[0], re.escape(str(e.args[1].value)))
+    return F.split_part(args[0], args[1], args[2].cast("int"))
 
-        return canonicalize_url(args[0])
-    if name == "extract_domain":
-        # http family (sql/builtin_http_functions.cc:38-77); the
-        # options row literal {removeSubdomain: true|1} is a bind-time
-        # constant, like the reference's jsonDecode of arg 2
-        from mldb_spark.functions.web import extract_domain
 
-        remove_sub = False
-        if len(raw_args) == 2:
-            if not isinstance(raw_args[1], ast.RowLiteral):
-                raise ValueError(
-                    "extract_domain options must be a {removeSubdomain: ...} row"
-                )
-            opts = {k.lower(): v for k, v in raw_args[1].fields}
-            lit = opts.get("removesubdomain")
-            remove_sub = bool(isinstance(lit, ast.Literal) and lit.value)
-        # a scheme-less input is a hard error, not a NULL
-        # (MLDB-1753/1772: "Attempt to create a URL without a scheme")
-        checked = F.when(
-            args[0].isNotNull()
-            & ~args[0].rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://"),
-            F.raise_error(
-                F.concat(
-                    F.lit("Attempt to create a URL without a scheme: "),
-                    args[0],
-                )
-            ),
-        ).otherwise(args[0])
-        return extract_domain(checked, remove_sub)
-    if name in simple:
+@_scalar("token_extract", (2, 3))
+def _token_extract(args, e):
+    # token_extract(str, nth [, {options}]) (tokenize.cc /
+    # builtin_functions.cc:1956): nth token through the SAME
+    # TokenizeOptions surface as tokenize (splitChars, quoteChar,
+    # minTokenLength); default ',' split, negative nth from the end
+    # (0-based like embedding paths)
+    split_chars, quote_char, min_len = ",", None, 1
+    if len(e.args) == 3 and isinstance(e.args[2], ast.RowLiteral):
+        opts = {k.lower(): v for k, v in e.args[2].fields}
+        if isinstance(opts.get("splitchars"), ast.Literal):
+            split_chars = str(opts["splitchars"].value)
+        if isinstance(opts.get("quotechar"), ast.Literal):
+            quote_char = str(opts["quotechar"].value)
+        if isinstance(opts.get("mintokenlength"), ast.Literal):
+            min_len = int(opts["mintokenlength"].value)
+    toks = text.tokenize_opts(
+        args[0],
+        split_chars=split_chars,
+        min_token_length=min_len,
+        quote_char=quote_char,
+        lowercase=False,
+    )
+    n = _literal_int(e.args[1])
+    if n is None:
+        raise ValueError("token_extract needs a literal token index")
+    return F.element_at(toks, n + 1 if n >= 0 else n)
+
+
+@_scalar("extract_column", 2)
+def _extract_column(args, e):
+    # extract_column(name, row) (builtin_functions.cc:2400): pull one
+    # named field out of a row value
+    if not isinstance(e.args[0], ast.Literal):
+        raise ValueError("extract_column(name, row) needs a literal name")
+    return args[1].getItem(str(e.args[0].value))
+
+
+@_scalar("round", (1, 2))
+def _round(args, e):
+    if len(args) == 1:
+        # 1-arg form: nearest integer (MLDB-1666's
+        # round(geo_distance(...) / 1000))
+        return F.round(args[0])
+    if not isinstance(e.args[1], ast.Literal):
+        raise ValueError("round(x, d) needs a literal digit count")
+    return F.round(args[0], int(e.args[1].value))
+
+
+# signal family (sql/builtin_signal_functions.cc; MLDB-1972)
+def _signal():
+    from mldb_spark.functions import signal
+
+    return signal
+
+
+@_scalar("impulse", dtype="array<double>")
+def _impulse(args, e):
+    n = _literal_int(e.args[0])
+    pos = _literal_int(e.args[1]) if len(e.args) > 1 else 0
+    if n is None or pos is None:
+        raise ValueError(f"{e.name}() needs literal integer arguments")
+    return _signal().impulse(n, pos)
+
+
+_scalar("shifted_impulse", 2, dtype="array<double>")(_impulse)
+
+
+def _fft_backward(e: ast.FunctionCall) -> bool:
+    if len(e.args) < 2:
+        return False
+    d = e.args[1]
+    if not (isinstance(d, ast.Literal) and isinstance(d.value, str)):
+        raise ValueError("fft() direction must be a literal string")
+    if d.value not in ("forward", "backward"):
+        raise ValueError(f"unknown fft direction {d.value!r}")
+    return d.value == "backward"
+
+
+@_scalar(
+    "fft", (1, 2),
+    dtype=lambda b, e: (
+        "array<double>" if _fft_backward(e)
+        else "struct<re:array<double>,im:array<double>>"
+    ),
+)
+def _fft(args, e):
+    if _fft_backward(e):
+        return _signal().ifft_real(args[0]["re"], args[0]["im"])
+    return _signal().fft(args[0])
+
+
+_simple({
+    "amplitude": lambda c: _signal().amplitude(c),
+    "phase": lambda c: _signal().phase(c),
+}, dtype="array<double>")
+
+
+_simple(
+    {"concat": F.concat}, (1, None),
+    # strings concatenate; embeddings (arrays) append
+    dtype=lambda b, e: (_array_dtype(b._expr_ndim(e.args[0])) if e.args else "") or "string",
+)
+
+
+def _array_dtype(ndim: int) -> str:
+    """The static type of an ndim-deep embedding ('' when ndim < 1)."""
+    return "array<" * ndim + "double" + ">" * ndim if ndim > 0 else ""
+
+
+@_scalar("substr substring", 3, dtype="string")
+def _substring(args, e):
+    return F.substring(args[0], int(e.args[1].value), int(e.args[2].value))  # type: ignore[union-attr]
+
+
+@_scalar("left", 2, dtype="string")
+def _left(args, e):
+    return F.substring(args[0], 1, int(e.args[1].value))  # type: ignore[union-attr]
+
+
+@_scalar("try", (1, 2))
+def _try(args, e):
+    # try(expr[, fallback]) — reference row-level error absorber
+    # (builtin_functions.cc:3447). PARTIAL: this engine binds
+    # fallible exprs through NULL-on-error forms (try_cast,
+    # try_divide, try_element_at), so try() reduces to coalesce
+    # over the already-absorbed NULL. Exprs that THROW in Spark
+    # (ANSI overflow, malformed regex) are not absorbed — route
+    # those through an explicit try_* function instead.
+    return F.coalesce(*args) if len(args) > 1 else args[0]
+
+
+@_scalar("print_json")
+def _print_json(args, e):
+    # struct/map/array inputs serialize structurally; scalars are
+    # their JSON literal form
+    if isinstance(e.args[0], (ast.RowLiteral, ast.EmbeddingLiteral)):
+        return F.to_json(args[0])
+    return F.to_json(F.struct(args[0].alias("v"))).substr(F.lit(6), F.length(F.to_json(F.struct(args[0].alias("v")))) - 6)
+
+
+@_scalar("parse_json", (1, 2))
+def _parse_json(args, e):
+    # full flattening to dotted paths in a MAP<string,string>
+    # (TypeSystem.md complex-type flattening): nested objects and
+    # — with arrays='parse' (the default) — array elements under
+    # their 0-based index (friends.0.name, MLDB-1779/1275);
+    # arrays='encode' one-hots scalar arrays and renders object
+    # arrays as JSON text. Malformed input parses to NULL (the
+    # ignoreErrors behavior). Arrow-batched UDF — parse_json is an
+    # import-shaped function, not a hot scan path.
+    arrays_mode = "parse"
+    if len(e.args) == 2:
+        if not isinstance(e.args[1], ast.RowLiteral):
+            raise ValueError("parse_json options must be a row literal")
+        for k, v in e.args[1].fields:
+            if k.lower() == "arrays":
+                if not isinstance(v, ast.Literal):
+                    raise ValueError(
+                        "parse_json arrays option must be a quoted "
+                        "string ('parse' or 'encode')"
+                    )
+                if str(v.value) not in ("parse", "encode"):
+                    raise ValueError(
+                        f"unknown parse_json arrays mode {v.value!r}"
+                    )
+                arrays_mode = str(v.value)
+    return text.parse_json_flatten_udf(arrays_mode)(args[0])
+
+
+@_scalar("extract_domain", (1, 2))
+def _extract_domain(args, e):
+    # http family (sql/builtin_http_functions.cc:38-77); the options
+    # row literal {removeSubdomain: true|1} is a bind-time constant,
+    # like the reference's jsonDecode of arg 2
+    remove_sub = False
+    if len(e.args) == 2:
+        if not isinstance(e.args[1], ast.RowLiteral):
+            raise ValueError(
+                "extract_domain options must be a {removeSubdomain: ...} row"
+            )
+        opts = {k.lower(): v for k, v in e.args[1].fields}
+        lit = opts.get("removesubdomain")
+        remove_sub = bool(isinstance(lit, ast.Literal) and lit.value)
+    # a scheme-less input is a hard error, not a NULL
+    # (MLDB-1753/1772: "Attempt to create a URL without a scheme")
+    checked = F.when(
+        args[0].isNotNull() & ~args[0].rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://"),
+        F.raise_error(
+            F.concat(F.lit("Attempt to create a URL without a scheme: "), args[0])
+        ),
+    ).otherwise(args[0])
+    return web.extract_domain(checked, remove_sub)
+
+
+@_builtin("jaccard_index", 2)
+def _jaccard_index(b, e):
+    # the reference's jaccard operates on rows-as-SETS (MLDB-1668:
+    # jaccard_index(tokenize(a), tokenize(b))) — a bag-of-words MAP
+    # argument contributes its key set
+    args = [b.bind(a) for a in e.args]
+    return core.jaccard_index(*[
+        F.map_keys(c) if b._static_dtype(a).startswith("map") else c
+        for a, c in zip(e.args, args)
+    ])
+
+
+@_builtin(
+    "quantize", 2,
+    # shape-preserving (scalar or element-wise)
+    dtype=lambda b, e: b._static_dtype(e.args[0]) if e.args else "",
+)
+def _quantize(b, e):
+    args = [b.bind(a) for a in e.args]
+    if b._static_dtype(e.args[0]).startswith("array"):
+        # element-wise over embeddings (MLDB-1972's
+        # quantize(fft(..., 'backward'), 0.001))
+        return F.transform(args[0], lambda x: core.quantize(x, args[1]))
+    return core.quantize(args[0], args[1])
+
+
+def _elementwise(fn):
+    """The replace_* family: fn(x, v) distributed over an embedding's
+    elements and a row literal's fields (builtin_functions.cc
+    replaceIfNaN et al. unwrap structured values; MLDB-917 pins the
+    behavior for both [] and {} forms)."""
+
+    def bind(b, e):
+        arg0, repl = e.args[0], b.bind(e.args[1])
+        if isinstance(arg0, ast.EmbeddingLiteral) or b._static_dtype(arg0).startswith("array"):
+            return F.transform(b.bind(arg0), lambda x: fn(x, repl))
+        if isinstance(arg0, ast.RowLiteral):
+            # _row_literal_fields expands {*}/{p*} wildcard fields
+            # (MLDB-1781's replace_nan({*}, -1))
+            return F.struct(
+                *[fn(c, repl).alias(k) for k, c in b._row_literal_fields(arg0)]
+            )
+        return fn(b.bind(arg0), repl)
+
+    return bind
+
+
+for _name, _fn in {
+    "replace_nan": lambda c, v: F.when(F.isnan(c), v).otherwise(c),
+    "replace_null": lambda c, v: F.coalesce(c, v),
+    "replace_inf": lambda c, v: F.when(
+        F.abs(c.cast("double")) == F.lit(float("inf")), v
+    ).otherwise(c),
+    "replace_not_finite": lambda c, v: F.when(
+        F.isnan(c.cast("double"))
+        | (F.abs(c.cast("double")) == F.lit(float("inf"))),
+        v,
+    ).otherwise(c),
+}.items():
+    _builtin(_name, 2)(_elementwise(_fn))
+
+
+def _non_null(arr: Column) -> Column:
+    return F.filter(arr, lambda x: x.isNotNull())
+
+
+def _horizontal(over_values, over_cells=None, empty=lambda: F.lit(None)):
+    """horizontal_*(<row>) / horizontal_*(v1, v2, ...): over_values
+    reduces the flat value list (given with the raw arguments, None
+    for expanded row cells); over_cells, where the family has it,
+    reduces the non-null cells of one embedding or MAP-valued row."""
+
+    def bind(b, e):
+        if over_cells is not None and len(e.args) == 1:
+            dt = b._static_dtype(e.args[0])
+            if dt.startswith(("map", "array")):
+                # a dynamic ROW carried as a MAP (MLDB-2022's
+                # row_dataset($input) rows) reduces its values like a
+                # row's cells; an embedding value reduces its elements
+                # (MLDB-953's horizontal_sum(normalize(...) - v))
+                cells = b.bind(e.args[0])
+                if dt.startswith("map"):
+                    cells = F.map_values(cells)
+                return over_cells(_non_null(cells))
+        if e.args and isinstance(e.args[0], ast.RowLiteral):
+            # horizontal_* take a ROW argument (doc ValueExpression.md
+            # §Horizontal operations; MLDB-461/2111): expand the row's
+            # cells — including {*}/{x*} wildcards — into the flat
+            # value list. Rows are ordered containers sorted by COLUMN
+            # NAME (MLDB-1554: horizontal_string_agg({who, what, how})
+            # concatenates how, what, who), so the expansion name-sorts.
+            vals = [c for _, c in sorted(b._row_literal_fields(e.args[0]), key=lambda kv: kv[0])]
+            if not vals:
+                # wildcard matched no columns (MLDB-461's
+                # {superPatate*}): count 0, sum 0, the rest NULL
+                return empty()
+            rest = [b.bind(a) for a in e.args[1:]]
+            return over_values(vals + rest, [None] * len(vals) + list(e.args[1:]))
+        return over_values([b.bind(a) for a in e.args], e.args)
+
+    return bind
+
+
+def _horizontal_string_agg(args, raw):
+    # horizontal_string_agg(<row>[, sep]): values coerced to string,
+    # null cells skipped (concat_ws's native behavior); the
+    # separator, when present, is a trailing literal
+    if raw and isinstance(raw[-1], ast.Literal):
+        sep, vals = str(raw[-1].value), args[:-1]
+    else:
+        sep, vals = ",", args
+    return F.concat_ws(sep, *[a.cast("string") for a in vals])
+
+
+def _total(arr: Column, cast: bool) -> Column:
+    return F.aggregate(arr, F.lit(0.0), lambda a, x: a + (x.cast("double") if cast else x))
+
+
+def _folds(fold):
+    """(over_values, over_cells) of a fold over non-null values: NULL
+    cells are absent in the reference's sparse rows — skip them rather
+    than poisoning the fold; the cells of an embedding or a MAP are
+    cast to double."""
+    return lambda args, raw: fold(_non_null(F.array(*args)), False), lambda arr: fold(arr, True)
+
+
+for _name, _horiz in {
+    "horizontal_sum": _horizontal(*_folds(_total), lambda: F.lit(0.0)),
+    "horizontal_count": _horizontal(
+        *_folds(lambda arr, cast: F.size(arr).cast("long")), lambda: F.lit(0).cast("long")
+    ),
+    "horizontal_min": _horizontal(lambda args, raw: F.least(*args), F.array_min),
+    "horizontal_max": _horizontal(lambda args, raw: F.greatest(*args), F.array_max),
+    # try_divide: an all-NULL row has zero countable cells and must
+    # yield NULL, not a division error
+    "horizontal_avg": _horizontal(
+        *_folds(lambda arr, cast: F.try_divide(_total(arr, cast), F.size(arr)))
+    ),
+    "horizontal_string_agg": _horizontal(
+        _horizontal_string_agg, empty=lambda: F.lit("")
+    ),
+    # wide rows carry ONE timestamp, so every cell ties; the
+    # deterministic tiebreak is column order (first non-null)
+    "horizontal_earliest": _horizontal(lambda args, raw: F.coalesce(*args)),
+    "horizontal_latest": _horizontal(lambda args, raw: F.coalesce(*reversed(args))),
+}.items():
+    _builtin(_name, (1, None))(_horiz)
+
+
+# -- row-context builtins: they read the binder's relation -------------
+
+
+@_builtin("rowname", 0, dtype="string", pure=False, spelling="rowName")
+def _row_name(b, e):
+    if b.row_name_col:
+        return F.col(b.row_name_col)
+    raise ValueError("rowName() needs a dataset with a rowName column")
+
+
+_builtin("rowhash", 0, pure=False, spelling="rowHash")(
+    lambda b, e: F.xxhash64(F.col(b.row_name_col) if b.row_name_col else F.lit(None))
+)
+
+
+def _side_row_name(side: str):
+    """leftRowName()/rightRowName(): the top-level join side's row
+    name (MLDB-1710)."""
+
+    def bind(b, e):
+        src = b.side_row_names.get(side)
+        if src is None:
+            raise ValueError(
+                f"Function '{_spelled(e.name)}' is not available outside of a join"
+            )
+        return F.col(src)
+
+    return bind
+
+
+_builtin("leftrowname", 0, dtype="string", pure=False, spelling="leftRowName")(
+    _side_row_name("__left")
+)
+_builtin("rightrowname", 0, dtype="string", pure=False, spelling="rightRowName")(
+    _side_row_name("__right")
+)
+
+
+@_builtin(
+    "rowpath", 0, dtype="array<string>", pure=False, spelling="rowPath",
+    path=True,
+)
+def _row_path(b, e):
+    # row path pseudo-functions (reference sql/sql_expression.cc
+    # rowPath family): the stored rowName is the RENDERED path
+    # (types/path.h quoting — dotted elements double-quoted, inner
+    # quotes doubled; MLDB-1678), so the structured form comes from
+    # the full parse, not a naive dot-split: NAMED 'msnbc.com' stores
+    # '"msnbc.com"' and rowPath() yields the single element
+    # 'msnbc.com'.
+    if not b.row_name_col:
+        raise ValueError(f"{e.name}() needs a dataset with a rowName column")
+    return paths.parse_path(F.col(b.row_name_col).cast("string"))
+
+
+_builtin("rowpathlength", 0, pure=False, spelling="rowPathLength")(
+    lambda b, e: F.size(_row_path(b, e)).cast("long")
+)
+
+
+@_builtin("rowpathelement", pure=False, spelling="rowPathElement")
+def _row_path_element(b, e):
+    parts = _row_path(b, e)
+    i = _literal_int(e.args[0])
+    if i is None:
+        raise ValueError("rowPathElement(n) needs a literal index")
+    # out-of-range is NULL (MLDB-1636), never an ANSI index error
+    return F.try_element_at(parts, F.lit(i + 1 if i >= 0 else i))
+
+
+def _select_marker(marker: str):
+    """rowNumber()/totalRows(): read the marker column the SELECT
+    lowering adds for them."""
+
+    def bind(b, e):
+        if marker in b.colset:
+            return F.col(marker).cast("long")
         raise ValueError(
-            f"Binding builtin function {name}: expected 1 argument, "
-            f"got {len(args)}"
+            f"function {_spelled(e.name)} is only available in SELECT expressions."
         )
-    if name in binary:
+
+    return bind
+
+
+_builtin("rownumber", 0, pure=False, spelling="rowNumber")(
+    _select_marker("__rowNumber")
+)
+_builtin("totalrows", 0, pure=False, spelling="totalRows")(
+    _select_marker("__totalRows")
+)
+
+
+# columns of the bound relation, minus engine-internal ones
+_builtin("columncount", 0, pure=False, spelling="columnCount")(
+    lambda b, e: F.lit(len([c for c in b.columns if not c.startswith("__")])).cast("long")
+)
+
+
+def _value_timestamp(b, e):
+    # value_timestamp(x @ t) / value_timestamp(at(x, t)) is the stamp
+    # itself; argument-less (or plain-column) forms read the row's
+    # timestamp column
+    if e.args:
+        stamp = _restamp_ts(e.args[0])
+        if stamp is not None:
+            return b.bind(stamp).cast("timestamp")
+    if not b.ts_col:
+        raise ValueError(f"{e.name}() needs a dataset with a timestamp column")
+    return F.col(b.ts_col)
+
+
+_builtin("value_timestamp", (0, 1), pure=False)(_value_timestamp)
+_builtin("latest_timestamp earliest_timestamp", (0, 1), dtype="timestamp", pure=False)(
+    _value_timestamp
+)
+
+
+# distinct_timestamps(x) (builtin_functions.cc:1070-1120): all
+# timestamps carried by the value. Wide rows carry one timestamp -> a
+# one-element array; the full superposition form lives in
+# operators.temporal.cell_timestamps / all_cells over the cells layout.
+_builtin("distinct_timestamps", (0, 1), pure=False)(
+    lambda b, e: F.array(_value_timestamp(b, e))
+)
+
+
+# at(x, ts): the value of x re-stamped at ts. Timestamps are row
+# metadata in this engine, so the VALUE passes through; the stamp is
+# observable via value_timestamp(...) and WHEN, which filter on the row
+# ts.
+_builtin("at", 2)(lambda b, e: b.bind(e.args[0]))
+_builtin("now", 0, dtype="timestamp", pure=False)(lambda b, e: F.current_timestamp())
+# reference static_type (introspection): the bound expression's
+# runtime type name (Spark typeof)
+_builtin("static_type")(lambda b, e: F.typeof(b.bind(e.args[0])))
+# bind-time constant detection over the AST — pure literals and
+# operator trees of literals are const
+_builtin("__isconst")(lambda b, e: F.lit(1 if _is_const_expr(e.args[0]) else 0).cast("int"))
+
+
+@_builtin("pyeval", (2, None), pure=False)
+def _pyeval(b, e):
+    # inline Python lambda — the documented jseval replacement
+    # (builtin/js/js_function.cc:117-226 is the reference surface; the
+    # extension language here is Python)
+    from mldb_spark.functions.pyeval import pyeval_udf
+
+    if not isinstance(e.args[0], ast.Literal) or not isinstance(e.args[1], ast.Literal):
         raise ValueError(
-            f"Binding builtin function {name}: expected 2 arguments, "
-            f"got {len(args)}"
+            "pyeval('expr', 'a,b', args… [, {type: …}]) needs "
+            "literal expression and argument-name strings"
         )
-    raise ValueError(f"unknown function {name!r}")
+    src = str(e.args[0].value)
+    names = [s.strip() for s in str(e.args[1].value).split(",") if s.strip()]
+    rest = e.args[2:]
+    out_type = "number"
+    if rest and isinstance(rest[-1], ast.RowLiteral):
+        opts = {k.lower(): v for k, v in rest[-1].fields}
+        t = opts.get("type")
+        if isinstance(t, ast.Literal):
+            out_type = str(t.value)
+        rest = rest[:-1]
+    return pyeval_udf(src, names, out_type)(*[b.bind(a) for a in rest])
+
+
+@_builtin("st_contains_point", 3, spelling="ST_Contains_Point")
+def _st_contains_point(b, e):
+    # geo family (sql/builtin_geo_functions.cc:71-282): Polygon
+    # coordinates are depth-3 arrays, MultiPolygon depth-4 — inferred
+    # like the tensor functions
+    nd = b._expr_ndim(e.args[0])
+    return core.st_contains_point(
+        b.bind(e.args[0]), b.bind(e.args[1]), b.bind(e.args[2]), multi=nd >= 4
+    )
+
+
+# -- tensor builtins (sql/builtin_functions.cc:2723-2977) ---------------
+
+
+def _tensor_arg(b, e) -> tuple[Column, int, int | None]:
+    """The first argument of a tensor builtin, bound, with its static
+    nesting depth and, when known, its element count."""
+    arg0 = e.args[0]
+    if isinstance(arg0, ast.RowLiteral):
+        # a row argument flattens to its leaf values in written order
+        # (MLDB-1947's reshape({"0": 1, …}, [2, 2]))
+        leaves = _row_literal_leaves(arg0)
+        return F.array(*[b.bind(x) for x in leaves]), 1, len(leaves)
+    nd = b._expr_ndim(arg0)
+    if nd < 1:
+        raise ValueError(
+            f"{e.name}() requires an embedding argument (array-typed "
+            f"column or [...] literal)"
+        )
+    size = _embedding_literal_size(arg0) if isinstance(arg0, ast.EmbeddingLiteral) else None
+    return b.bind(arg0), nd, size
+
+
+_builtin("flatten", dtype="array<double>")(
+    lambda b, e: vector.tensor_flatten(*_tensor_arg(b, e)[:2])
+)
+_builtin("shape", dtype="array<bigint>")(lambda b, e: vector.tensor_shape(*_tensor_arg(b, e)[:2]))
+
+
+@_builtin(
+    "slice", 2,
+    # the LAST dimension goes; a 1-d slice is an element
+    dtype=lambda b, e: _array_dtype(b._expr_ndim(e.args[0]) - 1) if e.args else "",
+)
+def _slice(b, e):
+    a, nd, _ = _tensor_arg(b, e)
+    idx = _literal_int(e.args[1])
+    if idx is None:
+        raise ValueError("slice(val, index) needs a literal index")
+    return vector.tensor_slice(a, idx, nd)
+
+
+@_builtin(
+    "reshape", (2, 3),
+    dtype=lambda b, e: (
+        _array_dtype(len(b._shape_literal(e.args[1]))) if len(e.args) >= 2 else ""
+    ),
+)
+def _reshape(b, e):
+    # reshape(val, shape[, newel])
+    a, nd, size = _tensor_arg(b, e)
+    shape = b._shape_literal(e.args[1])
+    fill = b.bind(e.args[2]) if len(e.args) == 3 else None
+    if fill is None and size is not None:
+        import math
+
+        if size != math.prod(shape):
+            # the 2-arg form cannot change the element count
+            # (builtin_functions.cc reshape; MLDB-1947 pins the
+            # message)
+            raise ValueError(
+                "Attempt to change embedding size by reshaping: "
+                f"{size} elements into shape {shape}"
+            )
+    return vector.tensor_reshape(a, shape, nd, fill)
+
+
+# -- aggregates ---------------------------------------------------------
+
+
+def _agg_row_cells(b, row: ast.RowLiteral) -> list[tuple[str, ast.Expr | None]]:
+    """(name, expression) of each cell an aggregate of a row literal
+    reduces; a wildcard's columns have no expression. Row/ts METADATA
+    columns never match the {*} wildcard: sum({*}) sums the VALUE
+    columns, not the row name (MLDBFB-332) — summing a string row name
+    was a crash."""
+    meta = {b.row_name_col, b.ts_col} - {None}
+    cells: list[tuple[str, ast.Expr | None]] = []
+    for fname, fexpr in row.fields:
+        if fname != "*" and not isinstance(fexpr, ast.RowWildcard):
+            cells.append((fname, fexpr))
+            continue
+        prefix, excl = ("", []) if fname == "*" else (fexpr.prefix, fexpr.excluding)
+        excl_e = {x for x in excl if not x.endswith("*")}
+        excl_p = [x[:-1] for x in excl if x.endswith("*")]
+        cells += [
+            (c, None)
+            for c in b.columns
+            if c not in meta
+            and not _hidden_col(c)
+            and c.startswith(prefix)
+            and c not in excl_e
+            and not any(c.startswith(p) for p in excl_p)
+        ]
+    return cells
+
+
+def _row_agg(agg, one=None):
+    """An aggregate of one argument that also takes a row: agg({*}) /
+    agg({x, y}) expand to a struct of per-column aggregates at plan
+    time (reference RegisterAggregator row path,
+    sql/builtin_aggregators.cc:50-500; doc ValueExpression.md
+    §Aggregates of rows). one(binder, arg) binds the plain form, by
+    default agg of the bound argument."""
+
+    def bind(b, e):
+        arg = e.args[0]
+        if not isinstance(arg, ast.RowLiteral):
+            return one(b, arg) if one else agg(b.bind(arg))
+        return F.struct(*[
+            agg(F.col(f"`{n}`" if "." in n else n) if x is None else b.bind(x)).alias(n)
+            for n, x in _agg_row_cells(b, arg)
+        ])
+
+    return bind
+
+
+def _count_one(b, arg):
+    if isinstance(arg, ast.Literal) and arg.value == "*":
+        return F.count(F.lit(1))
+    return F.count(b.bind(arg))
+
+
+def _sum_one(b, arg):
+    # sum over a bag-of-words MAP merges the bags with per-key
+    # addition (the reference's `sum(tokenize(txt)) AS *` idiom,
+    # MLDB-1322): collect the group's maps, fold with a JVM map-merge
+    # lambda. Output stays a MAP (this engine's bag representation).
+    if b._static_dtype(arg).startswith("map"):
+        return _map_sum(b.bind(arg))
+    return F.sum(b.bind(arg))
+
+
+def _agg_of(fn):
+    """An aggregate of its one bound argument."""
+    return lambda b, e: fn(b.bind(e.args[0]))
+
+
+def _by_timestamp(pick, what: str):
+    """earliest/latest(x): x at the group's min/max timestamp."""
+
+    def bind(b, e):
+        if not b.ts_col:
+            raise ValueError(f"{what}() needs a timestamp column")
+        return pick(b.bind(e.args[0]), F.col(b.ts_col))
+
+    return bind
+
+
+# vertical_* are documented aliases of the standard column-wise
+# aggregates (doc ValueExpression.md §Vertical, Horizontal and
+# Temporal Aggregation); temporal_* over a flat observation table:
+# each row is one timed observation, so the value-history aggregates
+# ARE the group aggregates (the cells layout goes through
+# operators.temporal)
+for _names, _bind in {
+    "count vertical_count": _row_agg(F.count, _count_one),
+    "sum vertical_sum": _row_agg(F.sum, _sum_one),
+    "avg vertical_avg": _row_agg(F.avg),
+    "min vertical_min": _row_agg(F.min),
+    "max vertical_max": _row_agg(F.max),
+    "count_distinct": _agg_of(F.countDistinct),
+    "variance vertical_variance": _agg_of(F.var_samp),
+    "stddev vertical_stddev": _agg_of(F.stddev_samp),
+    "earliest vertical_earliest temporal_earliest": _by_timestamp(F.min_by, "earliest"),
+    "latest vertical_latest temporal_latest": _by_timestamp(F.max_by, "latest"),
+    "temporal_count": _agg_of(F.count),
+    "temporal_sum": _agg_of(F.sum),
+    "temporal_avg": _agg_of(F.avg),
+    "temporal_min": _agg_of(F.min),
+    "temporal_max": _agg_of(F.max),
+    # beyond the reference's surface: distribution stats every
+    # corpus-quality pipeline needs (exact, sort-based — linear
+    # interpolation between order statistics, matching DuckDB's
+    # quantile_cont for oracle replay)
+    "median": _agg_of(F.median),
+}.items():
+    _builtin(_names, aggregate=True)(_bind)
+
+
+@_builtin("percentile", 2, aggregate=True)
+def _percentile(b, e):
+    if not isinstance(e.args[1], ast.Literal):
+        raise ValueError("percentile(x, p) needs a literal p in [0,1]")
+    return F.percentile(b.bind(e.args[0]), F.lit(float(e.args[1].value)))
+
+
+@_builtin("string_agg", (1, 3), aggregate=True)
+def _string_agg(b, e):
+    sep = e.args[1].value if len(e.args) > 1 else ","  # type: ignore[union-attr]
+    if len(e.args) > 2:
+        # 3-arg form: concatenation ordered by the third expression
+        # (MLDB-1554's string_agg(what, ', ', rowName()))
+        pair = F.struct(
+            b.bind(e.args[2]).alias("o"),
+            b.bind(e.args[0]).alias("v"),
+        )
+        return F.concat_ws(
+            str(sep),
+            F.transform(F.array_sort(F.collect_list(pair)), lambda s: s["v"]),
+        )
+    return F.concat_ws(str(sep), F.array_sort(F.collect_list(b.bind(e.args[0]))))
+
+
+@_builtin("pivot", 2, aggregate=True)
+def _pivot(b, e):
+    # pivot(col, value): the group's (col -> value) pairs as a MAP —
+    # `AS *` spreads it to sparse columns (MLDB-1323's
+    # `pivot(recipe_id, 1) as * GROUP BY user_id`); one collect_list
+    # partial-agg, no extra shuffle. The reference's PivotAccum
+    # (sql/builtin_aggregators.cc:950-997) keeps the LATEST cell for a
+    # duplicated key (last-writer by timestamp); a MAP cannot hold
+    # duplicates and Spark's default mapKeyDedupPolicy=EXCEPTION would
+    # throw at execution. When the dataset carries a timestamp column,
+    # sort the entries (key, ts, value) and keep the LAST entry per
+    # key = the latest cell (ts ties break on max value, so the result
+    # is independent of partition/collect order — VERDICT r5 "what's
+    # wrong" #3). Without a timestamp the deterministic fallback
+    # remains max-value-per-key.
+    k = b.bind(e.args[0]).cast("string").alias("k")
+    v = b.bind(e.args[1]).alias("v")
+    stamped = bool(b.ts_col and b.ts_col in b.columns)
+    ent = F.struct(k, F.col(b.ts_col).alias("t"), v) if stamped else F.struct(k, v)
+    ents = F.array_sort(F.collect_list(ent))
+    deduped = F.filter(
+        ents,
+        lambda x, i: ~F.exists(
+            F.slice(ents, i + F.lit(2), F.size(ents)),
+            lambda y: y["k"] == x["k"],
+        ),
+    )
+    return F.map_from_entries(
+        F.transform(deduped, lambda x: F.struct(x["k"].alias("k"), x["v"].alias("v")))
+        if stamped
+        else deduped
+    )
 
 
 def _restamp_ts(e: ast.Expr) -> ast.Expr | None:
@@ -829,19 +1400,11 @@ def _is_const_expr(e: ast.Expr) -> bool:
     if isinstance(e, ast.RowLiteral):
         return all(_is_const_expr(x) for _, x in e.fields)
     if isinstance(e, ast.FunctionCall):
-        # a PURE function of constant arguments is constant
+        # a PURE builtin of constant arguments is constant
         # (MLDB-1984: static_expression_info(pi()) isConstant = 1);
         # volatile / row-context functions never are
-        volatile = {
-            "now", "rowname", "rowhash", "rowpath", "rowpathelement",
-            "rowpathlength", "columncount", "rownumber", "totalrows",
-            "leftrowname", "rightrowname", "linenumber",
-            "value_timestamp", "latest_timestamp", "earliest_timestamp",
-            "group_key_element", "random", "pyeval",
-        }
-        if e.name in volatile:
-            return False
-        return all(_is_const_expr(a) for a in e.args)
+        entry = _BUILTINS.get(e.name)
+        return entry is not None and entry.pure and all(_is_const_expr(a) for a in e.args)
     return False
 
 
@@ -886,11 +1449,6 @@ class Binder:
         # so x.rowName()/x.rowHash() bind in join scopes (MLDBFB-636)
         self.side_row_names = side_row_names or {}
 
-    _STRING_FNS = {
-        "lower", "upper", "trim", "concat", "substr", "substring", "left",
-        "regex_replace", "md5", "normalize_text", "language_id",
-    }
-
     _NUMERIC_PREFIXES = (
         "int", "bigint", "smallint", "tinyint", "double", "float",
         "decimal", "long",
@@ -926,23 +1484,10 @@ class Binder:
             if isinstance(e.value, str):
                 return "string"
             return ""
-        if isinstance(e, ast.FunctionCall) and e.name in (
-            "to_timestamp", "now", "date_trunc",
-            "latest_timestamp", "earliest_timestamp",
-        ):
-            return "timestamp"
-        if isinstance(e, ast.FunctionCall) and e.name in (
-            "tokenize", "tokenize_counts",
-        ):
-            return "map<string,bigint>"
-        if isinstance(e, ast.FunctionCall) and e.name == "split_part" and len(e.args) == 2:
-            return "array<string>"
-        if isinstance(e, ast.FunctionCall) and e.name in ("rowpath", "unflatten_path"):
-            # structured path values (MLDB-1678): element arrays,
-            # distinct from the rendered rowName() string
-            return "array<string>"
-        if isinstance(e, ast.FunctionCall) and e.name in ("rowname", "leftrowname", "rightrowname"):
-            return "string"
+        if isinstance(e, ast.FunctionCall):
+            entry = _BUILTINS.get(e.name)
+            dt = entry.dtype if entry else ""
+            return dt(self, e) if callable(dt) else dt
         if isinstance(e, ast.RowLiteral):
             fields = []
             meta = {self.row_name_col, self.ts_col} - {None}
@@ -968,26 +1513,6 @@ class Binder:
                 ft = self._static_dtype(x) or "double"
                 fields.append(f"{n}:{ft}")
             return "struct<" + ",".join(fields) + ">"
-        if isinstance(e, ast.FunctionCall) and e.name in (
-            "normalize", "vector_sum", "vector_diff", "vector_product",
-            "vector_quotient", "amplitude", "phase", "impulse",
-            "shifted_impulse",
-        ):
-            return "array<double>"
-        if isinstance(e, ast.FunctionCall) and e.name == "quantize" and e.args:
-            # quantize is shape-preserving (scalar or element-wise)
-            return self._static_dtype(e.args[0])
-        if isinstance(e, ast.FunctionCall) and e.name == "fft":
-            backward = (
-                len(e.args) > 1
-                and isinstance(e.args[1], ast.Literal)
-                and e.args[1].value == "backward"
-            )
-            return (
-                "array<double>"
-                if backward
-                else "struct<re:array<double>,im:array<double>>"
-            )
         if isinstance(e, ast.EmbeddingLiteral):
             return "array<double>"
         if isinstance(e, ast.Binary) and e.op in ("+", "-", "*", "/"):
@@ -1017,7 +1542,7 @@ class Binder:
         if isinstance(e, ast.Cast):
             return e.type_name == "string"
         if isinstance(e, ast.FunctionCall):
-            return e.name in self._STRING_FNS
+            return self._static_dtype(e) == "string"
         if isinstance(e, ast.Binary) and e.op == "+":
             return self._is_stringy(e.left) or self._is_stringy(e.right)
         if isinstance(e, ast.Case):
@@ -1641,19 +2166,6 @@ class Binder:
             raise ValueError("CASE needs at least one WHEN")
         return col.otherwise(self.bind(e.otherwise)) if e.otherwise is not None else col
 
-    # camelCase canonical spellings (the reference registers these
-    # exact names; everything else is lowercase)
-    _CANONICAL_SPELLING = {
-        "rowname": "rowName", "rowhash": "rowHash", "rowpath": "rowPath",
-        "rowpathelement": "rowPathElement",
-        "rowpathlength": "rowPathLength", "rownumber": "rowNumber",
-        "leftrowname": "leftRowName", "rightrowname": "rightRowName",
-        "totalrows": "totalRows", "columncount": "columnCount",
-        "columnname": "columnName", "rowcount": "rowCount",
-        "st_contains_point": "ST_Contains_Point",
-        "readpixels": "ReadPixels", "proximatevoxels": "ProximateVoxels",
-    }
-
     def _call(self, e: ast.FunctionCall) -> Column:
         name = e.name
         # table-qualified pseudo functions in join scopes:
@@ -1665,311 +2177,42 @@ class Binder:
                 src = self.side_row_names[q]
                 col = F.col(f"`{src}`" if "." in src else src)
                 return col if tail == "rowname" else F.xxhash64(col)
+        entry = _BUILTINS.get(name)
         # function names are case-sensitive in the reference
-        # (MLDB-957: POWER() is unknown): accept the canonical
+        # (MLDB-957: POWER() is unknown): accept the registered
         # spelling and, leniently, the all-lowercase form
-        if e.raw is not None and e.raw != name:
-            canonical = self._CANONICAL_SPELLING.get(name, name)
-            if e.raw != canonical:
-                raise ValueError(f"Unable to find function {e.raw!r}")
-        if name in ("leftrowname", "rightrowname"):
-            # MLDB-1710: the top-level join side's row name
-            key = "__left" if name == "leftrowname" else "__right"
-            src = self.side_row_names.get(key)
-            if src is None:
-                pretty = (
-                    "leftRowName" if name == "leftrowname" else "rightRowName"
-                )
-                raise ValueError(
-                    f"Function '{pretty}' is not available outside of a join"
-                )
-            return F.col(src)
-        if name == "rowname":
-            if self.row_name_col:
-                return F.col(self.row_name_col)
-            raise ValueError("rowName() needs a dataset with a rowName column")
-        if name == "rowhash":
-            base = F.col(self.row_name_col) if self.row_name_col else F.lit(None)
-            return F.xxhash64(base)
-        if name in ("rowpath", "rowpathelement", "rowpathlength"):
-            # row path pseudo-functions (reference sql/sql_expression.cc
-            # rowPath family): the stored rowName is the RENDERED path
-            # (types/path.h quoting — dotted elements double-quoted,
-            # inner quotes doubled; MLDB-1678), so the structured form
-            # comes from the full parse, not a naive dot-split:
-            # NAMED 'msnbc.com' stores '"msnbc.com"' and rowPath()
-            # yields the single element 'msnbc.com'.
-            if not self.row_name_col:
-                raise ValueError(f"{name}() needs a dataset with a rowName column")
-            from mldb_spark.functions.paths import parse_path
-
-            parts = parse_path(F.col(self.row_name_col).cast("string"))
-            if name == "rowpath":
-                return parts
-            if name == "rowpathlength":
-                return F.size(parts).cast("long")
-            i = _literal_int(e.args[0]) if e.args else None
-            if i is None:
-                raise ValueError("rowPathElement(n) needs a literal index")
-            # out-of-range is NULL (MLDB-1636), never an ANSI index
-            # error
-            return F.try_element_at(parts, F.lit(i + 1 if i >= 0 else i))
-        if name in ("rownumber", "totalrows"):
-            marker = "__rowNumber" if name == "rownumber" else "__totalRows"
-            if marker in self.colset:
-                return F.col(marker).cast("long")
-            pretty = "rowNumber" if name == "rownumber" else "totalRows"
+        if entry is None or e.raw not in (None, name, entry.spelling):
+            raise ValueError(f"Unable to find function {e.raw or name!r}")
+        lo, hi = entry.arity
+        n = len(e.args)
+        if n < lo or (hi is not None and n > hi):
+            want = str(lo) if lo == hi else f"at least {lo}" if hi is None else f"{lo}-{hi}"
+            # a wrong count is an error, never a silently dropped
+            # argument; the reference words its aggregators' check
+            # differently (MLDB-1792)
+            where = (
+                f"function {name}" if entry.aggregate
+                else f"Binding builtin function {entry.spelling or name}:"
+            )
             raise ValueError(
-                f"function {pretty} is only available in SELECT expressions."
+                f"{where} expected {want} argument{'' if want == '1' else 's'}, got {n}"
             )
-        if name == "columncount":
-            # columns of the bound relation, minus engine-internal ones
-            n_cols = len([c for c in self.columns if not c.startswith("__")])
-            return F.lit(n_cols).cast("long")
-        if name == "value_timestamp" or name == "latest_timestamp" or name == "earliest_timestamp":
-            # value_timestamp(x @ t) / value_timestamp(at(x, t)) is the
-            # stamp itself; argument-less (or plain-column) forms read
-            # the row's timestamp column
-            if e.args:
-                stamp = _restamp_ts(e.args[0])
-                if stamp is not None:
-                    return self.bind(stamp).cast("timestamp")
-            if not self.ts_col:
-                raise ValueError(f"{name}() needs a dataset with a timestamp column")
-            return F.col(self.ts_col)
-        if name == "distinct_timestamps":
-            # distinct_timestamps(x) (builtin_functions.cc:1070-1120):
-            # all timestamps carried by the value. Wide rows carry one
-            # timestamp -> a one-element array; the full superposition
-            # form lives in operators.temporal.cell_timestamps /
-            # all_cells over the cells layout.
-            if e.args:
-                stamp = _restamp_ts(e.args[0])
-                if stamp is not None:
-                    return F.array(self.bind(stamp).cast("timestamp"))
-            if not self.ts_col:
-                raise ValueError(
-                    "distinct_timestamps() needs a dataset with a timestamp column"
-                )
-            return F.array(F.col(self.ts_col))
-        if name == "at":
-            # at(x, ts): the value of x re-stamped at ts. Timestamps
-            # are row metadata in this engine, so the VALUE passes
-            # through; the stamp is observable via value_timestamp(...)
-            # (bound above) and WHEN, which filter on the row ts.
-            return self.bind(e.args[0])
-        if name == "now":
-            return F.current_timestamp()
-        if name == "static_type":
-            # reference static_type (introspection): the bound
-            # expression's runtime type name (Spark typeof)
-            return F.typeof(self.bind(e.args[0]))
-        if name == "__isconst":
-            # bind-time constant detection over the AST — pure literals
-            # and operator trees of literals are const
-            return F.lit(1 if _is_const_expr(e.args[0]) else 0).cast("int")
-        if name == "pyeval":
-            # inline Python lambda — the documented jseval replacement
-            # (builtin/js/js_function.cc:117-226 is the reference
-            # surface; the extension language here is Python)
-            from mldb_spark.functions.pyeval import pyeval_udf
-
-            if (
-                len(e.args) < 2
-                or not isinstance(e.args[0], ast.Literal)
-                or not isinstance(e.args[1], ast.Literal)
-            ):
-                raise ValueError(
-                    "pyeval('expr', 'a,b', args… [, {type: …}]) needs "
-                    "literal expression and argument-name strings"
-                )
-            src = str(e.args[0].value)
-            names = [s.strip() for s in str(e.args[1].value).split(",") if s.strip()]
-            rest = e.args[2:]
-            out_type = "number"
-            if rest and isinstance(rest[-1], ast.RowLiteral):
-                opts = {k.lower(): v for k, v in rest[-1].fields}
-                t = opts.get("type")
-                if isinstance(t, ast.Literal):
-                    out_type = str(t.value)
-                rest = rest[:-1]
-            return pyeval_udf(src, names, out_type)(*[self.bind(a) for a in rest])
-        if (
-            name in ("replace_nan", "replace_inf", "replace_not_finite", "replace_null")
-            and len(e.args) == 2
-        ):
-            # the replace_* family distributes over embeddings and row
-            # literals element-wise (builtin_functions.cc replaceIfNaN
-            # et al. unwrap structured values; MLDB-917 pins the
-            # behavior for both [] and {} forms)
-            arg0, repl = e.args[0], self.bind(e.args[1])
-
-            def scalar(x: Column) -> Column:
-                return _scalar_fn(name, [x, repl], [None, None])  # type: ignore[list-item]
-
-            dt = self._static_dtype(arg0)
-            if isinstance(arg0, ast.EmbeddingLiteral) or dt.startswith("array"):
-                return F.transform(self.bind(arg0), scalar)
-            if isinstance(arg0, ast.RowLiteral):
-                # _row_literal_fields expands {*}/{p*} wildcard fields
-                # (MLDB-1781's replace_nan({*}, -1))
-                return F.struct(
-                    *[
-                        scalar(c).alias(k)
-                        for k, c in self._row_literal_fields(arg0)
-                    ]
-                )
-            return scalar(self.bind(arg0))
-        if name in ("flatten", "shape", "reshape", "slice"):
-            return self._tensor_call(e)
-        if name == "st_contains_point" and len(e.args) == 3:
-            # geo family (sql/builtin_geo_functions.cc:71-282,
-            # registered ST_Contains_Point): Polygon coordinates are
-            # depth-3 arrays, MultiPolygon depth-4 — inferred like the
-            # tensor functions
-            from mldb_spark.functions.core import st_contains_point
-
-            nd = self._expr_ndim(e.args[0])
-            return st_contains_point(
-                self.bind(e.args[0]),
-                self.bind(e.args[1]),
-                self.bind(e.args[2]),
-                multi=nd >= 4,
-            )
-        if name in AGGREGATE_FNS:
-            return self._aggregate(e)
-        if (
-            name.startswith("horizontal_")
-            and len(e.args) == 1
-            and self._static_dtype(e.args[0]).startswith("map")
-        ):
-            # horizontal_* over a dynamic ROW carried as a MAP
-            # (MLDB-2022's row_dataset($input) rows): reduce the
-            # map's values like a row's cells
-            marr = F.filter(
-                F.map_values(self.bind(e.args[0])),
-                lambda x: x.isNotNull(),
-            )
-            if name == "horizontal_sum":
-                return F.aggregate(
-                    marr, F.lit(0.0), lambda a, x: a + x.cast("double")
-                )
-            if name == "horizontal_count":
-                return F.size(marr).cast("long")
-            if name == "horizontal_min":
-                return F.array_min(marr)
-            if name == "horizontal_max":
-                return F.array_max(marr)
-            if name == "horizontal_avg":
-                return F.try_divide(
-                    F.aggregate(
-                        marr, F.lit(0.0), lambda a, x: a + x.cast("double")
-                    ),
-                    F.size(marr),
-                )
-        if (
-            name.startswith("horizontal_")
-            and len(e.args) == 1
-            and self._static_dtype(e.args[0]).startswith("array")
-        ):
-            # horizontal_* over an embedding value operates on its
-            # elements (MLDB-953's horizontal_sum(normalize(...) - v))
-            arr = F.filter(self.bind(e.args[0]), lambda x: x.isNotNull())
-            if name == "horizontal_sum":
-                return F.aggregate(arr, F.lit(0.0), lambda a, x: a + x.cast("double"))
-            if name == "horizontal_count":
-                return F.size(arr).cast("long")
-            if name == "horizontal_min":
-                return F.array_min(arr)
-            if name == "horizontal_max":
-                return F.array_max(arr)
-            if name == "horizontal_avg":
-                return F.try_divide(
-                    F.aggregate(arr, F.lit(0.0), lambda a, x: a + x.cast("double")),
-                    F.size(arr),
-                )
-        if (
-            name.startswith("horizontal_")
-            and e.args
-            and isinstance(e.args[0], ast.RowLiteral)
-        ):
-            # horizontal_* take a ROW argument (doc ValueExpression.md
-            # §Horizontal operations; MLDB-461/2111): expand the row's
-            # cells — including {*}/{x*} wildcards — into the flat
-            # value list the scalar implementations operate on. Rows
-            # are ordered containers sorted by COLUMN NAME (MLDB-1554:
-            # horizontal_string_agg({who, what, how}) concatenates
-            # how, what, who), so the expansion name-sorts.
-            vals = [
-                c
-                for _, c in sorted(
-                    self._row_literal_fields(e.args[0]), key=lambda kv: kv[0]
-                )
-            ]
-            if not vals:
-                # wildcard matched no columns (MLDB-461's
-                # {superPatate*}): count 0, sum 0, the rest NULL
-                if name == "horizontal_count":
-                    return F.lit(0).cast("long")
-                if name == "horizontal_sum":
-                    return F.lit(0.0)
-                if name == "horizontal_string_agg":
-                    return F.lit("")
-                return F.lit(None)
-            rest = [self.bind(a) for a in e.args[1:]]
-            raw = [None] * len(vals) + list(e.args[1:])
-            return _scalar_fn(name, vals + rest, raw)  # type: ignore[arg-type]
-        args = [self.bind(a) for a in e.args]
-        if name == "jaccard_index" and len(e.args) == 2:
-            # the reference's jaccard operates on rows-as-SETS
-            # (MLDB-1668: jaccard_index(tokenize(a), tokenize(b))) —
-            # a bag-of-words MAP argument contributes its key set
-            from mldb_spark.functions.core import jaccard_index as _ji
-
-            conv = []
-            for a, c in zip(e.args, args):
-                if self._static_dtype(a).startswith("map"):
-                    c = F.map_keys(c)
-                conv.append(c)
-            return _ji(conv[0], conv[1])
-        if (
-            name == "quantize"
-            and len(args) == 2
-            and self._static_dtype(e.args[0]).startswith("array")
-        ):
-            # element-wise over embeddings (MLDB-1972's
-            # quantize(fft(..., 'backward'), 0.001))
-            from mldb_spark.functions.core import quantize as _q
-
-            return F.transform(args[0], lambda x: _q(x, args[1]))
-        return _scalar_fn(name, args, e.args)
+        return entry.bind(self, e)
 
     def _expr_ndim(self, e: ast.Expr) -> int:
         """Static embedding nesting depth of an expression (tensor
         functions need it: Spark array ops are depth-typed while the
         reference's EmbeddingValueInfo carries shape at bind time —
         sql/expression_value.h:1801-1850)."""
-        from mldb_spark.functions.vector import ndim_of_dtype
-
         if isinstance(e, ast.ColumnRef):
-            return ndim_of_dtype(
+            return vector.ndim_of_dtype(
                 self.dtypes.get(self._resolve_name(e.name) or e.name, "")
             )
         if isinstance(e, ast.EmbeddingLiteral):
             return 1 + (self._expr_ndim(e.items[0]) if e.items else 0)
         if isinstance(e, ast.FunctionCall):
-            if e.name in ("flatten", "shape"):
-                return 1
-            if e.name == "reshape" and len(e.args) >= 2:
-                shape = self._shape_literal(e.args[1])
-                return len(shape)
-            if e.name == "slice":
-                return max(0, self._expr_ndim(e.args[0]) - 1)
-            if e.name == "concat" and e.args:
-                return self._expr_ndim(e.args[0])
-            if e.name in ("normalize", "vector_sum", "vector_diff",
-                          "vector_product", "vector_quotient", "tokenize"):
-                return 1
+            dt = self._static_dtype(e)
+            return vector.ndim_of_dtype(dt) if dt.startswith("array") else 0
         return 0
 
     def _shape_literal(self, e: ast.Expr) -> list[int]:
@@ -1982,224 +2225,6 @@ class Binder:
             if all(d is not None and d > 0 for d in dims):
                 return [int(d) for d in dims]  # type: ignore[arg-type]
         raise ValueError("reshape() needs a literal [d0, d1, ...] shape")
-
-    def _tensor_call(self, e: ast.FunctionCall) -> Column:
-        from mldb_spark.functions.vector import (
-            tensor_flatten,
-            tensor_reshape,
-            tensor_shape,
-            tensor_slice,
-        )
-
-        arg0 = e.args[0]
-        bound0: Column | None = None
-        static_size: int | None = None
-        if isinstance(arg0, ast.RowLiteral):
-            # a row argument flattens to its leaf values in written
-            # order (MLDB-1947's reshape({"0": 1, …}, [2, 2]))
-            leaves = _row_literal_leaves(arg0)
-            bound0 = F.array(*[self.bind(x) for x in leaves])
-            nd = 1
-            static_size = len(leaves)
-        else:
-            nd = self._expr_ndim(arg0)
-            if isinstance(arg0, ast.EmbeddingLiteral):
-                static_size = _embedding_literal_size(arg0)
-        if nd < 1:
-            raise ValueError(
-                f"{e.name}() requires an embedding argument (array-typed "
-                f"column or [...] literal)"
-            )
-        if bound0 is None:
-            bound0 = self.bind(arg0)
-        if e.name == "flatten":
-            return tensor_flatten(bound0, nd)
-        if e.name == "shape":
-            return tensor_shape(bound0, nd)
-        if e.name == "slice":
-            idx = _literal_int(e.args[1]) if len(e.args) == 2 else None
-            if idx is None:
-                raise ValueError("slice(val, index) needs a literal index")
-            return tensor_slice(bound0, idx, nd)
-        # reshape(val, shape[, newel])
-        shape = self._shape_literal(e.args[1])
-        fill = self.bind(e.args[2]) if len(e.args) == 3 else None
-        if fill is None and static_size is not None:
-            import math
-
-            if static_size != math.prod(shape):
-                # the 2-arg form cannot change the element count
-                # (builtin_functions.cc reshape; MLDB-1947 pins the
-                # message)
-                raise ValueError(
-                    "Attempt to change embedding size by reshaping: "
-                    f"{static_size} elements into shape {shape}"
-                )
-        return tensor_reshape(bound0, shape, nd, fill)
-
-    _ROW_AGG = {
-        "count": lambda c: F.count(c),
-        "sum": lambda c: F.sum(c),
-        "avg": lambda c: F.avg(c),
-        "min": lambda c: F.min(c),
-        "max": lambda c: F.max(c),
-    }
-
-    def _aggregate(self, e: ast.FunctionCall) -> Column:
-        # vertical_* aliases resolve to their standard forms first
-        # (doc ValueExpression.md §Vertical aggregation)
-        if e.name.startswith("vertical_"):
-            e = ast.FunctionCall(e.name.removeprefix("vertical_"), e.args)
-        # aggregates of rows: agg({*}) / agg({x, y}) expand to a
-        # struct of per-column aggregates at plan time (reference
-        # RegisterAggregator row path, sql/builtin_aggregators.cc:
-        # 50-500; doc ValueExpression.md §Aggregates of rows)
-        if (
-            len(e.args) == 1
-            and isinstance(e.args[0], ast.RowLiteral)
-            and e.name in self._ROW_AGG
-        ):
-            agg = self._ROW_AGG[e.name]
-            # row/ts METADATA columns never match the {*} wildcard:
-            # sum({*}) sums the VALUE columns, not the row name
-            # (MLDBFB-332) — summing a string row name was a crash
-            meta = {self.row_name_col, self.ts_col} - {None}
-            fields: list[Column] = []
-            for fname, fexpr in e.args[0].fields:
-                if fname == "*":
-                    fields.extend(
-                        agg(F.col(f"`{c}`" if "." in c else c)).alias(c)
-                        for c in self.columns
-                        if c not in meta and not _hidden_col(c)
-                    )
-                elif isinstance(fexpr, ast.RowWildcard):
-                    excl_e = {x for x in fexpr.excluding if not x.endswith("*")}
-                    excl_p = [x[:-1] for x in fexpr.excluding if x.endswith("*")]
-                    fields.extend(
-                        agg(F.col(f"`{c}`" if "." in c else c)).alias(c)
-                        for c in self.columns
-                        if c not in meta
-                        and not _hidden_col(c)
-                        and c.startswith(fexpr.prefix)
-                        and c not in excl_e
-                        and not any(c.startswith(p) for p in excl_p)
-                    )
-                else:
-                    fields.append(agg(self.bind(fexpr)).alias(fname))
-            return F.struct(*fields)
-        # arity validation (MLDB-1792: silent argument drops would be
-        # wrong answers — "function avg expected 1 argument, got 2")
-        one_arg = (
-            "count", "count_distinct", "avg", "sum", "min", "max",
-            "variance", "stddev", "earliest", "latest",
-        )
-        if e.name in one_arg and len(e.args) != 1:
-            raise ValueError(
-                f"function {e.name} expected 1 argument, got {len(e.args)}"
-            )
-        if e.name == "string_agg" and len(e.args) not in (1, 2, 3):
-            raise ValueError(
-                f"function string_agg expected 1-3 arguments, got {len(e.args)}"
-            )
-        if e.name == "count":
-            if len(e.args) == 1 and isinstance(e.args[0], ast.Literal) and e.args[0].value == "*":
-                return F.count(F.lit(1))
-            return F.count(self.bind(e.args[0]))
-        if e.name == "count_distinct":
-            return F.countDistinct(self.bind(e.args[0]))
-        if e.name in ("avg", "vertical_avg"):
-            return F.avg(self.bind(e.args[0]))
-        if e.name == "sum":
-            # sum over a bag-of-words MAP merges the bags with
-            # per-key addition (the reference's
-            # `sum(tokenize(txt)) AS *` idiom, MLDB-1322): collect
-            # the group's maps, fold with a JVM map-merge lambda.
-            # Output stays a MAP (this engine's bag representation).
-            if self._static_dtype(e.args[0]).startswith("map"):
-                return _map_sum(self.bind(e.args[0]))
-            return F.sum(self.bind(e.args[0]))
-        if e.name == "min":
-            return F.min(self.bind(e.args[0]))
-        if e.name == "max":
-            return F.max(self.bind(e.args[0]))
-        if e.name == "variance":
-            return F.var_samp(self.bind(e.args[0]))
-        if e.name == "stddev":
-            return F.stddev_samp(self.bind(e.args[0]))
-        if e.name == "pivot":
-            # pivot(col, value): the group's (col -> value) pairs as
-            # a MAP — `AS *` spreads it to sparse columns
-            # (MLDB-1323); one collect_list partial-agg, no extra
-            # shuffle.  The reference's PivotAccum
-            # (sql/builtin_aggregators.cc:950-997) keeps the LATEST
-            # cell for a duplicated key (last-writer by timestamp); a
-            # MAP cannot hold duplicates and Spark's default
-            # mapKeyDedupPolicy=EXCEPTION would throw at execution.
-            # When the dataset carries a timestamp column, sort the
-            # entries (key, ts, value) and keep the LAST entry per
-            # key = the latest cell (ts ties break on max value, so
-            # the result is independent of partition/collect order —
-            # VERDICT r5 "what's wrong" #3).  Without a timestamp the
-            # deterministic fallback remains max-value-per-key.
-            if len(e.args) != 2:
-                raise ValueError("pivot(column, value) takes 2 arguments")
-            k = self.bind(e.args[0]).cast("string").alias("k")
-            v = self.bind(e.args[1]).alias("v")
-            if self.ts_col and self.ts_col in self.columns:
-                ent = F.struct(k, F.col(self.ts_col).alias("t"), v)
-            else:
-                ent = F.struct(k, v)
-            ents = F.array_sort(F.collect_list(ent))
-            deduped = F.filter(
-                ents,
-                lambda x, i: ~F.exists(
-                    F.slice(ents, i + F.lit(2), F.size(ents)),
-                    lambda y: y["k"] == x["k"],
-                ),
-            )
-            return F.map_from_entries(
-                F.transform(
-                    deduped, lambda x: F.struct(x["k"].alias("k"), x["v"].alias("v"))
-                )
-                if (self.ts_col and self.ts_col in self.columns)
-                else deduped
-            )
-        if e.name == "percentile":
-            if len(e.args) != 2 or not isinstance(e.args[1], ast.Literal):
-                raise ValueError("percentile(x, p) needs a literal p in [0,1]")
-            return F.percentile(self.bind(e.args[0]), F.lit(float(e.args[1].value)))
-        if e.name == "median":
-            return F.median(self.bind(e.args[0]))
-        if e.name == "string_agg":
-            sep = e.args[1].value if len(e.args) > 1 else ","  # type: ignore[union-attr]
-            if len(e.args) > 2:
-                # 3-arg form: concatenation ordered by the third
-                # expression (MLDB-1554's
-                # string_agg(what, ', ', rowName()))
-                pair = F.struct(
-                    self.bind(e.args[2]).alias("o"),
-                    self.bind(e.args[0]).alias("v"),
-                )
-                return F.concat_ws(
-                    str(sep),
-                    F.transform(
-                        F.array_sort(F.collect_list(pair)), lambda s: s["v"]
-                    ),
-                )
-            return F.concat_ws(str(sep), F.array_sort(F.collect_list(self.bind(e.args[0]))))
-        if e.name in ("earliest", "temporal_earliest"):
-            if not self.ts_col:
-                raise ValueError("earliest() needs a timestamp column")
-            return F.min_by(self.bind(e.args[0]), F.col(self.ts_col))
-        if e.name in ("latest", "temporal_latest"):
-            if not self.ts_col:
-                raise ValueError("latest() needs a timestamp column")
-            return F.max_by(self.bind(e.args[0]), F.col(self.ts_col))
-        if e.name.startswith("temporal_"):
-            base = e.name.removeprefix("temporal_")
-            fn = {"count": F.count, "sum": F.sum, "avg": F.avg, "min": F.min, "max": F.max}[base]
-            return fn(self.bind(e.args[0]))
-        raise ValueError(f"unknown aggregate {e.name}")
 
 
 class _ColumnMetaBinder(Binder):
@@ -2297,7 +2322,7 @@ def _column_expr_stat_needs(item: "ast.ColumnExprItem") -> "tuple[bool, bool]":
 
 def _contains_aggregate(e: ast.Expr) -> bool:
     if isinstance(e, ast.FunctionCall):
-        if e.name in AGGREGATE_FNS:
+        if _is_aggregate(e):
             return True
         return any(_contains_aggregate(a) for a in e.args)
     if isinstance(e, ast.Unary):
@@ -2371,19 +2396,6 @@ def _call_fn(fn, df: DataFrame, call_params: "dict[str, object]"):
     return fn(df)
 
 
-# function-entity names that shadow prominent builtins are refused at
-# registration (MLDB-1661); the temporal_/horizontal_/vertical_
-# families are prefix-guarded at the call site
-_RESERVED_BUILTIN_NAMES = frozenset({
-    "tokenize", "sum", "avg", "min", "max", "count", "earliest",
-    "latest", "rowname", "rowhash", "rowpath", "pivot", "exp", "ln",
-    "log", "sqrt", "abs", "lower", "upper", "concat", "coalesce",
-    "cast", "regex_match", "regex_search", "regex_replace",
-    "parse_json", "jaccard_index", "levenshtein_distance", "now",
-    "to_timestamp", "date_part", "date_trunc", "norm", "normalize",
-})
-
-
 def _render_named(col: Column, e: ast.Expr, dtype: str = "") -> Column:
     """NAMED value → stored rowName string via the path rendering rule
     (reference types/path.h; MLDB-1678): a STRING value coerces to a
@@ -2410,9 +2422,8 @@ def _is_path_valued(e: ast.Expr) -> bool:
     value (an element array) rather than a rendered string — the
     rowPath()/flatten_path/unflatten_path family (MLDB-1678). Drives
     the path-vs-atom comparison coercion."""
-    return isinstance(e, ast.FunctionCall) and e.name in (
-        "rowpath", "unflatten_path", "flatten_path"
-    )
+    entry = _BUILTINS.get(e.name) if isinstance(e, ast.FunctionCall) else None
+    return entry is not None and entry.path
 
 
 def _render_path_el(el: str) -> str:
@@ -2765,12 +2776,10 @@ class MldbContext:
         argument row literal is informational (the transform closure
         already knows its input columns).
 
-        Names of BUILT-IN functions are reserved (MLDB-1661: the
+        Every builtin function's name is reserved (MLDB-1661: the
         reference refuses `PUT /v1/functions/temporal_earliest`)."""
         low = name.lower()
-        if low in _RESERVED_BUILTIN_NAMES or low.startswith(
-            ("temporal_", "horizontal_", "vertical_")
-        ):
+        if low in _BUILTINS:
             raise ValueError(
                 f"MLDB already has a built-in function named {name!r}"
             )
@@ -4023,7 +4032,7 @@ class MldbContext:
                             f"Non-aggregator '{surf}({arg})' with "
                             "GROUP BY clause is not allowed"
                         )
-                    in_agg = in_agg or e.name in AGGREGATE_FNS
+                    in_agg = in_agg or _is_aggregate(e)
                 import dataclasses as _d
 
                 if _d.is_dataclass(e):
@@ -4670,35 +4679,13 @@ class MldbContext:
         """True for agg({*}) / agg({x*}) whose wildcard expansion
         matches ZERO value columns (MLDBFB-440: a dataset whose rows
         have no columns) — the item then contributes no output."""
-        if not (
+        return (
             isinstance(expr, ast.FunctionCall)
-            and expr.name.removeprefix("vertical_") in Binder._ROW_AGG
+            and _is_aggregate(expr)
             and len(expr.args) == 1
             and isinstance(expr.args[0], ast.RowLiteral)
-        ):
-            return False
-        meta = {binder.row_name_col, binder.ts_col} - {None}
-        value_cols = [
-            c for c in binder.columns
-            if c not in meta and not _hidden_col(c)
-        ]
-        n = 0
-        for fname, fexpr in expr.args[0].fields:
-            if fname == "*":
-                n += len(value_cols)
-            elif isinstance(fexpr, ast.RowWildcard):
-                excl_e = {x for x in fexpr.excluding if not x.endswith("*")}
-                excl_p = [x[:-1] for x in fexpr.excluding if x.endswith("*")]
-                n += sum(
-                    1
-                    for c in value_cols
-                    if c.startswith(fexpr.prefix)
-                    and c not in excl_e
-                    and not any(c.startswith(p) for p in excl_p)
-                )
-            else:
-                n += 1
-        return n == 0
+            and not _agg_row_cells(binder, expr.args[0])
+        )
 
     def _expand_column_expr(
         self, df: DataFrame, item: ast.ColumnExprItem, params: dict,

@@ -841,3 +841,27 @@ def test_pack_sequences_table_function(spark):
             per_seq[(r["bucket"], r["seq"])] += r["n_tokens"]
     assert all(v <= 2048 for v in per_seq.values())
     assert [r["overflow"] for r in out if r["doc_id"] == 99] == [True]
+
+
+@pytest.mark.parametrize(
+    "call", ["sign(1, 2)", "canonicalize_url('http://a.com', 'x')", "clamp(1, 2)"]
+)
+def test_builtin_arity_is_checked(ctx, call):
+    """A wrong argument count for any builtin is a bind error naming
+    the expected and actual counts, never a silently dropped argument
+    or an IndexError (the arity lives in the builtin's table entry)."""
+    name = call.split("(", 1)[0]
+    with pytest.raises(
+        ValueError, match=rf"^Binding builtin function {name}: expected \d+ arguments?, got"
+    ):
+        ctx.query(f"SELECT {call} AS v")
+
+
+@pytest.mark.parametrize("name", ["sin", "hash", "Sin"])
+def test_register_function_refuses_builtin_names(spark, name):
+    """Every builtin's name is reserved for function entities, not a
+    hand-picked subset (MLDB-1661)."""
+    c = MldbContext(spark)
+    with pytest.raises(ValueError, match="already has a built-in function"):
+        c.register_function(name, lambda d: d)
+    assert name not in c.function_names()

@@ -6,18 +6,23 @@ prints how many classes Spark's code generator compiled during it
 (`CodegenMetrics`), so a gate that recompiles on every warm run shows.
 
 A run executes every named gate once, in order, so several gates
-profile a serial pass over their shared working set.
+profile a serial pass over their shared working set. With --plan-dir,
+each gate's `explain("formatted")` from the last run is written to
+<plan-dir>/<gate>.txt, before that run's tracked persists are released,
+so the plan shows what the run executed.
 
-Usage: python tools/profile_stages.py q31_embedding_neardup [GATE ...] [--sf perfbench/data/sf0.01] [--runs N]
+Usage: python tools/profile_stages.py q31_embedding_neardup [GATE ...] [--sf perfbench/data/sf0.01] [--runs N] [--plan-dir DIR]
 """
 
 from __future__ import annotations
 
 import argparse
+import io
 import os
 import sys
 import time
 from collections import defaultdict
+from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -60,6 +65,7 @@ def main() -> int:
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf", default=os.path.join(REPO, "perfbench", "data", "sf0.01"))
     ap.add_argument("--runs", type=int, default=2)
+    ap.add_argument("--plan-dir", default=None)
     args = ap.parse_args()
 
     log_dir = os.path.join(common.OUT, f"stageprof-{os.getpid()}")
@@ -81,10 +87,20 @@ def main() -> int:
         spark.catalog.clearCache()
         c0 = codegen.METRIC_COMPILATION_TIME().getCount()
         t0 = time.time()
+        dfs = []
         for fn in fns:
-            fn(spark, args.sf).write.mode("overwrite").format("noop").save()
+            dfs.append(fn(spark, args.sf))
+            dfs[-1].write.mode("overwrite").format("noop").save()
         windows.append((t0, time.time()))
         compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - c0)
+    if args.plan_dir:
+        os.makedirs(args.plan_dir, exist_ok=True)
+        for q, df in zip(args.queries, dfs):
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain("formatted")
+            with open(os.path.join(args.plan_dir, f"{q}.txt"), "w") as f:
+                f.write(buf.getvalue())
     release_cached()
     common.stop_session(spark)
 
