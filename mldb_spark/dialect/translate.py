@@ -1031,10 +1031,13 @@ def _agg_row_cells(b, row: ast.RowLiteral) -> list[tuple[str, ast.Expr | None]]:
     meta = {b.row_name_col, b.ts_col} - {None}
     cells: list[tuple[str, ast.Expr | None]] = []
     for fname, fexpr in row.fields:
-        if fname != "*" and not isinstance(fexpr, ast.RowWildcard):
+        if isinstance(fexpr, ast.RowWildcard):
+            prefix, excl = fexpr.prefix, fexpr.excluding
+        elif fname == "*":
+            prefix, excl = "", []
+        else:
             cells.append((fname, fexpr))
             continue
-        prefix, excl = ("", []) if fname == "*" else (fexpr.prefix, fexpr.excluding)
         excl_e = {x for x in excl if not x.endswith("*")}
         excl_p = [x[:-1] for x in excl if x.endswith("*")]
         cells += [

@@ -2,17 +2,42 @@
 surface (server/mldb_server.cc:209-283; formats
 engine/dataset_collection.cc:60-238). stdlib http.server only.
 
+Every request goes through one table, `_ROUTES`, as the reference
+registers each route with its router. A pattern's `<id>` takes one
+path segment and a final `...` the rest of the path. A KeyError from
+a route answers 404, any other error 400, both as {"error",
+"httpCode"} (MLDB-1260); a path no route matches is a 404 too.
+
 Routes:
-    GET  /v1/query?q=<sql>[&format=full|aos|soa|table][&limit=N]
-         [&rowNames=1][&headers=0]
-    GET  /v1/datasets                 → names
-    GET  /v1/datasets/<name>          → {columns, rowCount}
-    PUT  /v1/datasets/<name>  {type, params}     → createEntity
-    PUT  /v1/functions/<name> {type, params}     → createEntity
-    GET  /v1/functions                → names
-    POST /v1/procedures       {type, params}     → createEntity
-                                       (runs on creation, like the
-                                        reference's runOnCreation)
+    GET  /v1/query?q=<sql>[&format=full|aos|soa|table|sparse|atom]
+         [&limit=N][&rowNames=1][&headers=0]      → rendered rows
+    POST /v1/query  {q, format, …}                 → the same, from the body
+    POST /v1/redirect/get  {target, body}          → /v1/query or a function
+                                                     application, from the body
+    GET  /v1/datasets                              → names
+    POST /v1/datasets  {type, params[, id]}        → createEntity
+    GET  /v1/datasets/<id>                         → {columns, rowCount}
+    PUT  /v1/datasets/<id>  {type, params}         → createEntity
+    POST /v1/datasets/<id>/rows  {rowName, columns}       → record a row
+    POST /v1/datasets/<id>/multirows  [[rowName, columns]] → record rows
+    POST /v1/datasets/<id>/columns  {columnName, rows}    → record a column
+    POST /v1/datasets/<id>/multicolumns  [{columnName, rows}]
+    POST /v1/datasets/<id>/commit                  → commit the recorded cells
+    GET  /v1/functions                             → names
+    PUT  /v1/functions/<id>  {type, params}        → createEntity
+    GET  /v1/functions/<id>/application?input=<json> → {output}
+    POST /v1/functions/<id>/application  {input}   → {output}
+    POST /v1/procedures  {type, params[, id]}      → createEntity (runs on
+                                                     creation, like the
+                                                     reference's runOnCreation)
+    GET  /v1/procedures/<id>                       → the stored config
+    PUT  /v1/procedures/<id>  {type, params}       → store; run if runOnCreation
+    POST /v1/procedures/<id>/runs  [{params}]      → run; Location: …/latestrun
+    PUT  /v1/procedures/<id>/runs/<run>  [{id, params}] → run
+    GET  /v1/procedures/<id>/latestrun             → the last finished run
+    PUT  /v1/plugins/<id>  {type: python, params: {source: {routes, main}}}
+    GET|POST /v1/plugins/<id>/routes/...           → the plugin's routes source
+    POST /v1/types/plugins/python/routes/run  {source} → {result}
 
 Formats follow dataset_collection.cc: `full` (per-row sparse
 [column, value, timestamp] triples; timestamp comes from a `ts`
@@ -30,27 +55,21 @@ through transform + parquet sinks, not HTTP.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import threading
 from datetime import date, datetime
+from functools import partial
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 import pyspark.sql.functions as F
 
 from mldb_spark.api import Mldb
+from mldb_spark.dialect import ast as _ast
+from mldb_spark.dialect.parser import parse_statement
 
 DEFAULT_ROW_CAP = 10_000
-
-
-def _is_expression(src: str) -> bool:
-    """True when a script source is a single evaluable expression
-    (MLDB-255's `'hello, world'` one-liners)."""
-    try:
-        compile(src, "<script>", "eval")
-        return True
-    except SyntaxError:
-        return False
 
 
 def _jsonable(v):
@@ -169,6 +188,241 @@ def render_rows(rows, columns, fmt="full", row_names=False, headers=True):
     raise ValueError(f"unknown format {fmt!r}")
 
 
+# -- routes ---------------------------------------------------------------
+#
+# A route handler takes the MldbRestServer, the path ids its pattern
+# captured, the query args and the raw body, and returns (code,
+# payload[, location]).
+
+
+def _json(raw: bytes):
+    """The request body as JSON; an empty body reads as {}."""
+    return json.loads(raw or b"{}")
+
+
+@dataclasses.dataclass
+class _Request:
+    """The `request` a plugin route or a script sees (MLDB-444,
+    MLDB-255): query args as [k, v] pairs, the JSON payload, the verb
+    and the path below the route; set_return() sets the response."""
+
+    rest_params: list = dataclasses.field(default_factory=list)
+    payload: object = None
+    verb: str = "POST"
+    remaining: str = "/"
+    value: object = None
+
+    def set_return(self, v) -> None:
+        self.value = v
+
+
+def _create(kind: str, srv, ids, q, raw):
+    """createEntity from the body, at the path id when there is one.
+    An empty body is MLDB-1010's "empty payload"; a body id that
+    contradicts the path id is MLDB-348's put-with-wrong-id."""
+    cfg = _json(raw)
+    if not cfg:
+        raise ValueError("empty payload")
+    if ids:
+        if cfg.get("id") not in (None, ids[0]):
+            raise ValueError(
+                f"config id {cfg['id']!r} does not match the URI id {ids[0]!r}"
+            )
+        cfg["id"] = ids[0]
+    return 201, srv.mldb.create_entity(kind, cfg)
+
+
+def _dataset_status(srv, ids, q, raw):
+    df = srv.mldb.dataset(ids[0])
+    return 200, {"columns": df.columns, "rowCount": df.count()}
+
+
+def _record_row(srv, ids, q, raw):
+    srv.mldb.record_rows(ids[0], [_json(raw)])
+    return 200, {}
+
+
+def _record_multirows(srv, ids, q, raw):
+    # [[rowName, [[col, v, ts], ...]], ...]
+    rows = [{"rowName": r[0], "columns": r[1]} for r in _json(raw)]
+    srv.mldb.record_rows(ids[0], rows)
+    return 200, {}
+
+
+def _record_column(srv, ids, q, raw):
+    body = _json(raw)
+    srv.mldb.record_column(ids[0], body["columnName"], body["rows"])
+    return 200, {}
+
+
+def _record_columns(srv, ids, q, raw):
+    srv.mldb.record_columns(ids[0], _json(raw))
+    return 200, {}
+
+
+def _commit(srv, ids, q, raw):
+    srv.mldb.commit_dataset(ids[0])
+    return 200, {}
+
+
+def _get_application(srv, ids, q, raw):
+    return 200, srv.apply_function_json(ids[0], json.loads(q.get("input", "{}")))
+
+
+def _post_application(srv, ids, q, raw):
+    body = _json(raw)
+    return 200, srv.apply_function_json(ids[0], body.get("input", body))
+
+
+def _procedure(srv, ids, q, raw):
+    # the stored config survives a FAILED runOnCreation (MLDB-2112:
+    # the broken procedure is still GETtable)
+    cfg = srv.mldb._procedures.get(ids[0])
+    if cfg is None:
+        raise KeyError(f"unknown procedure {ids[0]!r}")
+    return 200, cfg
+
+
+def _put_procedure(srv, ids, q, raw):
+    body = _json(raw)
+    if not body:
+        raise ValueError("empty payload")
+    return 201, srv.mldb.put_procedure(ids[0], body)
+
+
+def _post_run(srv, ids, q, raw):
+    # run params override the stored config (MLDBFB-208); an empty
+    # body runs the stored config
+    status = srv.mldb.run_procedure(ids[0], _json(raw).get("params"))
+    return 201, status, f"/v1/procedures/{ids[0]}/latestrun"
+
+
+def _put_run(srv, ids, q, raw):
+    # a named run (MLDB-326); a body id contradicting the URI id is a
+    # 400 (MLDB-348's rule)
+    body = _json(raw)
+    if body.get("id") not in (None, ids[1]):
+        raise ValueError("run config id does not match URI")
+    return 201, srv.mldb.run_procedure(ids[0], body.get("params"))
+
+
+def _redirect(srv, ids, q, raw):
+    """Re-dispatch a GET whose parameters ride in a body (MLDB-1717's
+    and MLDB-2163's test_as_POST_body)."""
+    b = _json(raw)
+    target, body = b.get("target", ""), b.get("body", {})
+    if target == "/v1/query":
+        return 200, srv.run_query(body)
+    fn = _match("/v1/functions/<id>/application", target)
+    if fn is None:
+        raise ValueError(
+            "redirect target must be /v1/query or a function application"
+        )
+    return 200, srv.apply_function_json(fn[0], body.get("input", {}))
+
+
+def _put_plugin(srv, ids, q, raw):
+    """Store a python plugin's ROUTES source and run its main
+    (MLDB-444_python_perform_default_args.py)."""
+    body = _json(raw)
+    if body.get("type") != "python":
+        raise ValueError("only python plugins supported")
+    src = body.get("params", {}).get("source", {}) or {}
+    srv.plugins[ids[0]] = {"routes": src.get("routes", ""), "config": body}
+    if src.get("main"):
+        exec(compile(src["main"], "<plugin>", "exec"), {"mldb": srv.mldb})  # noqa: S102
+    return 201, {"config": body}
+
+
+def _plugin_route(verb: str, srv, ids, q, raw):
+    """Run a plugin's routes source for /v1/plugins/<id>/routes/...
+    (MLDB-444). A body that is not JSON reaches it as text; an unknown
+    plugin is a 404 (MLDB-2114's contract is a clean error)."""
+    plug = srv.plugins.get(ids[0])
+    if plug is None:
+        raise KeyError(f"unknown plugin {ids[0]!r}")
+    try:
+        payload = json.loads(raw) if raw else None
+    except ValueError:
+        payload = raw.decode("utf-8", "replace")
+    req = _Request([[k, v] for k, v in q.items()], payload, verb, ids[1])
+    ns = {"mldb": srv.mldb, "request": req}
+    exec(compile(plug["routes"], "<plugin-route>", "exec"), ns)  # noqa: S102
+    return 200, req.value
+
+
+def _run_script(srv, ids, q, raw):
+    """The script-run route (MLDB-255's python flavor; the reference's
+    javascript flavor is out of scope): the source runs with the mldb
+    facade in scope. A single expression answers its value, a
+    statement script what it passed to request.set_return()."""
+    src = _json(raw).get("source", "")
+    try:
+        code = compile(src, "<script>", "eval")
+    except SyntaxError:
+        code = compile(src, "<script>", "exec")
+    req = _Request()
+    result = eval(code, {"mldb": srv.mldb, "request": req})  # noqa: S307
+    return 200, {"result": req.value if result is None else result}
+
+
+_ROUTES = [
+    ("GET", "/v1/query", lambda srv, ids, q, raw: (200, srv.run_query(q))),
+    ("POST", "/v1/query", lambda srv, ids, q, raw: (200, srv.run_query(_json(raw)))),
+    ("POST", "/v1/redirect/get", _redirect),
+    ("GET", "/v1/datasets", lambda srv, ids, q, raw: (200, srv.mldb.datasets())),
+    ("POST", "/v1/datasets", partial(_create, "dataset")),
+    ("GET", "/v1/datasets/<id>", _dataset_status),
+    ("PUT", "/v1/datasets/<id>", partial(_create, "dataset")),
+    # the mutable-dataset record path (the reference's recordRow/commit
+    # lifecycle; MLDB-1267 et al.; column-wise variants per MLDB-541)
+    ("POST", "/v1/datasets/<id>/rows", _record_row),
+    ("POST", "/v1/datasets/<id>/multirows", _record_multirows),
+    ("POST", "/v1/datasets/<id>/columns", _record_column),
+    ("POST", "/v1/datasets/<id>/multicolumns", _record_columns),
+    ("POST", "/v1/datasets/<id>/commit", _commit),
+    ("GET", "/v1/functions", lambda srv, ids, q, raw: (200, srv.mldb.ctx.function_names())),
+    ("PUT", "/v1/functions/<id>", partial(_create, "function")),
+    ("GET", "/v1/functions/<id>/application", _get_application),
+    ("POST", "/v1/functions/<id>/application", _post_application),
+    ("POST", "/v1/procedures", partial(_create, "procedure")),
+    ("GET", "/v1/procedures/<id>", _procedure),
+    ("PUT", "/v1/procedures/<id>", _put_procedure),
+    ("POST", "/v1/procedures/<id>/runs", _post_run),
+    ("PUT", "/v1/procedures/<id>/runs/<run>", _put_run),
+    (
+        "GET",
+        "/v1/procedures/<id>/latestrun",
+        lambda srv, ids, q, raw: (200, srv.mldb.latest_run(ids[0])),
+    ),
+    ("PUT", "/v1/plugins/<id>", _put_plugin),
+    ("GET", "/v1/plugins/<id>/routes/...", partial(_plugin_route, "GET")),
+    ("POST", "/v1/plugins/<id>/routes/...", partial(_plugin_route, "POST")),
+    ("POST", "/v1/types/plugins/python/routes/run", _run_script),
+]
+
+
+def _match(pattern: str, path: str) -> "list[str] | None":
+    """The ids `path` binds to `pattern`'s placeholders, or None when
+    the pattern does not match. Empty segments are ignored; a `<name>`
+    segment takes one segment, a final `...` the rest as one
+    '/'-prefixed path."""
+    segs = pattern.split("/")[1:]
+    parts = [p for p in path.split("/") if p]
+    if segs[-1] == "...":
+        n = len(segs) - 1
+        parts = parts[:n] + ["/" + "/".join(parts[n:])]
+    if len(segs) != len(parts):
+        return None
+    ids = []
+    for seg, part in zip(segs, parts):
+        if seg[0] in "<.":
+            ids.append(part)
+        elif seg != part:
+            return None
+    return ids
+
+
 class MldbRestServer:
     """In-process REST server bound to an Mldb facade. start() binds
     an ephemeral (or given) port on a daemon thread; stop() shuts it
@@ -187,50 +441,35 @@ class MldbRestServer:
             def log_message(self, *a):  # quiet
                 pass
 
-            def _plugin_route(self, parts, q, verb):
-                """Dispatch /v1/plugins/<id>/routes/<path> into the
-                plugin's routes source (MLDB-444: request.rest_params
-                carries the query args as [k, v] pairs,
-                request.payload the JSON body; set_return is the
-                response). A body-less POST is a 404 when the route
-                source requires a payload (MLDB-2114's contract is a
-                clean error, never a hang)."""
-                plug = facade.plugins.get(parts[2])
-                if plug is None:
-                    self._send(404, {"error": f"unknown plugin {parts[2]!r}"})
-                    return
-                n = int(self.headers.get("Content-Length", 0))
-                raw = self.rfile.read(n) if n else b""
+            def do_GET(self):
+                self._dispatch("GET")
+
+            def do_PUT(self):
+                self._dispatch("PUT")
+
+            def do_POST(self):
+                self._dispatch("POST")
+
+            def _dispatch(self, verb: str) -> None:
+                """Answer one request: read its body once, call the
+                first route matching (verb, path), map the route's
+                error to the uniform error body and send one response."""
+                u = urlparse(self.path)
+                q = {k: v[0] for k, v in parse_qs(u.query).items()}
+                location = []
                 try:
-                    payload = json.loads(raw) if raw else None
-                except Exception:
-                    payload = raw.decode("utf-8", "replace")
-
-                class _Req:
-                    rest_params = [[k, v] for k, v in q.items()]
-                    verb_ = verb
-                    remaining = "/" + "/".join(parts[4:])
-                    value = None
-
-                    def set_return(self, v):
-                        _Req.value = v
-
-                _Req.payload = payload
-                try:
-                    ns = {"mldb": facade.mldb, "request": _Req()}
-                    exec(  # noqa: S102 — local plugin route
-                        compile(plug["routes"], "<plugin-route>", "exec"),
-                        ns,
-                    )
-                    self._send(200, _Req.value)
+                    n = int(self.headers.get("Content-Length") or 0)
+                    raw = self.rfile.read(n) if n > 0 else b""
+                    for v, pattern, route in _ROUTES:
+                        ids = _match(pattern, u.path) if v == verb else None
+                        if ids is not None:
+                            break
+                    else:
+                        raise KeyError(f"no route {verb} {u.path}")
+                    code, payload, *location = route(facade, ids, q, raw)
                 except Exception as e:
-                    self._send(400, {"error": f"{type(e).__name__}: {e}"})
-
-            def _send(self, code: int, payload, location: str | None = None) -> None:
-                # every error response carries BOTH 'error' and
-                # 'httpCode' (MLDB-1260's uniform error format)
-                if code >= 400 and isinstance(payload, dict) and "httpCode" not in payload:
-                    payload = {**payload, "httpCode": code}
+                    code = 404 if isinstance(e, KeyError) else 400
+                    payload = {"error": str(e), "httpCode": code}
                 body = json.dumps(payload, default=str).encode()
                 self.send_response(code)
                 self.send_header("Content-Type", "application/json")
@@ -239,352 +478,9 @@ class MldbRestServer:
                     # creation responses point at the created object
                     # (MLDB-951's Location check; MLDB-299/305's sync
                     # flavor)
-                    self.send_header("Location", location)
+                    self.send_header("Location", location[0])
                 self.end_headers()
                 self.wfile.write(body)
-
-            def _body(self) -> dict:
-                n = int(self.headers.get("Content-Length", 0))
-                return json.loads(self.rfile.read(n) or b"{}")
-
-            def do_GET(self):
-                u = urlparse(self.path)
-                q = {k: v[0] for k, v in parse_qs(u.query).items()}
-                parts = [p for p in u.path.split("/") if p]
-                try:
-                    if (
-                        parts[:2] == ["v1", "plugins"]
-                        and len(parts) >= 4
-                        and parts[3] == "routes"
-                    ):
-                        self._plugin_route(parts, q, "GET")
-                        return
-                    if parts[:2] == ["v1", "query"]:
-                        self._send(200, facade.run_query(q))
-                    elif (
-                        parts[:2] == ["v1", "procedures"]
-                        and len(parts) == 4
-                        and parts[3] == "latestrun"
-                    ):
-                        # MLDB-1359: the most recent run's metadata;
-                        # a never-run procedure is 404 (MLDB-2112)
-                        try:
-                            self._send(200, facade.mldb.latest_run(parts[2]))
-                        except KeyError as e:
-                            self._send(404, {"error": str(e)})
-                    elif (
-                        parts[:2] == ["v1", "procedures"]
-                        and len(parts) == 3
-                    ):
-                        # the stored config survives a FAILED
-                        # runOnCreation (MLDB-2112: the broken proc is
-                        # still GETtable)
-                        procs = facade.mldb._procedures
-                        if parts[2] in procs:
-                            self._send(200, procs[parts[2]])
-                        else:
-                            self._send(
-                                404,
-                                {"error": f"unknown procedure {parts[2]!r}"},
-                            )
-                    elif parts[:2] == ["v1", "datasets"] and len(parts) == 2:
-                        self._send(200, facade.mldb.datasets())
-                    elif parts[:2] == ["v1", "datasets"] and len(parts) == 3:
-                        df = facade.mldb.dataset(parts[2])
-                        self._send(
-                            200, {"columns": df.columns, "rowCount": df.count()}
-                        )
-                    elif parts[:2] == ["v1", "functions"] and len(parts) == 2:
-                        self._send(200, facade.mldb.ctx.function_names())
-                    elif (
-                        parts[:2] == ["v1", "functions"]
-                        and len(parts) == 4
-                        and parts[3] == "application"
-                    ):
-                        inp = json.loads(q.get("input", "{}"))
-                        self._send(
-                            200, facade.apply_function_json(parts[2], inp)
-                        )
-                    else:
-                        self._send(404, {"error": f"no route {u.path}"})
-                except KeyError as e:
-                    self._send(404, {"error": str(e)})
-                except Exception as e:
-                    self._send(400, {"error": str(e)})
-
-            def _create(self, kind: str, eid: str | None):
-                cfg = self._body()
-                if not cfg:
-                    # PUT/POST with no body is a clean 400
-                    # (MLDB-1010's "empty payload")
-                    self._send(400, {"error": "empty payload"})
-                    return
-                if eid is not None:
-                    # a body id that CONTRADICTS the path id is a 400
-                    # (MLDB-348's put-with-wrong-id)
-                    if cfg.get("id") not in (None, eid):
-                        self._send(
-                            400,
-                            {
-                                "error": f"config id {cfg['id']!r} does not "
-                                f"match the URI id {eid!r}"
-                            },
-                        )
-                        return
-                    cfg["id"] = eid
-                try:
-                    self._send(201, facade.mldb.create_entity(kind, cfg))
-                except Exception as e:
-                    self._send(400, {"error": str(e)})
-
-            def do_PUT(self):
-                parts = [p for p in urlparse(self.path).path.split("/") if p]
-                if parts[:2] == ["v1", "datasets"] and len(parts) == 3:
-                    self._create("dataset", parts[2])
-                elif parts[:2] == ["v1", "functions"] and len(parts) == 3:
-                    self._create("function", parts[2])
-                elif parts[:2] == ["v1", "plugins"] and len(parts) == 3:
-                    # python plugin with custom ROUTES
-                    # (MLDB-444_python_perform_default_args.py): store
-                    # the routes source; requests to
-                    # /v1/plugins/<id>/routes/<path> exec it with a
-                    # `request` carrying rest_params/payload/verb
-                    try:
-                        body = self._body()
-                        if body.get("type") != "python":
-                            self._send(
-                                400,
-                                {"error": "only python plugins supported"},
-                            )
-                            return
-                        src = (body.get("params", {})
-                               .get("source", {}) or {})
-                        facade.plugins[parts[2]] = {
-                            "routes": src.get("routes", ""),
-                            "config": body,
-                        }
-                        main = src.get("main")
-                        if main:
-                            ns = {"mldb": facade.mldb}
-                            exec(compile(main, "<plugin>", "exec"), ns)  # noqa: S102
-                        self._send(201, {"config": body})
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif parts[:2] == ["v1", "procedures"] and len(parts) == 3:
-                    # store + optional runOnCreation (MLDB-951)
-                    try:
-                        body = self._body()
-                        if not body:
-                            self._send(400, {"error": "empty payload"})
-                            return
-                        self._send(
-                            201, facade.mldb.put_procedure(parts[2], body)
-                        )
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif (
-                    parts[:2] == ["v1", "procedures"]
-                    and len(parts) == 4
-                    and parts[3] == "runs"
-                ):
-                    # PUT of a run needs a run NAME (MLDB-326)
-                    self._send(404, {"error": "PUT of a run needs a run name"})
-                elif (
-                    parts[:2] == ["v1", "procedures"]
-                    and len(parts) == 5
-                    and parts[3] == "runs"
-                ):
-                    # named-run PUT (MLDB-326's /runs/<id>); a body id
-                    # contradicting the URI id is a 400 (MLDB-348 rule)
-                    try:
-                        body = self._body()
-                        if body.get("id") not in (None, parts[4]):
-                            self._send(
-                                400,
-                                {"error": "run config id does not match URI"},
-                            )
-                            return
-                        self._send(
-                            201,
-                            facade.mldb.run_procedure(
-                                parts[2], body.get("params")
-                            ),
-                        )
-                    except KeyError as e:
-                        self._send(404, {"error": str(e)})
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                else:
-                    self._send(404, {"error": "PUT supports /v1/datasets/<id>, /v1/functions/<id> and /v1/procedures/<id>"})
-
-            def do_POST(self):
-                u = urlparse(self.path)
-                parts = [p for p in u.path.split("/") if p]
-                if (
-                    parts[:2] == ["v1", "plugins"]
-                    and len(parts) >= 4
-                    and parts[3] == "routes"
-                ):
-                    q = {k: v[0] for k, v in parse_qs(u.query).items()}
-                    self._plugin_route(parts, q, "POST")
-                    return
-                if (
-                    parts[:2] == ["v1", "procedures"]
-                    and len(parts) == 4
-                    and parts[3] == "runs"
-                ):
-                    # POST /v1/procedures/<id>/runs (MLDB-951); run
-                    # params override the stored config (MLDBFB-208)
-                    try:
-                        body = {}
-                        try:
-                            body = self._body()
-                        except Exception:
-                            pass
-                        self._send(
-                            201,
-                            facade.mldb.run_procedure(
-                                parts[2], body.get("params")
-                            ),
-                            location=f"/v1/procedures/{parts[2]}/latestrun",
-                        )
-                    except KeyError as e:
-                        self._send(404, {"error": str(e)})
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif parts[:2] == ["v1", "procedures"]:
-                    self._create("procedure", None)
-                elif (
-                    parts[:2] == ["v1", "datasets"]
-                    and len(parts) == 4
-                    and parts[3] in ("rows", "multirows", "columns",
-                                     "multicolumns", "commit")
-                ):
-                    # mutable-dataset record path (the reference's
-                    # recordRow/commit lifecycle; MLDB-1267 et al.;
-                    # column-wise + batched variants per MLDB-541)
-                    try:
-                        if parts[3] == "rows":
-                            facade.mldb.record_rows(parts[2], [self._body()])
-                            self._send(200, {})
-                        elif parts[3] == "multirows":
-                            # [[rowName, [[col, v, ts], ...]], ...]
-                            facade.mldb.record_rows(
-                                parts[2],
-                                [{"rowName": r[0], "columns": r[1]}
-                                 for r in self._body()],
-                            )
-                            self._send(200, {})
-                        elif parts[3] == "columns":
-                            body = self._body()
-                            facade.mldb.record_column(
-                                parts[2], body["columnName"], body["rows"]
-                            )
-                            self._send(200, {})
-                        elif parts[3] == "multicolumns":
-                            facade.mldb.record_columns(parts[2], self._body())
-                            self._send(200, {})
-                        else:
-                            facade.mldb.commit_dataset(parts[2])
-                            self._send(200, {})
-                    except KeyError as e:
-                        self._send(404, {"error": str(e)})
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif parts == ["v1", "datasets"]:
-                    # POST create with an optional id (MLDB-348/983)
-                    self._create("dataset", None)
-                elif (
-                    parts[:2] == ["v1", "functions"]
-                    and len(parts) == 4
-                    and parts[3] == "application"
-                ):
-                    try:
-                        body = self._body()
-                        self._send(
-                            200,
-                            facade.apply_function_json(
-                                parts[2], body.get("input", body)
-                            ),
-                        )
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif parts[:2] == ["v1", "query"]:
-                    # query params in the request body
-                    # (MLDB-1717_query_select_in_body.py: the reference
-                    # accepts q in the body as well as the query string)
-                    try:
-                        self._send(200, facade.run_query(self._body()))
-                    except KeyError as e:
-                        self._send(404, {"error": str(e)})
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif parts == ["v1", "types", "plugins", "python", "routes", "run"]:
-                    # script-run route (MLDB-255's python flavor; the
-                    # reference's javascript flavor is declared out of
-                    # scope — pyeval/pyscript is the same-contract
-                    # replacement): exec the source with the mldb
-                    # facade in scope; request.set_return() carries
-                    # the result; any error is a clean 400
-                    try:
-                        body = self._body()
-                        src = body.get("source", "")
-
-                        class _Req:
-                            value = None
-
-                            def set_return(self, v):
-                                _Req.value = v
-
-                        ns = {"mldb": facade.mldb, "request": _Req()}
-                        if _is_expression(src):
-                            result = eval(  # noqa: S307 — local script route
-                                compile(src, "<script>", "eval"), ns
-                            )
-                        else:
-                            exec(compile(src, "<script>", "exec"), ns)  # noqa: S102
-                            result = None
-                        if result is None:
-                            result = _Req.value
-                        self._send(200, {"result": result})
-                    except Exception as e:
-                        self._send(
-                            400, {"error": f"{type(e).__name__}: {e}"}
-                        )
-                elif parts == ["v1", "redirect", "get"]:
-                    # POST /v1/redirect/get {target, body}: re-dispatch
-                    # a GET whose parameters ride in a body
-                    # (MLDB-1717's test_as_POST_body)
-                    try:
-                        b = self._body()
-                        target = b.get("target", "")
-                        tparts = [p for p in target.split("/") if p]
-                        if target == "/v1/query":
-                            self._send(200, facade.run_query(b.get("body", {})))
-                        elif (
-                            tparts[:2] == ["v1", "functions"]
-                            and len(tparts) == 4
-                            and tparts[3] == "application"
-                        ):
-                            # function application through the
-                            # redirect (MLDB-2163's test_as_POST_body)
-                            inp = b.get("body", {}).get("input", {})
-                            self._send(
-                                200,
-                                facade.apply_function_json(tparts[2], inp),
-                            )
-                        else:
-                            self._send(
-                                400,
-                                {
-                                    "error": "redirect target must be "
-                                    "/v1/query or a function application"
-                                },
-                            )
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                else:
-                    self._send(404, {"error": "POST supports /v1/procedures and /v1/query"})
 
         self._server = ThreadingHTTPServer(("127.0.0.1", port), Handler)
         self._thread: threading.Thread | None = None
@@ -640,12 +536,9 @@ class MldbRestServer:
         SELECT */<columns> FROM <cells dataset> [WHERE …] [ORDER BY …]
         [LIMIT …]; everything else falls back to the wide render."""
         try:
-            from mldb_spark.dialect import ast as _ast
-            from mldb_spark.dialect.parser import parse_statement
-
             stm = parse_statement(sql)
-        except Exception:
-            return None
+        except SyntaxError:
+            return None  # the wide path parses again and reports it
         # one read of the catalog: a concurrent request may replace it
         info = isinstance(stm.from_, _ast.TableRef) and self.mldb.ctx._cells.get(
             stm.from_.name
@@ -669,9 +562,7 @@ class MldbRestServer:
             c for c in info["columns"] if c in want
         ]
         # surviving row names in the statement's own order
-        import dataclasses as _dc
-
-        rn_stm = _dc.replace(
+        rn_stm = dataclasses.replace(
             stm,
             select=[
                 _ast.ExprItem(
@@ -679,15 +570,10 @@ class MldbRestServer:
                 )
             ],
         )
-        try:
-            names = [
-                r["__rn"]
-                for r in self.mldb.ctx._statement(rn_stm, {})
-                .limit(limit)
-                .collect()
-            ]
-        except Exception:
-            return None
+        names = [
+            r["__rn"]
+            for r in self.mldb.ctx._statement(rn_stm, {}).limit(limit).collect()
+        ]
         cells = info["cells"]
         got = (
             cells.filter(

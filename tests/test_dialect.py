@@ -865,3 +865,16 @@ def test_register_function_refuses_builtin_names(spark, name):
     with pytest.raises(ValueError, match="already has a built-in function"):
         c.register_function(name, lambda d: d)
     assert name not in c.function_names()
+
+
+def test_row_aggregate_honours_excluding(spark):
+    """An aggregate of `{* EXCLUDING (x)}` reduces only the columns the
+    wildcard keeps, as horizontal_sum over the same row does."""
+    c = MldbContext(spark)
+    c.register("agg_excl", spark.createDataFrame([(1, 10), (2, 20)], "x int, y int"))
+    out = c.query("SELECT sum({* EXCLUDING (x)}) AS s FROM agg_excl").collect()[0]["s"]
+    assert out.asDict() == {"y": 30}
+    rows = c.query(
+        "SELECT horizontal_sum({* EXCLUDING (x)}) AS h FROM agg_excl ORDER BY y"
+    ).collect()
+    assert [r["h"] for r in rows] == [10, 20]

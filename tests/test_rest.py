@@ -735,6 +735,66 @@ def test_mldb_1040_invalid_requests(server):
         assert e.code == 400
 
 
+@pytest.mark.parametrize(
+    "method,path,body,length",
+    [
+        ("PUT", "/v1/datasets/bad400", b"{not json", None),
+        ("PUT", "/v1/functions/bad400", b"{not json", None),
+        ("POST", "/v1/datasets", b"{not json", None),
+        ("POST", "/v1/procedures", b"{not json", None),
+        ("PUT", "/v1/datasets/bad400", b"[1,2]", None),
+        ("PUT", "/v1/datasets/bad400", b"", "abc"),
+    ],
+    ids=["put-dataset", "put-function", "post-dataset", "post-procedure",
+         "array-body", "bad-content-length"],
+)
+def test_bad_requests_are_clean_400s(server, method, path, body, length):
+    """MLDB-1040: a malformed JSON body, a body that is not an object
+    and a Content-Length that is not a number are each answered with a
+    400 and the uniform error body, never a dropped connection."""
+    import http.client
+
+    conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=60)
+    try:
+        conn.putrequest(method, path)
+        conn.putheader("Content-Type", "application/json")
+        conn.putheader("Content-Length", length or str(len(body)))
+        conn.endheaders(body)
+        r = conn.getresponse()
+        out = json.loads(r.read())
+    finally:
+        conn.close()
+    assert r.status == 400
+    assert out["httpCode"] == 400 and out["error"]
+
+
+def test_bad_run_body_does_not_run(server):
+    """POST …/runs with a malformed body is a 400 and runs nothing; an
+    empty body runs the stored config (MLDB-951, MLDBFB-208)."""
+    import urllib.error
+
+    _req(server, "PUT", "/v1/procedures/badrun", {"type": "null"})
+
+    def post_run(data):
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{server.port}/v1/procedures/badrun/runs",
+            data=data, method="POST",
+            headers={"Content-Type": "application/json"},
+        )
+        with urllib.request.urlopen(req) as r:
+            return r.status
+
+    with pytest.raises(urllib.error.HTTPError) as e:
+        post_run(b"{not json")
+    assert e.value.code == 400
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(server, "/v1/procedures/badrun/latestrun")
+    assert e.value.code == 404
+    assert post_run(b"") == 201
+    st, run = _get(server, "/v1/procedures/badrun/latestrun")
+    assert st == 200 and run["state"] == "finished"
+
+
 def test_one_function_surface(spark):
     """One catalog per Mldb: every function entity SQL can call is
     listed by GET /v1/functions, and each one that takes a rowset

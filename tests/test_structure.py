@@ -240,3 +240,58 @@ def test_code_names_no_out_of_repo_data_path():
             and any(d in node.value for d in _OUTSIDE_DIRS)
         ]
     assert offenders == []
+
+
+_REST = PKG / "rest.py"
+# a docstring route line: `GET  /v1/...` or `GET|POST /v1/...`
+_ROUTE_LINE = re.compile(r"^\s*((?:GET|PUT|POST)(?:\|(?:GET|PUT|POST))*)\s+(/[^\s?]*)", re.M)
+
+
+def test_rest_routes_through_one_table():
+    """Each REST route is one rest._ROUTES entry, matched by one
+    matcher and answered by one dispatcher with one error mapping: no
+    path-parts list is compared against a literal list or slice outside
+    _match, do_GET/do_PUT/do_POST only call _dispatch, no `except
+    Exception` (or bare except) remains outside _dispatch, and the
+    module docstring lists exactly the table's routes."""
+    tree = ast.parse(_REST.read_text())
+    fns = {n.name: n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
+    assert {"_match", "_dispatch", "do_GET", "do_PUT", "do_POST"} <= set(fns)
+    inside = {
+        name: {id(n) for n in ast.walk(fns[name])} for name in ("_match", "_dispatch")
+    }
+
+    def list_or_slice(n: ast.AST) -> bool:
+        return isinstance(n, ast.List) or (
+            isinstance(n, ast.Subscript) and isinstance(n.slice, ast.Slice)
+        )
+
+    path_tests = [
+        ast.unparse(n)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Compare)
+        and id(n) not in inside["_match"]
+        and any(map(list_or_slice, [n.left, *n.comparators]))
+    ]
+    assert path_tests == []
+    for verb in ("do_GET", "do_PUT", "do_POST"):
+        calls = [n for n in ast.walk(fns[verb]) if isinstance(n, ast.Call)]
+        assert [ast.unparse(c.func) for c in calls] == ["self._dispatch"], verb
+        assert len(fns[verb].body) == 1, verb
+    broad = [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ExceptHandler)
+        and (n.type is None or (isinstance(n.type, ast.Name) and n.type.id == "Exception"))
+        and id(n) not in inside["_dispatch"]
+    ]
+    assert broad == []
+
+    from mldb_spark import rest
+
+    listed = {
+        (verb, pattern)
+        for verbs, pattern in _ROUTE_LINE.findall(rest.__doc__)
+        for verb in verbs.split("|")
+    }
+    assert listed == {(verb, pattern) for verb, pattern, _ in rest._ROUTES}
