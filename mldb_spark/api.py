@@ -72,6 +72,14 @@ def _entity_id(spec: "str | dict") -> str:
     return spec["id"] if isinstance(spec, dict) else spec
 
 
+def _required(params: dict, key: str):
+    """params[key]; a missing one is a ValueError that names it, so
+    REST answers 400 rather than the 404 of an unknown entity."""
+    if key not in params:
+        raise ValueError(f"missing required parameter {key!r}")
+    return params[key]
+
+
 # (kind, type) -> builder(mldb, eid, params) -> status: every entity
 # type createEntity can make. Each builder registers at its definition
 # with @_entity_type, as each reference type registers beside its
@@ -130,6 +138,13 @@ class Mldb:
     def query(self, sql: str, params: dict[str, object] | None = None) -> DataFrame:
         """GET /v1/query equivalent: MLDB-dialect SQL → DataFrame."""
         return self.ctx.query(sql, params)
+
+    def plan_cache_counts(self) -> dict[str, int]:
+        """How many queries the context's plan cache served (hits),
+        translated and kept (misses) or translated without it
+        (bypasses); MldbContext's docstring states the rule."""
+        with self.ctx._lock:
+            return dict(self.ctx.plan_cache_counts)
 
     # -- procedures (the §2.13 batch operators) -----------------------------
 
@@ -867,7 +882,7 @@ def _transposed_dataset(mldb: Mldb, eid: str, params: dict) -> dict:
 @_entity_type("dataset", "tabular")
 def _tabular_dataset(mldb: Mldb, eid: str, params: dict) -> dict:
     """A parquet or CSV file (dataFileUrl) as a dataset."""
-    url = params["dataFileUrl"]
+    url = _required(params, "dataFileUrl")
     if url.endswith(".csv"):
         df = mldb.spark.read.csv(url, header=True, inferSchema=True)
     else:
@@ -879,7 +894,7 @@ def _tabular_dataset(mldb: Mldb, eid: str, params: dict) -> dict:
 @_entity_type("dataset", "structured.mutable")
 def _structured_mutable_dataset(mldb: Mldb, eid: str, params: dict) -> dict:
     """The result of the inputData query as a dataset."""
-    mldb.transform(params["inputData"], eid)
+    mldb.transform(_required(params, "inputData"), eid)
     return {"rowCount": None, "columns": mldb.dataset(eid).columns}
 
 
@@ -888,13 +903,13 @@ def _structured_mutable_dataset(mldb: Mldb, eid: str, params: dict) -> dict:
 
 @_entity_type("function", "sql.expression")
 def _sql_expression_function(mldb: Mldb, eid: str, params: dict) -> None:
-    mldb.create_sql_expression_function(eid, params["expression"])
+    mldb.create_sql_expression_function(eid, _required(params, "expression"))
 
 
 @_entity_type("function", "sql.query")
 def _sql_query_function(mldb: Mldb, eid: str, params: dict) -> None:
     mldb.create_sql_query_function(
-        eid, params["query"], params.get("output", "FIRST_ROW")
+        eid, _required(params, "query"), params.get("output", "FIRST_ROW")
     )
 
 
@@ -928,7 +943,7 @@ def _script_apply_function(mldb: Mldb, eid: str, params: dict) -> None:
     MLDB-643): a stored script applied per call with `args` in scope
     (the reference's mldb.script.args); the script's
     set_return/result is the function output."""
-    src = params["scriptConfig"]["source"]
+    src = _required(_required(params, "scriptConfig"), "source")
 
     def run_stored(args=None, __src=src):
         return {"return": mldb.run_script(source=__src, args=args)}
@@ -947,7 +962,7 @@ def _neighbors_function(mldb: Mldb, eid: str, params: dict) -> None:
     driver round-trip per row."""
     from mldb_spark.similarity import embedding_neighbors_batch
 
-    corpus = mldb.dataset(params["dataset"])
+    corpus = mldb.dataset(_required(params, "dataset"))
     num_neighbors = params.get("defaultNumNeighbors")
     rn_col = "rowName" if "rowName" in corpus.columns else corpus.columns[0]
     feat_cols = _feature_cols(corpus, (rn_col,))
@@ -1004,7 +1019,7 @@ def _training_frame(mldb: Mldb, params: dict) -> DataFrame:
     cells before training."""
     if "trainingData" not in params:
         raise ValueError("You need to define trainingData")
-    return mldb.query(Mldb._require_from(params["trainingData"]))
+    return mldb.query(Mldb._require_from(_required(params, "trainingData")))
 
 
 @_entity_type("procedure", "transform")
@@ -1015,8 +1030,8 @@ def _transform_procedure(mldb: Mldb, eid: str, params: dict) -> dict:
         raise ValueError("You need to define inputData")
     if "outputDataset" not in params:
         raise ValueError("You need to define outputDataset")
-    out_id = _entity_id(params["outputDataset"])
-    mldb.transform(params["inputData"], out_id)
+    out_id = _entity_id(_required(params, "outputDataset"))
+    mldb.transform(_required(params, "inputData"), out_id)
     return {"outputDataset": out_id}
 
 
@@ -1073,7 +1088,7 @@ def _bucketize_procedure(mldb: Mldb, eid: str, params: dict) -> dict:
                 f" is overlapping with [{_lo:f}, {_hi:f}]"
             )
         _last = (_lo, _hi)
-    out_id = _entity_id(params["outputDataset"])
+    out_id = _entity_id(_required(params, "outputDataset"))
     import re as _re
 
     # SELECT * over a cells dataset does not surface row names —
@@ -1081,7 +1096,7 @@ def _bucketize_procedure(mldb: Mldb, eid: str, params: dict) -> dict:
     # row-name list is queryable
     sql = _re.sub(
         r"^\s*select\s", "SELECT rowName() AS __bk_rn, ",
-        params["inputData"], count=1, flags=_re.I,
+        _required(params, "inputData"), count=1, flags=_re.I,
     )
     ordered = mldb.query(sql)
     names = [str(r["__bk_rn"]) for r in ordered.select("__bk_rn").collect()]
@@ -1091,7 +1106,7 @@ def _bucketize_procedure(mldb: Mldb, eid: str, params: dict) -> dict:
     import datetime as _dt
 
     max_ts = _dt.datetime(1970, 1, 1)
-    m = _re.search(r"\bfrom\s+([A-Za-z_][\w]*)", params["inputData"], _re.I)
+    m = _re.search(r"\bfrom\s+([A-Za-z_][\w]*)", _required(params, "inputData"), _re.I)
     if m and m.group(1) in mldb.ctx._datasets:
         src = mldb.dataset(m.group(1))
         if "ts" in src.columns and "row" in src.columns:
@@ -1139,7 +1154,7 @@ def _import_text_procedure(mldb: Mldb, eid: str, params: dict) -> dict:
     q = params.get("quoteChar", '"')
     raw = import_text(
         mldb.spark,
-        str(params["dataFileUrl"]).removeprefix("file://"),
+        str(_required(params, "dataFileUrl")).removeprefix("file://"),
         delimiter=params.get("delimiter", ",") or "\x01",
         quote=q if q else "\x00",  # '' disables quoting
         headers=params.get("headers"),
@@ -1179,7 +1194,7 @@ def _create_entity_procedure(mldb: Mldb, eid: str, params: dict) -> dict:
         "id": params.get("entityId", f"{eid}_entity"),
         "params": params.get("params", {}),
     }
-    return mldb.create_entity(params["kind"], sub)
+    return mldb.create_entity(_required(params, "kind"), sub)
 
 
 @_entity_type("procedure", "svm.train")
@@ -1248,7 +1263,7 @@ def _classifier_experiment(mldb: Mldb, eid: str, params: dict) -> dict:
     if "inputData" not in params:
         raise ValueError("You need to define inputData")
     tdf, exp_rn = mldb._query_with_row_name(
-        Mldb._input_spec_to_sql(params["inputData"])
+        Mldb._input_spec_to_sql(_required(params, "inputData"))
     )
     if "features" not in tdf.columns or "label" not in tdf.columns:
         raise ValueError(
@@ -1279,7 +1294,7 @@ def _classifier_experiment(mldb: Mldb, eid: str, params: dict) -> dict:
 
         ds_folds = [
             (_bind_cond(f["trainingWhere"]), _bind_cond(f["testingWhere"]))
-            for f in params["datasetFolds"]
+            for f in _required(params, "datasetFolds")
         ]
     res = classifier_experiment(
         flat,
@@ -1308,7 +1323,7 @@ def _classifier_train(mldb: Mldb, eid: str, params: dict) -> dict:
             "'features' and 'label' outputs "
             "(select {* EXCLUDING (x)} as features, x as label)"
         )
-    mldb._check_label_not_in_features(params["trainingData"], tdf)
+    mldb._check_label_not_in_features(_required(params, "trainingData"), tdf)
     if params.get("mode") == "multilabel":
         # the label is a ROW — each non-null field a present label
         # (multilabel-classifier-test.py)
@@ -1575,7 +1590,7 @@ def _tsne_train(mldb: Mldb, eid: str, params: dict) -> dict:
         perplexity=float(params.get("perplexity", 15.0)),
     )
     if params.get("rowOutputDataset"):
-        mldb.create_dataset(_entity_id(params["rowOutputDataset"]), coords)
+        mldb.create_dataset(_entity_id(_required(params, "rowOutputDataset")), coords)
     return {"columns": feat_cols, "rows": coords.count()}
 
 
@@ -1590,7 +1605,7 @@ def _classifier_test(mldb: Mldb, eid: str, params: dict) -> dict:
             "and a scalar named 'label' in testingData — "
             "you need to define testingData"
         )
-    tdf = mldb.query(Mldb._require_from(params["testingData"]))
+    tdf = mldb.query(Mldb._require_from(_required(params, "testingData")))
     mode = params.get("mode", "boolean")
     if mode == "multilabel":
         # score and label are ROWS (multilabel-classifier-test.py's
@@ -1676,10 +1691,10 @@ def _classifier_test(mldb: Mldb, eid: str, params: dict) -> dict:
         from mldb_spark.ml.procedures import classifier_test_roc
 
         named, nrn = mldb._query_with_row_name(
-            Mldb._require_from(params["testingData"])
+            Mldb._require_from(_required(params, "testingData"))
         )
         mldb.create_dataset(
-            _entity_id(params["outputDataset"]),
+            _entity_id(_required(params, "outputDataset")),
             classifier_test_roc(named, weight_col=wcol, row_name_col=nrn),
             row_name_col="__rowName" if nrn else None,
         )

@@ -469,7 +469,9 @@ class MldbRestServer:
                     code, payload, *location = route(facade, ids, q, raw)
                 except Exception as e:
                     code = 404 if isinstance(e, KeyError) else 400
-                    payload = {"error": str(e), "httpCode": code}
+                    # str() of a KeyError quotes its message
+                    msg = e.args[0] if code == 404 and e.args else e
+                    payload = {"error": str(msg), "httpCode": code}
                 body = json.dumps(payload, default=str).encode()
                 self.send_response(code)
                 self.send_header("Content-Type", "application/json")

@@ -878,3 +878,135 @@ def test_row_aggregate_honours_excluding(spark):
         "SELECT horizontal_sum({* EXCLUDING (x)}) AS h FROM agg_excl ORDER BY y"
     ).collect()
     assert [r["h"] for r in rows] == [10, 20]
+
+
+def test_aggregate_of_prefix_wildcard_reduces_each_column(spark):
+    """An aggregate of `{y*}` reduces every column named y…, as
+    horizontal_sum over the same row does, instead of one cell named
+    `y*`."""
+    c = MldbContext(spark)
+    c.register(
+        "agg_pref", spark.createDataFrame([(1, 10, 100), (2, 20, 200)], "x int, ya int, yb int")
+    )
+    out = c.query("SELECT sum({y*}) AS s FROM agg_pref").collect()[0]["s"]
+    assert out.asDict() == {"ya": 30, "yb": 300}
+    rows = c.query("SELECT horizontal_sum({y*}) AS h FROM agg_pref ORDER BY x").collect()
+    assert [r["h"] for r in rows] == [110, 220]
+
+
+# -- the plan cache behind MldbContext.query --------------------------------
+
+
+def _jobs_of(spark, fn):
+    """(fn(), the number of Spark jobs fn ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan_cache_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the listener bus: let it catch up
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _cache_ctx(spark, rows=((1, 10), (2, 20), (3, 30))):
+    c = MldbContext(spark)
+    c.register("pc", spark.createDataFrame(list(rows), "x int, y int"))
+    return c
+
+
+def test_plan_cache_hit_reexecutes_without_translating(spark):
+    """A hit re-executes the statement's plan: it runs the same Spark
+    jobs as the miss's execution, and none of the jobs the miss's
+    translation ran (a COLUMN EXPR collects its column list)."""
+    c = _cache_ctx(spark)
+    sql = (
+        "SELECT COLUMN EXPR (WHERE columnName() LIKE 'y%' ORDER BY columnName()) "
+        "FROM pc WHERE x > 1 ORDER BY x"
+    )
+    df, translate_jobs = _jobs_of(spark, lambda: c.query(sql))
+    miss_rows, miss_jobs = _jobs_of(spark, df.collect)
+    assert translate_jobs >= 1 and miss_jobs >= 1
+    hit_rows, hit_jobs = _jobs_of(spark, lambda: c.query(sql).collect())
+    assert hit_rows == miss_rows == [(20,), (30,)]
+    assert hit_jobs == miss_jobs
+    assert c.plan_cache_counts == {"hits": 1, "misses": 1, "bypasses": 0}
+
+
+def test_plan_cache_now_advances(spark):
+    """now() is read per run: a statement calling it is never cached,
+    so two identical queries return two instants."""
+    import time
+
+    c = _cache_ctx(spark)
+    first = c.query("SELECT now() AS t").collect()[0]["t"]
+    time.sleep(0.01)
+    second = c.query("SELECT now() AS t").collect()[0]["t"]
+    assert second > first
+    assert c.plan_cache_counts == {"hits": 0, "misses": 0, "bypasses": 2}
+
+
+def test_plan_cache_invalidated_by_catalog_changes(spark):
+    """Re-registering or dropping a dataset the statement reads, and
+    registering a name it mentions that was absent when it was built,
+    each make the next run a miss that sees the new catalog."""
+    c = _cache_ctx(spark)
+    sql = "SELECT sum(y) AS s FROM pc"
+    assert c.query(sql).collect()[0]["s"] == 60
+    assert c.query(sql).collect()[0]["s"] == 60
+    assert c.plan_cache_counts["hits"] == 1
+    c.register("pc", spark.createDataFrame([(1, 5)], "x int, y int"))
+    assert c.query(sql).collect()[0]["s"] == 5
+    assert c.plan_cache_counts == {"hits": 1, "misses": 2, "bypasses": 0}
+    c.drop("pc")
+    with pytest.raises(KeyError, match="unknown dataset"):
+        c.query(sql)
+    c.register("pc", spark.createDataFrame([(1, 7)], "x int, y int"))
+    assert c.query(sql).collect()[0]["s"] == 7
+    assert c.plan_cache_counts == {"hits": 1, "misses": 4, "bypasses": 0}
+    # `s` was no catalog name when the entry was built
+    c.register("S", spark.createDataFrame([(1,)], "z int"))
+    assert c.query(sql).collect()[0]["s"] == 7
+    assert c.plan_cache_counts == {"hits": 1, "misses": 5, "bypasses": 0}
+    assert c.query(sql).collect()[0]["s"] == 7
+    assert c.plan_cache_counts["hits"] == 2
+
+
+def test_plan_cache_bypasses(spark):
+    """Statements with params, a table function or a registered
+    function are translated on every run and never cached."""
+    from pyspark.sql import functions as F
+
+    c = _cache_ctx(spark)
+    c.register_function("twice", lambda d: d.withColumn("out", F.col("y") * 2))
+    for sql, params in (
+        ("SELECT x FROM pc WHERE x = $k", {"k": 2}),
+        ("SELECT column, value FROM row_dataset({a: 1, b: 2}) ORDER BY column", None),
+        ("SELECT twice({y})[out] AS o FROM pc ORDER BY x", None),
+    ):
+        first = c.query(sql, params).collect()
+        assert c.query(sql, params).collect() == first
+    assert c.plan_cache_counts == {"hits": 0, "misses": 0, "bypasses": 6}
+    assert len(c._plans) == 0
+
+
+def test_plan_cache_is_bounded(spark):
+    """The cache keeps the _PLAN_CACHE_SIZE most recently used
+    statements: the oldest is translated again, the newest is a hit."""
+    from mldb_spark.dialect.translate import _PLAN_CACHE_SIZE
+
+    c = _cache_ctx(spark)
+    sqls = [f"SELECT x + {i} AS v FROM pc" for i in range(_PLAN_CACHE_SIZE + 3)]
+    for sql in sqls:
+        c.query(sql)
+    assert len(c._plans) == _PLAN_CACHE_SIZE
+    c.query(sqls[-1])
+    assert c.plan_cache_counts["hits"] == 1
+    assert c.query(sqls[0]).collect() == [(1,), (2,), (3,)]
+    assert c.plan_cache_counts["misses"] == _PLAN_CACHE_SIZE + 4
+    assert len(c._plans) == _PLAN_CACHE_SIZE

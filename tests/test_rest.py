@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import json
+import os
 import urllib.request
 
 import pytest
@@ -959,3 +960,66 @@ def test_concurrent_creates_of_one_id_one_wins(spark):
         "dataset entry 'same' already exists"
     ] * 7
     assert m.dataset("same").columns == ["x"]
+
+
+def test_not_found_error_is_the_bare_message(server):
+    """A 404's error text is the lookup's own message, not the quoted
+    repr str() gives a KeyError."""
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(server, "/v1/functions/nofn/application?input=%7B%7D")
+    assert e.value.code == 404
+    assert json.loads(e.value.read()) == {"error": "unknown function 'nofn'", "httpCode": 404}
+
+
+def test_missing_entity_parameter_is_400(server):
+    """An entity config without a required parameter is a bad request
+    that names the parameter, not a 404."""
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _req(server, "PUT", "/v1/datasets/tab_noparams", {"type": "tabular", "params": {}})
+    assert e.value.code == 400
+    body = json.loads(e.value.read())
+    assert body == {"error": "missing required parameter 'dataFileUrl'", "httpCode": 400}
+
+
+def test_concurrent_queries_while_dataset_is_reregistered(spark):
+    """Concurrent GET /v1/query requests of one statement, interleaved
+    with re-registering the dataset it reads, each answer with the
+    result of one registered version, never an error; once the
+    re-registering is over, the answer is the last version's. Twice
+    as many clients as cores, with a short thread switch interval;
+    the plan cache counts every request exactly once."""
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mldb_spark.api import Mldb
+    from mldb_spark.rest import MldbRestServer
+
+    def version(v):
+        return spark.createDataFrame([(1, v), (2, v)], "k int, v int")
+
+    m = Mldb(spark)
+    m.create_dataset("rereg", version(0))
+    srv = MldbRestServer(m).start()
+    path = "/v1/query?format=aos&q=" + urllib.parse.quote("SELECT sum(v) AS s FROM rereg")
+    switch = sys.getswitchinterval()
+    try:
+        assert _get(srv, path) == (200, [{"s": 0}])  # cached before the changes
+        sys.setswitchinterval(1e-5)
+        with ThreadPoolExecutor(2 * (os.cpu_count() or 4)) as ex:
+            futures = [ex.submit(_get, srv, path) for _ in range(16)]
+            for v in range(1, 6):
+                time.sleep(0.05)
+                m.create_dataset("rereg", version(v))
+            answers = [f.result(timeout=300) for f in futures]
+        sys.setswitchinterval(switch)
+        assert {code for code, _ in answers} == {200}
+        assert {body[0]["s"] for _, body in answers} <= {2 * v for v in range(6)}
+        assert _get(srv, path) == (200, [{"s": 10}])
+        hits = m.plan_cache_counts()["hits"]
+        assert _get(srv, path) == (200, [{"s": 10}])
+        assert m.plan_cache_counts()["hits"] == hits + 1
+        assert sum(m.plan_cache_counts().values()) == 1 + 16 + 2
+    finally:
+        sys.setswitchinterval(switch)
+        srv.stop()

@@ -295,3 +295,58 @@ def test_rest_routes_through_one_table():
         for verb in verbs.split("|")
     }
     assert listed == {(verb, pattern) for verb, pattern, _ in rest._ROUTES}
+
+
+# MldbContext's catalog maps and what may change them in place
+_CATALOG_MAPS = {"_datasets", "_meta", "_functions"}
+_CATALOG_CHANGERS = ("register", "drop", "register_function")
+_MAP_MUTATORS = {"pop", "popitem", "clear", "update", "setdefault", "__setitem__", "__delitem__"}
+
+
+def test_catalog_changes_go_through_register_drop_register_function():
+    """MldbContext's plan cache trusts the change stamps that register,
+    drop and register_function record, so no other code in mldb_spark/
+    assigns to, deletes from or pops MldbContext._datasets, _meta or
+    _functions (__init__ creates them), and each of the three stamps
+    the name it changed."""
+    tree = ast.parse(_TRANSLATE.read_text())
+    ctx = next(n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "MldbContext")
+    methods = {n.name: n for n in ctx.body if isinstance(n, ast.FunctionDef)}
+    for name in _CATALOG_CHANGERS:
+        calls = [ast.unparse(n.func) for n in ast.walk(methods[name]) if isinstance(n, ast.Call)]
+        assert "self._stamp" in calls, name
+    changers = {id(n) for name in _CATALOG_CHANGERS for n in ast.walk(methods[name])}
+    init = {id(n) for n in ast.walk(methods["__init__"])}
+
+    def catalog_map(n: ast.AST) -> bool:
+        return isinstance(n, ast.Attribute) and n.attr in _CATALOG_MAPS
+
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        mine = path == _TRANSLATE
+        for node in ast.walk(tree if mine else ast.parse(path.read_text())):
+            if isinstance(node, (ast.Assign, ast.Delete)):
+                targets = node.targets
+            elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+                targets = [node.target]
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _MAP_MUTATORS
+                and catalog_map(node.func.value)
+            ):
+                if not (mine and id(node) in changers):
+                    offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+                continue
+            else:
+                continue
+            for t in targets:
+                if isinstance(t, ast.Subscript) and catalog_map(t.value):
+                    ok = mine and id(node) in changers
+                elif catalog_map(t):
+                    ok = mine and id(node) in init
+                else:
+                    continue
+                if not ok:
+                    offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert offenders == []
