@@ -37,7 +37,7 @@ def _tune_driver_allocator() -> None:
         libc = ctypes.CDLL("libc.so.6", use_errno=True)
         libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
         libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-    except Exception:
+    except (OSError, AttributeError):  # no glibc, or one without mallopt
         pass
 
 

@@ -200,32 +200,23 @@ class Mldb:
         default (transform_dataset defaults the name to rowName() —
         MLDB-801's `select * from a join b` transform keeps the
         [left]-[right] names; classifier.test's output dataset keeps
-        the test example names). When the result has no rowName
-        column, attach one NON-destructively as a hidden __rowName
-        (wildcards over the registered output never see it; the
-        output's rowName() reads it). Sources without row-name
-        metadata fall back to (df, None)."""
-        out = self.query(sql, params)
-        if "rowName" in out.columns:
-            return out, "rowName"
-        try:
-            from mldb_spark.dialect import ast as _ast
-            from mldb_spark.dialect.parser import parse_statement
+        the test example names). One parse, one translation; the rule:
+        an output `rowName` column (NAMED, or a wildcard over a source
+        whose row-name column is `rowName`) names the rows; else, with
+        a FROM and no NAMED or GROUP BY, the hidden `__rowName` of an
+        ast.RowNameItem does where rowName() binds (a source with row
+        names, or an aggregate: '[]'); else the rows have none."""
+        from mldb_spark.dialect import ast as _ast
+        from mldb_spark.dialect.parser import parse_statement
 
-            stm = parse_statement(sql)
-            if stm.named is None and stm.from_ is not None and not stm.group_by:
-                stm.select.append(
-                    _ast.ExprItem(
-                        _ast.FunctionCall("rowname", [], raw="rowName"),
-                        "__rowName",
-                    )
-                )
-                named = self.ctx._statement(stm, params or {})
-                if "__rowName" in named.columns:
-                    return named, "__rowName"
-        except Exception:
-            pass
-        return out, None
+        stm = parse_statement(sql)
+        carry = stm.named is None and stm.from_ is not None and not stm.group_by
+        if carry:
+            stm.select.append(_ast.RowNameItem())
+        out = self.ctx.run_statement(stm, params)
+        if "rowName" in out.columns:
+            return (out.drop("__rowName") if carry else out), "rowName"
+        return out, "__rowName" if carry and "__rowName" in out.columns else None
 
     def transform(
         self,

@@ -16,6 +16,7 @@ while making cache lifetime explicit.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
 _PERSISTED: list = []
@@ -46,7 +47,7 @@ def release_cached() -> int:
         try:
             df.unpersist()
             n += 1
-        except Exception:
+        except Py4JJavaError:  # persisted in a context since stopped
             pass
     _PERSISTED.clear()
     return n

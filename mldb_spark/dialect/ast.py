@@ -162,6 +162,15 @@ class Wildcard(SelectItem):
 
 
 @dataclass
+class RowNameItem(ExprItem):
+    """`rowName() AS __rowName` (or another alias), which selects nothing
+    where rowName() does not bind. The parser never produces it."""
+
+    expr: Expr = field(default_factory=lambda: FunctionCall("rowname", [], "rowName"))
+    alias: str | None = "__rowName"
+
+
+@dataclass
 class ColumnExprItem(SelectItem):
     """COLUMN EXPR (AS name WHERE cond ORDER BY ... OFFSET n LIMIT m)
     — programmatic column selection (reference SelectExpression.md:

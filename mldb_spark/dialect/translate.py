@@ -25,6 +25,7 @@ from __future__ import annotations
 import functools
 import re
 import threading
+from ast import literal_eval
 from collections import OrderedDict
 from collections.abc import Callable
 from typing import NamedTuple
@@ -2608,12 +2609,14 @@ def _item_name(it: ast.ExprItem, idx: int) -> str:
 # used first out. A serving round of perfbench's sql_serve sends 9
 # recurring reads and 8 statements it never sends again.
 _PLAN_CACHE_SIZE = 64
+# a string literal in a repr: an AST's names, aliases and literal values
+_REPR_STRINGS = re.compile(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"")
 
 
 class _CachedPlan(NamedTuple):
     plan: object  # the analyzed logical plan (a JVM LogicalPlan)
     built_at: int  # the change clock, read before translating
-    names: frozenset[str]  # the statement's lower-cased identifiers
+    words: str  # the statement's string values, lower-cased
 
 
 class MldbContext:
@@ -2623,11 +2626,13 @@ class MldbContext:
     A function name resolves here first, case-insensitively, then in
     ml.registry.GLOBAL_REGISTRY, where ml procedures put their models.
 
-    `query` binds a recurring statement once, as the reference binds a
-    sql.query function once and runs it per call: it keeps the ANALYZED
-    plan of each statement's translation, keyed by its text, in an LRU
-    of _PLAN_CACHE_SIZE entries. A hit is a new DataFrame over that
-    plan, so each run is optimized, planned and executed anew (now(),
+    `run_statement(stm)` is the one entry point that translates a parsed
+    top-level statement (`query` parses, then calls it). It binds a
+    recurring statement once, as the reference binds a sql.query
+    function once and runs it per call: it keeps the ANALYZED plan of
+    each statement's translation, keyed by the statement's AST repr, in
+    an LRU of _PLAN_CACHE_SIZE entries. A hit is a new DataFrame over
+    that plan, so each run is optimized, planned and executed anew (now(),
     AQE and the results come from the run, never from an earlier one);
     what translation itself read from the data, such as a COLUMN EXPR's
     column list, and the session confs analysis read, such as the time
@@ -2635,9 +2640,9 @@ class MldbContext:
     - `register`, `drop` and `register_function` each stamp the name
       they change with the next value of one change clock, after the
       change. An entry is served only while no name occurring in its
-      text or identifiers (case-insensitive) was stamped after the
-      clock value read before it was translated; a name absent then
-      counts too.
+      string values (identifiers, aliases and literals; case-insensitive)
+      was stamped after the clock value read before it was translated;
+      a name absent then counts too.
     - Never cached: a call with params or a statement with a $param,
       a table function, a volatile builtin (now, pyeval), or any
       function that is neither a builtin nor a COLUMN EXPR function
@@ -3299,20 +3304,24 @@ class MldbContext:
         )
 
     def query(self, sql: str, params: dict[str, object] | None = None) -> DataFrame:
-        """MLDB-dialect SQL -> DataFrame, through the plan cache (see
-        the class docstring)."""
+        """MLDB-dialect SQL -> DataFrame: parse, then run_statement."""
+        return self.run_statement(parse_statement(sql), params)
+
+    def run_statement(self, stm: ast.SelectStatement, params: dict | None = None) -> DataFrame:
+        """A parsed top-level statement -> DataFrame, through the plan
+        cache (see the class docstring)."""
         if params:
             self._count("bypasses")
-            return self._statement(parse_statement(sql), params)
-        text = sql.lower()
+            return self._statement(stm, params)
+        key = repr(stm)
         with self._lock:
             built_at = self._clock
-            hit = self._plans.get(sql)
-            if hit is not None and self._fresh(hit, text):
+            hit = self._plans.get(key)
+            if hit is not None and self._fresh(hit):
                 # nothing it names changed up to now: re-stamp it so the
                 # next check scans only later changes
-                self._plans[sql] = hit._replace(built_at=built_at)
-                self._plans.move_to_end(sql)
+                self._plans[key] = hit._replace(built_at=built_at)
+                self._plans.move_to_end(key)
                 self.plan_cache_counts["hits"] += 1
             else:
                 hit = None
@@ -3321,33 +3330,28 @@ class MldbContext:
 
             jds = self.spark._jvm.org.apache.spark.sql.classic.Dataset
             return ClassicDataFrame(jds.ofRows(self.spark._jsparkSession, hit.plan), self.spark)
-        stm = parse_statement(sql)
         nodes = list(_nodes(stm))
         if not self._cacheable(nodes):
             self._count("bypasses")
             return self._statement(stm, {})
         self._count("misses")
         df = self._statement(stm, {})
-        names = frozenset(
-            n.name.lower()
-            for n in nodes
-            if isinstance(n, (ast.TableRef, ast.ColumnRef, ast.FunctionCall))
-        )
-        entry = _CachedPlan(df._jdf.queryExecution().analyzed(), built_at, names)
+        words = "\n".join(map(literal_eval, _REPR_STRINGS.findall(key))).lower()
+        entry = _CachedPlan(df._jdf.queryExecution().analyzed(), built_at, words)
         with self._lock:
-            self._plans[sql] = entry
-            self._plans.move_to_end(sql)
+            self._plans[key] = entry
+            self._plans.move_to_end(key)
             while len(self._plans) > _PLAN_CACHE_SIZE:
                 self._plans.popitem(last=False)
         return df
 
-    def _fresh(self, entry: _CachedPlan, text: str) -> bool:
+    def _fresh(self, entry: _CachedPlan) -> bool:
         """No name `entry` mentions was stamped after it was built.
         Called holding _lock; scans the stamps newest first."""
         for name, at in reversed(self._stamps.items()):
             if at <= entry.built_at:
                 return True
-            if name in text or name in entry.names:
+            if name in entry.words:
                 return False
         return True
 
@@ -3381,18 +3385,24 @@ class MldbContext:
             return self.spark.range(1).drop("id"), None, None, set(), {}
         if isinstance(src, ast.SelectStatement):
             aliases = {src.from_alias} if getattr(src, "from_alias", None) else set()
-            sub = self._statement(src, params)
             # a NAMED subquery carries its row names out — the outer
             # scope's rowName()/rowPath() read them (MLDB-1678's
             # `select * from (select 1 as x named 'msnbc.com') where
             # rowName() = …`); a plain wildcard passthrough keeps the
             # source's row identity (MLDB-995-sub-query-sparse.js:
-            # `SELECT * FROM (SELECT * FROM ds) ORDER BY rowName()`)
+            # `SELECT * FROM (SELECT * FROM ds) ORDER BY rowName()`).
+            # The wildcard drops a hidden row-name column (a cells
+            # dataset's __cellsRow, a transform output's __rowName), so
+            # the subquery selects it by name; outer wildcards skip it.
+            inh = self._inherited_row_name(src)
+            if inh and _hidden_col(inh):
+                import dataclasses
+
+                src = dataclasses.replace(src, select=[*src.select, ast.RowNameItem(alias=inh)])
+            sub = self._statement(src, params)
             sub_rn = "rowName" if "rowName" in sub.columns else None
-            if sub_rn is None:
-                inh = self._inherited_row_name(src)
-                if inh and inh in sub.columns:
-                    sub_rn = inh
+            if sub_rn is None and inh and inh in sub.columns:
+                sub_rn = inh
             return sub, sub_rn, None, aliases, {}
         if isinstance(src, ast.TableRef):
             df, meta = self._table(src.name)
@@ -4492,6 +4502,12 @@ class MldbContext:
             isinstance(it, ast.ExprItem) and _contains_aggregate(it.expr)
             for it in stm.select
         )
+        if not (is_agg or row_name_col):
+            # rowName() binds only in an aggregate or over row names
+            import dataclasses
+
+            select = [it for it in stm.select if not isinstance(it, ast.RowNameItem)]
+            stm = dataclasses.replace(stm, select=select)
 
         ordagg_names: list[str] = []
         if (

@@ -558,7 +558,7 @@ def parse_json_flatten_udf(arrays: str = "parse"):
                 return None
             try:
                 parsed = json.loads(x)
-            except Exception:
+            except ValueError:
                 return None
             out: dict = {}
             flatten(parsed, "", out)

@@ -520,16 +520,17 @@ class MldbRestServer:
         fmt = params.get("format", "full")
         row_names = str(params.get("rowNames", "0")).lower() in ("1", "true")
         headers = str(params.get("headers", "1")).lower() not in ("0", "false")
+        stm = parse_statement(sql)
         if fmt in ("full", ""):
-            full = self._try_cells_full(sql, limit)
+            full = self._try_cells_full(stm, limit)
             if full is not None:
                 return full
-        df = self.mldb.query(sql).limit(limit)
+        df = self.mldb.ctx.run_statement(stm).limit(limit)
         return render_rows(
             df.collect(), df.columns, fmt=fmt, row_names=row_names, headers=headers
         )
 
-    def _try_cells_full(self, sql: str, limit: int):
+    def _try_cells_full(self, stm: _ast.SelectStatement, limit: int):
         """The reference's FULL format over a cells dataset returns
         ALL timestamped tuples of each selected cell, not just the
         GET_LATEST value (MLDB-605/679: recording x at 3 timestamps →
@@ -537,10 +538,6 @@ class MldbRestServer:
         consistency, see MLDB-1370'). Applies to plain
         SELECT */<columns> FROM <cells dataset> [WHERE …] [ORDER BY …]
         [LIMIT …]; everything else falls back to the wide render."""
-        try:
-            stm = parse_statement(sql)
-        except SyntaxError:
-            return None  # the wide path parses again and reports it
         # one read of the catalog: a concurrent request may replace it
         info = isinstance(stm.from_, _ast.TableRef) and self.mldb.ctx._cells.get(
             stm.from_.name
@@ -564,17 +561,10 @@ class MldbRestServer:
             c for c in info["columns"] if c in want
         ]
         # surviving row names in the statement's own order
-        rn_stm = dataclasses.replace(
-            stm,
-            select=[
-                _ast.ExprItem(
-                    _ast.FunctionCall("rowname", [], raw="rowName"), "__rn"
-                )
-            ],
-        )
+        rn_stm = dataclasses.replace(stm, select=[_ast.RowNameItem()])
         names = [
-            r["__rn"]
-            for r in self.mldb.ctx._statement(rn_stm, {}).limit(limit).collect()
+            r["__rowName"]
+            for r in self.mldb.ctx.run_statement(rn_stm).limit(limit).collect()
         ]
         cells = info["cells"]
         got = (

@@ -7214,14 +7214,27 @@ def test_mldb_995_subquery_transparency_sparse(mldb):
         [("r1", 1.0, None), ("r2", None, 2.0), ("r3", 3.0, 4.0)],
         "rn string, a double, b double",
     )
-    direct = mldb.query("SELECT * FROM m995 ORDER BY rowName() LIMIT 2")
-    nested = mldb.query(
-        "SELECT * FROM (SELECT * FROM m995) AS s ORDER BY rowName() LIMIT 2"
-    )
-    assert direct.columns == nested.columns
-    assert [tuple(r) for r in direct.collect()] == [
-        tuple(r) for r in nested.collect()
-    ]
+    # the same rows in a committed sparse.mutable, recorded out of order:
+    # its row names live in a hidden column the inner wildcard drops
+    mldb.create_entity("dataset", {"type": "sparse.mutable", "id": "m995c"})
+    mldb.record_rows("m995c", [
+        {"rowName": rn, "columns": [[c, v, "2024-01-01T00:00:00Z"]
+                                    for c, v in (("a", a), ("b", b)) if v is not None]}
+        for rn, a, b in (("r3", 3.0, 4.0), ("r1", 1.0, None), ("r2", None, 2.0))
+    ])
+    mldb.commit_dataset("m995c")
+    for ds in ("m995", "m995c"):
+        direct = mldb.query(f"SELECT * FROM {ds} ORDER BY rowName() LIMIT 2")
+        nested = mldb.query(
+            f"SELECT * FROM (SELECT * FROM {ds}) AS s ORDER BY rowName() LIMIT 2"
+        )
+        assert direct.columns == nested.columns
+        assert [tuple(r) for r in direct.collect()] == [
+            tuple(r) for r in nested.collect()
+        ]
+    assert [tuple(r) for r in mldb.query(
+        "SELECT a FROM (SELECT * FROM (SELECT * FROM m995c)) ORDER BY rowName()"
+    ).collect()] == [(1.0,), (None,), (3.0,)]
 
 
 def test_mldb_815_order_by_rowname_desc_strings(mldb):

@@ -1023,3 +1023,122 @@ def test_concurrent_queries_while_dataset_is_reregistered(spark):
     finally:
         sys.setswitchinterval(switch)
         srv.stop()
+
+
+@pytest.fixture(scope="module")
+def row_name_mldb(spark):
+    """An Mldb with a committed sparse.mutable `rnc` (rows r2, r0, r1),
+    a table `rnp` without row names and a table `rnn` whose row-name
+    column is `rowName`."""
+    from mldb_spark.api import Mldb
+
+    m = Mldb(spark)
+    m.create_entity("dataset", {"type": "sparse.mutable", "id": "rnc"})
+    m.record_rows("rnc", [
+        {"rowName": rn, "columns": [["x", x, "2024-01-01T00:00:00Z"],
+                                    ["k", k, "2024-01-01T00:00:00Z"]]}
+        for rn, x, k in (("r2", 12, "a"), ("r0", 10, "a"), ("r1", 11, "b"))
+    ])
+    m.commit_dataset("rnc")
+    m.create_dataset(
+        "rnp", spark.createDataFrame([(1, "a"), (2, "b"), (3, "a")], "x int, k string")
+    )
+    m.create_dataset(
+        "rnn",
+        spark.createDataFrame([("n1", 1), ("n2", 2)], "rowName string, x int"),
+        row_name_col="rowName",
+    )
+    return m
+
+
+def _count_translations(monkeypatch, ctx) -> list:
+    """Record every statement the context translates from now on."""
+    calls = []
+    orig = ctx._statement
+
+    def counted(stm, params):
+        calls.append(stm)
+        return orig(stm, params)
+
+    monkeypatch.setattr(ctx, "_statement", counted)
+    return calls
+
+
+def _translated(m) -> int:
+    counts = m.plan_cache_counts()
+    return counts["misses"] + counts["bypasses"]
+
+
+@pytest.mark.parametrize(
+    "sql, columns, rows, names",
+    [
+        ("SELECT x FROM rnc", ["x", "__rowName"],
+         [(10.0, "r0"), (11.0, "r1"), (12.0, "r2")], ["r0", "r1", "r2"]),
+        ("SELECT x FROM rnp", ["x"], [(1,), (2,), (3,)], None),
+        ("SELECT x NAMED k + '-' + cast(x AS string) FROM rnp", ["x", "rowName"],
+         [(1, "a-1"), (2, "b-2"), (3, "a-3")], ["a-1", "a-3", "b-2"]),
+        ("SELECT k, count(*) AS n FROM rnc GROUP BY k", ["k", "n"],
+         [("a", 2), ("b", 1)], None),
+        ("SELECT count(*) AS n FROM rnc", ["n", "__rowName"], [(3, "[]")], ["[]"]),
+        ("SELECT count(*) AS n FROM rnp", ["n", "__rowName"], [(3, "[]")], ["[]"]),
+        ("SELECT DISTINCT ON (k) k, x FROM rnc ORDER BY k, x", ["k", "x", "__rowName"],
+         [("a", 10.0, "r0"), ("b", 11.0, "r1")], ["r0", "r1"]),
+        ("SELECT * FROM rnn", ["rowName", "x"], [("n1", 1), ("n2", 2)], ["n1", "n2"]),
+    ],
+    ids=["cells", "no-row-names", "named", "group-by", "aggregate",
+         "aggregate-no-row-names", "distinct-on", "wildcard-rowName"],
+)
+def test_transform_row_name_rule(
+    row_name_mldb, monkeypatch, request, sql, columns, rows, names
+):
+    """A transform writes its rows under the input row names by the
+    rule in Mldb._query_with_row_name, translating its statement once;
+    repeating it over an unchanged source is a plan-cache hit."""
+    m = row_name_mldb
+    out = "rno_" + request.node.callspec.id.replace("-", "_")
+    calls = _count_translations(monkeypatch, m.ctx)
+    before = _translated(m)
+    df = m.transform(sql, out)
+    assert len(calls) == 1 and _translated(m) == before + 1
+    assert df.columns == columns
+    assert sorted(tuple(r) for r in df.collect()) == rows
+    read_back = f"SELECT rowName() AS rn FROM {out}"
+    if names is None:
+        with pytest.raises(ValueError, match="rowName"):
+            m.query(read_back)
+    else:
+        assert sorted(r["rn"] for r in m.query(read_back).collect()) == names
+    del calls[:]
+    hits = m.plan_cache_counts()["hits"]
+    again = m.transform(sql, out)
+    assert calls == [] and m.plan_cache_counts()["hits"] == hits + 1
+    assert sorted(tuple(r) for r in again.collect()) == rows
+
+
+def test_rest_transform_and_full_reads_translate_once(row_name_mldb, monkeypatch):
+    """Over a committed sparse.mutable dataset, a transform created
+    with runOnCreation translates its statement once, and a repeated
+    FULL-format GET /v1/query is served from the plan cache."""
+    import urllib.parse
+
+    from mldb_spark.rest import MldbRestServer
+
+    m = row_name_mldb
+    srv = MldbRestServer(m).start()
+    try:
+        calls = _count_translations(monkeypatch, m.ctx)
+        status, _ = _req(srv, "PUT", "/v1/procedures/rn_rest_proc", {
+            "type": "transform",
+            "params": {"inputData": "SELECT x * 2 AS d FROM rnc",
+                       "outputDataset": "rno_rest", "runOnCreation": True},
+        })
+        assert status == 201 and len(calls) == 1
+        q = urllib.parse.quote("SELECT x FROM rnc ORDER BY rowName()")
+        _, first = _get(srv, f"/v1/query?q={q}")
+        assert [r["rowName"] for r in first] == ["r0", "r1", "r2"]
+        del calls[:]
+        hits = m.plan_cache_counts()["hits"]
+        assert _get(srv, f"/v1/query?q={q}") == (200, first)
+        assert calls == [] and m.plan_cache_counts()["hits"] == hits + 1
+    finally:
+        srv.stop()

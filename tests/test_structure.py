@@ -350,3 +350,28 @@ def test_catalog_changes_go_through_register_drop_register_function():
                 if not ok:
                     offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert offenders == []
+
+
+def test_statements_translate_through_one_entry_point():
+    """Every top-level dialect statement goes through
+    MldbContext.run_statement and its plan cache: no module but
+    translate.py calls `._statement(`, and api.py decides nothing by a
+    broad `except Exception` (rest.py keeps one, _dispatch's error
+    boundary, which test_rest_routes_through_one_table pins)."""
+    calls = [
+        f"{p.relative_to(REPO)}:{n.lineno}"
+        for p in sorted(PKG.rglob("*.py"))
+        if p != _TRANSLATE
+        for n in ast.walk(ast.parse(p.read_text()))
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "_statement"
+    ]
+    assert calls == []
+    broad = [
+        n.lineno
+        for n in ast.walk(ast.parse((PKG / "api.py").read_text()))
+        if isinstance(n, ast.ExceptHandler)
+        and (n.type is None or (isinstance(n.type, ast.Name) and n.type.id == "Exception"))
+    ]
+    assert broad == []
